@@ -1,13 +1,11 @@
 package graft.operators
 
-import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, ShortType, StringType}
 
 import graft.functions.StrExtremaAgg.{str_max, str_min}
-import graft.plans.RelationPins
 
 /** Persisted incrementally-maintained aggregate view — the
   * [[LmIndex]]/[[Bm25Index]] pure-sum algebra generalized to ANY
@@ -58,10 +56,7 @@ import graft.plans.RelationPins
   * Reference grounding: immutable loaded artifacts serving every
   * request (directory/directory.go:230-240), applied to rollup state.
   */
-object AggView {
-
-  type Build = IndexBuild
-  val Build = IndexBuild
+object AggView extends SignedArtifact[ViewLayout] {
 
   /** A measure: `name` is the output column, `sqlExpr` a row-local
     * SQL expression over the fact columns (carried in the manifest —
@@ -81,50 +76,30 @@ object AggView {
   final case class Measure(name: String, sqlExpr: String,
       kind: String = "sum")
 
-  private case class Manifest(fp: Long, n: Long, keys: Seq[String],
-      mNames: Seq[String], mExprs: Seq[String], kbParts: Int,
-      deltas: Seq[String] = Nil, lastBatch: Long = -1L,
-      baseVer: Int = 0, lg: Int = 0, mKinds: Seq[String] = Nil,
-      mv: Long = 0L) {
-    def sameIndexAs(other: Manifest): Boolean =
-      // mKinds normalized through `kinds`: a pre-kind manifest (no
-      // mkinds recorded) ≡ the same declaration spelled all-sum
-      copy(deltas = Nil, lastBatch = -1L, baseVer = 0, lg = 0,
-        mKinds = kinds, mv = 0L) ==
-        other.copy(deltas = Nil, lastBatch = -1L, baseVer = 0, lg = 0,
-          mKinds = other.kinds, mv = 0L)
-    def baseOf(sub: String): String =
-      if (baseVer == 0) sub else s"$sub.v$baseVer"
+  override protected def noun = "view"
+
+  override protected def readDecl(r: IndexDirs.ManifestReader) = {
+    val names = r.seq("mnames")
     // compat: manifests written before measure kinds existed carry
     // none — every measure was a sum
-    def kinds: Seq[String] =
-      if (mKinds.size == mNames.size) mKinds
-      else Seq.fill(mNames.size)("sum")
-    def measures: Seq[Measure] =
-      mNames.lazyZip(mExprs).lazyZip(kinds).map(Measure.apply)
-    def appendOnlyMeasures: Boolean = kinds.exists(_ != "sum")
+    val kinds = Some(r.seq("mkinds")).filter(_.size == names.size)
+      .getOrElse(Seq.fill(names.size)("sum"))
+    ViewLayout(r.seq("keys"), names, r.seq("mexprs"), r.int("kb"),
+      r.intOr("lg", 0), kinds)
   }
 
-  private def toManifest(r: IndexDirs.ManifestReader): Manifest =
-    Manifest(r.long("fp"), r.long("n"), r.seq("keys"),
-      r.seq("mnames"), r.seq("mexprs"), r.int("kb"),
-      r.seq("deltas"), r.longOr("lb", -1L), r.intOr("bv", 0),
-      r.intOr("lg", 0), r.seq("mkinds"), mv = r.version)
+  override protected def writeDecl(w: IndexDirs.ManifestWriter,
+      d: ViewLayout) =
+    w.put("keys", d.keys).put("mnames", d.mNames).put("mexprs", d.mExprs)
+      .put("mkinds", d.kinds).put("kb", d.kbParts).put("lg", d.lg)
 
-  private def readManifest(path: String): Option[Manifest] =
-    IndexDirs.readManifest(path).map(toManifest)
+  // the ledger flag says whether a build wrote a ledger, not what the
+  // view is
+  override protected def sameDecl(a: ViewLayout, b: ViewLayout) =
+    a.copy(lg = 0) == b.copy(lg = 0)
 
-  private def writeManifest(path: String, mf: Manifest): Unit =
-    IndexDirs.manifest()
-      .put("fp", mf.fp).put("n", mf.n)
-      .put("keys", mf.keys)
-      .put("mnames", mf.mNames).put("mexprs", mf.mExprs)
-      .put("mkinds", mf.kinds)
-      .put("kb", mf.kbParts)
-      .put("lb", mf.lastBatch).put("bv", mf.baseVer)
-      .put("lg", mf.lg)
-      .put("deltas", mf.deltas)
-      .commit(path, mf.mv)
+  override protected def fpOf(rows: DataFrame, d: ViewLayout) =
+    fingerprint(rows, d)
 
   /** Per-kind fold of one measure's PARTIALS — the same expression
     * serves delta writes, live reads, compactions, and purges, so
@@ -145,49 +120,48 @@ object AggView {
     * ARE the same view (column order, unused columns, row order all
     * irrelevant).
     */
-  private def projected(facts: DataFrame, mf: Manifest): DataFrame =
-    facts.select(mf.keys.map(col) ++
-      mf.measures.map(m => expr(m.sqlExpr).as(m.name)): _*)
+  private def projected(facts: DataFrame, d: ViewLayout): DataFrame =
+    facts.select(d.keys.map(col) ++
+      d.measures.map(m => expr(m.sqlExpr).as(m.name)): _*)
 
-  private def fingerprint(facts: DataFrame, mf0: Manifest): (Long, Long) =
-    IndexDirs.contentFingerprint(projected(facts, mf0),
-      mf0.keys ++ mf0.mNames)
+  private def fingerprint(facts: DataFrame, d: ViewLayout): (Long, Long) =
+    IndexDirs.contentFingerprint(projected(facts, d),
+      d.keys ++ d.mNames)
 
   /** Grouped signed partial sums of `facts` (per-kind folds for
     * min/max measures — only ever written with sign 1, the delete
     * paths refuse append-only measures), written kb-partitioned
     * (one file per bucket) under `root`.
     */
-  private def writeDelta(facts: DataFrame, sign: Int, mf: Manifest,
-      root: String): Unit = {
-    require(sign == 1 || !mf.appendOnlyMeasures,
+  override protected def stage(facts: DataFrame, sign: Int, mf: Mf,
+      path: String, root: String): Long = {
+    require(sign == 1 || !mf.decl.appendOnlyMeasures,
       "negated deltas are undefined for min/max measures")
     // deliberately NOT Par.widen'd: the grouped partial sum is one or
     // two sums per row (scan-bound), and this path also runs per
     // append on small deltas where an extra exchange is pure overhead
-    projected(facts, mf)
-      .groupBy(mf.keys.map(col): _*)
+    projected(facts, mf.decl)
+      .groupBy(mf.decl.keys.map(col): _*)
       .agg((count(lit(1)) * sign).as("__cnt"),
-        mf.measures.map { m =>
+        mf.decl.measures.map { m =>
           if (m.kind == "sum") (sum(col(m.name)) * sign).as(m.name)
           else foldMeasure(m)
         }: _*)
-      .withColumn("kb", kbCol(mf.keys, mf.kbParts))
+      .withColumn("kb", kbCol(mf.decl.keys, mf.decl.kbParts))
       .repartition(col("kb"))
       .write.mode("overwrite").partitionBy("kb")
       .parquet(s"$root/agg")
+    0L
   }
 
   /** Live aggregated groups: base ∪ committed deltas summed per
     * group, `__cnt ≤ 0` groups dropped. `parts` prunes every read to
     * the given kb partitions (the [[lookup]] path).
     */
-  private def liveAgg(spark: SparkSession, path: String, mf: Manifest,
+  private def liveAgg(spark: SparkSession, path: String, mf: Mf,
       parts: Option[Seq[Int]] = None,
       where: Option[Column] = None): DataFrame = {
-    val roots = s"$path/${mf.baseOf("agg")}" +:
-      mf.deltas.map(d => s"$path/deltas/$d/agg")
-    roots.map { r =>
+    mf.roots(path, "agg").map { r =>
         val df = spark.read.parquet(r)
         val pruned =
           parts.fold(df)(w => df.filter(col("kb").isin(w.map(Int.box): _*)))
@@ -197,9 +171,9 @@ object AggView {
         // later optimizer pass re-runs pushdown over this subtree
         where.fold(pruned)(pruned.filter)
       }.reduce(_.unionByName(_))
-      .groupBy(mf.keys.map(col): _*)
+      .groupBy(mf.decl.keys.map(col): _*)
       .agg(sum(col("__cnt")).as("__cnt"),
-        mf.measures.map(foldMeasure): _*)
+        mf.decl.measures.map(foldMeasure): _*)
       .filter(col("__cnt") > 0)
   }
 
@@ -224,17 +198,13 @@ object AggView {
     // per-file ledger rows (xor/count compose, so the summed partials
     // ARE the corpus fingerprint — bit-identical to the ungrouped
     // pass, manifest-compatible either way)
-    val bareFiles: Option[Seq[RelationPins.ListedFile]] =
-      try RelationPins.bare(GraftBridge.analyzedPlan(facts))
-        .map { case (_, h) => RelationPins.listedFiles(h) }
-      catch { case NonFatal(_) => None }
-    val (fp, n, ledgerRows) = bareFiles match {
+    val (fp, n, ledgerRows) = Ledger.files(facts) match {
       case Some(files) =>
         val byFile = IndexDirs.contentFingerprintByFile(
-          projected(facts, want0), keys ++ want0.mNames)
-        composeLedger(files, byFile)
+          projected(facts, want0.decl), keys ++ want0.decl.mNames)
+        Ledger.compose(files, byFile)
       case None =>
-        val (fp, n) = fingerprint(facts, want0)
+        val (fp, n) = fingerprint(facts, want0.decl)
         (fp, n, None)
     }
     finishBuild(facts, want0, path, fp, n, ledgerRows)
@@ -293,19 +263,15 @@ object AggView {
           acc(fc) === sd.df(dc) }.reduce(_ && _)
         acc.join(broadcast(sd.df), cond, sd.joinType)
     }
-    val bareFiles: Option[Seq[RelationPins.ListedFile]] =
-      try RelationPins.bare(GraftBridge.analyzedPlan(fact))
-        .map { case (_, h) => RelationPins.listedFiles(h) }
-      catch { case NonFatal(_) => None }
-    val (fp, n, ledgerRows) = bareFiles match {
+    val (fp, n, ledgerRows) = Ledger.files(fact) match {
       case Some(files) =>
-        val proj = joined.select(col(src) +: (want0.keys.map(col) ++
-          want0.measures.map(m => expr(m.sqlExpr).as(m.name))): _*)
+        val proj = joined.select(col(src) +: (want0.decl.keys.map(col) ++
+          want0.decl.measures.map(m => expr(m.sqlExpr).as(m.name))): _*)
         val byFile = IndexDirs.contentFingerprintByFile(proj,
-          keys ++ want0.mNames, col(src))
-        composeLedger(files, byFile)
+          keys ++ want0.decl.mNames, col(src))
+        Ledger.compose(files, byFile)
       case None =>
-        val (fp, n) = fingerprint(joined, want0)
+        val (fp, n) = fingerprint(joined, want0.decl)
         (fp, n, None)
     }
     finishBuild(joined, want0, path, fp, n, ledgerRows)
@@ -315,7 +281,7 @@ object AggView {
     * build entrances share.
     */
   private def declManifest(keys: Seq[String], measures: Seq[Measure],
-      kbParts: Int): Manifest = {
+      kbParts: Int): Mf = {
     val names = keys ++ measures.map(_.name) :+ "__cnt" :+ "kb"
     require(names.distinct.size == names.size,
       s"keys/measure names collide (or use the reserved __cnt/kb): " +
@@ -325,62 +291,25 @@ object AggView {
     require(badKinds.isEmpty,
       s"unknown measure kind(s): ${badKinds.distinct.mkString(",")} " +
         "(supported: sum, min, max)")
-    Manifest(0L, 0L, keys, measures.map(_.name),
-      measures.map(_.sqlExpr), kbParts,
-      mKinds = measures.map(_.kind))
-  }
-
-  /** Compose per-file partials into the corpus (fp, n) and the
-    * ledger rows. A scanned key outside the listing means the
-    * file-key normalization drifted — the partials would seed wrong
-    * refreshes, so the ledger is skipped (the fp/n are computed from
-    * ALL scanned groups and stay exact regardless).
-    */
-  private def composeLedger(files: Seq[RelationPins.ListedFile],
-      byFile: Map[String, (Long, Long)])
-      : (Long, Long, Option[Seq[(String, String, Long, Long, Long, Long)]]) = {
-    val n = byFile.valuesIterator.map(_._2).sum
-    val fp =
-      if (n == 0) 0L
-      else byFile.valuesIterator.map(_._1).foldLeft(0L)(_ ^ _)
-    val strays = byFile.keySet -- files.map(_.key).toSet
-    val rows =
-      if (strays.nonEmpty) None
-      else Some(files.map { f =>
-        val (cfp, cn) = byFile.getOrElse(f.key, (0L, 0L))
-        (f.key, f.uri, f.len, f.mtime, cfp, cn)
-      })
-    (fp, n, rows)
+    Artifact.Manifest(ViewLayout(keys, measures.map(_.name),
+      measures.map(_.sqlExpr), kbParts, 0, measures.map(_.kind)), 0L, 0L)
   }
 
   /** The shared build tail: reuse check against the manifest, else
     * write the delta (and the ledger, when the fingerprint pass
     * produced one) and commit. `facts` may carry extra columns (a
-    * star build's file tag) — [[writeDelta]] projects to the view's
+    * star build's file tag) — [[stage]] projects to the view's
     * dependency columns.
     */
-  private def finishBuild(facts: DataFrame, want0: Manifest,
+  private def finishBuild(facts: DataFrame, want0: Mf,
       path: String, fp: Long, n: Long,
-      ledgerRows: Option[Seq[(String, String, Long, Long, Long, Long)]])
+      ledgerRows: Option[Seq[Ledger.Row]])
       : Build = {
     val want = want0.copy(fp = fp, n = n,
-      lg = if (ledgerRows.isDefined) 1 else 0)
-    readManifest(path) match {
-      case Some(have) if have.sameIndexAs(want) =>
-        Build(path, fp, n, reused = true)
-      case _ =>
-        IndexDirs.uncommit(path)
-        writeDelta(facts, 1, want, path)
-        ledgerRows.foreach { rows =>
-          val spark = facts.sparkSession
-          import spark.implicits._
-          ZoneMap.writeArtifact(
-            rows.toDF("file", "uri", "flen", "fmtime", "cfp", "cn"),
-            rows.size.toLong, s"$path/ledger",
-            ZoneMap.DefaultArtifactRowsPerFile)
-        }
-        writeManifest(path, want)
-        Build(path, fp, n, reused = false)
+      decl = want0.decl.copy(lg = if (ledgerRows.isDefined) 1 else 0))
+    buildOr(path, want) {
+      ledgerRows.foreach(Ledger.write(facts.sparkSession, _, path))
+      stage(facts, 1, want, path, path)
     }
   }
 
@@ -395,26 +324,17 @@ object AggView {
     * (a joined/derived build has no one-file-per-row provenance).
     */
   def fingerprintLedger(spark: SparkSession,
-      path: String): Option[Map[String, (Long, Long, Long, Long)]] = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no view at $path"))
-    if (mf.lg == 0) None
-    else Some(spark.read.parquet(s"$path/ledger")
-      .select("file", "flen", "fmtime", "cfp", "cn").collect()
-      .map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .toMap)
-  }
+      path: String): Option[Map[String, (Long, Long, Long, Long)]] =
+    Ledger.read(spark, path, live(path).decl.lg)
 
   /** The served view: one row per live group — keys, `cnt`, and the
     * measure sums.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no view at $path"))
+    val mf = live(path)
     liveAgg(spark, path, mf)
-      .select(mf.keys.map(col) ++ (col("__cnt").as("cnt") +:
-        mf.mNames.map(col)): _*)
+      .select(mf.decl.keys.map(col) ++ (col("__cnt").as("cnt") +:
+        mf.decl.mNames.map(col)): _*)
   }
 
   /** [[read]] with an optional key-only predicate pushed to every
@@ -428,11 +348,10 @@ object AggView {
   def readFor(spark: SparkSession, path: String,
       where: Option[Column] = None,
       parts: Option[Seq[Int]] = None): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no view at $path"))
+    val mf = live(path)
     liveAgg(spark, path, mf, parts, where)
-      .select(mf.keys.map(col) ++ (col("__cnt").as("cnt") +:
-        mf.mNames.map(col)): _*)
+      .select(mf.decl.keys.map(col) ++ (col("__cnt").as("cnt") +:
+        mf.decl.mNames.map(col)): _*)
   }
 
   /** The view's committed declaration + freshness pins — what a
@@ -452,9 +371,8 @@ object AggView {
       lastBatch: Long = -1L)
 
   def declaration(path: String): Decl = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no view at $path"))
-    Decl(mf.keys, mf.measures, mf.kbParts, mf.mv, mf.n, mf.fp,
+    val mf = live(path)
+    Decl(mf.decl.keys, mf.decl.measures, mf.decl.kbParts, mf.mv, mf.n, mf.fp,
       mf.lastBatch)
   }
 
@@ -468,9 +386,8 @@ object AggView {
     * the same pass [[buildIfAbsent]]'s reuse check already prices.
     */
   def factsFingerprint(facts: DataFrame, path: String): (Long, Long) = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no view at $path"))
-    fingerprint(facts, mf)
+    val mf = live(path)
+    fingerprint(facts, mf.decl)
   }
 
   /** [[factsFingerprint]] grouped per source FILE
@@ -483,10 +400,9 @@ object AggView {
     */
   def factsFingerprintByFile(facts: DataFrame,
       path: String): Map[String, (Long, Long)] = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no view at $path"))
-    IndexDirs.contentFingerprintByFile(projected(facts, mf),
-      mf.keys ++ mf.mNames)
+    val mf = live(path)
+    IndexDirs.contentFingerprintByFile(projected(facts, mf.decl),
+      mf.decl.keys ++ mf.decl.mNames)
   }
 
   /** The scheme-free source-file key of the CURRENT scan's file —
@@ -507,11 +423,10 @@ object AggView {
     */
   def factsFingerprintByFileTagged(facts: DataFrame, path: String,
       srcCol: String): Map[String, (Long, Long)] = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no view at $path"))
-    val proj = facts.select(col(srcCol) +: (mf.keys.map(col) ++
-      mf.measures.map(m => expr(m.sqlExpr).as(m.name))): _*)
-    IndexDirs.contentFingerprintByFile(proj, mf.keys ++ mf.mNames,
+    val mf = live(path)
+    val proj = facts.select(col(srcCol) +: (mf.decl.keys.map(col) ++
+      mf.decl.measures.map(m => expr(m.sqlExpr).as(m.name))): _*)
+    IndexDirs.contentFingerprintByFile(proj, mf.decl.keys ++ mf.decl.mNames,
       col(srcCol))
   }
 
@@ -532,11 +447,10 @@ object AggView {
     * ceiling); the collect is ≤ kbParts·|keys| rows.
     */
   def keyZones(spark: SparkSession, path: String): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no view at $path"))
-    val live = liveAgg(spark, path, mf)
-    val byName = live.schema.fields.map(f => f.name -> f.dataType).toMap
-    val pieces = mf.keys.flatMap { k =>
+    val mf = live(path)
+    val groups = liveAgg(spark, path, mf)
+    val byName = groups.schema.fields.map(f => f.name -> f.dataType).toMap
+    val pieces = mf.decl.keys.flatMap { k =>
       byName(k) match {
         case LongType | IntegerType | ShortType | ByteType =>
           Some(struct(lit(k).as("col_name"), lit("num").as("kind"),
@@ -556,7 +470,7 @@ object AggView {
         case _ => None
       }
     }
-    val base = live.withColumn("kb", kbCol(mf.keys, mf.kbParts))
+    val base = groups.withColumn("kb", kbCol(mf.decl.keys, mf.decl.kbParts))
     if (pieces.isEmpty)
       // no zonable key: a correctly-shaped empty result
       return base.limit(0).select(col("kb"),
@@ -592,8 +506,8 @@ object AggView {
     */
   def declarationAt(path: String, version: Long): Option[Decl] =
     IndexDirs.readManifestAt(path, version).map(toManifest).map(mf =>
-      Decl(mf.keys, mf.measures, mf.kbParts, mf.mv, mf.n, mf.fp,
-        mf.lastBatch))
+      Decl(mf.decl.keys, mf.decl.measures, mf.decl.kbParts, mf.mv, mf.n,
+        mf.fp, mf.lastBatch))
 
   /** Manifest-declared key columns, in declaration order — the
     * routing metadata the SQL serve surface
@@ -602,8 +516,7 @@ object AggView {
     * kb-pruned path.
     */
   def keys(path: String): Seq[String] =
-    readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no view at $path")).keys
+    live(path).decl.keys
 
   /** TIME-TRAVEL serve: the view exactly as it stood at a retained
     * manifest `version` — every commit ([[buildIfAbsent]],
@@ -620,21 +533,10 @@ object AggView {
     */
   def readAsOf(spark: SparkSession, path: String,
       version: Long): DataFrame = {
-    val mf = IndexDirs.readManifestAt(path, version).map(toManifest)
-      .getOrElse(throw new IllegalStateException(
-        s"no manifest version $version at $path — retained: " +
-          versions(path).mkString("[", ", ", "]")))
-    val f = IndexDirs.fs(path)
-    val gone = (s"${mf.baseOf("agg")}" +: mf.deltas.map(d => s"deltas/$d"))
-      .filterNot(sub => f.exists(new org.apache.hadoop.fs.Path(path, sub)))
-    require(gone.isEmpty,
-      s"manifest version $version of $path lists " +
-        gone.mkString("[", ", ", "]") + ", garbage-collected by a " +
-        "later compaction/purge — this version's time-travel window " +
-        "has closed")
+    val mf = retained(path, version, "agg")
     liveAgg(spark, path, mf)
-      .select(mf.keys.map(col) ++ (col("__cnt").as("cnt") +:
-        mf.mNames.map(col)): _*)
+      .select(mf.decl.keys.map(col) ++ (col("__cnt").as("cnt") +:
+        mf.decl.mNames.map(col)): _*)
   }
 
   /** VERSION DIFF, O(files-between-versions): per-group net change
@@ -656,23 +558,21 @@ object AggView {
     */
   def diff(spark: SparkSession, path: String, vFrom: Long,
       vTo: Long): DataFrame = {
-    def at(v: Long): Manifest =
+    def at(v: Long): Mf =
       IndexDirs.readManifestAt(path, v).map(toManifest)
         .getOrElse(throw new IllegalStateException(
           s"no manifest version $v at $path — retained: " +
             versions(path).mkString("[", ", ", "]")))
     val (a, b) = (at(vFrom), at(vTo))
-    require(a.keys == b.keys && a.mNames == b.mNames &&
-      a.mExprs == b.mExprs && a.kinds == b.kinds &&
-      a.kbParts == b.kbParts,
+    require(a.decl.copy(lg = 0) == b.decl.copy(lg = 0),
       s"versions $vFrom and $vTo of $path carry different view " +
         "declarations (a rebuild happened between them) — their " +
         "diff is not a delta of one view")
-    require(!b.appendOnlyMeasures,
+    require(!b.decl.appendOnlyMeasures,
       "version diff needs SIGNED (sum-algebra) measures — min/max " +
         "measures have no negation, so per-group net change is not " +
         "defined for this view")
-    def roots(mf: Manifest): Set[String] =
+    def roots(mf: Mf): Set[String] =
       (s"${mf.baseOf("agg")}" +: mf.deltas.map(d => s"deltas/$d/agg")).toSet
     val pos = roots(b) -- roots(a) // files vTo adds
     val neg = roots(a) -- roots(b) // files vTo no longer reads
@@ -684,27 +584,27 @@ object AggView {
         gone.mkString("[", ", ", "]") + ", garbage-collected by a " +
         "later compaction/purge — this diff's time-travel window " +
         "has closed")
-    val mNames = b.mNames
+    val mNames = b.decl.mNames
     def signed(subs: Set[String], sign: Int): Seq[DataFrame] =
       subs.toSeq.sorted.map { sub =>
         val df = spark.read.parquet(s"$path/$sub")
-        df.select(b.keys.map(col) ++
+        df.select(b.decl.keys.map(col) ++
           ((col("__cnt") * sign).as("__cnt") +:
             mNames.map(n => (col(n) * sign).as(n))): _*)
       }
     val parts = signed(pos, 1) ++ signed(neg, -1)
     if (parts.isEmpty) // identical file sets ⇒ empty diff, same shape
       return liveAgg(spark, path, b).limit(0)
-        .select(b.keys.map(col) ++ (col("__cnt").as("cnt_delta") +:
+        .select(b.decl.keys.map(col) ++ (col("__cnt").as("cnt_delta") +:
           mNames.map(n => col(n).as(s"${n}_delta"))): _*)
     val nonZero = ((col("__cnt") =!= 0) +:
       mNames.map(n => col(n) =!= 0)).reduce(_ || _)
     parts.reduce(_.unionByName(_))
-      .groupBy(b.keys.map(col): _*)
+      .groupBy(b.decl.keys.map(col): _*)
       .agg(sum(col("__cnt")).as("__cnt"),
         mNames.map(n => sum(col(n)).as(n)): _*)
       .filter(nonZero)
-      .select(b.keys.map(col) ++ (col("__cnt").as("cnt_delta") +:
+      .select(b.decl.keys.map(col) ++ (col("__cnt").as("cnt_delta") +:
         mNames.map(n => col(n).as(s"${n}_delta"))): _*)
   }
 
@@ -716,60 +616,31 @@ object AggView {
     */
   def lookup(spark: SparkSession, path: String,
       probeKeys: DataFrame): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no view at $path"))
-    val probe = probeKeys.select(mf.keys.map(col): _*).distinct()
+    val mf = live(path)
+    val probe = probeKeys.select(mf.decl.keys.map(col): _*).distinct()
       .localCheckpoint(false)
-    val parts = probe.select(kbCol(mf.keys, mf.kbParts).as("kb"))
+    val parts = probe.select(kbCol(mf.decl.keys, mf.decl.kbParts).as("kb"))
       .distinct().collect().map(_.getInt(0)).toSeq
     liveAgg(spark, path, mf, Some(parts))
-      .join(broadcast(probe), mf.keys)
-      .select(mf.keys.map(col) ++ (col("__cnt").as("cnt") +:
-        mf.mNames.map(col)): _*)
+      .join(broadcast(probe), mf.decl.keys)
+      .select(mf.decl.keys.map(col) ++ (col("__cnt").as("cnt") +:
+        mf.decl.mNames.map(col)): _*)
   }
 
-  /** Fold NEW facts into the view: only the delta pays an aggregate;
-    * its partial sums stage in `deltas/d<N>` (manifest-gated) and the
-    * fingerprint composes in O(delta). Inserts need no disjointness
-    * guard — the same fact appearing twice is two facts, which is
-    * exactly what a sum view counts.
-    *
-    * MULTI-WRITER: sum algebra commutes, so N uncoordinated
+  /** MULTI-WRITER: sum algebra commutes, so N uncoordinated
     * appenders are fully supported — each stages its own claimed
-    * delta dir, and a lost manifest race just re-reads and re-commits
-    * ([[IndexDirs.commitWithRetry]]); no append is ever lost or
-    * double-counted, in any interleaving.
+    * delta dir, and a lost manifest race just re-reads and re-commits;
+    * no append is ever lost or double-counted, in any interleaving.
+    * Inserts need no disjointness guard — the same fact appearing
+    * twice is two facts, which is exactly what a sum view counts. The
+    * delete paths refuse views with min/max measures.
     */
-  def append(delta: DataFrame, path: String): Build =
-    appendImpl(delta, path, None)
-
-  private def appendImpl(delta: DataFrame, path: String,
-      batchMark: Option[Long]): Build = {
-    // the declaration (keys/measures/bucketing) is immutable across
-    // appends — only a rebuild changes it, and a rebuild uncommits —
-    // so staging off this read is race-free; only the counters and
-    // delta list are re-derived per commit attempt
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no view at $path"))
-    if (batchMark.exists(_ <= decl.lastBatch))
-      return Build(path, decl.fp, decl.n, reused = true)
-    val (dfp, dn) = fingerprint(delta, decl)
-    if (dn == 0) return Build(path, decl.fp, decl.n, reused = true)
-    val staged = IndexDirs.nextDeltaName(path, "d")
-    writeDelta(delta, 1, decl, s"$path/deltas/$staged")
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      if (batchMark.exists(_ <= have.lastBatch)) None
-      else Some(have.copy(fp = have.fp ^ dfp, n = have.n + dn,
-        deltas = have.deltas :+ staged,
-        lastBatch = batchMark.getOrElse(have.lastBatch)))
-    } match {
-      case Some(next) => Build(path, next.fp, next.n, reused = false)
-      case None => // another writer landed this batch id first
-        val now = readManifest(path).getOrElse(decl)
-        Build(path, now.fp, now.n, reused = true)
-    }
-  }
+  override protected def refuseDelete(mf: Mf, path: String): Unit =
+    require(!mf.decl.appendOnlyMeasures,
+      s"the view at $path declares min/max measures — APPEND-ONLY " +
+        "extrema are not self-maintainable under deletes (a " +
+        "retracted extremum cannot be un-folded); rebuild the view " +
+        "over the surviving facts instead")
 
   /** Retract facts: the same rows count-negated. `checkBounded`
     * (default on) verifies no group would go negative — the delta's
@@ -780,215 +651,84 @@ object AggView {
     * facts a group never held.
     */
   def delete(delta: DataFrame, path: String,
-      checkBounded: Boolean = true): Build = {
-    val spark = delta.sparkSession
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no view at $path"))
-    require(!decl.appendOnlyMeasures,
-      s"the view at $path declares min/max measures — APPEND-ONLY " +
-        "extrema are not self-maintainable under deletes (a " +
-        "retracted extremum cannot be un-folded); rebuild the view " +
-        "over the surviving facts instead")
-    val (dfp, dn) = fingerprint(delta, decl)
-    if (dn == 0) return Build(path, decl.fp, decl.n, reused = true)
-    val dg =
-      if (!checkBounded) null
-      else projected(delta, decl)
-        .groupBy(decl.keys.map(col): _*)
-        .agg(count(lit(1)).as("__dcnt"))
-        .localCheckpoint(false)
-    // the bounded guard verifies against the manifest an attempt
-    // anchors at — it runs once against the anchor (overlapped with
-    // the staging write below) and re-runs inside the commit loop
-    // whenever another writer moved the manifest (a CONCURRENT delete
-    // of the same rows must flip this from pass to refuse, not slip by)
-    def boundedOk(have: Manifest): Unit = if (checkBounded) {
-      val parts = dg.select(kbCol(have.keys, have.kbParts).as("kb"))
+      checkBounded: Boolean = true): Build =
+    remove(delta, path) { (decl, _) =>
+      val dg =
+        if (!checkBounded) null
+        else projected(delta, decl.decl)
+          .groupBy(decl.decl.keys.map(col): _*)
+          .agg(count(lit(1)).as("__dcnt"))
+          .localCheckpoint(false)
+      lazy val parts = dg
+        .select(kbCol(decl.decl.keys, decl.decl.kbParts).as("kb"))
         .distinct().collect().map(_.getInt(0)).toSeq
-      // groups the delta names that either don't exist live or hold
-      // fewer rows than the delta retracts — counted via an INNER
-      // broadcast join (an outer join can't broadcast its preserved
-      // side): violations = delta groups − sufficiently-full matches
-      val within = liveAgg(spark, path, have, Some(parts))
-        .join(broadcast(dg), have.keys)
-        .filter(col("__cnt") >= col("__dcnt"))
-        .count()
-      val over = dg.count() - within
-      require(over == 0,
-        s"delete delta retracts more rows than $over group(s) hold " +
-          s"in the view at $path — the feed is deleting facts the " +
-          "view never absorbed (pass checkBounded = false only when " +
-          "upstream proves containment)")
+      have => if (checkBounded) {
+        // groups the delta names that either don't exist live or hold
+        // fewer rows than the delta retracts — counted via an INNER
+        // broadcast join (an outer join can't broadcast its preserved
+        // side): violations = delta groups − sufficiently-full matches
+        val within = liveAgg(delta.sparkSession, path, have, Some(parts))
+          .join(broadcast(dg), have.decl.keys)
+          .filter(col("__cnt") >= col("__dcnt"))
+          .count()
+        val over = dg.count() - within
+        require(over == 0,
+          s"delete delta retracts more rows than $over group(s) hold " +
+            s"in the view at $path — the feed is deleting facts the " +
+            "view never absorbed (pass checkBounded = false only when " +
+            "upstream proves containment)")
+      }
     }
-    val staged = IndexDirs.nextDeltaName(path, "d")
-    // guard ∥ staging (guide §2.6): both depend only on the anchor
-    // manifest; the commit loop re-verifies only when another writer
-    // moved it (a concurrent delete of the same rows must still flip
-    // the guard from pass to refuse on retry)
-    try Par.inParallel(Seq(
-      () => boundedOk(decl),
-      () => writeDelta(delta, -1, decl, s"$path/deltas/$staged")))
-    catch { case e: Throwable =>
-      IndexDirs.gcDeltas(path, Seq(staged)); throw e
-    }
-    val next = IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      if (have.mv != decl.mv) boundedOk(have)
-      Some(have.copy(fp = have.fp ^ dfp, n = have.n - dn,
-        deltas = have.deltas :+ staged))
-    }.get
-    Build(path, next.fp, next.n, reused = false)
-  }
-
-  /** Exactly-once streaming maintenance and the op-aware mixed CDC
-    * form — the [[LmIndex]] recipes (`batchId <= lastBatch` ⇒ skip;
-    * one manifest commit makes the whole batch visible or none).
-    */
-  def appendBatch(batch: DataFrame, batchId: Long, path: String): Build =
-    appendImpl(batch, path, Some(batchId)) // skip-check inside the loop
-
-  def foreachBatchSink(path: String): (DataFrame, Long) => Unit =
-    (df, id) => { appendBatch(df, id, path); () }
-
-  def applyBatch(batch: DataFrame, batchId: Long, path: String,
-      opCol: String = "op", deleteOp: String = "D"): Build = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no view at $path"))
-    if (batchId <= decl.lastBatch)
-      return Build(path, decl.fp, decl.n, reused = true)
-    val rows = batch.localCheckpoint(false)
-    val ins = rows.filter(col(opCol) =!= deleteOp).drop(opCol)
-    val del = rows.filter(col(opCol) === deleteOp).drop(opCol)
-    val (ifp, inN) = fingerprint(ins, decl)
-    val (dfp, delN) = fingerprint(del, decl)
-    if (inN == 0 && delN == 0)
-      return Build(path, decl.fp, decl.n, reused = true)
-    require(delN == 0 || !decl.appendOnlyMeasures,
-      s"the view at $path declares min/max measures — a " +
-        "delete-bearing batch cannot be applied (append-only " +
-        "extrema have no retraction); rebuild over the survivors")
-    var stagedDirs = Seq.empty[String]
-    if (delN > 0) {
-      val staged = IndexDirs.nextDeltaName(path, "d")
-      writeDelta(del, -1, decl, s"$path/deltas/$staged")
-      stagedDirs :+= staged
-    }
-    if (inN > 0) {
-      val staged = IndexDirs.nextDeltaName(path, "d")
-      writeDelta(ins, 1, decl, s"$path/deltas/$staged")
-      stagedDirs :+= staged
-    }
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, stagedDirs) { have =>
-      if (batchId <= have.lastBatch) None // a racing replay landed it
-      else Some(have.copy(fp = have.fp ^ ifp ^ dfp,
-        n = have.n + inN - delN, deltas = have.deltas ++ stagedDirs,
-        lastBatch = batchId))
-    } match {
-      case Some(next) => Build(path, next.fp, next.n, reused = false)
-      case None =>
-        val now = readManifest(path).getOrElse(decl)
-        Build(path, now.fp, now.n, reused = true)
-    }
-  }
-
-  def cdcSink(path: String, opCol: String = "op",
-      deleteOp: String = "D"): (DataFrame, Long) => Unit =
-    (df, id) => { applyBatch(df, id, path, opCol, deleteOp); () }
 
   /** Fold the delta stream into one directory — per-group sums across
     * the delta dirs only, all-zero rows dropped, NEGATIVE partials
     * kept (they must go on cancelling base rows until a [[purge]]).
     */
-  def compactDeltas(spark: SparkSession, path: String): Int = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no view at $path"))
-    if (decl.deltas.length < 2) return 0
-    val folded = decl.deltas
-    val staged = IndexDirs.nextDeltaName(path, "c")
+  override protected def fold(spark: SparkSession, path: String, mf: Mf,
+      folded: Seq[String], root: String): Unit = {
     // all-zero-row drop applies to the SIGNED (sum) columns only —
     // an append-only min/max group always keeps a positive __cnt
     val nonZero = ((col("__cnt") =!= 0) +:
-      decl.measures.filter(_.kind == "sum")
+      mf.decl.measures.filter(_.kind == "sum")
         .map(m => col(m.name) =!= 0)).reduce(_ || _)
     folded.map(d => spark.read.parquet(s"$path/deltas/$d/agg"))
       .reduce(_.unionByName(_))
-      .groupBy(decl.keys.map(col): _*)
+      .groupBy(mf.decl.keys.map(col): _*)
       .agg(sum(col("__cnt")).as("__cnt"),
-        decl.measures.map(foldMeasure): _*)
+        mf.decl.measures.map(foldMeasure): _*)
       .filter(nonZero)
-      .withColumn("kb", kbCol(decl.keys, decl.kbParts))
+      .withColumn("kb", kbCol(mf.decl.keys, mf.decl.kbParts))
+      .repartition(col("kb"))
+      .write.mode("overwrite").partitionBy("kb").parquet(s"$root/agg")
+  }
+
+  override protected def baseSubs(mf: Mf) = Seq("agg")
+
+  /** [[purge]]'s survivors-only rewrite — after it, retracted facts
+    * leave no trace (their groups hold the surviving sums,
+    * fully-retracted groups are gone). Returns the live group count.
+    */
+  override protected def rewrite(spark: SparkSession, path: String,
+      mf: Mf, ver: Int): Long = {
+    liveAgg(spark, path, mf)
+      .withColumn("kb", kbCol(mf.decl.keys, mf.decl.kbParts))
       .repartition(col("kb"))
       .write.mode("overwrite").partitionBy("kb")
-      .parquet(s"$path/deltas/$staged/agg")
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      // deltas that landed after our fold survive (sum algebra is
-      // order-free, so fold-first + newer-after is exact); a racing
-      // purge/compaction that already folded any of ours makes this
-      // fold stale — drop it, theirs covered it
-      if (!folded.forall(have.deltas.contains)) None
-      else Some(have.copy(
-        deltas = staged +: have.deltas.filterNot(folded.toSet)))
-    } match {
-      case Some(_) => IndexDirs.gcDeltas(path, folded); folded.length
-      case None => 0
-    }
+      .parquet(s"$path/agg.v$ver")
+    spark.read.parquet(s"$path/agg.v$ver").count()
   }
 
-  /** Survivors-only semantic rewrite into a versioned base dir —
-    * after this, retracted facts leave no trace (their groups hold
-    * the surviving sums, fully-retracted groups are gone). Returns
-    * the live group count.
-    */
-  def purge(spark: SparkSession, path: String): Long =
-    purgeImpl(spark, path, () => ())
+  override protected def idlePurge(spark: SparkSession, path: String,
+      mf: Mf): Long = liveAgg(spark, path, mf).count()
+}
 
-  /** [[purge]] with a test seam invoked between the survivors rewrite
-    * and the manifest commit — deterministic interleaving specs only.
-    */
-  private[operators] def purgeImpl(spark: SparkSession, path: String,
-      beforeCommit: () => Unit): Long = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no view at $path"))
-    if (decl.deltas.isEmpty)
-      return liveAgg(spark, path, decl).count()
-    // CLAIMED target version: two racing purges write disjoint
-    // agg.v<k> dirs — neither can clobber parquet the other's
-    // manifest might commit
-    val nextVer = IndexDirs.claimBaseSuffix(path, "agg.v",
-      decl.baseVer + 1)
-    val live = liveAgg(spark, path, decl)
-      .withColumn("kb", kbCol(decl.keys, decl.kbParts))
-      .repartition(col("kb"))
-    live.write.mode("overwrite").partitionBy("kb")
-      .parquet(s"$path/agg.v$nextVer")
-    beforeCommit()
-    try IndexDirs.commitWithRetry(readManifest(path),
-      writeManifest(path, _: Manifest), path) { have =>
-      require(have.baseVer == decl.baseVer,
-        s"a concurrent purge of $path committed base version " +
-          s"${have.baseVer} while this one rewrote from " +
-          s"${decl.baseVer} — rerun against the new base")
-      // a compaction committed mid-purge folds (some of) our snapshot
-      // deltas into a c<N> dir the filterNot below would KEEP — while
-      // the new base already absorbed those rows, double-counting
-      // every folded row. Refuse instead (the reverse direction of
-      // compactDeltas' own stale-fold skip).
-      require(decl.deltas.forall(have.deltas.contains),
-        s"a concurrent compaction of $path folded deltas this purge's " +
-          "rewrite already absorbed — committing would double-count " +
-          "them; rerun against the compacted state")
-      // appends that landed after our rewrite stay as deltas
-      Some(have.copy(deltas = have.deltas.filterNot(decl.deltas.toSet),
-        baseVer = nextVer))
-    } catch {
-      case e: IllegalArgumentException =>
-        IndexDirs.rmTree(s"$path/agg.v$nextVer") // orphaned rewrite
-        throw e
-    }
-    IndexDirs.gcDeltas(path, decl.deltas)
-    IndexDirs.rmTree(s"$path/${decl.baseOf("agg")}")
-    spark.read.parquet(s"$path/agg.v$nextVer").count()
-  }
+/** [[AggView]]'s declaration: keys, measures, bucketing, and whether
+  * the build wrote a per-file ledger (`lg`).
+  */
+private[operators] final case class ViewLayout(keys: Seq[String],
+    mNames: Seq[String], mExprs: Seq[String], kbParts: Int, lg: Int,
+    kinds: Seq[String]) {
+  def measures: Seq[AggView.Measure] =
+    mNames.lazyZip(mExprs).lazyZip(kinds).map(AggView.Measure.apply)
+  def appendOnlyMeasures: Boolean = kinds.exists(_ != "sum")
 }

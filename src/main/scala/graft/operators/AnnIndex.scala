@@ -57,13 +57,7 @@ import org.apache.spark.sql.functions._
   * (directory/directory.go:230-240's snapshot discipline); this is
   * that shape for ANN state.
   */
-object AnnIndex {
-
-  /** Index state after [[buildIfAbsent]]: `reused = true` means the
-    * manifest fingerprint matched and nothing was rewritten.
-    */
-  type Build = IndexBuild
-  val Build = IndexBuild
+object AnnIndex extends GuardedArtifact[AnnLayout] {
 
   /** Order-independent content fingerprint of `(idCol, vecCol)` plus
     * any carried metadata columns — see
@@ -94,64 +88,36 @@ object AnnIndex {
     */
   private val LayoutVersion = 1
 
-  /** Default tombstone bound — see [[DedupIndex.DefaultMaxTombstones]]
-    * (same per-read broadcast anti-join, same purge-due point).
+  override protected def tombstoned = true
+  override protected def idCol(d: AnnLayout) = d.id
+
+  override protected def readDecl(r: IndexDirs.ManifestReader) =
+    AnnLayout(r.strOr("kind", "ivf"), r.int("k"), r.str("id"),
+      r.str("vec"),
+      // a pre-hash manifest (older layout) reads as ph=0 — it can
+      // never match a computed hash, so it rebuilds once, safely
+      r.longOr("ph", 0L), r.intOr("lv", 0), r.seq("carry"))
+
+  override protected def writeDecl(w: IndexDirs.ManifestWriter,
+      d: AnnLayout) =
+    w.put("kind", d.kind).put("k", d.k).put("id", d.id).put("vec", d.vec)
+      .put("ph", d.ph).put("lv", d.lv).put("carry", d.carry)
+
+  // the live base dir is named in full (`bd`: "" before any purge,
+  // else `<assignments|codes>.v<N>`), not by its version number
+  override protected def readBase(r: IndexDirs.ManifestReader) =
+    """\.v(\d+)$""".r.findFirstMatchIn(r.strOr("bd", ""))
+      .map(_.group(1).toInt).getOrElse(0)
+
+  override protected def writeBase(w: IndexDirs.ManifestWriter, mf: Mf) =
+    w.put("bd", if (mf.baseVer == 0) "" else mf.baseOf(mf.decl.baseSub))
+
+  /** Kind-aware fingerprint: ivf fingerprints carry columns; pq/sq8
+    * carry none, so they fingerprint (id, vec) only — the same rows
+    * [[AnnLayout.rowHash]] hashes.
     */
-  val DefaultMaxTombstones: Long = 1L << 20
-
-  private case class Manifest(fp: Long, n: Long, kind: String, k: Int,
-      id: String, vec: String, ph: Long, lv: Int = LayoutVersion,
-      deltas: Seq[String] = Nil,
-      lastBatch: Long = -1L, carry: Seq[String] = Nil,
-      tombs: Seq[String] = Nil, tombCount: Long = 0L,
-      baseDir: String = "", mv: Long = 0L) {
-    /** Equality for reuse decisions — everything except the delta /
-      * tombstone lists, the base-dir version, and the streaming batch
-      * watermark (an appended or deleted-from index still satisfies a
-      * matching rebuild: the composed fingerprint covers base ∪
-      * deltas ∖ tombstones).
-      */
-    def sameIndexAs(other: Manifest): Boolean =
-      copy(deltas = Nil, lastBatch = -1L, tombs = Nil, tombCount = 0L,
-        baseDir = "", mv = 0L) ==
-        other.copy(deltas = Nil, lastBatch = -1L, tombs = Nil,
-          tombCount = 0L, baseDir = "", mv = 0L)
-    /** The live base data directory: versioned after a [[purge]]. */
-    def baseOr(default: String): String =
-      if (baseDir.isEmpty) default else baseDir
-    /** The raw-row hash the fingerprint folds — what [[delete]]
-      * verifies a delta row against (ivf fingerprints carry columns;
-      * pq/sq8 fingerprint (id, vec) only).
-      */
-    def rowHash: org.apache.spark.sql.Column =
-      if (kind == "ivf") xxhash64((id +: vec +: carry).map(col): _*)
-      else xxhash64(col(id), col(vec))
-  }
-
-  private def readManifest(path: String): Option[Manifest] =
-    IndexDirs.readManifest(path).map { r =>
-      Manifest(r.long("fp"), r.long("n"), r.strOr("kind", "ivf"),
-        r.int("k"), r.str("id"), r.str("vec"),
-        // a pre-hash manifest (older layout) reads as ph=0 — it can
-        // never match a computed hash, so it rebuilds once, safely
-        r.longOr("ph", 0L), r.intOr("lv", 0),
-        r.seq("deltas"), r.longOr("lb", -1L),
-        r.seq("carry"), r.seq("tombs"), r.longOr("tn", 0L),
-        r.strOr("bd", ""), mv = r.version)
-    }
-
-  private def writeManifest(path: String, mf: Manifest): Unit =
-    IndexDirs.manifest()
-      .put("fp", mf.fp).put("n", mf.n).put("kind", mf.kind)
-      .put("k", mf.k).put("id", mf.id).put("vec", mf.vec)
-      .put("ph", mf.ph).put("lv", mf.lv).put("lb", mf.lastBatch)
-      .put("bd", mf.baseDir).put("tn", mf.tombCount)
-      .put("deltas", mf.deltas).put("carry", mf.carry)
-      .put("tombs", mf.tombs)
-      .commit(path, mf.mv)
-
-  /** Uncommit + clear — see [[IndexDirs.uncommit]]. */
-  private def uncommit(path: String): Unit = IndexDirs.uncommit(path)
+  override protected def fpOf(rows: DataFrame, d: AnnLayout) =
+    fingerprint(rows, d.id, d.vec, d.carry)
 
   /** Build the IVF index at `path` unless a manifest proves the same
     * corpus (by fingerprint + count + centroid content hash) is
@@ -168,40 +134,26 @@ object AnnIndex {
       centroids: Seq[Seq[Long]], path: String,
       carryCols: Seq[String] = Nil): Build = {
     val (fp, n) = fingerprint(corpus, idCol, vecCol, carryCols)
-    val want = Manifest(fp, n, "ivf", centroids.length, idCol, vecCol,
-      paramsHash(centroids), carry = carryCols)
-    readManifest(path) match {
-      case Some(have) if have.sameIndexAs(want) =>
-        Build(path, fp, n, reused = true)
-      case _ =>
-        uncommit(path)
-        val spark = corpus.sparkSession
-        import spark.implicits._
-        centroids.zipWithIndex
-          .map { case (c, i) => (i, c) }.toDF("c", "centroid")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$path/centroids")
-        corpus
-          .select(col(idCol) +: col(vecCol) +: carryCols.map(col) :+
-            want.rowHash.as("__ch") :+
-            Ivf.assignInt(col(vecCol), centroids).as("bucket"): _*)
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$path/assignments")
-        writeManifest(path, want)
-        Build(path, fp, n, reused = false)
+    val want = Artifact.Manifest(AnnLayout("ivf", centroids.length, idCol,
+      vecCol, paramsHash(centroids), LayoutVersion, carryCols), fp, n)
+    buildOr(path, want) {
+      val spark = corpus.sparkSession
+      import spark.implicits._
+      centroids.zipWithIndex
+        .map { case (c, i) => (i, c) }.toDF("c", "centroid")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$path/centroids")
+      stage(corpus, 1, want, path, s"$path/assignments")
     }
   }
 
-  /** The persisted centroids, in index order. */
   /** The persisted index's variant (`ivf` | `pq` | `sq8`) — public
     * so a serve router (e.g. the `annindex` SQL source) can pick the
     * matching search path without reaching into the manifest.
     */
-  def kind(path: String): String =
-    readManifest(path).map(_.kind).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
+  def kind(path: String): String = live(path).decl.kind
 
+  /** The persisted centroids, in index order. */
   def centroids(spark: SparkSession, path: String): Seq[Seq[Long]] =
     spark.read.parquet(s"$path/centroids").collect()
       .map(r => (r.getAs[Number]("c").intValue,
@@ -217,92 +169,50 @@ object AnnIndex {
     * (crashed, uncommitted) delta directories are never read — they
     * are not in the manifest.
     */
-  private def readParts(spark: SparkSession, path: String, baseSub: String,
-      mf: Manifest, bucketFilter: Option[Seq[Int]]): DataFrame = {
-    val roots = s"$path/${mf.baseOr(baseSub)}" +:
+  private def readParts(spark: SparkSession, path: String, mf: Mf,
+      bucketFilter: Option[Seq[Int]]): DataFrame = {
+    val roots = s"$path/${mf.baseOf(mf.decl.baseSub)}" +:
       mf.deltas.map(d => s"$path/deltas/$d")
     val rows = roots.map { r =>
       val df = spark.read.parquet(r)
       bucketFilter.fold(df)(w => df.filter(col("bucket").isin(w.map(Int.box): _*)))
     }.reduce(_.unionByName(_))
     if (mf.tombs.isEmpty) rows
-    else rows.join(broadcast(tombIds(spark, path, mf)),
-      Seq(mf.id), "left_anti")
+    else rows.join(broadcast(Artifact.tombIds(spark, path, mf.tombs)),
+      Seq(mf.decl.id), "left_anti")
   }
 
-  private def tombIds(spark: SparkSession, path: String,
-      mf: Manifest): DataFrame =
-    mf.tombs.map(t => spark.read.parquet(s"$path/deltas/$t"))
-      .reduce(_.unionByName(_)).distinct()
-
-  private def readAssignments(spark: SparkSession, path: String,
-      mf: Manifest, bucketFilter: Option[Seq[Int]]): DataFrame =
-    readParts(spark, path, "assignments", mf, bucketFilter)
-
-  /** Never-reused staged delta name — see [[IndexDirs.nextDeltaName]]
-    * (crashed attempts leave uniquely-named orphans: garbage, never
-    * corruption — the MergeOnRead reservation rule).
+  /** The disjointness guard of every append kind (`checkDisjoint`):
+    * no delta id may already be live — duplicated ids would double
+    * rows AND xor their hashes out of the fingerprint — nor
+    * tombstoned: the tombstone anti-join in [[readParts]] is
+    * version-blind, so a re-added row would be silently invisible
+    * ([[purge]] re-opens the id space). The delta is small by
+    * contract, so the base side streams its id column through a
+    * broadcast probe and never shuffles.
     */
-  private def nextDeltaName(path: String, prefix: String): String =
-    IndexDirs.nextDeltaName(path, prefix)
-
-  /** Re-adding a tombstoned id is refused under `checkDisjoint`: the
-    * tombstone anti-join in [[readParts]] is version-blind, so a
-    * re-added row would be silently invisible. [[purge]] clears
-    * tombstones and makes the id insertable again. `probeIds` is the
-    * delta's distinct id column.
-    */
-  private def requireNotTombstoned(probeIds: DataFrame, spark: SparkSession,
-      path: String, mf: Manifest): Unit = {
-    if (mf.tombs.isEmpty) return
-    val hit = tombIds(spark, path, mf)
-      .join(broadcast(probeIds), Seq(mf.id), "left_semi").count()
-    require(hit == 0,
-      s"append delta re-adds $hit tombstoned id(s) at $path — the " +
-        "tombstone filter would hide the new rows; purge() first")
-  }
-
-  private def requireDisjoint(probeIds: DataFrame, existing: DataFrame,
-      idCol: String, path: String): Unit = {
-    val dupes = existing.select(col(idCol))
-      .join(broadcast(probeIds), Seq(idCol), "left_semi")
-      .count()
-    require(dupes == 0,
-      s"append delta shares $dupes id(s) with the index at $path — " +
-        "duplicate ids would corrupt both the rows and the xor " +
-        "fingerprint (pass checkDisjoint = false only when upstream " +
-        "proves disjointness)")
-  }
-
-  /** The shared commit tail of the three append kinds: the staged
-    * delta dir commits through [[IndexDirs.stagedCommit]], with the
-    * batch-replay skip and the disjointness/tombstone guards
-    * re-verified per attempt against the manifest each attempt
-    * anchors at (multi-writer liveness — the [[AggView]] recipe).
-    */
-  private def appendCommit(spark: SparkSession, path: String,
-      decl: Manifest, staged: String, probeIds: DataFrame,
-      baseSub: String, dfp: Long, dn: Long, checkDisjoint: Boolean,
-      batchMark: Option[Long]): Build =
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      if (batchMark.exists(_ <= have.lastBatch)) None
-      else {
-        if (checkDisjoint) {
-          requireDisjoint(probeIds,
-            readParts(spark, path, baseSub, have, None), have.id, path)
-          requireNotTombstoned(probeIds, spark, path, have)
-        }
-        Some(have.copy(fp = have.fp ^ dfp, n = have.n + dn,
-          deltas = have.deltas :+ staged,
-          lastBatch = batchMark.getOrElse(have.lastBatch)))
+  override protected def insertGuard(delta: DataFrame, decl: Mf,
+      dn: Long, path: String): Guard = {
+    val spark = delta.sparkSession
+    val id = decl.decl.id
+    val probeIds = delta.select(col(id)).distinct().localCheckpoint(false)
+    have => {
+      val dupes = readParts(spark, path, have, None).select(col(id))
+        .join(broadcast(probeIds), Seq(id), "left_semi").count()
+      require(dupes == 0,
+        s"append delta shares $dupes id(s) with the index at $path — " +
+          "duplicate ids would corrupt both the rows and the xor " +
+          "fingerprint (pass checkDisjoint = false only when upstream " +
+          "proves disjointness)")
+      if (have.tombs.nonEmpty) {
+        val hit = Artifact.tombIds(spark, path, have.tombs)
+          .join(broadcast(probeIds), Seq(id), "left_semi").count()
+        require(hit == 0,
+          s"append delta re-adds $hit tombstoned id(s) at $path — the " +
+            "tombstone filter would hide the new rows; purge() first")
       }
-    } match {
-      case Some(next) => Build(path, next.fp, next.n, reused = false)
-      case None => // a racing replay landed this batch id first
-        val now = readManifest(path).getOrElse(decl)
-        Build(path, now.fp, now.n, reused = true)
     }
+  }
 
   /** ANN top-k over the persisted index: probes fan out to their
     * `nprobe` nearest buckets; the corpus side reads ONLY those
@@ -315,8 +225,7 @@ object AnnIndex {
       probeIdCol: String, vecCol: String, nprobe: Int, k: Int,
       idCol: String = "vec_id",
       where: Option[Column] = None): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
+    val mf = live(path)
     val cs = centroids(spark, path)
     val p = probes.select(col(probeIdCol).as("probe_id"),
         col(vecCol).as("__pq"),
@@ -329,7 +238,7 @@ object AnnIndex {
     // `lang = 'en'` search reads only matching row groups of only
     // the probed buckets
     val assigned = where.foldLeft(
-      readAssignments(spark, path, mf, Some(wanted)))(_.filter(_))
+      readParts(spark, path, mf, Some(wanted)))(_.filter(_))
     val scored = assigned.join(broadcast(p), Seq("bucket"))
       .withColumn("sim", Similarity.cosineInt(col(vecCol), col("__pq")))
     Similarity.topKPerProbe(scored, k, "probe_id", idCol)
@@ -349,80 +258,56 @@ object AnnIndex {
     * full corpus correctly reuses the appended index.
     *
     * Caller contract: delta ids are disjoint from the base (CDC
-    * upstream enforces key identity; duplicated ids would double
-    * rows AND xor their hashes out of the fingerprint).
-    * `checkDisjoint` (on by default) enforces it with one
-    * broadcast semi-join count — the delta is small by contract, so
-    * the base side streams its id column through a broadcast probe
-    * and never shuffles; pass false only when the upstream already
-    * proves disjointness and the extra base scan matters.
+    * upstream enforces key identity). `checkDisjoint` (on by default)
+    * enforces it ([[insertGuard]]); pass false only when the upstream
+    * already proves disjointness and the extra base scan matters.
     */
-  def append(delta: DataFrame, path: String,
-      checkDisjoint: Boolean = true): Build =
-    appendImpl(delta, path, checkDisjoint, None)
+  override def append(delta: DataFrame, path: String): Build =
+    append(delta, path, checkDisjoint = true)
 
-  /** Kind-aware fingerprint: ivf fingerprints carry columns; pq/sq8
-    * fingerprint (id, vec) only — the same rows [[Manifest.rowHash]]
-    * hashes.
-    */
-  private def fpOf(df: DataFrame, have: Manifest): (Long, Long) =
-    if (have.kind == "ivf") fingerprint(df, have.id, have.vec, have.carry)
-    else fingerprint(df, have.id, have.vec)
+  override def append(delta: DataFrame, path: String,
+      checkDisjoint: Boolean): Build =
+    appendKind("ivf", "append", delta, path, checkDisjoint)
 
-  /** Stage `delta`'s kind-appropriate rows into a fresh, never-reused
-    * `deltas/d<N>` directory (invisible until a manifest commit lists
-    * it — the staged-commit rule) and return the staged name.
+  private def appendKind(kind: String, op: String, delta: DataFrame,
+      path: String, checkDisjoint: Boolean): Build = {
+    val have = live(path).decl.kind
+    require(have == kind, s"$op needs a $kind index, got $have")
+    insert(delta, path, checkDisjoint, None)
+  }
+
+  /** Stage `delta`'s kind-appropriate rows under `root` (a claimed
+    * delta dir, invisible until a manifest commit lists it, or the
+    * build's base dir). Deletes stage tombstone id lists instead.
     */
-  private def stageInsert(delta: DataFrame, have: Manifest,
-      path: String): String = {
+  override protected def stage(delta: DataFrame, sign: Int, mf: Mf,
+      path: String, root: String): Long = {
     val spark = delta.sparkSession
-    val staged = nextDeltaName(path, "d")
-    have.kind match {
+    val d = mf.decl
+    d.kind match {
       case "ivf" =>
         val cs = centroids(spark, path)
         delta
-          .select(col(have.id) +: col(have.vec) +: have.carry.map(col) :+
-            have.rowHash.as("__ch") :+
-            Ivf.assignInt(col(have.vec), cs).as("bucket"): _*)
+          .select(col(d.id) +: col(d.vec) +: d.carry.map(col) :+
+            d.rowHash.as("__ch") :+
+            Ivf.assignInt(col(d.vec), cs).as("bucket"): _*)
           .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$path/deltas/$staged")
+          .write.mode("overwrite").partitionBy("bucket").parquet(root)
       case "pq" =>
         val cbs = pqCodebooks(spark, path)
         delta
-          .select(col(have.id),
-            Pq.encodeInt(col(have.vec), cbs).as("codes"),
-            have.rowHash.as("__ch"))
-          .write.mode("overwrite").parquet(s"$path/deltas/$staged")
+          .select(col(d.id), Pq.encodeInt(col(d.vec), cbs).as("codes"),
+            d.rowHash.as("__ch"))
+          .write.mode("overwrite").parquet(root)
       case _ =>
         delta
-          .withColumn("__s", Sq8.scaleOf(col(have.vec)))
-          .select(col(have.id), col("__s"),
-            Sq8.encode(col(have.vec), col("__s")).as("__c"),
-            have.rowHash.as("__ch"))
-          .write.mode("overwrite").parquet(s"$path/deltas/$staged")
+          .withColumn("__s", Sq8.scaleOf(col(d.vec)))
+          .select(col(d.id), col("__s"),
+            Sq8.encode(col(d.vec), col("__s")).as("__c"),
+            d.rowHash.as("__ch"))
+          .write.mode("overwrite").parquet(root)
     }
-    staged
-  }
-
-  private def appendImpl(delta: DataFrame, path: String,
-      checkDisjoint: Boolean, batchMark: Option[Long]): Build = {
-    val spark = delta.sparkSession
-    // kind/layout are immutable across appends (a rebuild uncommits),
-    // so staging off this read is race-free; counters, lists, and the
-    // guards re-derive per commit attempt (see [[appendCommit]])
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    require(decl.kind == "ivf", s"append needs an ivf index, got ${decl.kind}")
-    if (batchMark.exists(_ <= decl.lastBatch))
-      return Build(path, decl.fp, decl.n, reused = true)
-    val (dfp, dn) = fingerprint(delta, decl.id, decl.vec, decl.carry)
-    if (dn == 0) return Build(path, decl.fp, decl.n, reused = true)
-    val probeIds = delta.select(col(decl.id)).distinct()
-      .localCheckpoint(false)
-    val staged = stageInsert(delta, decl, path)
-    appendCommit(spark, path, decl, staged, probeIds, "assignments",
-      dfp, dn, checkDisjoint, batchMark)
+    0L
   }
 
   /** Build a persisted PQ index ([[Pq]] codes) at `path` unless the
@@ -431,7 +316,6 @@ object AnnIndex {
     * {{{
     *   <path>/codebooks/  parquet: (s INT, c INT, centroid ARRAY<BIGINT>)
     *   <path>/codes/      parquet: (<id>, codes ARRAY<INT>)
-    *   <path>/manifest.json — written LAST (commit marker)
     * }}}
     * The codes table is S small ints per vector — the entire corpus
     * side of every future ADC search, at a fraction of the raw
@@ -442,28 +326,18 @@ object AnnIndex {
   def buildPqIfAbsent(corpus: DataFrame, vecCol: String, idCol: String,
       codebooks: Seq[Seq[Seq[Long]]], path: String): Build = {
     val (fp, n) = fingerprint(corpus, idCol, vecCol)
-    val want = Manifest(fp, n, "pq",
+    val want = Artifact.Manifest(AnnLayout("pq",
       codebooks.length * codebooks.head.length, idCol, vecCol,
-      pqParamsHash(codebooks))
-    readManifest(path) match {
-      case Some(have) if have.sameIndexAs(want) =>
-        Build(path, fp, n, reused = true)
-      case _ =>
-        uncommit(path)
-        val spark = corpus.sparkSession
-        import spark.implicits._
-        codebooks.zipWithIndex.flatMap { case (cb, s) =>
-          cb.zipWithIndex.map { case (cent, c) => (s, c, cent) }
-        }.toDF("s", "c", "centroid")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$path/codebooks")
-        corpus
-          .select(col(idCol),
-            Pq.encodeInt(col(vecCol), codebooks).as("codes"),
-            want.rowHash.as("__ch"))
-          .write.mode("overwrite").parquet(s"$path/codes")
-        writeManifest(path, want)
-        Build(path, fp, n, reused = false)
+      pqParamsHash(codebooks), LayoutVersion, Nil), fp, n)
+    buildOr(path, want) {
+      val spark = corpus.sparkSession
+      import spark.implicits._
+      codebooks.zipWithIndex.flatMap { case (cb, s) =>
+        cb.zipWithIndex.map { case (cent, c) => (s, c, cent) }
+      }.toDF("s", "c", "centroid")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$path/codebooks")
+      stage(corpus, 1, want, path, s"$path/codes")
     }
   }
 
@@ -487,24 +361,7 @@ object AnnIndex {
     */
   def pqAppend(delta: DataFrame, path: String,
       checkDisjoint: Boolean = true): Build =
-    pqAppendImpl(delta, path, checkDisjoint, None)
-
-  private def pqAppendImpl(delta: DataFrame, path: String,
-      checkDisjoint: Boolean, batchMark: Option[Long]): Build = {
-    val spark = delta.sparkSession
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    require(decl.kind == "pq", s"pqAppend needs a pq index, got ${decl.kind}")
-    if (batchMark.exists(_ <= decl.lastBatch))
-      return Build(path, decl.fp, decl.n, reused = true)
-    val (dfp, dn) = fingerprint(delta, decl.id, decl.vec)
-    if (dn == 0) return Build(path, decl.fp, decl.n, reused = true)
-    val probeIds = delta.select(col(decl.id)).distinct()
-      .localCheckpoint(false)
-    val staged = stageInsert(delta, decl, path)
-    appendCommit(spark, path, decl, staged, probeIds, "codes",
-      dfp, dn, checkDisjoint, batchMark)
-  }
+    appendKind("pq", "pqAppend", delta, path, checkDisjoint)
 
   /** Build a persisted SQ8 index ([[Sq8]] per-vector scale + byte
     * codes) at `path` unless the manifest fingerprint matches — the
@@ -512,27 +369,14 @@ object AnnIndex {
     * pin: the scale derives from each vector). Layout:
     * {{{
     *   <path>/codes/        parquet: (<id>, __s BIGINT, __c ARRAY<BIGINT>)
-    *   <path>/manifest.json — written LAST (commit marker)
     * }}}
     */
   def buildSq8IfAbsent(corpus: DataFrame, vecCol: String, idCol: String,
       path: String): Build = {
     val (fp, n) = fingerprint(corpus, idCol, vecCol)
-    val want = Manifest(fp, n, "sq8", 0, idCol, vecCol, 0L)
-    readManifest(path) match {
-      case Some(have) if have.sameIndexAs(want) =>
-        Build(path, fp, n, reused = true)
-      case _ =>
-        uncommit(path)
-        corpus
-          .withColumn("__s", Sq8.scaleOf(col(vecCol)))
-          .select(col(idCol), col("__s"),
-            Sq8.encode(col(vecCol), col("__s")).as("__c"),
-            want.rowHash.as("__ch"))
-          .write.mode("overwrite").parquet(s"$path/codes")
-        writeManifest(path, want)
-        Build(path, fp, n, reused = false)
-    }
+    val want = Artifact.Manifest(
+      AnnLayout("sq8", 0, idCol, vecCol, 0L, LayoutVersion, Nil), fp, n)
+    buildOr(path, want)(stage(corpus, 1, want, path, s"$path/codes"))
   }
 
   /** Incrementally extend a persisted SQ8 index — [[pqAppend]]'s
@@ -540,25 +384,7 @@ object AnnIndex {
     */
   def sq8Append(delta: DataFrame, path: String,
       checkDisjoint: Boolean = true): Build =
-    sq8AppendImpl(delta, path, checkDisjoint, None)
-
-  private def sq8AppendImpl(delta: DataFrame, path: String,
-      checkDisjoint: Boolean, batchMark: Option[Long]): Build = {
-    val spark = delta.sparkSession
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    require(decl.kind == "sq8",
-      s"sq8Append needs an sq8 index, got ${decl.kind}")
-    if (batchMark.exists(_ <= decl.lastBatch))
-      return Build(path, decl.fp, decl.n, reused = true)
-    val (dfp, dn) = fingerprint(delta, decl.id, decl.vec)
-    if (dn == 0) return Build(path, decl.fp, decl.n, reused = true)
-    val probeIds = delta.select(col(decl.id)).distinct()
-      .localCheckpoint(false)
-    val staged = stageInsert(delta, decl, path)
-    appendCommit(spark, path, decl, staged, probeIds, "codes",
-      dfp, dn, checkDisjoint, batchMark)
-  }
+    appendKind("sq8", "sq8Append", delta, path, checkDisjoint)
 
   /** SQ8 top-k over the persisted index: the corpus side reads only
     * (scale, codes) — [[Sq8.topKEncoded]] over base ∪ committed
@@ -566,200 +392,35 @@ object AnnIndex {
     */
   def sq8SearchInt(spark: SparkSession, path: String, probes: DataFrame,
       probeIdCol: String, vecCol: String, k: Int,
-      idCol: String = "vec_id"): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    Sq8.topKEncoded(readParts(spark, path, "codes", mf, None),
+      idCol: String = "vec_id"): DataFrame =
+    Sq8.topKEncoded(readParts(spark, path, live(path), None),
       probes.select(col(probeIdCol).as("probe_id"), col(vecCol).as("pq")),
       k, corpusId = idCol)
-  }
 
-  /** Exactly-once streaming index maintenance — the `foreachBatch`
-    * form of [[append]]/[[pqAppend]]/[[sq8Append]] (kind-dispatched):
-    * the
-    * micro-batch id is committed IN the same manifest write as the
-    * delta it marks, so a batch replayed after a crash (Structured
-    * Streaming's at-least-once `foreachBatch` contract) is detected
-    * by `batchId <= lastBatch` and skipped without touching the
-    * index — the standard idempotent-sink recipe, with the manifest
-    * playing the transaction log. A crash BEFORE the manifest write
-    * leaves only an orphan delta directory (never read), and the
-    * replay appends cleanly.
-    *
-    * `checkDisjoint` defaults OFF here: the streaming upstream is
-    * expected to be a keyed CDC/new-docs feed (ids disjoint by
-    * construction), and a per-micro-batch base scan would turn an
-    * O(batch) append into an O(index) one.
-    */
-  def appendBatch(batch: DataFrame, batchId: Long, path: String,
-      checkDisjoint: Boolean = false): Build = {
-    val have = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (batchId <= have.lastBatch)
-      return Build(path, have.fp, have.n, reused = true)
-    have.kind match {
-      case "ivf" => appendImpl(batch, path, checkDisjoint, Some(batchId))
-      case "pq" => pqAppendImpl(batch, path, checkDisjoint, Some(batchId))
-      case _ => sq8AppendImpl(batch, path, checkDisjoint, Some(batchId))
-    }
-  }
-
-  /** `writeStream.foreachBatch(AnnIndex.foreachBatchSink(path))` —
-    * the [[appendBatch]] closure in the shape Structured Streaming
-    * wants.
-    */
-  def foreachBatchSink(path: String, checkDisjoint: Boolean = false)
-      : (DataFrame, Long) => Unit =
-    (df, id) => { appendBatch(df, id, path, checkDisjoint); () }
-
-  /** Exactly-once OP-AWARE streaming maintenance: one CDC micro-batch
-    * carrying BOTH inserts and deletes (rows whose `opCol` equals
-    * `deleteOp` are removals; everything else inserts — the
-    * [[MergeOnRead]] change-feed shape) applies in ONE manifest
-    * commit. The insert delta, the tombstone list, the composed
-    * fingerprint/count, and the batch watermark become visible
-    * together or not at all, so an at-least-once replay
-    * (`batchId <= lastBatch`) skips the WHOLE batch — there is no
-    * window where the inserts committed but the deletes did not — and
-    * a crash between stagings leaves only orphan directories.
-    *
-    * Within one batch an id must not be both deleted and inserted:
-    * the tombstone filter is version-blind and would hide the new
-    * rows (delete, purge, then re-insert — or use the count-algebra
-    * indexes [[LmIndex]]/[[Bm25Index]], whose [[LmIndex.applyBatch]]
-    * takes same-batch updates). Delete rows must be the exact stored
-    * rows and live (the streaming contract proves this upstream; the
-    * in-batch duplicate/overlap checks here are O(batch), the
-    * guarded batch path is [[delete]]).
+  /** [[applyBatch]] with an explicit tombstone bound. Within one
+    * batch an id must not be both deleted and inserted: the tombstone
+    * filter is version-blind and would hide the new rows (delete,
+    * purge, then re-insert — or use the count-algebra indexes
+    * [[LmIndex]]/[[Bm25Index]], which take same-batch updates).
     */
   def applyBatch(batch: DataFrame, batchId: Long, path: String,
-      opCol: String = "op", deleteOp: String = "D",
-      maxTombstones: Long = DefaultMaxTombstones): Build = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (batchId <= decl.lastBatch)
-      return Build(path, decl.fp, decl.n, reused = true)
-    val rows = batch.localCheckpoint(false)
-    val ins = rows.filter(col(opCol) =!= deleteOp).drop(opCol)
-    val del = rows.filter(col(opCol) === deleteOp).drop(opCol)
-    val (ifp, inN) = fpOf(ins, decl)
-    val (dfp, delN) = fpOf(del, decl)
-    if (inN == 0 && delN == 0)
-      return Build(path, decl.fp, decl.n, reused = true)
-    // batch-local invariants check once; the tombstone bound is
-    // state-dependent and re-verifies per commit attempt below
-    if (delN > 0) {
-      require(del.select(col(decl.id)).distinct().count() == delN,
-        s"batch $batchId has duplicate delete rows")
-      if (inN > 0) {
-        val both = ins.select(col(decl.id))
-          .join(broadcast(del.select(col(decl.id)).distinct()),
-            Seq(decl.id), "left_semi").count()
-        require(both == 0,
-          s"batch $batchId inserts AND deletes $both shared id(s) — " +
-            "the tombstone filter would hide the inserted rows")
-      }
-    }
-    var stagedData = Seq.empty[String]
-    var stagedTombs = Seq.empty[String]
-    if (inN > 0) stagedData :+= stageInsert(ins, decl, path)
-    if (delN > 0) {
-      val staged = nextDeltaName(path, "t")
-      del.select(col(decl.id)).distinct().coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/deltas/$staged")
-      stagedTombs :+= staged
-    }
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path,
-      stagedData ++ stagedTombs) { have =>
-      if (batchId <= have.lastBatch) None // a racing replay landed it
-      else {
-        require(have.tombCount + delN <= maxTombstones,
-          s"index at $path would carry ${have.tombCount + delN} " +
-            s"tombstones (bound $maxTombstones) — run purge() first")
-        Some(have.copy(fp = have.fp ^ ifp ^ dfp,
-          n = have.n + inN - delN, deltas = have.deltas ++ stagedData,
-          tombs = have.tombs ++ stagedTombs,
-          tombCount = have.tombCount + delN, lastBatch = batchId))
-      }
-    } match {
-      case Some(next) => Build(path, next.fp, next.n, reused = false)
-      case None =>
-        val now = readManifest(path).getOrElse(decl)
-        Build(path, now.fp, now.n, reused = true)
-    }
-  }
+      maxTombstones: Long): Build =
+    applyCdc(batch, batchId, path, maxTombstones)
 
-  /** `writeStream.foreachBatch(AnnIndex.cdcSink(path))` — the
-    * [[applyBatch]] closure for a mixed insert/delete CDC stream.
+  /** Folds the committed delta directories into ONE — a pure move
+    * (ivf deltas keep their bucket partitioning; pq/sq8 deltas are
+    * plain codes).
     */
-  def cdcSink(path: String, opCol: String = "op",
-      deleteOp: String = "D"): (DataFrame, Long) => Unit =
-    (df, id) => { applyBatch(df, id, path, opCol, deleteOp); () }
+  override protected def fold(spark: SparkSession, path: String, mf: Mf,
+      folded: Seq[String], root: String): Unit =
+    writeKind(folded.map(d => spark.read.parquet(s"$path/deltas/$d"))
+      .reduce(_.unionByName(_)), mf, root)
 
-  /** Folds the committed delta directories into ONE (`deltas/c<N>`)
-    * and commits a manifest listing only it — bounding per-search
-    * file-listing and footer costs after long append streams without
-    * ever touching the base directory (cost ∝ total delta size, the
-    * MergeOnRead compaction rule). Crash-safe by the same staging
-    * discipline: the merged directory is invisible until the
-    * manifest swap, and a crash mid-fold leaves the old manifest —
-    * and every directory it references — fully live. Old delta
-    * directories are deleted only AFTER the commit (best-effort GC).
-    * Works for both index kinds (ivf deltas keep their bucket
-    * partitioning; pq deltas are plain codes). Returns the number of
-    * directories folded, 0 when there is nothing to compact.
-    */
-  def compactDeltas(spark: SparkSession, path: String): Int = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    // fewer than two directories of a kind: folding gains nothing
-    val foldData = decl.deltas.length >= 2
-    val foldTombs = decl.tombs.length >= 2
-    if (!foldData && !foldTombs) return 0
-    val foldedData = if (foldData) decl.deltas else Nil
-    val foldedTombs = if (foldTombs) decl.tombs else Nil
-    var staged = Seq.empty[String]
-    val stagedData = if (!foldData) None else {
-      val merged = foldedData
-        .map(d => spark.read.parquet(s"$path/deltas/$d"))
-        .reduce(_.unionByName(_))
-      val s = nextDeltaName(path, "c")
-      val w = (if (decl.kind == "ivf")
-          merged.repartition(col("bucket")) else merged)
-        .write.mode("overwrite")
-      (if (decl.kind == "ivf") w.partitionBy("bucket") else w)
-        .parquet(s"$path/deltas/$s")
-      staged :+= s
-      Some(s)
-    }
-    val stagedTombs = if (!foldTombs) None else {
-      val s = nextDeltaName(path, "t")
-      tombIds(spark, path, decl).coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/deltas/$s")
-      staged :+= s
-      Some(s)
-    }
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, staged) { have =>
-      // deltas/tombstones that landed after our fold survive; a
-      // racing purge/compaction that already folded any of ours makes
-      // this fold stale — drop it, theirs covered it
-      if (!foldedData.forall(have.deltas.contains) ||
-        !foldedTombs.forall(have.tombs.contains)) None
-      else Some(have.copy(
-        deltas = stagedData.toSeq ++
-          have.deltas.filterNot(foldedData.toSet),
-        tombs = stagedTombs.toSeq ++
-          have.tombs.filterNot(foldedTombs.toSet)))
-    } match {
-      case Some(_) =>
-        // post-commit GC: the folded directories are unreferenced now
-        IndexDirs.gcDeltas(path, foldedData ++ foldedTombs)
-        (foldedData ++ foldedTombs).length
-      case None => 0
-    }
-  }
+  private def writeKind(rows: DataFrame, mf: Mf, root: String): Unit =
+    if (mf.decl.kind == "ivf")
+      rows.repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(root)
+    else rows.write.mode("overwrite").parquet(root)
 
   /** Tombstone-delete rows from the index — any kind. `delta` must
     * carry the FULL rows being removed (`id`, `vec`, carry columns as
@@ -770,47 +431,29 @@ object AnnIndex {
     * (the MergeOnRead delete convention). The commit is an O(delta)
     * staged tombstone id list (`deltas/t<N>`, manifest-gated like
     * data deltas); every read path anti-joins the tombstone set
-    * (broadcast — bounded between purges by contract), and a later
-    * [[buildIfAbsent]] over the remaining corpus correctly reuses
-    * the deleted-from index.
+    * (broadcast — bounded between purges by `maxTombstones`), and a
+    * later [[buildIfAbsent]] over the remaining corpus correctly
+    * reuses the deleted-from index.
     *
     * `checkPresent` (on by default) verifies every delta id is LIVE
-    * in the index — a stale or double delete would silently corrupt
-    * the fingerprint the same way a duplicate append would.
+    * in the index AND carries the stored row — a stale or double
+    * delete would silently corrupt the fingerprint the same way a
+    * duplicate append would.
     */
   def delete(delta: DataFrame, path: String,
       checkPresent: Boolean = true,
-      maxTombstones: Long = DefaultMaxTombstones): Build = {
-    val spark = delta.sparkSession
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    val baseSub = if (decl.kind == "ivf") "assignments" else "codes"
-    val (dfp, dn) = fingerprint(delta, decl.id, decl.vec, decl.carry)
-    if (dn == 0) return Build(path, decl.fp, decl.n, reused = true)
-    val ids = delta.select(col(decl.id)).distinct()
-      .localCheckpoint(false)
-    require(ids.count() == dn,
-      s"delete delta has duplicate ${decl.id} rows — each stored row " +
-        "must be folded out exactly once")
-    val probe = delta.select(col(decl.id), decl.rowHash.as("__pch"))
-      .distinct().localCheckpoint(false)
-    // state-dependent guards re-verify per commit attempt against the
-    // manifest the attempt anchors at (a concurrent delete of the
-    // same ids must flip liveness from pass to refuse on retry)
-    def guardsOk(have: Manifest): Unit = {
-      // tombstone-growth bound: the per-read broadcast anti-join is
-      // only "bounded between purges" if something enforces the bound
-      require(have.tombCount + dn <= maxTombstones,
-        s"index at $path would carry ${have.tombCount + dn} tombstones " +
-          s"(bound $maxTombstones) — run purge() to fold them into the " +
-          "base before deleting more")
-      if (checkPresent) {
-        // liveness AND content in one pass against the stored row hash:
-        // the fingerprint folds raw (id, vec[, carry]) hashes, so a
-        // delete naming a live id with a stale vector would corrupt it
-        // while an id-only check passes
-        val r = readParts(spark, path, baseSub, have, None)
-          .join(broadcast(probe), Seq(have.id))
+      maxTombstones: Long = DefaultMaxTombstones): Build =
+    remove(delta, path, maxTombstones) { (decl, dn) =>
+      val id = decl.decl.id
+      require(delta.select(col(id)).distinct().count() == dn,
+        s"delete delta has duplicate $id rows — each stored row " +
+          "must be folded out exactly once")
+      val probe = delta.select(col(id), decl.decl.rowHash.as("__pch"))
+        .distinct().localCheckpoint(false)
+      have => if (checkPresent) {
+        // liveness AND content in one pass against the stored row hash
+        val r = readParts(delta.sparkSession, path, have, None)
+          .join(broadcast(probe), Seq(id))
           .agg(count(lit(1)).as("live"),
             coalesce(sum(when(col("__ch") === col("__pch"), 1L)
               .otherwise(0L)), lit(0L)).as("same"))
@@ -826,105 +469,27 @@ object AnnIndex {
             "would fold out hashes that were never folded in")
       }
     }
-    val staged = nextDeltaName(path, "t")
-    // guards ∥ staging (guide §2.6): both depend only on the anchor
-    // manifest; the commit loop re-verifies only when another writer
-    // moved it
-    try Par.inParallel(Seq(
-      () => guardsOk(decl),
-      () => ids.coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/deltas/$staged")))
-    catch { case e: Throwable =>
-      IndexDirs.gcDeltas(path, Seq(staged)); throw e
-    }
-    val next = IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      if (have.mv != decl.mv) guardsOk(have)
-      Some(have.copy(fp = have.fp ^ dfp, n = have.n - dn,
-        tombs = have.tombs :+ staged, tombCount = have.tombCount + dn))
-    }.get
-    Build(path, next.fp, next.n, reused = false)
+
+  override protected def baseSubs(mf: Mf) = Seq(mf.decl.baseSub)
+
+  /** [[purge]]: physically apply tombstones — the LIVE rows into a
+    * fresh versioned base directory (`assignments.v<N>`/`codes.v<N>`)
+    * with committed deltas folded in. Cost is O(live index) — run it
+    * when the tombstone set has grown past broadcast comfort, not per
+    * delete. Returns the number of tombstoned ids purged.
+    */
+  override protected def rewrite(spark: SparkSession, path: String,
+      mf: Mf, ver: Int): Long = {
+    val purged =
+      if (mf.tombs.isEmpty) 0L
+      else Artifact.tombIds(spark, path, mf.tombs).count()
+    writeKind(readParts(spark, path, mf, None), mf,
+      s"$path/${mf.decl.baseSub}.v$ver")
+    purged
   }
 
-  /** Physically apply tombstones: rewrite the LIVE rows into a fresh
-    * versioned base directory (`assignments.v<N>`/`codes.v<N>`),
-    * fold committed deltas in, and commit a manifest with no deltas
-    * and no tombstones — the index is downtime-free throughout (the
-    * old manifest, and every directory it references, stays fully
-    * live until the atomic manifest swap; the MergeOnRead `ver=`
-    * rule). Cost is O(live index) — run it when the tombstone set
-    * has grown past broadcast comfort, not per delete. Returns the
-    * number of tombstoned ids purged.
-    */
-  def purge(spark: SparkSession, path: String): Long =
-    purgeImpl(spark, path, () => ())
-
-  /** [[purge]] with a test seam invoked between the survivors rewrite
-    * and the manifest commit — deterministic interleaving specs only.
-    */
-  private[operators] def purgeImpl(spark: SparkSession, path: String,
-      beforeCommit: () => Unit): Long = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (decl.tombs.isEmpty && decl.deltas.isEmpty) return 0L
-    val baseSub = if (decl.kind == "ivf") "assignments" else "codes"
-    val tombCount =
-      if (decl.tombs.isEmpty) 0L
-      else tombIds(spark, path, decl).count()
-    // CLAIMED next base version ([[IndexDirs.claimBaseSuffix]]): two
-    // racing purges write disjoint .v<k> dirs — neither can clobber
-    // parquet the other's manifest might commit. Start past both the
-    // manifest's current version and any orphaned .v dirs on disk.
-    val fsys = IndexDirs.fs(path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val from = (if (!fsys.exists(root)) Array.empty[String]
-      else fsys.listStatus(root).map(_.getPath.getName))
-      .flatMap(n => s"^${java.util.regex.Pattern.quote(baseSub)}\\.v(\\d+)$$"
-        .r.findFirstMatchIn(n).map(_.group(1).toInt))
-      .foldLeft(0)(math.max) + 1
-    val ver = IndexDirs.claimBaseSuffix(path, s"$baseSub.v", from)
-    val newBase = s"$baseSub.v$ver"
-    val live = readParts(spark, path, baseSub, decl, None)
-    val w = (if (decl.kind == "ivf")
-        live.repartition(col("bucket")) else live)
-      .write.mode("overwrite")
-    (if (decl.kind == "ivf") w.partitionBy("bucket") else w)
-      .parquet(s"$path/$newBase")
-    beforeCommit()
-    try IndexDirs.commitWithRetry(readManifest(path),
-      writeManifest(path, _: Manifest), path) { have =>
-      require(have.baseOr(baseSub) == decl.baseOr(baseSub),
-        s"a concurrent purge of $path committed base " +
-          s"${have.baseOr(baseSub)} while this one rewrote from " +
-          s"${decl.baseOr(baseSub)} — rerun against the new base")
-      // a compaction committed mid-purge replaces (some of) our
-      // snapshot delta/tombstone lists with fold dirs the filterNots
-      // below would keep while the new base already absorbed them —
-      // refuse instead of double-counting / double-hiding
-      require(decl.deltas.forall(have.deltas.contains) &&
-        decl.tombs.forall(have.tombs.contains),
-        s"a concurrent compaction of $path folded deltas/tombstones " +
-          "this purge's rewrite already absorbed — committing would " +
-          "corrupt the index; rerun against the compacted state")
-      // appends/deletes that landed after our rewrite survive, with
-      // the surviving tombstones' (re-counted) id total
-      val survTombs = have.tombs.filterNot(decl.tombs.toSet)
-      val survCount =
-        if (survTombs.isEmpty) 0L
-        else survTombs.map(t => spark.read.parquet(s"$path/deltas/$t"))
-          .reduce(_.unionByName(_)).distinct().count()
-      Some(have.copy(deltas = have.deltas.filterNot(decl.deltas.toSet),
-        tombs = survTombs, tombCount = survCount, baseDir = newBase))
-    } catch {
-      case e: IllegalArgumentException =>
-        IndexDirs.rmTree(s"$path/$newBase") // orphaned rewrite
-        throw e
-    }
-    // post-commit GC: old base version + folded delta/tombstone dirs
-    IndexDirs.gcDeltas(path, decl.deltas ++ decl.tombs)
-    IndexDirs.rmTree(s"$path/${decl.baseOr(baseSub)}")
-    tombCount
-  }
+  override protected def idlePurge(spark: SparkSession, path: String,
+      mf: Mf): Long = 0L
 
   /** ADC top-k over the persisted PQ index: probes build their
     * distance LUTs (probe-side, broadcast), the corpus side reads
@@ -935,13 +500,24 @@ object AnnIndex {
   def pqSearchInt(spark: SparkSession, path: String, probes: DataFrame,
       probeIdCol: String, vecCol: String, k: Int,
       idCol: String = "vec_id"): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
     val cbs = pqCodebooks(spark, path)
-    val encoded = readParts(spark, path, "codes", mf, None)
+    val encoded = readParts(spark, path, live(path), None)
       .withColumnRenamed("codes", "__codes")
     Pq.adcTopKEncoded(encoded,
       probes.select(col(probeIdCol).as("probe_id"), col(vecCol).as("pq")),
       k, cbs, corpusId = idCol)
   }
+}
+
+/** [[AnnIndex]]'s declaration: kind, parameters (`k`, content hash
+  * `ph`), columns, layout version, carried metadata columns.
+  */
+private[operators] final case class AnnLayout(kind: String, k: Int,
+    id: String, vec: String, ph: Long, lv: Int, carry: Seq[String]) {
+  /** The data table: bucketed assignments (ivf) or codes (pq/sq8). */
+  def baseSub: String = if (kind == "ivf") "assignments" else "codes"
+  /** The raw-row hash the fingerprint folds — what a delete verifies
+    * a delta row against.
+    */
+  def rowHash: Column = xxhash64((id +: vec +: carry).map(col): _*)
 }

@@ -37,56 +37,37 @@ import org.apache.spark.sql.functions._
   * plus the candidate docs' dlb partitions, never the corpus text
   * and never a full table.
   */
-object Bm25Index {
-
-  type Build = IndexBuild
-  val Build = IndexBuild
+object Bm25Index extends GuardedArtifact[Bm25Layout] {
 
   def fingerprint(docs: DataFrame, idCol: String,
       textCol: String): (Long, Long) =
     IndexDirs.contentFingerprint(docs, Seq(idCol, textCol))
 
-  private case class Manifest(fp: Long, n: Long, id: String,
-      text: String, tbParts: Int, dlParts: Int, sdl: Long = 0L,
-      deltas: Seq[String] = Nil, lastBatch: Long = -1L,
-      baseVer: Int = 0, mv: Long = 0L) {
-    /** sdl is derived state (like the delta list): a rebuild check
-      * cannot know it without tokenizing, so it never gates reuse.
-      * dlParts IS layout — a different dl bucketing must rebuild.
-      */
-    def sameIndexAs(other: Manifest): Boolean =
-      copy(sdl = 0L, deltas = Nil, lastBatch = -1L, baseVer = 0,
-        mv = 0L) ==
-        other.copy(sdl = 0L, deltas = Nil, lastBatch = -1L, baseVer = 0,
-          mv = 0L)
-    /** Live base dir of a table: versioned after a [[purge]]. */
-    def baseOf(sub: String): String =
-      if (baseVer == 0) sub else s"$sub.v$baseVer"
-  }
+  // sdl (the live doc-length sum) is derived state like the delta
+  // list: a rebuild check cannot know it without tokenizing, so it is
+  // the kernel's `acc` and never gates reuse. dlParts IS layout — a
+  // different dl bucketing must rebuild.
+  override protected def accKey = Some("sdl")
 
-  private def readManifest(path: String): Option[Manifest] =
-    IndexDirs.readManifest(path).map { r =>
-      Manifest(r.long("fp"), r.long("n"), r.str("id"), r.str("text"),
-        r.int("tb"),
-        // a pre-ledger-bucketing manifest reads dlp=0, which can
-        // never match a requested layout — it rebuilds once, safely
-        r.intOr("dlp", 0), r.longOr("sdl", 0L),
-        r.seq("deltas"), r.longOr("lb", -1L), r.intOr("bv", 0),
-        mv = r.version)
-    }
+  override protected def readDecl(r: IndexDirs.ManifestReader) =
+    Bm25Layout(r.str("id"), r.str("text"), r.int("tb"),
+      // a pre-ledger-bucketing manifest reads dlp=0, which can never
+      // match a requested layout — it rebuilds once, safely
+      r.intOr("dlp", 0))
 
-  private def writeManifest(path: String, mf: Manifest): Unit =
-    IndexDirs.manifest()
-      .put("fp", mf.fp).put("n", mf.n)
-      .put("id", mf.id).put("text", mf.text)
-      .put("tb", mf.tbParts).put("dlp", mf.dlParts)
-      .put("sdl", mf.sdl)
-      .put("lb", mf.lastBatch)
-      .put("bv", mf.baseVer).put("deltas", mf.deltas)
-      .commit(path, mf.mv)
+  override protected def writeDecl(w: IndexDirs.ManifestWriter,
+      d: Bm25Layout) =
+    w.put("id", d.id).put("text", d.text).put("tb", d.tbParts)
+      .put("dlp", d.dlParts)
 
-  private def dlbCol(id: org.apache.spark.sql.Column, mf: Manifest) =
-    pmod(xxhash64(id), lit(mf.dlParts)).cast("int")
+  override protected def fpOf(rows: DataFrame, d: Bm25Layout) =
+    fingerprint(rows, d.id, d.text)
+
+  private def dlbCol(id: org.apache.spark.sql.Column, mf: Mf) =
+    pmod(xxhash64(id), lit(mf.decl.dlParts)).cast("int")
+
+  private def tbCol(mf: Mf) =
+    pmod(xxhash64(col("__t")), lit(mf.decl.tbParts)).cast("int")
 
   /** Write the postings + ledger of `docs` under `root`, counts
     * scaled by `sign` (deletes stage the same rows negated). Returns
@@ -94,8 +75,9 @@ object Bm25Index {
     * manifest-carried `sdl` advances by it, so corpus stats never
     * need a ledger scan.
     */
-  private def writeTables(docs: DataFrame, textCol: String,
-      idCol: String, sign: Int, mf: Manifest, root: String): Long = {
+  override protected def stage(docs: DataFrame, sign: Int, mf: Mf,
+      path: String, root: String): Long = {
+    val Bm25Layout(idCol, textCol, _, _) = mf.decl
     // EAGER checkpoint (was lazy): the three consumers below now run
     // concurrently, and a lazy checkpoint's first-action race would
     // let two of them compute the tokenize pass twice. SIZE-GATED
@@ -117,8 +99,7 @@ object Bm25Index {
       .select(col(idCol), explode(col("__toks")).as("__t"))
       .groupBy(idCol, "__t")
       .agg((count(lit(1)) * sign).as("__tf"))
-      .withColumn("tb",
-        pmod(xxhash64(col("__t")), lit(mf.tbParts)).cast("int"))
+      .withColumn("tb", tbCol(mf))
       .repartition(col("tb"))
       .write.mode("overwrite").partitionBy("tb").parquet(s"$root/tf")
     val writeDl = () => toks
@@ -145,26 +126,23 @@ object Bm25Index {
   /** Aggregated live postings, pruned to `terms`' tb partitions when
     * given: per-(id, term) tf sums > 0.
     */
-  private def liveTf(spark: SparkSession, path: String, mf: Manifest,
+  private def liveTf(spark: SparkSession, path: String, mf: Mf,
       terms: Option[Seq[String]]): DataFrame = {
     // the same pmod(xxhash64) the writer used, evaluated once for
     // the whole term list (terms are query-scale) so the partition
     // filter is STATIC, not a runtime subquery
     val wanted = terms.map { ts =>
       import spark.implicits._
-      ts.toDF("__t")
-        .select(pmod(xxhash64(col("__t")), lit(mf.tbParts)).cast("int"))
+      ts.toDF("__t").select(tbCol(mf))
         .distinct().collect().map(_.getInt(0)).toSeq
     }
-    val roots = s"$path/${mf.baseOf("tf")}" +:
-      mf.deltas.map(d => s"$path/deltas/$d/tf")
-    val rows = roots.map { r =>
+    val rows = mf.roots(path, "tf").map { r =>
       val df = spark.read.parquet(r)
       wanted.fold(df)(w => df.filter(col("tb").isin(w.map(Int.box): _*)))
     }.reduce(_.unionByName(_))
     val filtered = terms.fold(rows)(ts =>
       rows.filter(col("__t").isin(ts: _*)))
-    filtered.groupBy(mf.id, "__t").agg(sum(col("__tf")).as("__tf"))
+    filtered.groupBy(mf.decl.id, "__t").agg(sum(col("__tf")).as("__tf"))
       .filter(col("__tf") > 0)
   }
 
@@ -173,96 +151,53 @@ object Bm25Index {
     * given (the id-hash prune: a serve reads only the buckets its
     * candidate docs hash to, never the whole ledger).
     */
-  private def liveDl(spark: SparkSession, path: String, mf: Manifest,
+  private def liveDl(spark: SparkSession, path: String, mf: Mf,
       parts: Option[Seq[Int]] = None): DataFrame = {
-    val roots = s"$path/${mf.baseOf("dl")}" +:
-      mf.deltas.map(d => s"$path/deltas/$d/dl")
-    val rows = roots.map { r =>
+    val rows = mf.roots(path, "dl").map { r =>
       val df = spark.read.parquet(r)
       parts.fold(df)(w => df.filter(col("dlb").isin(w.map(Int.box): _*)))
     }.reduce(_.unionByName(_))
-    rows.groupBy(mf.id, "__dl", "__ch").agg(sum(col("__w")).as("__w"))
+    rows.groupBy(mf.decl.id, "__dl", "__ch").agg(sum(col("__w")).as("__w"))
       .filter(col("__w") > 0)
-      .select(col(mf.id), col("__dl"), col("__ch"))
+      .select(col(mf.decl.id), col("__dl"), col("__ch"))
+  }
+
+  /** A guard's ledger read of `probe`'s ids: only the dlb buckets
+    * they hash to (an id not present anywhere cannot hide outside its
+    * hash bucket, so the prune never weakens a guard), collected once
+    * — the bucketing is layout, fixed until a rebuild.
+    */
+  private def ledgerOf(spark: SparkSession, path: String, decl: Mf,
+      probe: DataFrame): Mf => DataFrame = {
+    lazy val wanted = probe.select(dlbCol(col(decl.decl.id), decl).as("dlb"))
+      .distinct().collect().map(_.getInt(0)).toSeq
+    have => liveDl(spark, path, have, Some(wanted))
   }
 
   def buildIfAbsent(docs: DataFrame, textCol: String, idCol: String,
       path: String, tbParts: Int = 64, dlParts: Int = 32): Build = {
     val (fp, n) = fingerprint(docs, idCol, textCol)
-    val want = Manifest(fp, n, idCol, textCol, tbParts, dlParts)
-    readManifest(path) match {
-      case Some(have) if have.sameIndexAs(want) =>
-        Build(path, fp, n, reused = true)
-      case _ =>
-        IndexDirs.uncommit(path)
-        val sdl = writeTables(docs, textCol, idCol, 1, want, path)
-        writeManifest(path, want.copy(sdl = sdl))
-        Build(path, fp, n, reused = false)
-    }
+    val want = Artifact.Manifest(
+      Bm25Layout(idCol, textCol, tbParts, dlParts), fp, n)
+    buildOr(path, want)(stage(docs, 1, want, path, path))
   }
 
-  def append(delta: DataFrame, path: String,
-      checkDisjoint: Boolean = true): Build =
-    appendImpl(delta, path, checkDisjoint, None)
-
-  private def appendImpl(delta: DataFrame, path: String,
-      checkDisjoint: Boolean, batchMark: Option[Long]): Build = {
-    val spark = delta.sparkSession
-    // layout/columns are immutable across appends (only a rebuild
-    // changes them, and a rebuild uncommits), so staging off this
-    // read is race-free; counters, delta list, and the disjointness
-    // guard re-derive per commit attempt (multi-writer liveness —
-    // the [[AggView]]/[[IndexDirs.commitWithRetry]] recipe)
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (batchMark.exists(_ <= decl.lastBatch))
-      return Build(path, decl.fp, decl.n, reused = true)
-    val (dfp, dn) = fingerprint(delta, decl.id, decl.text)
-    if (dn == 0) return Build(path, decl.fp, decl.n, reused = true)
-    val probeIds = delta.select(col(decl.id)).distinct()
+  /** Disjointness guard, verified against the manifest an attempt
+    * anchors at (a concurrent overlapping append must flip it to
+    * refuse on retry).
+    */
+  override protected def insertGuard(delta: DataFrame, decl: Mf,
+      dn: Long, path: String): Guard = {
+    val probeIds = delta.select(col(decl.decl.id)).distinct()
       .localCheckpoint(false)
-    // disjointness guard, verified against the manifest an attempt
-    // anchors at (a concurrent overlapping append must flip this to
-    // refuse on retry). The guard reads only the probe ids' own dlb
-    // buckets — an id not present anywhere cannot hide outside its
-    // hash bucket.
-    def disjointOk(have: Manifest): Unit = if (checkDisjoint) {
-      val wantedDlb = probeIds
-        .select(dlbCol(col(have.id), have).as("dlb"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      val dupes = liveDl(spark, path, have, Some(wantedDlb))
-        .select(col(have.id))
-        .join(broadcast(probeIds), Seq(have.id), "left_semi").count()
+    val ledger = ledgerOf(delta.sparkSession, path, decl, probeIds)
+    have => {
+      val dupes = ledger(have).select(col(have.decl.id))
+        .join(broadcast(probeIds), Seq(have.decl.id), "left_semi").count()
       require(dupes == 0,
         s"append delta shares $dupes live id(s) with the index at " +
           s"$path — double-counted postings (pass checkDisjoint = " +
           "false only when upstream proves disjointness)")
-    }
-    val staged = IndexDirs.nextDeltaName(path, "d")
-    // guard ∥ staging (guide §2.6); re-verified in the loop only when
-    // another writer moved the manifest
-    @volatile var ddl = 0L
-    try Par.inParallel(Seq(
-      () => disjointOk(decl),
-      () => ddl = writeTables(delta, decl.text, decl.id, 1, decl,
-        s"$path/deltas/$staged")))
-    catch { case e: Throwable =>
-      IndexDirs.gcDeltas(path, Seq(staged)); throw e
-    }
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      if (batchMark.exists(_ <= have.lastBatch)) None
-      else {
-        if (have.mv != decl.mv) disjointOk(have)
-        Some(have.copy(fp = have.fp ^ dfp, n = have.n + dn,
-          sdl = have.sdl + ddl, deltas = have.deltas :+ staged,
-          lastBatch = batchMark.getOrElse(have.lastBatch)))
-      }
-    } match {
-      case Some(next) => Build(path, next.fp, next.n, reused = false)
-      case None => // a racing replay landed this batch id first
-        val now = readManifest(path).getOrElse(decl)
-        Build(path, now.fp, now.n, reused = true)
     }
   }
 
@@ -275,238 +210,74 @@ object Bm25Index {
     * cancel (and corrupt the fingerprint), so it throws instead.
     */
   def delete(delta: DataFrame, path: String,
-      checkPresent: Boolean = true): Build = {
-    val spark = delta.sparkSession
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    val (dfp, dn) = fingerprint(delta, decl.id, decl.text)
-    if (dn == 0) return Build(path, decl.fp, decl.n, reused = true)
-    val probe = delta.select(col(decl.id),
-        xxhash64(col(decl.id), col(decl.text)).as("__pch"))
-      .distinct().localCheckpoint(false)
-    if (checkPresent) require(probe.count() == dn,
-      s"delete delta has duplicate ${decl.id} rows")
-    // liveness + content verified per commit attempt against the
-    // manifest the attempt anchors at (a concurrent delete of the
-    // same ids must flip this from pass to refuse on retry). The
-    // guard reads only the delta ids' own dlb buckets — an id not
-    // present anywhere cannot hide outside its hash bucket, so the
-    // prune never weakens the check.
-    def presentOk(have: Manifest): Unit = if (checkPresent) {
-      val wantedDlb = probe.select(dlbCol(col(have.id), have).as("dlb"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      val r = liveDl(spark, path, have, Some(wantedDlb))
-        .join(broadcast(probe), Seq(have.id))
-        .agg(count(lit(1)).as("live"),
-          coalesce(sum(when(col("__ch") === col("__pch"), 1L)
-            .otherwise(0L)), lit(0L)).as("same"))
-        .collect()(0)
-      require(r.getLong(0) == dn,
-        s"delete delta names ${dn - r.getLong(0)} id(s) not live in " +
-          s"the index at $path")
-      require(r.getLong(1) == dn,
-        s"delete delta text differs from the indexed text for " +
-          s"${dn - r.getLong(1)} id(s) at $path — negations computed " +
-          "from stale text would never cancel the stored postings")
+      checkPresent: Boolean = true): Build =
+    remove(delta, path) { (decl, dn) =>
+      val Bm25Layout(id, text, _, _) = decl.decl
+      val probe = delta.select(col(id),
+          xxhash64(col(id), col(text)).as("__pch"))
+        .distinct().localCheckpoint(false)
+      if (checkPresent) require(probe.count() == dn,
+        s"delete delta has duplicate $id rows")
+      val ledger = ledgerOf(delta.sparkSession, path, decl, probe)
+      have => if (checkPresent) {
+        val r = ledger(have).join(broadcast(probe), Seq(id))
+          .agg(count(lit(1)).as("live"),
+            coalesce(sum(when(col("__ch") === col("__pch"), 1L)
+              .otherwise(0L)), lit(0L)).as("same"))
+          .collect()(0)
+        require(r.getLong(0) == dn,
+          s"delete delta names ${dn - r.getLong(0)} id(s) not live in " +
+            s"the index at $path")
+        require(r.getLong(1) == dn,
+          s"delete delta text differs from the indexed text for " +
+            s"${dn - r.getLong(1)} id(s) at $path — negations computed " +
+            "from stale text would never cancel the stored postings")
+      }
     }
-    val staged = IndexDirs.nextDeltaName(path, "d")
-    // the guard and the staging writes are independent given the
-    // anchor manifest — overlapped (guide §2.6). A guard failure
-    // interrupts the sibling staging and GCs its dir; the commit
-    // loop re-verifies only when another writer moved the manifest
-    // (the no-race case pays the guard exactly once, off the
-    // critical path)
-    @volatile var ddl = 0L
-    try Par.inParallel(Seq(
-      () => presentOk(decl),
-      () => ddl = writeTables(delta, decl.text, decl.id, -1, decl,
-        s"$path/deltas/$staged")))
-    catch { case e: Throwable =>
-      IndexDirs.gcDeltas(path, Seq(staged)); throw e
-    }
-    val next = IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      if (have.mv != decl.mv) presentOk(have)
-      Some(have.copy(fp = have.fp ^ dfp, n = have.n - dn,
-        sdl = have.sdl + ddl, deltas = have.deltas :+ staged))
-    }.get
-    Build(path, next.fp, next.n, reused = false)
-  }
-
-  /** Exactly-once streaming maintenance (`batchId <= lastBatch` ⇒
-    * skip — the [[AnnIndex.appendBatch]] recipe).
-    */
-  def appendBatch(batch: DataFrame, batchId: Long, path: String,
-      checkDisjoint: Boolean = false): Build =
-    appendImpl(batch, path, checkDisjoint, Some(batchId))
-
-  def foreachBatchSink(path: String, checkDisjoint: Boolean = false)
-      : (DataFrame, Long) => Unit =
-    (df, id) => { appendBatch(df, id, path, checkDisjoint); () }
-
-  /** Exactly-once OP-AWARE streaming maintenance — the
-    * [[LmIndex.applyBatch]] count algebra over postings: one CDC
-    * micro-batch stages deletes as negated tf/dl rows and inserts as
-    * positive ones, then ONE manifest commit carries both staged
-    * names, the composed fingerprint, the adjusted (n, sdl) corpus
-    * stats, and the batch watermark — replays skip whole batches,
-    * same-batch delete + insert of an id is a legal UPDATE, crashes
-    * leave only orphans. Delete rows must be the exact indexed rows
-    * and live (the feed's contract; [[delete]] is the guarded path).
-    */
-  def applyBatch(batch: DataFrame, batchId: Long, path: String,
-      opCol: String = "op", deleteOp: String = "D"): Build = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (batchId <= decl.lastBatch)
-      return Build(path, decl.fp, decl.n, reused = true)
-    val rows = batch.localCheckpoint(false)
-    val ins = rows.filter(col(opCol) =!= deleteOp).drop(opCol)
-    val del = rows.filter(col(opCol) === deleteOp).drop(opCol)
-    val (ifp, inN) = fingerprint(ins, decl.id, decl.text)
-    val (dfp, delN) = fingerprint(del, decl.id, decl.text)
-    if (inN == 0 && delN == 0)
-      return Build(path, decl.fp, decl.n, reused = true)
-    var stagedDirs = Seq.empty[String]
-    var dsdl = 0L
-    if (delN > 0) {
-      val staged = IndexDirs.nextDeltaName(path, "d")
-      dsdl += writeTables(del, decl.text, decl.id, -1, decl,
-        s"$path/deltas/$staged")
-      stagedDirs :+= staged
-    }
-    if (inN > 0) {
-      val staged = IndexDirs.nextDeltaName(path, "d")
-      dsdl += writeTables(ins, decl.text, decl.id, 1, decl,
-        s"$path/deltas/$staged")
-      stagedDirs :+= staged
-    }
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, stagedDirs) { have =>
-      if (batchId <= have.lastBatch) None // a racing replay landed it
-      else Some(have.copy(fp = have.fp ^ ifp ^ dfp,
-        n = have.n + inN - delN, sdl = have.sdl + dsdl,
-        deltas = have.deltas ++ stagedDirs, lastBatch = batchId))
-    } match {
-      case Some(next) => Build(path, next.fp, next.n, reused = false)
-      case None =>
-        val now = readManifest(path).getOrElse(decl)
-        Build(path, now.fp, now.n, reused = true)
-    }
-  }
-
-  /** `writeStream.foreachBatch(Bm25Index.cdcSink(path))`. */
-  def cdcSink(path: String, opCol: String = "op",
-      deleteOp: String = "D"): (DataFrame, Long) => Unit =
-    (df, id) => { applyBatch(df, id, path, opCol, deleteOp); () }
 
   /** Fold the delta stream (sums per key, nonzero kept — negatives
     * survive to keep cancelling base rows until a full rebuild).
     */
-  def compactDeltas(spark: SparkSession, path: String): Int = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (decl.deltas.length < 2) return 0
-    val folded = decl.deltas
-    val staged = IndexDirs.nextDeltaName(path, "c")
-    // the two table folds are independent — run them CONCURRENTLY
-    // (guide §2.6)
+  override protected def fold(spark: SparkSession, path: String, mf: Mf,
+      folded: Seq[String], root: String): Unit =
     Par.inParallel(Seq(
       () => folded.map(d => spark.read.parquet(s"$path/deltas/$d/tf"))
         .reduce(_.unionByName(_))
-        .groupBy(decl.id, "__t", "tb").agg(sum(col("__tf")).as("__tf"))
+        .groupBy(mf.decl.id, "__t", "tb").agg(sum(col("__tf")).as("__tf"))
         .filter(col("__tf") =!= 0)
         .repartition(col("tb"))
-        .write.mode("overwrite").partitionBy("tb")
-        .parquet(s"$path/deltas/$staged/tf"),
+        .write.mode("overwrite").partitionBy("tb").parquet(s"$root/tf"),
       () => folded.map(d => spark.read.parquet(s"$path/deltas/$d/dl"))
         .reduce(_.unionByName(_))
-        .groupBy(decl.id, "__dl", "__ch", "dlb")
+        .groupBy(mf.decl.id, "__dl", "__ch", "dlb")
         .agg(sum(col("__w")).as("__w"))
         .filter(col("__w") =!= 0)
         .repartition(col("dlb"))
-        .write.mode("overwrite").partitionBy("dlb")
-        .parquet(s"$path/deltas/$staged/dl")))
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      // deltas that landed after our fold survive (count algebra is
-      // order-free); a racing purge/compaction that already folded
-      // any of ours makes this fold stale — drop it, theirs covered it
-      if (!folded.forall(have.deltas.contains)) None
-      else Some(have.copy(
-        deltas = staged +: have.deltas.filterNot(folded.toSet)))
-    } match {
-      case Some(_) => IndexDirs.gcDeltas(path, folded); folded.length
-      case None => 0
-    }
-  }
+        .write.mode("overwrite").partitionBy("dlb").parquet(s"$root/dl")))
 
-  /** Full SEMANTIC rewrite ([[LmIndex.purge]]'s rule): materialize
-    * the aggregated live postings + ledger into fresh `.v<N>` base
-    * dirs and commit with no deltas — deleted docs leave no trace.
-    * O(live postings); downtime-free (old manifest live until the
-    * atomic swap). Returns the live doc count.
-    */
-  def purge(spark: SparkSession, path: String): Long =
-    purgeImpl(spark, path, () => ())
+  override protected def baseSubs(mf: Mf) = Seq("tf", "dl")
 
-  /** [[purge]] with a test seam invoked between the survivors rewrite
-    * and the manifest commit — deterministic interleaving specs only.
+  /** [[purge]]'s rewrite ([[LmIndex.purge]]'s rule): the aggregated
+    * live postings + ledger into fresh `.v<N>` base dirs. Returns the
+    * live doc count.
     */
-  private[operators] def purgeImpl(spark: SparkSession, path: String,
-      beforeCommit: () => Unit): Long = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (decl.deltas.isEmpty) return decl.n
-    // CLAIMED target version: two racing purges write disjoint .v<k>
-    // dirs — neither can clobber parquet the other's manifest might
-    // commit ([[IndexDirs.claimBaseSuffix]])
-    val nextVer = IndexDirs.claimBaseSuffix(path, "base.v",
-      decl.baseVer + 1)
+  override protected def rewrite(spark: SparkSession, path: String,
+      mf: Mf, ver: Int): Long = {
     // eager checkpoint, then the two survivor rewrites run
     // CONCURRENTLY (guide §2.6) — independent reads of committed data
-    val live = liveDl(spark, path, decl).localCheckpoint()
+    val kept = liveDl(spark, path, mf).localCheckpoint()
     Par.inParallel(Seq(
-      () => liveTf(spark, path, decl, None)
-        .withColumn("tb",
-          pmod(xxhash64(col("__t")), lit(decl.tbParts)).cast("int"))
+      () => liveTf(spark, path, mf, None)
+        .withColumn("tb", tbCol(mf))
         .repartition(col("tb"))
         .write.mode("overwrite").partitionBy("tb")
-        .parquet(s"$path/tf.v$nextVer"),
-      () => live.withColumn("__w", lit(1))
-        .withColumn("dlb", dlbCol(col(decl.id), decl))
+        .parquet(s"$path/tf.v$ver"),
+      () => kept.withColumn("__w", lit(1))
+        .withColumn("dlb", dlbCol(col(mf.decl.id), mf))
         .repartition(col("dlb"))
         .write.mode("overwrite").partitionBy("dlb")
-        .parquet(s"$path/dl.v$nextVer")))
-    beforeCommit()
-    try IndexDirs.commitWithRetry(readManifest(path),
-      writeManifest(path, _: Manifest), path) { have =>
-      require(have.baseVer == decl.baseVer,
-        s"a concurrent purge of $path committed base version " +
-          s"${have.baseVer} while this one rewrote from " +
-          s"${decl.baseVer} — rerun against the new base")
-      // a compaction committed mid-purge folds (some of) our snapshot
-      // deltas into a c<N> dir the filterNot below would keep while
-      // the new base already absorbed those rows — refuse instead of
-      // double-counting (mirrors compactDeltas' stale-fold skip)
-      require(decl.deltas.forall(have.deltas.contains),
-        s"a concurrent compaction of $path folded deltas this purge's " +
-          "rewrite already absorbed — committing would double-count " +
-          "them; rerun against the compacted state")
-      // appends that landed after our rewrite stay as deltas
-      Some(have.copy(deltas = have.deltas.filterNot(decl.deltas.toSet),
-        baseVer = nextVer))
-    } catch {
-      case e: IllegalArgumentException =>
-        Seq("tf", "dl").foreach(sub =>
-          IndexDirs.rmTree(s"$path/$sub.v$nextVer")) // orphaned rewrite
-        throw e
-    }
-    IndexDirs.gcDeltas(path, decl.deltas)
-    Seq("tf", "dl").foreach { sub =>
-      IndexDirs.rmTree(s"$path/${decl.baseOf(sub)}")
-    }
-    live.count()
+        .parquet(s"$path/dl.v$ver")))
+    kept.count()
   }
 
   /** The scoring core shared by [[score]] and [[scoreMany]]: takes
@@ -518,7 +289,7 @@ object Bm25Index {
     * anywhere in the serve plan.
     */
   private def scoredTerms(spark: SparkSession, path: String,
-      mf: Manifest, tfPruned: DataFrame, k1: Double,
+      mf: Mf, tfPruned: DataFrame, k1: Double,
       b: Double): DataFrame = {
     import spark.implicits._
     // ONE bounded auxiliary job over the term-pruned postings collects
@@ -527,7 +298,7 @@ object Bm25Index {
     // ints). The serve plan then evaluates the postings exactly once
     // and keeps both pruned FileScans visible.
     val aux = tfPruned
-      .select(col("__t"), dlbCol(col(mf.id), mf).as("dlb"))
+      .select(col("__t"), dlbCol(col(mf.decl.id), mf).as("dlb"))
       .groupBy("__t")
       .agg(count(lit(1)).as("__df"), collect_set(col("dlb")).as("__dlbs"))
       .collect()
@@ -535,8 +306,8 @@ object Bm25Index {
     val dfreq = aux.map(r => (r.getString(0), r.getLong(1))).toSeq
       .toDF("__t", "__df")
     val dl = liveDl(spark, path, mf, Some(wantedDlb)).drop("__ch")
-    val avgdl = if (mf.n == 0) 1.0 else mf.sdl.toDouble / mf.n
-    tfPruned.join(dl, Seq(mf.id))
+    val avgdl = if (mf.n == 0) 1.0 else mf.acc.toDouble / mf.n
+    tfPruned.join(dl, Seq(mf.decl.id))
       .join(broadcast(dfreq), "__t")
       .withColumn("__s",
         log((lit(mf.n) - col("__df") + 0.5) / (col("__df") + 0.5) + 1) *
@@ -554,11 +325,10 @@ object Bm25Index {
   def score(spark: SparkSession, path: String, terms: Seq[String],
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
+    val mf = live(path)
     scoredTerms(spark, path, mf,
         liveTf(spark, path, mf, Some(terms)), k1, b)
-      .groupBy(col(mf.id))
+      .groupBy(col(mf.decl.id))
       .agg(round(sum(col("__s")), 4).as("bm25"))
   }
 
@@ -577,8 +347,7 @@ object Bm25Index {
   def scoreMany(spark: SparkSession, path: String, queryTerms: DataFrame,
       qidCol: String, termCol: String, k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
+    val mf = live(path)
     val qt = queryTerms
       .select(col(qidCol), col(termCol).as("__t")).distinct()
       .localCheckpoint(false)
@@ -588,7 +357,11 @@ object Bm25Index {
     scoredTerms(spark, path, mf,
         liveTf(spark, path, mf, Some(terms)), k1, b)
       .join(broadcast(qt), "__t")
-      .groupBy(col(qidCol), col(mf.id))
+      .groupBy(col(qidCol), col(mf.decl.id))
       .agg(round(sum(col("__s")), 4).as("bm25"))
   }
 }
+
+/** [[Bm25Index]]'s declaration: the indexed columns and bucketing. */
+private[operators] final case class Bm25Layout(id: String, text: String,
+    tbParts: Int, dlParts: Int)

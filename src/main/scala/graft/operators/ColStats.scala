@@ -47,15 +47,12 @@ import graft.functions.StrExtremaAgg.{str_max, str_min}
   * profile's provenance checkable: a survivors-only rebuild after
   * upstream deletes reuses iff nothing else changed.
   *
-  * Multi-writer: commits ride [[IndexDirs.stagedCommit]] (anchored
-  * optimistic commits with the retry-loop liveness; a lost race
-  * GC's its staging), exactly-once streaming via the
+  * Multi-writer: commits ride the [[Artifact]] kernel's staged
+  * commit (anchored optimistic commits with the retry-loop liveness;
+  * a lost race GC's its staging), exactly-once streaming via the
   * `batchId <= lastBatch` skip — the family rules.
   */
-object ColStats {
-
-  type Build = IndexBuild
-  val Build = IndexBuild
+object ColStats extends SignedArtifact[ColLayout] {
 
   /** m = 64 registers (bucketBits 6) over [[Hll.md5Hash]]'s 60-bit
     * value — fixed, so every engine replays the same registers.
@@ -72,33 +69,24 @@ object ColStats {
     */
   private val Fmt = 3
 
-  private case class Manifest(fp: Long, n: Long,
-      numCols: Seq[String], strCols: Seq[String],
-      deltas: Seq[String] = Nil, lastBatch: Long = -1L,
-      baseVer: Int = 0, fmt: Int = Fmt, lg: Int = 0, mv: Long = 0L) {
-    def sameIndexAs(other: Manifest): Boolean =
-      copy(deltas = Nil, lastBatch = -1L, baseVer = 0, lg = 0,
-        mv = 0L) ==
-        other.copy(deltas = Nil, lastBatch = -1L, baseVer = 0, lg = 0,
-          mv = 0L)
-  }
+  override protected def noun = "stats"
 
-  private def toManifest(r: IndexDirs.ManifestReader): Manifest =
-    Manifest(r.long("fp"), r.long("n"), r.seq("num"), r.seq("str"),
-      r.seq("deltas"), r.longOr("lb", -1L), r.intOr("bv", 0),
-      fmt = r.intOr("fmt", 1), lg = r.intOr("lg", 0), mv = r.version)
+  override protected def readDecl(r: IndexDirs.ManifestReader) =
+    ColLayout(r.seq("num"), r.seq("str"), r.intOr("fmt", 1),
+      r.intOr("lg", 0))
 
-  private def readManifest(path: String): Option[Manifest] =
-    IndexDirs.readManifest(path).map(toManifest)
+  override protected def writeDecl(w: IndexDirs.ManifestWriter,
+      d: ColLayout) =
+    w.put("num", d.numCols).put("str", d.strCols).put("fmt", d.fmt)
+      .put("lg", d.lg)
 
-  private def writeManifest(path: String, mf: Manifest): Unit =
-    IndexDirs.manifest()
-      .put("fp", mf.fp).put("n", mf.n)
-      .put("num", mf.numCols).put("str", mf.strCols)
-      .put("lb", mf.lastBatch).put("bv", mf.baseVer)
-      .put("fmt", mf.fmt).put("lg", mf.lg)
-      .put("deltas", mf.deltas)
-      .commit(path, mf.mv)
+  // the ledger flag says whether a build wrote a ledger, not what the
+  // profile is
+  override protected def sameDecl(a: ColLayout, b: ColLayout) =
+    a.copy(lg = 0) == b.copy(lg = 0)
+
+  override protected def fpOf(rows: DataFrame, d: ColLayout) =
+    fingerprint(rows, d.numCols, d.strCols)
 
   /** Signed log₂ magnitude bucket of a BIGINT — pure integer
     * arithmetic both engines replay bit-for-bit: 0 → bucket 0,
@@ -113,7 +101,7 @@ object ColStats {
       .otherwise(-length(bin(-v)).cast("int"))
 
   /** The HLL (bucket, rho) pair of a RENDERED value — ONE definition
-    * shared by [[writeTables]] and the fused builder
+    * shared by [[stage]] and the fused builder
     * ([[Profile.buildBoth]]), so the two build paths can never drift.
     */
   private[operators] def hllBucketRho(vstr: Column): (Column, Column) = {
@@ -161,8 +149,9 @@ object ColStats {
     * ColStatsSpec golden values and the q222/q223/q226 oracle twins
     * gate this path directly).
     */
-  private def writeTables(df: DataFrame, mf: Manifest,
-      root: String): Unit = {
+  override protected def stage(df: DataFrame, sign: Int, mf: Mf,
+      path: String, root: String): Long = {
+    val ColLayout(numCols, strCols, _, _) = mf.decl
     val nullL = lit(null).cast("long")
     val nullS = lit(null).cast("string")
     val nullI = lit(null).cast("int")
@@ -175,15 +164,15 @@ object ColStats {
     def renderedNum(c: String): Column =
       col(c).cast("long").cast("string")
     val pieces =
-      mf.numCols.map(c => st("sc", c, "num", lit(0L),
+      numCols.map(c => st("sc", c, "num", lit(0L),
         col(c).cast("long"), renderedNum(c), nullI)) ++
-      mf.strCols.map(c => st("sc", c, "str", lit(0L),
+      strCols.map(c => st("sc", c, "str", lit(0L),
         nullL, col(c).cast("string"), nullI)) ++
-      mf.numCols.map(c => st("hi", c, "num",
+      numCols.map(c => st("hi", c, "num",
         histBucket(col(c).cast("long")),
         col(c).cast("long"), nullS, nullI)) ++
-      (mf.numCols ++ mf.strCols).map { c =>
-        val r = if (mf.numCols.contains(c)) renderedNum(c)
+      (numCols ++ strCols).map { c =>
+        val r = if (numCols.contains(c)) renderedNum(c)
           else col(c).cast("string")
         val (b, rho) = hllBucketRho(r)
         st("hl", c, "", b, nullL, r, rho)
@@ -193,7 +182,7 @@ object ColStats {
     // identity at corpus scale); the per-grain null drops mirror the
     // separate passes' own filters
     val lf = Par.widen(
-        df.select((mf.numCols ++ mf.strCols).map(col): _*))
+        df.select((numCols ++ strCols).map(col): _*))
       .select(explode(array(pieces: _*)).as("e")).select("e.*")
       .filter(!(col("grain") === "hi" && col("vnum").isNull) &&
         !(col("grain") === "hl" && col("vstr").isNull))
@@ -250,15 +239,8 @@ object ColStats {
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$root/hist")
     Par.inParallel(Seq(writeScalar, writeRegs, writeHist))
+    0L
   }
-
-  private def baseOf(mf: Manifest, sub: String): String =
-    if (mf.baseVer == 0) sub else s"$sub.v${mf.baseVer}"
-
-  private def roots(path: String, mf: Manifest,
-      sub: String): Seq[String] =
-    s"$path/${baseOf(mf, sub)}" +:
-      mf.deltas.map(d => s"$path/deltas/$d/$sub")
 
   /** The scalar-profile MERGE (base ∪ deltas → one row per column):
     * sums compose as sums, extrema as extrema — shared by the live
@@ -274,23 +256,38 @@ object ColStats {
         str_max(col("max_str")).as("max_str"),
         sum("sum_len").as("sum_len"), max("max_len").as("max_len"))
 
-  private def liveScalar(spark: SparkSession, path: String,
-      mf: Manifest): DataFrame =
-    mergeScalar(roots(path, mf, "scalar").map(spark.read.parquet(_)))
-
-  private def liveRegs(spark: SparkSession, path: String,
-      mf: Manifest): DataFrame =
-    roots(path, mf, "regs").map(spark.read.parquet(_))
-      .reduce(_.unionByName(_))
+  /** The register and histogram MERGES (per-bucket max, per-bucket
+    * sum) — shared like [[mergeScalar]].
+    */
+  private def mergeRegs(parts: Seq[DataFrame]): DataFrame =
+    parts.reduce(_.unionByName(_))
       .groupBy("col_name", "bucket")
       .agg(max("register").cast("int").as("register"))
 
-  private def liveHist(spark: SparkSession, path: String,
-      mf: Manifest): DataFrame =
-    roots(path, mf, "hist").map(spark.read.parquet(_))
-      .reduce(_.unionByName(_))
+  private def mergeHist(parts: Seq[DataFrame]): DataFrame =
+    parts.reduce(_.unionByName(_))
       .groupBy("col_name", "bucket")
       .agg(sum("cnt").as("cnt"))
+
+  /** The three tables with their merges. */
+  private val tables: Seq[(String, Seq[DataFrame] => DataFrame)] =
+    Seq("scalar" -> mergeScalar, "regs" -> mergeRegs, "hist" -> mergeHist)
+
+  private def merged(spark: SparkSession, roots: Seq[String],
+      sub: String): DataFrame =
+    tables.toMap.apply(sub)(roots.map(spark.read.parquet(_)))
+
+  private def liveScalar(spark: SparkSession, path: String,
+      mf: Mf): DataFrame =
+    merged(spark, mf.roots(path, "scalar"), "scalar")
+
+  private def liveRegs(spark: SparkSession, path: String,
+      mf: Mf): DataFrame =
+    merged(spark, mf.roots(path, "regs"), "regs")
+
+  private def liveHist(spark: SparkSession, path: String,
+      mf: Mf): DataFrame =
+    merged(spark, mf.roots(path, "hist"), "hist")
 
   /** `df` must be DETERMINISTIC (a table/view whose plan replays the
     * same rows): the fingerprint and the three profile passes each
@@ -311,48 +308,18 @@ object ColStats {
     // seed its pin-refresh partials SCAN-FREE even when no co-built
     // zone map exists (e.g. a partitioned base, whose partition
     // columns a zone map cannot profile). The AggView recipe.
-    val bareFiles: Option[Seq[graft.plans.RelationPins.ListedFile]] =
-      try graft.plans.RelationPins
-        .bare(org.apache.spark.sql.GraftBridge.analyzedPlan(df))
-        .map { case (_, h) => graft.plans.RelationPins.listedFiles(h) }
-      catch { case scala.util.control.NonFatal(_) => None }
-    val (fp, n, ledgerRows) = bareFiles match {
+    val (fp, n, ledgerRows) = Ledger.files(df) match {
       case Some(files) =>
-        val byFile = fingerprintByFile(df, numCols, strCols)
-        val n = byFile.valuesIterator.map(_._2).sum
-        val fp =
-          if (n == 0) 0L
-          else byFile.valuesIterator.map(_._1).foldLeft(0L)(_ ^ _)
-        val strays = byFile.keySet -- files.map(_.key).toSet
-        val rows =
-          if (strays.nonEmpty) None
-          else Some(files.map { f =>
-            val (cfp, cn) = byFile.getOrElse(f.key, (0L, 0L))
-            (f.key, f.uri, f.len, f.mtime, cfp, cn)
-          })
-        (fp, n, rows)
+        Ledger.compose(files, fingerprintByFile(df, numCols, strCols))
       case None =>
         val (fp, n) = fingerprint(df, numCols, strCols)
         (fp, n, None)
     }
-    val want = Manifest(fp, n, numCols, strCols,
-      lg = if (ledgerRows.isDefined) 1 else 0)
-    readManifest(path) match {
-      case Some(have) if have.sameIndexAs(want) =>
-        Build(path, fp, n, reused = true)
-      case _ =>
-        IndexDirs.uncommit(path)
-        writeTables(df, want, path)
-        ledgerRows.foreach { rows =>
-          val spark = df.sparkSession
-          import spark.implicits._
-          ZoneMap.writeArtifact(
-            rows.toDF("file", "uri", "flen", "fmtime", "cfp", "cn"),
-            rows.size.toLong, s"$path/ledger",
-            ZoneMap.DefaultArtifactRowsPerFile)
-        }
-        writeManifest(path, want)
-        Build(path, fp, n, reused = false)
+    val want = Artifact.Manifest(ColLayout(numCols, strCols, Fmt,
+      if (ledgerRows.isDefined) 1 else 0), fp, n)
+    buildOr(path, want) {
+      ledgerRows.foreach(Ledger.write(df.sparkSession, _, path))
+      stage(df, 1, want, path, path)
     }
   }
 
@@ -366,16 +333,8 @@ object ColStats {
     * non-bare inputs.
     */
   def fingerprintLedger(spark: SparkSession,
-      path: String): Option[Map[String, (Long, Long, Long, Long)]] = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no stats at $path"))
-    if (mf.lg == 0) None
-    else Some(spark.read.parquet(s"$path/ledger")
-      .select("file", "flen", "fmtime", "cfp", "cn").collect()
-      .map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .toMap)
-  }
+      path: String): Option[Map[String, (Long, Long, Long, Long)]] =
+    Ledger.read(spark, path, live(path).decl.lg)
 
   /** Fused-builder hooks ([[Profile.buildBoth]]): the reuse check and
     * the manifest commit for a build whose TABLES the fused one-scan
@@ -384,120 +343,60 @@ object ColStats {
     */
   private[operators] def reusableFor(path: String, fp: Long, n: Long,
       numCols: Seq[String], strCols: Seq[String]): Boolean =
-    readManifest(path).exists(
-      _.sameIndexAs(Manifest(fp, n, numCols, strCols)))
+    readManifest(path).exists(sameIndexAs(_,
+      Artifact.Manifest(ColLayout(numCols, strCols, Fmt, 0), fp, n)))
 
   private[operators] def commitBuild(path: String, fp: Long, n: Long,
       numCols: Seq[String], strCols: Seq[String]): Unit =
-    writeManifest(path, Manifest(fp, n, numCols, strCols))
+    writeManifest(path,
+      Artifact.Manifest(ColLayout(numCols, strCols, Fmt, 0), fp, n))
 
-  def append(delta: DataFrame, path: String): Build =
-    appendImpl(delta, path, None)
-
-  private def appendImpl(delta: DataFrame, path: String,
-      batchMark: Option[Long]): Build = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no stats at $path"))
-    requireFmt3(decl, path)
-    if (batchMark.exists(_ <= decl.lastBatch))
-      return Build(path, decl.fp, decl.n, reused = true)
-    val (dfp, dn) = fingerprint(delta, decl.numCols, decl.strCols)
-    if (dn == 0) return Build(path, decl.fp, decl.n, reused = true)
-    val staged = IndexDirs.nextDeltaName(path, "d")
-    writeTables(delta, decl, s"$path/deltas/$staged")
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      if (batchMark.exists(_ <= have.lastBatch)) None
-      else Some(have.copy(fp = have.fp ^ dfp, n = have.n + dn,
-        deltas = have.deltas :+ staged,
-        lastBatch = batchMark.getOrElse(have.lastBatch)))
-    } match {
-      case Some(next) => Build(path, next.fp, next.n, reused = false)
-      case None => // a racing replay landed this batch id first
-        val now = readManifest(path).getOrElse(decl)
-        Build(path, now.fp, now.n, reused = true)
-    }
-  }
+  /** Scalar writers refuse a pre-format-3 artifact ([[requireFmt3]]). */
+  override protected def checkWritable(mf: Mf, path: String): Unit =
+    requireFmt3(mf, path)
 
   /** REFUSED: min/max and HLL registers are monotone, not
     * retractable — serving them after a row removal would be a lie.
     * Rebuild from the surviving rows instead (the fingerprint makes
-    * the rebuild a no-op when nothing else changed).
+    * the rebuild a no-op when nothing else changed). A CDC batch
+    * carrying ANY delete row refuses whole, before anything stages.
     */
   def delete(delta: DataFrame, path: String): Build =
+    refuseDelete(null, path)
+
+  override protected def refuseDelete(mf: Mf, path: String): Nothing =
     throw new UnsupportedOperationException(
       s"column statistics at $path are append-only: min/max and " +
         "distinct-count registers cannot retract rows — rebuild " +
         "with buildIfAbsent over the surviving rows")
 
-  /** Exactly-once streaming maintenance (`batchId <= lastBatch` ⇒
-    * skip, the family rule).
-    */
-  def appendBatch(batch: DataFrame, batchId: Long,
-      path: String): Build =
-    appendImpl(batch, path, Some(batchId))
+  override protected def compactible(mf: Mf): Boolean = mf.decl.fmt >= 3
 
-  /** Op-aware form for a shared CDC feed: inserts append; ANY delete
-    * row refuses the whole batch (atomically — nothing is staged
-    * first), because a retraction cannot be folded into monotone
-    * stats. Feeds with deletes should rebuild downstream instead.
+  /** Fold deltas — same serve state, fewer files; all merges are
+    * monotone or sums, so the fold is exact. The three table folds are
+    * independent metadata-scale jobs, run CONCURRENTLY (guide §2.6).
     */
-  def applyBatch(batch: DataFrame, batchId: Long, path: String,
-      opCol: String = "op", deleteOp: String = "D"): Build = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no stats at $path"))
-    if (batchId <= decl.lastBatch)
-      return Build(path, decl.fp, decl.n, reused = true)
-    val rows = batch.localCheckpoint(false)
-    val nDel = rows.filter(col(opCol) === deleteOp).limit(1).count()
-    if (nDel > 0) delete(rows, path)
-    appendBatch(rows.filter(col(opCol) =!= deleteOp).drop(opCol),
-      batchId, path)
-  }
+  override protected def fold(spark: SparkSession, path: String, mf: Mf,
+      folded: Seq[String], root: String): Unit =
+    Par.inParallel(tables.map { case (sub, _) => () =>
+      merged(spark, folded.map(d => s"$path/deltas/$d/$sub"), sub)
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/$sub")
+    })
 
-  def cdcSink(path: String, opCol: String = "op",
-      deleteOp: String = "D"): (DataFrame, Long) => Unit =
-    (df, id) => { applyBatch(df, id, path, opCol, deleteOp); () }
+  override protected def baseSubs(mf: Mf) = tables.map(_._1)
 
-  /** Fold the committed deltas into ONE delta dir — same serve
-    * state, fewer files ([[AggView.compactDeltas]]'s shape; all
-    * merges monotone, so the fold is exact). Returns folded count.
+  /** [[purge]]: base ∪ deltas merged into one versioned base — the
+    * fold above, extended over the base. Returns the profiled row
+    * count.
     */
-  def compactDeltas(spark: SparkSession, path: String): Int = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no stats at $path"))
-    if (decl.fmt < 3 || decl.deltas.length < 2) return 0
-    val folded = decl.deltas
-    val staged = IndexDirs.nextDeltaName(path, "c")
-    // the three table folds are independent metadata-scale jobs —
-    // run them CONCURRENTLY (guide §2.6)
-    Par.inParallel(Seq(
-      () => mergeScalar(
-          folded.map(d => spark.read.parquet(s"$path/deltas/$d/scalar")))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/deltas/$staged/scalar"),
-      () => folded.map(d => spark.read.parquet(s"$path/deltas/$d/regs"))
-        .reduce(_.unionByName(_))
-        .groupBy("col_name", "bucket")
-        .agg(max("register").cast("int").as("register"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/deltas/$staged/regs"),
-      () => folded.map(d => spark.read.parquet(s"$path/deltas/$d/hist"))
-        .reduce(_.unionByName(_))
-        .groupBy("col_name", "bucket")
-        .agg(sum("cnt").as("cnt"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/deltas/$staged/hist")))
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      // a delta folded by a RACING compaction makes this fold stale
-      if (!folded.forall(have.deltas.contains)) None
-      else Some(have.copy(
-        deltas = staged +: have.deltas.filterNot(folded.toSet)))
-    } match {
-      case Some(_) => IndexDirs.gcDeltas(path, folded); folded.length
-      case None => 0
-    }
+  override protected def rewrite(spark: SparkSession, path: String,
+      mf: Mf, ver: Int): Long = {
+    requireFmt3(mf, path)
+    Par.inParallel(tables.map { case (sub, _) => () =>
+      merged(spark, mf.roots(path, sub), sub)
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/$sub.v$ver")
+    })
+    mf.n
   }
 
   /** The merged per-column profile: ≤ |cols| rows, exact integer /
@@ -511,15 +410,14 @@ object ColStats {
     * mutators refuse with rebuild guidance instead. (`registers`/
     * `hist`/`ndv`/`quantiles` are format-stable and keep serving.)
     */
-  private def requireFmt3(mf: Manifest, path: String): Unit =
-    require(mf.fmt >= 3,
-      s"column statistics at $path were written by format ${mf.fmt} " +
+  private def requireFmt3(mf: Mf, path: String): Unit =
+    require(mf.decl.fmt >= 3,
+      s"column statistics at $path were written by format ${mf.decl.fmt} " +
         "(scalar table without string-length stats) — rebuild with " +
         "buildIfAbsent to upgrade")
 
   def stats(spark: SparkSession, path: String): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no stats at $path"))
+    val mf = live(path)
     requireFmt3(mf, path)
     liveScalar(spark, path, mf)
   }
@@ -531,8 +429,7 @@ object ColStats {
     * profile it registered earlier.
     */
   def version(path: String): Long =
-    readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no stats at $path")).mv
+    live(path).mv
 
   /** The artifact's committed declaration + freshness pins: the
     * declared column lists, the manifest version (the staleness pin a
@@ -546,9 +443,9 @@ object ColStats {
       version: Long, fp: Long, n: Long, lastBatch: Long = -1L)
 
   def declaration(path: String): Decl = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no stats at $path"))
-    Decl(mf.numCols, mf.strCols, mf.mv, mf.fp, mf.n, mf.lastBatch)
+    val mf = live(path)
+    Decl(mf.decl.numCols, mf.decl.strCols, mf.mv, mf.fp, mf.n,
+      mf.lastBatch)
   }
 
   /** The merged DENSE per-column HLL registers: |cols| × 64 rows,
@@ -556,11 +453,10 @@ object ColStats {
     * manifest's column list — metadata-scale).
     */
   def registers(spark: SparkSession, path: String): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no stats at $path"))
+    val mf = live(path)
     import spark.implicits._
     val spine = (for {
-      c <- mf.numCols ++ mf.strCols
+      c <- mf.decl.numCols ++ mf.decl.strCols
       b <- 0 until (1 << BucketBits)
     } yield (c, b.toLong)).toDF("col_name", "bucket")
     spine.join(broadcast(liveRegs(spark, path, mf)),
@@ -575,8 +471,7 @@ object ColStats {
     * bucket bit-for-bit. ≤ |numCols|·129 rows.
     */
   def hist(spark: SparkSession, path: String): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no stats at $path"))
+    val mf = live(path)
     liveHist(spark, path, mf)
   }
 
@@ -641,3 +536,9 @@ object ColStats {
       })
   }
 }
+
+/** [[ColStats]]' declaration: profiled columns, format, and whether
+  * the build wrote a per-file ledger (`lg`).
+  */
+private[operators] final case class ColLayout(numCols: Seq[String],
+    strCols: Seq[String], fmt: Int, lg: Int)

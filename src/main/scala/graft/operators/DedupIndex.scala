@@ -56,19 +56,7 @@ import graft.functions.StableHash
   * (directory/directory.go:230-240); this is that discipline applied
   * to dedup state.
   */
-object DedupIndex {
-
-  /** Index state after a build/append: `reused = true` means the
-    * manifest fingerprint matched and nothing was rewritten.
-    */
-  type Build = IndexBuild
-  val Build = IndexBuild
-
-  /** Default tombstone bound: 2^20 ids ≈ 8 MB broadcast — the point
-    * past which the per-read anti-join broadcast stops being free and
-    * a [[purge]] is due. [[delete]] refuses to exceed it.
-    */
-  val DefaultMaxTombstones: Long = 1L << 20
+object DedupIndex extends GuardedArtifact[DedupLayout] {
 
   /** Signature scheme: the MinHash arithmetic over the shingled
     * document. Both use the [[Dedup.corpusMinhashSignatures]]
@@ -118,48 +106,25 @@ object DedupIndex {
     */
   private val LayoutVersion = 1
 
-  private case class Manifest(fp: Long, n: Long, scheme: String,
-      nh: Int, k: Int, bands: Int, kbParts: Int, sbParts: Int,
-      dbParts: Int, id: String, text: String, lv: Int = LayoutVersion,
-      deltas: Seq[String] = Nil, lastBatch: Long = -1L,
-      tombs: Seq[String] = Nil, tombCount: Long = 0L,
-      baseVer: Int = 0, mv: Long = 0L) {
-    def sameIndexAs(other: Manifest): Boolean =
-      copy(deltas = Nil, lastBatch = -1L, tombs = Nil, tombCount = 0L,
-        baseVer = 0, mv = 0L) ==
-        other.copy(deltas = Nil, lastBatch = -1L, tombs = Nil,
-          tombCount = 0L, baseVer = 0, mv = 0L)
-    /** Live base dir of a table: versioned after a [[purge]]. */
-    def baseOf(sub: String): String =
-      if (baseVer == 0) sub else s"$sub.v$baseVer"
-  }
+  override protected def tombstoned = true
+  override protected def idCol(d: DedupLayout) = d.id
 
-  private def readManifest(path: String): Option[Manifest] =
-    IndexDirs.readManifest(path).map { r =>
-      Manifest(r.long("fp"), r.long("n"), r.str("scheme"),
-        r.int("nh"), r.int("k"), r.int("bands"),
-        r.int("kb"), r.int("sb"),
-        // a pre-digest-table manifest reads db=0, which can never
-        // match a requested layout — it rebuilds once, safely
-        r.intOr("db", 0),
-        r.str("id"), r.str("text"), r.intOr("lv", 0), r.seq("deltas"),
-        r.longOr("lb", -1L), r.seq("tombs"), r.longOr("tn", 0L),
-        r.intOr("bv", 0), mv = r.version)
-    }
+  override protected def readDecl(r: IndexDirs.ManifestReader) =
+    DedupLayout(r.str("scheme"), r.int("nh"), r.int("k"), r.int("bands"),
+      r.int("kb"), r.int("sb"),
+      // a pre-digest-table manifest reads db=0, which can never
+      // match a requested layout — it rebuilds once, safely
+      r.intOr("db", 0), r.str("id"), r.str("text"), r.intOr("lv", 0))
 
-  private def writeManifest(path: String, mf: Manifest): Unit =
-    IndexDirs.manifest()
-      .put("fp", mf.fp).put("n", mf.n)
-      .put("scheme", mf.scheme).put("nh", mf.nh)
-      .put("k", mf.k).put("bands", mf.bands)
-      .put("kb", mf.kbParts).put("sb", mf.sbParts)
-      .put("db", mf.dbParts)
-      .put("id", mf.id).put("text", mf.text)
-      .put("lv", mf.lv)
-      .put("lb", mf.lastBatch).put("bv", mf.baseVer)
-      .put("tn", mf.tombCount)
-      .put("deltas", mf.deltas).put("tombs", mf.tombs)
-      .commit(path, mf.mv)
+  override protected def writeDecl(w: IndexDirs.ManifestWriter,
+      d: DedupLayout) =
+    w.put("scheme", d.scheme).put("nh", d.nh).put("k", d.k)
+      .put("bands", d.bands).put("kb", d.kbParts).put("sb", d.sbParts)
+      .put("db", d.dbParts).put("id", d.id).put("text", d.text)
+      .put("lv", d.lv)
+
+  override protected def fpOf(rows: DataFrame, d: DedupLayout) =
+    fingerprint(rows, d.id, d.text)
 
   /** `(id, sig)` for `docs` under `scheme` — the permutation MinHash
     * of [[Dedup.corpusMinhashSignatures]] applied per document.
@@ -176,20 +141,20 @@ object DedupIndex {
     * create a cross-engine candidate divergence). `kb` is the
     * partition-prune column.
     */
-  private def bandRows(sigs: DataFrame, idCol: String, mf: Manifest)
+  private def bandRows(sigs: DataFrame, idCol: String, mf: Mf)
       : DataFrame = {
-    val r = mf.nh / mf.bands
+    val r = mf.decl.nh / mf.decl.bands
     sigs.select(col(idCol), posexplode(
-        array((0 until mf.bands).map(j =>
+        array((0 until mf.decl.bands).map(j =>
           concat_ws("|", (0 until r).map(i =>
             col("sig").getItem(j * r + i).cast("string")): _*)): _*)))
       .select(col(idCol), col("pos").as("band"),
         col("col").as("band_key"),
-        pmod(xxhash64(col("col")), lit(mf.kbParts)).cast("int").as("kb"))
+        pmod(xxhash64(col("col")), lit(mf.decl.kbParts)).cast("int").as("kb"))
   }
 
-  private def sbCol(id: Column, mf: Manifest): Column =
-    pmod(xxhash64(id), lit(mf.sbParts)).cast("int")
+  private def sbCol(id: Column, mf: Mf): Column =
+    pmod(xxhash64(id), lit(mf.decl.sbParts)).cast("int")
 
   /** Build the index at `path` unless a manifest proves the same
     * corpus (fingerprint + count) under the same scheme/banding is
@@ -203,32 +168,28 @@ object DedupIndex {
     require(scheme.numHashes % bands == 0,
       s"bands ($bands) must divide numHashes (${scheme.numHashes})")
     val (fp, n) = fingerprint(docs, idCol, textCol)
-    val want = Manifest(fp, n, scheme.name, scheme.numHashes,
-      scheme.shingle, bands, kbParts, sbParts, dbParts, idCol, textCol)
-    readManifest(path) match {
-      case Some(have) if have.sameIndexAs(want) =>
-        Build(path, fp, n, reused = true)
-      case _ =>
-        IndexDirs.uncommit(path)
-        writeTables(docs, textCol, idCol, want, scheme, s"$path")
-        writeManifest(path, want)
-        Build(path, fp, n, reused = false)
-    }
+    val want = Artifact.Manifest(DedupLayout(scheme.name,
+      scheme.numHashes, scheme.shingle, bands, kbParts, sbParts, dbParts,
+      idCol, textCol, LayoutVersion), fp, n)
+    buildOr(path, want)(stage(docs, 1, want, path, path))
   }
 
   /** The three tables under `root`: sigs (partitioned by id-hash),
     * bands (key-hash), digests (digest-hash). The signature table is
     * localCheckpointed so the shingle+min-agg pass runs once, not
     * once per dependent table; digests are one extra cheap
-    * md5-over-normText projection of the raw docs.
+    * md5-over-normText projection of the raw docs. Deletes stage
+    * tombstone id lists, never signed rows.
     */
-  private def writeTables(docs: DataFrame, textCol: String,
-      idCol: String, mf: Manifest, scheme: Scheme,
-      root: String): Unit = {
+  override protected def stage(docs: DataFrame, sign: Int, mf: Mf,
+      path: String, root: String): Long = {
+    val DedupLayout(name, nh, k, _, _, _, dbParts, idCol, textCol, _) =
+      mf.decl
     // EAGER checkpoint (was lazy): the writes below run concurrently,
     // and a lazy checkpoint's first-action race would compute the
     // shingle+min-agg pass twice
-    val sigs = sign(docs, textCol, idCol, scheme).localCheckpoint()
+    val sigs = this.sign(docs, textCol, idCol, schemeOf(name, nh, k))
+      .localCheckpoint()
     // repartition on the bucket column before each partitioned write:
     // one file per bucket, not (tasks × buckets) tiny files. The
     // three writes are independent (two off the checkpoint, digests
@@ -247,11 +208,12 @@ object DedupIndex {
         // blind and would wave through a raw-text mismatch
         xxhash64(col(idCol), col(textCol)).as("__ch"))
       .withColumn("dbp",
-        pmod(xxhash64(col("digest")), lit(mf.dbParts)).cast("int"))
+        pmod(xxhash64(col("digest")), lit(dbParts)).cast("int"))
       .repartition(col("dbp"))
       .write.mode("overwrite").partitionBy("dbp")
       .parquet(s"$root/digests")
     Par.inParallel(Seq(writeSigs, writeBands, writeDigests))
+    0L
   }
 
   /** Manifest-visible LIVE rows of `sigs`/`bands`/`digests`: the
@@ -261,42 +223,38 @@ object DedupIndex {
     * contract). Orphan delta directories are never read.
     */
   private def readParts(spark: SparkSession, path: String, sub: String,
-      mf: Manifest, partCol: String, parts: Option[Seq[Int]]): DataFrame = {
-    val roots = s"$path/${mf.baseOf(sub)}" +:
-      mf.deltas.map(d => s"$path/deltas/$d/$sub")
-    val rows = roots.map { r =>
+      mf: Mf, partCol: String, parts: Option[Seq[Int]]): DataFrame = {
+    val rows = mf.roots(path, sub).map { r =>
       val df = spark.read.parquet(r)
       parts.fold(df)(w => df.filter(col(partCol).isin(w.map(Int.box): _*)))
     }.reduce(_.unionByName(_))
     if (mf.tombs.isEmpty) rows
-    else rows.join(broadcast(tombIds(spark, path, mf)),
-      Seq(mf.id), "left_anti")
+    else rows.join(broadcast(Artifact.tombIds(spark, path, mf.tombs)),
+      Seq(mf.decl.id), "left_anti")
   }
-
-  private def tombIds(spark: SparkSession, path: String,
-      mf: Manifest): DataFrame =
-    mf.tombs.map(t => spark.read.parquet(s"$path/deltas/$t"))
-      .reduce(_.unionByName(_)).distinct()
 
   /** The manifest-visible signature table `(id, sig)`. */
   def sigs(spark: SparkSession, path: String): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
+    val mf = live(path)
     readParts(spark, path, "sigs", mf, "sb", None).drop("sb")
   }
 
-  /** `probeIds` is the delta's distinct id column. The guard reads
-    * only the probe ids' own sb buckets — an id not present anywhere
-    * cannot hide outside its hash bucket, so the prune never weakens
-    * the check.
+  /** The sb buckets `ids`' own rows hash to — what a guard prunes its
+    * sigs read to (an id not present anywhere cannot hide outside its
+    * hash bucket, so the prune never weakens the check).
     */
-  private def requireDisjoint(probeIds: DataFrame, spark: SparkSession,
-      path: String, mf: Manifest): Unit = {
-    val wantedSb = probeIds.select(sbCol(col(mf.id), mf).as("sb"))
+  private def sbOf(ids: DataFrame, mf: Mf): Seq[Int] =
+    ids.select(sbCol(col(mf.decl.id), mf).as("sb"))
       .distinct().collect().map(_.getInt(0)).toSeq
+
+  /** `probeIds` is the delta's distinct id column, `wantedSb` its
+    * [[sbOf]] buckets.
+    */
+  private def requireDisjoint(probeIds: DataFrame, wantedSb: Seq[Int],
+      spark: SparkSession, path: String, mf: Mf): Unit = {
     val dupes = readParts(spark, path, "sigs", mf, "sb", Some(wantedSb))
-      .select(col(mf.id))
-      .join(broadcast(probeIds), Seq(mf.id), "left_semi")
+      .select(col(mf.decl.id))
+      .join(broadcast(probeIds), Seq(mf.decl.id), "left_semi")
       .count()
     require(dupes == 0,
       s"append delta shares $dupes id(s) with the index at $path — " +
@@ -310,10 +268,10 @@ object DedupIndex {
     * silently invisible; [[purge]] re-opens the id space.
     */
   private def requireNotTombstoned(probeIds: DataFrame, spark: SparkSession,
-      path: String, mf: Manifest): Unit = {
+      path: String, mf: Mf): Unit = {
     if (mf.tombs.isEmpty) return
-    val hit = tombIds(spark, path, mf)
-      .join(broadcast(probeIds), Seq(mf.id), "left_semi").count()
+    val hit = Artifact.tombIds(spark, path, mf.tombs)
+      .join(broadcast(probeIds), Seq(mf.decl.id), "left_semi").count()
     require(hit == 0,
       s"append delta re-adds $hit tombstoned id(s) at $path — the " +
         "tombstone filter would hide the new rows; purge() first")
@@ -328,42 +286,33 @@ object DedupIndex {
     * later [[buildIfAbsent]] over the remaining corpus correctly
     * reuses the deleted-from index. `checkPresent` (default on)
     * verifies every id is live — stale/double deletes corrupt the
-    * fingerprint exactly like duplicate appends.
+    * fingerprint exactly like duplicate appends. Refuses past
+    * `maxTombstones` (the per-read broadcast anti-join is only
+    * "bounded between purges" if something enforces the bound).
     */
   def delete(delta: DataFrame, path: String,
       checkPresent: Boolean = true,
-      maxTombstones: Long = DefaultMaxTombstones): Build = {
-    val spark = delta.sparkSession
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    val (dfp, dn) = fingerprint(delta, decl.id, decl.text)
-    if (dn == 0) return Build(path, decl.fp, decl.n, reused = true)
-    val ids = delta.select(col(decl.id)).distinct()
-      .localCheckpoint(false)
-    require(ids.count() == dn,
-      s"delete delta has duplicate ${decl.id} rows — each stored row " +
-        "must be folded out exactly once")
-    val probe = delta.select(col(decl.id),
-        Dedup.contentKey(col(decl.text)).as("digest"),
-        xxhash64(col(decl.id), col(decl.text)).as("__pch"))
-      .distinct().localCheckpoint(false)
-    // all state-dependent guards re-verify per commit attempt against
-    // the manifest the attempt anchors at (a concurrent delete of the
-    // same ids must flip liveness from pass to refuse on retry)
-    def guardsOk(have: Manifest): Unit = {
-      // tombstone-growth bound: every read broadcast-anti-joins the
-      // tombstone set, which is only "bounded between purges" if
-      // something enforces the bound
-      require(have.tombCount + dn <= maxTombstones,
-        s"index at $path would carry ${have.tombCount + dn} tombstones " +
-          s"(bound $maxTombstones) — run purge() to fold them into the " +
-          "base before deleting more")
-      if (checkPresent) {
-        val wantedSb = ids.select(sbCol(col(have.id), have).as("sb"))
-          .distinct().collect().map(_.getInt(0)).toSeq
+      maxTombstones: Long = DefaultMaxTombstones): Build =
+    remove(delta, path, maxTombstones) { (decl, dn) =>
+      val id = decl.decl.id
+      val ids = delta.select(col(id)).distinct().localCheckpoint(false)
+      require(ids.count() == dn,
+        s"delete delta has duplicate $id rows — each stored row " +
+          "must be folded out exactly once")
+      val probe = delta.select(col(id),
+          Dedup.contentKey(col(decl.decl.text)).as("digest"),
+          xxhash64(col(id), col(decl.decl.text)).as("__pch"))
+        .distinct().localCheckpoint(false)
+      val spark = delta.sparkSession
+      lazy val wantedSb = sbOf(ids, decl)
+      lazy val wantedDbp = probe
+        .select(pmod(xxhash64(col("digest")), lit(decl.decl.dbParts))
+          .cast("int").as("dbp"))
+        .distinct().collect().map(_.getInt(0)).toSeq
+      have => if (checkPresent) {
         val live = readParts(spark, path, "sigs", have, "sb",
             Some(wantedSb))
-          .join(broadcast(ids), Seq(have.id), "left_semi").count()
+          .join(broadcast(ids), Seq(id), "left_semi").count()
         require(live == dn,
           s"delete delta names ${dn - live} id(s) not live in the index " +
             s"at $path (pass checkPresent = false only when upstream " +
@@ -372,13 +321,9 @@ object DedupIndex {
         // fingerprint is over raw (id, text), so a delete carrying the
         // right id but stale/edited text would silently corrupt it
         // while the id-liveness check passes
-        val wantedDbp = probe
-          .select(pmod(xxhash64(col("digest")), lit(have.dbParts))
-            .cast("int").as("dbp"))
-          .distinct().collect().map(_.getInt(0)).toSeq
         val same = readParts(spark, path, "digests", have, "dbp",
             Some(wantedDbp))
-          .join(broadcast(probe), Seq(have.id, "digest"))
+          .join(broadcast(probe), Seq(id, "digest"))
           .filter(col("__ch") === col("__pch")).count()
         require(same == dn,
           s"delete delta text differs from the indexed text for " +
@@ -386,314 +331,75 @@ object DedupIndex {
             "out hashes that were never folded in")
       }
     }
-    val staged = IndexDirs.nextDeltaName(path, "t")
-    // guards ∥ staging (guide §2.6); re-verified in the loop only
-    // when another writer moved the manifest
-    try Par.inParallel(Seq(
-      () => guardsOk(decl),
-      () => ids.coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/deltas/$staged")))
-    catch { case e: Throwable =>
-      IndexDirs.gcDeltas(path, Seq(staged)); throw e
-    }
-    val next = IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      if (have.mv != decl.mv) guardsOk(have)
-      Some(have.copy(fp = have.fp ^ dfp, n = have.n - dn,
-        tombs = have.tombs :+ staged, tombCount = have.tombCount + dn))
-    }.get
-    Build(path, next.fp, next.n, reused = false)
-  }
 
-  /** Physically apply tombstones and fold deltas: rewrite the LIVE
-    * rows of all three tables into fresh `.v<N>` base directories and
-    * commit a manifest with no deltas and no tombstones — downtime-
-    * free (the old manifest and everything it references stay live
-    * until the atomic swap). O(live index); run when the tombstone
-    * set outgrows broadcast comfort. Returns the purged id count.
-    */
-  def purge(spark: SparkSession, path: String): Long =
-    purgeImpl(spark, path, () => ())
+  override protected def baseSubs(mf: Mf) = Seq("sigs", "bands", "digests")
 
-  /** [[purge]] with a test seam invoked between the survivors rewrite
-    * and the manifest commit — deterministic interleaving specs only.
+  private val partCols =
+    Map("sigs" -> "sb", "bands" -> "kb", "digests" -> "dbp")
+
+  /** [[purge]]: physically apply tombstones and fold deltas — the LIVE
+    * rows of all three tables into fresh `.v<N>` base directories.
+    * O(live index); run when the tombstone set outgrows broadcast
+    * comfort. Returns the purged id count.
     */
-  private[operators] def purgeImpl(spark: SparkSession, path: String,
-      beforeCommit: () => Unit): Long = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (decl.tombs.isEmpty && decl.deltas.isEmpty) return 0L
-    val tombCount =
-      if (decl.tombs.isEmpty) 0L else tombIds(spark, path, decl).count()
-    // CLAIMED target version: two racing purges write disjoint .v<k>
-    // dirs ([[IndexDirs.claimBaseSuffix]])
-    val nextVer = IndexDirs.claimBaseSuffix(path, "base.v",
-      decl.baseVer + 1)
+  override protected def rewrite(spark: SparkSession, path: String,
+      mf: Mf, ver: Int): Long = {
+    val purged =
+      if (mf.tombs.isEmpty) 0L
+      else Artifact.tombIds(spark, path, mf.tombs).count()
     // the three survivor rewrites run CONCURRENTLY (guide §2.6) —
     // independent reads of committed data
-    Par.inParallel(
-      Seq("sigs" -> "sb", "bands" -> "kb", "digests" -> "dbp")
-        .map { case (sub, pc) => () =>
-          readParts(spark, path, sub, decl, pc, None)
-            .repartition(col(pc))
-            .write.mode("overwrite").partitionBy(pc)
-            .parquet(s"$path/$sub.v$nextVer")
-        })
-    beforeCommit()
-    try IndexDirs.commitWithRetry(readManifest(path),
-      writeManifest(path, _: Manifest), path) { have =>
-      require(have.baseVer == decl.baseVer,
-        s"a concurrent purge of $path committed base version " +
-          s"${have.baseVer} while this one rewrote from " +
-          s"${decl.baseVer} — rerun against the new base")
-      // a compaction committed mid-purge replaces (some of) our
-      // snapshot delta/tombstone lists with fold dirs the filterNots
-      // below would keep while the new base already absorbed them —
-      // refuse instead of double-counting / double-hiding
-      require(decl.deltas.forall(have.deltas.contains) &&
-        decl.tombs.forall(have.tombs.contains),
-        s"a concurrent compaction of $path folded deltas/tombstones " +
-          "this purge's rewrite already absorbed — committing would " +
-          "corrupt the view; rerun against the compacted state")
-      // deletes that landed after our rewrite stay as tombstones,
-      // with their (re-counted) surviving id total
-      val survTombs = have.tombs.filterNot(decl.tombs.toSet)
-      val survCount =
-        if (survTombs.isEmpty) 0L
-        else survTombs.map(t => spark.read.parquet(s"$path/deltas/$t"))
-          .reduce(_.unionByName(_)).distinct().count()
-      Some(have.copy(deltas = have.deltas.filterNot(decl.deltas.toSet),
-        tombs = survTombs, tombCount = survCount, baseVer = nextVer))
-    } catch {
-      case e: IllegalArgumentException =>
-        Seq("sigs", "bands", "digests").foreach(sub =>
-          IndexDirs.rmTree(s"$path/$sub.v$nextVer")) // orphaned rewrite
-        throw e
-    }
-    IndexDirs.gcDeltas(path, decl.deltas ++ decl.tombs)
-    Seq("sigs", "bands", "digests").foreach { sub =>
-      IndexDirs.rmTree(s"$path/${decl.baseOf(sub)}")
-    }
-    tombCount
+    Par.inParallel(baseSubs(mf).map { sub => () =>
+      val pc = partCols(sub)
+      readParts(spark, path, sub, mf, pc, None)
+        .repartition(col(pc))
+        .write.mode("overwrite").partitionBy(pc)
+        .parquet(s"$path/$sub.v$ver")
+    })
+    purged
   }
 
-  /** Incrementally extend the index with NEW documents: only the
-    * delta pays the signature pass; its sigs/bands stage in a fresh
-    * `deltas/d<N>` directory made visible by the manifest commit,
-    * and the xor-fold fingerprint composes — O(delta) regardless of
-    * corpus size. Caller contract and `checkDisjoint` guard as
-    * [[AnnIndex.append]].
-    */
-  def append(delta: DataFrame, path: String,
-      checkDisjoint: Boolean = true): Build =
-    appendImpl(delta, path, checkDisjoint, None)
+  override protected def idlePurge(spark: SparkSession, path: String,
+      mf: Mf): Long = 0L
 
-  private def appendImpl(delta: DataFrame, path: String,
-      checkDisjoint: Boolean, batchMark: Option[Long]): Build = {
-    val spark = delta.sparkSession
-    // scheme/layout are immutable across appends (only a rebuild
-    // changes them, and a rebuild uncommits), so staging off this
-    // read is race-free; counters, lists, and the disjointness guards
-    // re-derive per commit attempt (multi-writer liveness — the
-    // [[AggView]]/[[IndexDirs.commitWithRetry]] recipe)
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (batchMark.exists(_ <= decl.lastBatch))
-      return Build(path, decl.fp, decl.n, reused = true)
-    val scheme = schemeOf(decl.scheme, decl.nh, decl.k)
-    val (dfp, dn) = fingerprint(delta, decl.id, decl.text)
-    if (dn == 0) return Build(path, decl.fp, decl.n, reused = true)
-    val probeIds = delta.select(col(decl.id)).distinct()
+  /** Appends refuse ids already live or tombstoned (`checkDisjoint`,
+    * default on): duplicate ids would corrupt both the rows and the
+    * xor fingerprint, and a re-added tombstoned id would be hidden.
+    * Caller contract as [[AnnIndex.append]]; only the delta pays the
+    * signature pass.
+    */
+  override protected def insertGuard(delta: DataFrame, decl: Mf,
+      dn: Long, path: String): Guard = {
+    val probeIds = delta.select(col(decl.decl.id)).distinct()
       .localCheckpoint(false)
-    def disjointOk(have: Manifest): Unit = if (checkDisjoint) {
-      requireDisjoint(probeIds, spark, path, have)
-      requireNotTombstoned(probeIds, spark, path, have)
-    }
-    val staged = IndexDirs.nextDeltaName(path, "d")
-    // guard ∥ staging (guide §2.6): both depend only on the anchor
-    // manifest; the commit loop re-verifies only when another writer
-    // moved it (a concurrent overlapping append must still flip the
-    // guard to refuse on retry)
-    try Par.inParallel(Seq(
-      () => disjointOk(decl),
-      () => writeTables(delta, decl.text, decl.id, decl, scheme,
-        s"$path/deltas/$staged")))
-    catch { case e: Throwable =>
-      IndexDirs.gcDeltas(path, Seq(staged)); throw e
-    }
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      if (batchMark.exists(_ <= have.lastBatch)) None
-      else {
-        if (have.mv != decl.mv) disjointOk(have)
-        Some(have.copy(fp = have.fp ^ dfp, n = have.n + dn,
-          deltas = have.deltas :+ staged,
-          lastBatch = batchMark.getOrElse(have.lastBatch)))
-      }
-    } match {
-      case Some(next) => Build(path, next.fp, next.n, reused = false)
-      case None => // a racing replay landed this batch id first
-        val now = readManifest(path).getOrElse(decl)
-        Build(path, now.fp, now.n, reused = true)
+    lazy val wantedSb = sbOf(probeIds, decl)
+    have => {
+      requireDisjoint(probeIds, wantedSb, delta.sparkSession, path, have)
+      requireNotTombstoned(probeIds, delta.sparkSession, path, have)
     }
   }
 
-  /** Exactly-once streaming index maintenance — the `foreachBatch`
-    * form of [[append]]: the micro-batch id commits IN the same
-    * manifest write as its delta, so a replayed batch (Structured
-    * Streaming's at-least-once `foreachBatch` contract) is detected
-    * by `batchId <= lastBatch` and skipped — the [[AnnIndex]]
-    * idempotent-sink recipe. `checkDisjoint` defaults OFF: the
-    * streaming upstream is a new-docs feed (ids disjoint by
-    * construction), and a per-micro-batch base scan would turn an
-    * O(batch) append into an O(index) one.
-    */
-  def appendBatch(batch: DataFrame, batchId: Long, path: String,
-      checkDisjoint: Boolean = false): Build =
-    appendImpl(batch, path, checkDisjoint, Some(batchId))
-
-  /** `writeStream.foreachBatch(DedupIndex.foreachBatchSink(path))`. */
-  def foreachBatchSink(path: String, checkDisjoint: Boolean = false)
-      : (DataFrame, Long) => Unit =
-    (df, id) => { appendBatch(df, id, path, checkDisjoint); () }
-
-  /** Exactly-once OP-AWARE streaming maintenance — the
-    * [[AnnIndex.applyBatch]] discipline for dedup state: one CDC
-    * micro-batch of full `(id, text, op)` rows applies its inserts
-    * (signed delta tables) AND deletes (tombstone id list) in ONE
-    * manifest commit with the batch watermark, so an at-least-once
-    * replay skips the whole batch and no insert-committed/
-    * delete-lost window exists. Same contracts: no id both inserted
-    * and deleted in one batch (version-blind tombstones), delete
-    * rows exact and live by the upstream feed's proof (the guarded
-    * batch path is [[delete]]).
+  /** A CDC batch's inserts stage signed tables, its deletes a
+    * tombstone id list. No id may be both inserted and deleted in one
+    * batch (version-blind tombstones would hide the inserted rows);
+    * delete rows must be exact and live by the upstream feed's proof.
     */
   def applyBatch(batch: DataFrame, batchId: Long, path: String,
-      opCol: String = "op", deleteOp: String = "D",
-      maxTombstones: Long = DefaultMaxTombstones): Build = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (batchId <= decl.lastBatch)
-      return Build(path, decl.fp, decl.n, reused = true)
-    val scheme = schemeOf(decl.scheme, decl.nh, decl.k)
-    val rows = batch.localCheckpoint(false)
-    val ins = rows.filter(col(opCol) =!= deleteOp).drop(opCol)
-    val del = rows.filter(col(opCol) === deleteOp).drop(opCol)
-    val (ifp, inN) = fingerprint(ins, decl.id, decl.text)
-    val (dfp, delN) = fingerprint(del, decl.id, decl.text)
-    if (inN == 0 && delN == 0)
-      return Build(path, decl.fp, decl.n, reused = true)
-    // batch-local invariants check once; the tombstone bound is
-    // state-dependent and re-verifies per commit attempt below
-    if (delN > 0) {
-      require(del.select(col(decl.id)).distinct().count() == delN,
-        s"batch $batchId has duplicate delete rows")
-      if (inN > 0) {
-        val both = ins.select(col(decl.id))
-          .join(broadcast(del.select(col(decl.id)).distinct()),
-            Seq(decl.id), "left_semi").count()
-        require(both == 0,
-          s"batch $batchId inserts AND deletes $both shared id(s) — " +
-            "the tombstone filter would hide the inserted rows")
-      }
-    }
-    var stagedData = Seq.empty[String]
-    var stagedTombs = Seq.empty[String]
-    if (inN > 0) {
-      val staged = IndexDirs.nextDeltaName(path, "d")
-      writeTables(ins, decl.text, decl.id, decl, scheme,
-        s"$path/deltas/$staged")
-      stagedData :+= staged
-    }
-    if (delN > 0) {
-      val staged = IndexDirs.nextDeltaName(path, "t")
-      del.select(col(decl.id)).distinct().coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/deltas/$staged")
-      stagedTombs :+= staged
-    }
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path,
-      stagedData ++ stagedTombs) { have =>
-      if (batchId <= have.lastBatch) None // a racing replay landed it
-      else {
-        require(have.tombCount + delN <= maxTombstones,
-          s"index at $path would carry ${have.tombCount + delN} " +
-            s"tombstones (bound $maxTombstones) — run purge() first")
-        Some(have.copy(fp = have.fp ^ ifp ^ dfp,
-          n = have.n + inN - delN, deltas = have.deltas ++ stagedData,
-          tombs = have.tombs ++ stagedTombs,
-          tombCount = have.tombCount + delN, lastBatch = batchId))
-      }
-    } match {
-      case Some(next) => Build(path, next.fp, next.n, reused = false)
-      case None =>
-        val now = readManifest(path).getOrElse(decl)
-        Build(path, now.fp, now.n, reused = true)
-    }
-  }
+      maxTombstones: Long): Build =
+    applyCdc(batch, batchId, path, maxTombstones)
 
-  /** `writeStream.foreachBatch(DedupIndex.cdcSink(path))`. */
-  def cdcSink(path: String, opCol: String = "op",
-      deleteOp: String = "D"): (DataFrame, Long) => Unit =
-    (df, id) => { applyBatch(df, id, path, opCol, deleteOp); () }
-
-  /** Folds the committed delta directories into ONE (`deltas/c<N>`)
-    * and commits a manifest listing only it — bounding per-query
-    * listing/footer costs after long append streams. Crash-safe by
-    * the staging discipline; old directories GC'd post-commit.
+  /** Folds the committed delta directories into ONE — a pure move
+    * (union, no arithmetic), each table keeping its partitioning.
     */
-  def compactDeltas(spark: SparkSession, path: String): Int = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    val foldData = decl.deltas.length >= 2
-    val foldTombs = decl.tombs.length >= 2
-    if (!foldData && !foldTombs) return 0
-    val foldedData = if (foldData) decl.deltas else Nil
-    val foldedTombs = if (foldTombs) decl.tombs else Nil
-    var staged = Seq.empty[String]
-    val stagedData = if (!foldData) None else {
-      val s = IndexDirs.nextDeltaName(path, "c")
-      // the three table folds are independent — run them CONCURRENTLY
-      // (guide §2.6)
-      Par.inParallel(
-        Seq("sigs" -> "sb", "bands" -> "kb", "digests" -> "dbp")
-          .map { case (sub, pc) => () =>
-            foldedData
-              .map(d => spark.read.parquet(s"$path/deltas/$d/$sub"))
-              .reduce(_.unionByName(_))
-              .repartition(col(pc))
-              .write.mode("overwrite").partitionBy(pc)
-              .parquet(s"$path/deltas/$s/$sub")
-          })
-      staged :+= s
-      Some(s)
-    }
-    val stagedTombs = if (!foldTombs) None else {
-      val s = IndexDirs.nextDeltaName(path, "t")
-      tombIds(spark, path, decl).coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/deltas/$s")
-      staged :+= s
-      Some(s)
-    }
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, staged) { have =>
-      // deltas/tombstones that landed after our fold survive; a
-      // racing purge/compaction that already folded any of ours makes
-      // this fold stale — drop it, theirs covered it
-      if (!foldedData.forall(have.deltas.contains) ||
-        !foldedTombs.forall(have.tombs.contains)) None
-      else Some(have.copy(
-        deltas = stagedData.toSeq ++
-          have.deltas.filterNot(foldedData.toSet),
-        tombs = stagedTombs.toSeq ++
-          have.tombs.filterNot(foldedTombs.toSet)))
-    } match {
-      case Some(_) =>
-        IndexDirs.gcDeltas(path, foldedData ++ foldedTombs)
-        (foldedData ++ foldedTombs).length
-      case None => 0
-    }
-  }
+  override protected def fold(spark: SparkSession, path: String, mf: Mf,
+      folded: Seq[String], root: String): Unit =
+    Par.inParallel(baseSubs(mf).map { sub => () =>
+      val pc = partCols(sub)
+      folded.map(d => spark.read.parquet(s"$path/deltas/$d/$sub"))
+        .reduce(_.unionByName(_))
+        .repartition(col(pc))
+        .write.mode("overwrite").partitionBy(pc).parquet(s"$root/$sub")
+    })
 
   /** Near-dups of a NEW document batch against the standing corpus —
     * the incremental-ingest question, answered without touching raw
@@ -713,16 +419,15 @@ object DedupIndex {
     */
   def nearDupsOf(spark: SparkSession, path: String, newDocs: DataFrame,
       textCol: String, idCol: String, thresholdTenths: Int): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
+    val mf = live(path)
     nearDupsOfImpl(spark, path, mf, newDocs, textCol, idCol,
       thresholdTenths)
   }
 
   private def nearDupsOfImpl(spark: SparkSession, path: String,
-      mf: Manifest, newDocs: DataFrame, textCol: String, idCol: String,
+      mf: Mf, newDocs: DataFrame, textCol: String, idCol: String,
       thresholdTenths: Int): DataFrame = {
-    val scheme = schemeOf(mf.scheme, mf.nh, mf.k)
+    val scheme = schemeOf(mf.decl.scheme, mf.decl.nh, mf.decl.k)
     val probeSigs = sign(newDocs, textCol, idCol, scheme)
       .select(col(idCol).as("new_id"), col("sig").as("__psig"))
       .localCheckpoint(false)
@@ -734,7 +439,7 @@ object DedupIndex {
       .map(_.getInt(0)).toSeq
     val cands = readParts(spark, path, "bands", mf, "kb", Some(wantedKb))
       .join(broadcast(probeBands.drop("kb")), Seq("band", "band_key"))
-      .select(col("new_id"), col(mf.id).as("corpus_id"))
+      .select(col("new_id"), col(mf.decl.id).as("corpus_id"))
       .distinct()
       .localCheckpoint(false)
     // second prune: only the sig buckets that hold candidate ids
@@ -743,7 +448,7 @@ object DedupIndex {
       .map(_.getInt(0)).toSeq
     val corpusSigs = readParts(spark, path, "sigs", mf, "sb",
         Some(wantedSb))
-      .select(col(mf.id).as("corpus_id"), col("sig").as("__csig"))
+      .select(col(mf.decl.id).as("corpus_id"), col("sig").as("__csig"))
     verified(cands.join(corpusSigs, Seq("corpus_id"))
         .join(broadcast(probeSigs), Seq("new_id")),
       mf, thresholdTenths, "new_id", "corpus_id")
@@ -761,24 +466,23 @@ object DedupIndex {
     */
   def exactDupsOf(spark: SparkSession, path: String, newDocs: DataFrame,
       textCol: String, idCol: String): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
+    val mf = live(path)
     exactDupsOfImpl(spark, path, mf, newDocs, textCol, idCol)
   }
 
   private def exactDupsOfImpl(spark: SparkSession, path: String,
-      mf: Manifest, newDocs: DataFrame, textCol: String,
+      mf: Mf, newDocs: DataFrame, textCol: String,
       idCol: String): DataFrame = {
     val probes = newDocs
       .select(col(idCol).as("new_id"),
         Dedup.contentKey(col(textCol)).as("digest"))
       .localCheckpoint(false)
     val wantedDbp = probes
-      .select(pmod(xxhash64(col("digest")), lit(mf.dbParts)).cast("int")
+      .select(pmod(xxhash64(col("digest")), lit(mf.decl.dbParts)).cast("int")
         .as("dbp")).distinct().collect().map(_.getInt(0)).toSeq
     readParts(spark, path, "digests", mf, "dbp", Some(wantedDbp))
       .join(broadcast(probes), Seq("digest"))
-      .select(col("new_id"), col(mf.id).as("corpus_id"), col("digest"))
+      .select(col("new_id"), col(mf.decl.id).as("corpus_id"), col("digest"))
   }
 
   /** The combined ingest screen — [[exactDupsOf]] + [[nearDupsOf]] in
@@ -800,8 +504,7 @@ object DedupIndex {
     */
   def screen(spark: SparkSession, path: String, newDocs: DataFrame,
       textCol: String, idCol: String, thresholdTenths: Int): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
+    val mf = live(path)
     val batch = newDocs.select(col(idCol), col(textCol))
       .localCheckpoint(false)
     val exact = exactDupsOfImpl(spark, path, mf, batch, textCol, idCol)
@@ -811,7 +514,7 @@ object DedupIndex {
         thresholdTenths)
       .join(broadcast(exact), Seq("new_id", "corpus_id"), "left_anti")
     exact.select(col("new_id"), col("corpus_id"),
-        lit("exact").as("kind"), lit(mf.nh.toLong).as("matches"),
+        lit("exact").as("kind"), lit(mf.decl.nh.toLong).as("matches"),
         lit(1.0).as("est_jaccard"))
       .unionByName(near.select(col("new_id"), col("corpus_id"),
         lit("near").as("kind"), col("matches"), col("est_jaccard")))
@@ -827,16 +530,15 @@ object DedupIndex {
     */
   def selfPairs(spark: SparkSession, path: String, thresholdTenths: Int,
       maxBucket: Int = Int.MaxValue): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
+    val mf = live(path)
     val banded = readParts(spark, path, "bands", mf, "kb", None)
-      .select(col(mf.id).as("id"), col("band"), col("band_key"))
+      .select(col(mf.decl.id).as("id"), col("band"), col("band_key"))
     val cands = Dedup.bandedCandidatePairs(banded, maxBucket)
     val allSigs = readParts(spark, path, "sigs", mf, "sb", None)
     verified(cands
-        .join(allSigs.select(col(mf.id).as("a"), col("sig").as("__psig")),
+        .join(allSigs.select(col(mf.decl.id).as("a"), col("sig").as("__psig")),
           Seq("a"))
-        .join(allSigs.select(col(mf.id).as("b"), col("sig").as("__csig")),
+        .join(allSigs.select(col(mf.decl.id).as("b"), col("sig").as("__csig")),
           Seq("b")),
       mf, thresholdTenths, "a", "b")
   }
@@ -845,15 +547,22 @@ object DedupIndex {
     * integer threshold `10·matches ≥ tenths·nh`, 4dp estimate (the
     * [[Dedup]] output convention).
     */
-  private def verified(joined: DataFrame, mf: Manifest,
+  private def verified(joined: DataFrame, mf: Mf,
       thresholdTenths: Int, leftId: String, rightId: String): DataFrame =
     joined
       .withColumn("matches", aggregate(
         zip_with(col("__psig"), col("__csig"),
           (x, y) => when(x === y, 1L).otherwise(0L)),
         lit(0L), (acc, v) => acc + v))
-      .filter(col("matches") * 10 >= lit(thresholdTenths) * mf.nh)
+      .filter(col("matches") * 10 >= lit(thresholdTenths) * mf.decl.nh)
       .select(col(leftId), col(rightId), col("matches"),
-        round(col("matches").cast("double") / mf.nh, 4)
+        round(col("matches").cast("double") / mf.decl.nh, 4)
           .as("est_jaccard"))
 }
+
+/** [[DedupIndex]]'s declaration: scheme, banding, bucketing, columns,
+  * layout version.
+  */
+private[operators] final case class DedupLayout(scheme: String, nh: Int,
+    k: Int, bands: Int, kbParts: Int, sbParts: Int, dbParts: Int,
+    id: String, text: String, lv: Int)

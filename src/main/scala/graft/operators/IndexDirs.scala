@@ -270,25 +270,6 @@ private[operators] object IndexDirs {
         "writer contention is pathological; back off and retry")
   }
 
-  /** The staged-commit tail every family's mutators share: run the
-    * retry loop; if compose SKIPS (None — e.g. a racing replay
-    * already landed the batch) or REFUSES (an
-    * IllegalArgumentException guard), garbage-collect the staged
-    * delta dirs this caller wrote, so neither outcome leaves orphans.
-    */
-  def stagedCommit[M](read: => Option[M], write: M => Unit,
-      path: String, staged: Seq[String])(
-      compose: M => Option[M]): Option[M] =
-    try {
-      val r = commitWithRetry(read, write, path)(compose)
-      if (r.isEmpty) gcDeltas(path, staged)
-      r
-    } catch {
-      case e: IllegalArgumentException =>
-        gcDeltas(path, staged)
-        throw e
-    }
-
   def rmTree(path: String): Unit = {
     val f = fs(path)
     val p = new Path(path)

@@ -3,10 +3,14 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 
 /** One CDC feed, many artifacts: fan a micro-batch out to several
-  * idempotent index sinks ([[DedupIndex.cdcSink]],
-  * [[Bm25Index.cdcSink]], [[LmIndex.cdcSink]], [[AnnIndex.cdcSink]],
-  * [[MergeOnRead.foreachBatchSink]] — anything with a per-batch-id
-  * skip) from a single Structured Streaming `foreachBatch`.
+  * idempotent sinks from a single Structured Streaming `foreachBatch`
+  * — anything with a per-batch-id skip:
+  *  - every [[Artifact]] kernel instance's `cdcSink` (op-aware: `"D"`
+  *    rows delete) or `foreachBatchSink` (insert-only) —
+  *    [[Bm25Index]], [[LmIndex]], [[DedupIndex]], [[AnnIndex]],
+  *    [[VecStats]], [[AggView]], [[ColStats]] (whose `cdcSink` refuses
+  *    delete-bearing batches: its stats are append-only);
+  *  - [[MergeOnRead.foreachBatchSink]].
   *
   * The composition provides NO cross-artifact atomicity — each
   * artifact commits independently — and doesn't need it: every sink

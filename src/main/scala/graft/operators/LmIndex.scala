@@ -39,10 +39,7 @@ import graft.operators.TextAnalysis.LmCounts
   * Reference grounding: immutable loaded artifacts serving every
   * request (directory/directory.go:230-240), applied to LM state.
   */
-object LmIndex {
-
-  type Build = IndexBuild
-  val Build = IndexBuild
+object LmIndex extends GuardedArtifact[LmLayout] {
 
   /** Order-independent fingerprint over the raw train rows. */
   def fingerprint(docs: DataFrame, idCol: String,
@@ -55,55 +52,32 @@ object LmIndex {
     */
   private val LayoutVersion = 1
 
-  private case class Manifest(fp: Long, n: Long, id: String,
-      text: String, lv: Int = LayoutVersion, gbParts: Int = 0,
-      ibp: Int = 0, st: Long = 0L, deltas: Seq[String] = Nil,
-      lastBatch: Long = -1L, baseVer: Int = 0, mv: Long = 0L) {
-    /** st (the live token total) is derived state like the delta
-      * list — it never gates reuse; gbParts IS layout (a different
-      * gram bucketing must rebuild).
-      */
-    def sameIndexAs(other: Manifest): Boolean =
-      copy(st = 0L, deltas = Nil, lastBatch = -1L, baseVer = 0,
-        mv = 0L) ==
-        other.copy(st = 0L, deltas = Nil, lastBatch = -1L, baseVer = 0,
-          mv = 0L)
-    /** Live base dir of a table: versioned after a [[purge]]. */
-    def baseOf(sub: String): String =
-      if (baseVer == 0) sub else s"$sub.v$baseVer"
-  }
+  // st (the live token total) is derived state like the delta list —
+  // the kernel's `acc`, it never gates reuse; gbParts IS layout (a
+  // different gram bucketing must rebuild)
+  override protected def accKey = Some("st")
 
-  private def readManifest(path: String): Option[Manifest] =
-    IndexDirs.readManifest(path).map { r =>
-      Manifest(r.long("fp"), r.long("n"), r.str("id"), r.str("text"),
-        r.intOr("lv", 0),
-        // pre-bucketing manifests read gb=0/ibp=0, which can never
-        // match a requested layout — they rebuild once, safely
-        r.intOr("gb", 0), r.intOr("ibp", 0), r.longOr("st", 0L),
-        r.seq("deltas"), r.longOr("lb", -1L), r.intOr("bv", 0),
-        mv = r.version)
-    }
+  override protected def readDecl(r: IndexDirs.ManifestReader) =
+    LmLayout(r.str("id"), r.str("text"), r.intOr("lv", 0),
+      // pre-bucketing manifests read gb=0/ibp=0, which can never
+      // match a requested layout — they rebuild once, safely
+      r.intOr("gb", 0), r.intOr("ibp", 0))
 
-  private def writeManifest(path: String, mf: Manifest): Unit =
-    IndexDirs.manifest()
-      .put("fp", mf.fp).put("n", mf.n)
-      .put("id", mf.id).put("text", mf.text)
-      .put("lv", mf.lv).put("gb", mf.gbParts).put("ibp", mf.ibp)
-      .put("st", mf.st)
-      .put("lb", mf.lastBatch).put("bv", mf.baseVer)
-      .put("deltas", mf.deltas)
-      .commit(path, mf.mv)
+  override protected def writeDecl(w: IndexDirs.ManifestWriter,
+      d: LmLayout) =
+    w.put("id", d.id).put("text", d.text).put("lv", d.lv)
+      .put("gb", d.gbParts).put("ibp", d.ibp)
+
+  override protected def fpOf(rows: DataFrame, d: LmLayout) =
+    fingerprint(rows, d.id, d.text)
 
   private val tables = Seq(
     ("uni", "__w", "__cu"), ("bi", "__b", "__cb"), ("tri", "__t3", "__ct"))
 
   // max(,1): a legacy (gbParts = 0) artifact compacts/purges into one
   // gb=0 partition instead of a null-partition write
-  private def gbCol(key: org.apache.spark.sql.Column, mf: Manifest) =
-    pmod(xxhash64(key), lit(math.max(mf.gbParts, 1))).cast("int")
-
-  private def ibCol(id: org.apache.spark.sql.Column, mf: Manifest) =
-    pmod(xxhash64(id), lit(math.max(mf.ibp, 1))).cast("int")
+  private def gbCol(key: org.apache.spark.sql.Column, mf: Mf) =
+    pmod(xxhash64(key), lit(math.max(mf.decl.gbParts, 1))).cast("int")
 
   /** Write the four tables of `docs` (scaled by `sign` — deletes
     * stage the SAME rows with negated counts) under `root`, each
@@ -112,14 +86,15 @@ object LmIndex {
     * manifest-carried `st` advances by it, so the scoring-time N
     * never needs a unigram-table aggregate.
     */
-  private def writeTables(docs: DataFrame, textCol: String,
-      idCol: String, sign: Int, mf: Manifest, root: String): Long = {
+  override protected def stage(docs: DataFrame, sign: Int, mf: Mf,
+      path: String, root: String): Long = {
+    val LmLayout(idCol, textCol, _, _, _) = mf.decl
     // ONE tokenize pass: the token arrays (plus the id ledger's
     // columns) checkpoint once, and the four table writes explode
     // from the checkpoint — it used to be four independent scans of
     // `docs`, three of them re-running the tokenizer (guide §1.2:
     // the distributed algorithm first; tokenization IS the LM
-    // build's corpus cost). The [[Bm25Index.writeTables]] recipe.
+    // build's corpus cost). The [[Bm25Index]] staging recipe.
     // SIZE-GATED (guide §5): for CDC deltas and small builds the
     // checkpoint is delta-sized and the wins are real; a full-corpus
     // build past the budget must NOT materialize the tokenized corpus
@@ -152,11 +127,9 @@ object LmIndex {
           .write.mode("overwrite").partitionBy("gb")
           .parquet(s"$root/$sub")
     }
-    val idsWrite = () => toks
-      .select(col(idCol), col("__ch"), lit(sign).as("__lw"))
-      .withColumn("ib", ibCol(col(idCol), mf))
-      .repartition(col("ib"))
-      .write.mode("overwrite").partitionBy("ib").parquet(s"$root/ids")
+    val idsWrite = () => IdLedger.write(
+      toks.select(col(idCol), col("__ch"), lit(sign).as("__lw")),
+      idCol, mf.decl.ibp, s"$root/ids")
     if (small) {
       // the signed total is the exploded unigram stream's row count
       // off the checkpoint (the value the written uni counts sum to —
@@ -182,40 +155,15 @@ object LmIndex {
     * prunes each read to the given gb partition values — the scoring
     * path passes the scored batch's gram buckets.
     */
-  private def readAgg(spark: SparkSession, path: String, mf: Manifest,
+  private def readAgg(spark: SparkSession, path: String, mf: Mf,
       sub: String, key: String, cnt: String,
-      parts: Option[Seq[Int]] = None): DataFrame = {
-    val roots = s"$path/${mf.baseOf(sub)}" +:
-      mf.deltas.map(d => s"$path/deltas/$d/$sub")
-    roots.map { r =>
+      parts: Option[Seq[Int]] = None): DataFrame =
+    mf.roots(path, sub).map { r =>
         val df = spark.read.parquet(r)
         parts.fold(df)(w => df.filter(col("gb").isin(w.map(Int.box): _*)))
       }.reduce(_.unionByName(_))
       .groupBy(key).agg(sum(col(cnt)).as(cnt))
       .filter(col(cnt) > 0)
-  }
-
-  /** Live `(id, __ch)` ledger rows — weight-cancelled per (id,
-    * contentHash), so a delete + re-append with new text leaves
-    * exactly the new pair live. Each root PRUNED to `parts` ib
-    * partitions when given (legacy unbucketed roots read whole —
-    * correct, just unpruned).
-    */
-  private def liveIds(spark: SparkSession, path: String, mf: Manifest,
-      parts: Option[Seq[Int]] = None): DataFrame = {
-    val roots = s"$path/${mf.baseOf("ids")}" +:
-      mf.deltas.map(d => s"$path/deltas/$d/ids")
-    roots.map { r =>
-        val df = spark.read.parquet(r)
-        val pruned =
-          if (parts.isDefined && df.columns.contains("ib"))
-            df.filter(col("ib").isin(parts.get.map(Int.box): _*))
-          else df
-        pruned.select(col(mf.id), col("__ch"), col("__lw"))
-      }.reduce(_.unionByName(_))
-      .groupBy(mf.id, "__ch").agg(sum(col("__lw")).as("__lw"))
-      .filter(col("__lw") > 0).select(col(mf.id), col("__ch"))
-  }
 
   /** The ledger read every append/delete guard runs: pruned to the
     * probe ids' own ib buckets (O(delta buckets), never the whole
@@ -225,26 +173,21 @@ object LmIndex {
     */
   private[operators] def liveIdsForProbe(spark: SparkSession,
       path: String, probeIds: DataFrame): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    liveIdsPruned(spark, path, mf, probeIds)
+    val mf = live(path)
+    ledgerOf(spark, path, mf, probeIds)(mf)
   }
 
-  private def liveIdsPruned(spark: SparkSession, path: String,
-      mf: Manifest, probeIds: DataFrame): DataFrame = {
-    val parts =
-      if (mf.ibp == 0) None
-      else Some(probeIds.select(ibCol(col(mf.id), mf).as("ib"))
-        .distinct().collect().map(_.getInt(0)).toSeq)
-    liveIds(spark, path, mf, parts)
+  private def ledgerOf(spark: SparkSession, path: String,
+      mf: Mf, probeIds: DataFrame): Mf => DataFrame = {
+    val read = IdLedger.liveFor(spark, mf.decl.id, mf.decl.ibp, probeIds)
+    have => read(have.roots(path, "ids"))
   }
 
   /** The manifest-visible aggregated count tables, ready for
     * [[TextAnalysis.stupidBackoffFrom]].
     */
   def counts(spark: SparkSession, path: String): LmCounts = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
+    val mf = live(path)
     val Seq(u, b, t) = tables.map { case (sub, key, cnt) =>
       readAgg(spark, path, mf, sub, key, cnt) }
     LmCounts(u, b, t)
@@ -261,11 +204,10 @@ object LmIndex {
     */
   def score(spark: SparkSession, path: String, docs: DataFrame,
       idCol: String, textCol: String, alpha: Double = 0.4): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
+    val mf = live(path)
     TextAnalysis.stupidBackoffFrom(counts(spark, path), docs, idCol,
       textCol, alpha,
-      totalTokens = if (mf.gbParts == 0) None else Some(mf.st))
+      totalTokens = if (mf.decl.gbParts == 0) None else Some(mf.acc))
   }
 
   /** [[score]]'s SMALL-BATCH serving shape: each count-table read is
@@ -279,9 +221,8 @@ object LmIndex {
     */
   def scoreBatch(spark: SparkSession, path: String, docs: DataFrame,
       idCol: String, textCol: String, alpha: Double = 0.4): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (mf.gbParts == 0)
+    val mf = live(path)
+    if (mf.decl.gbParts == 0)
       return score(spark, path, docs, idCol, textCol, alpha)
     val (u, b, t) = TextAnalysis.lmGramStreams(docs, textCol)
     def buckets(stream: DataFrame, key: String): Seq[Int] =
@@ -295,7 +236,7 @@ object LmIndex {
       readAgg(spark, path, mf, "tri", "__t3", "__ct",
         Some(buckets(t, "__t3"))))
     TextAnalysis.stupidBackoffFrom(pruned, docs, idCol, textCol,
-      alpha, totalTokens = Some(mf.st))
+      alpha, totalTokens = Some(mf.acc))
   }
 
   /** Build the artifact at `path` unless the manifest fingerprint
@@ -305,82 +246,29 @@ object LmIndex {
   def buildIfAbsent(train: DataFrame, textCol: String, idCol: String,
       path: String, gbParts: Int = 16, ibParts: Int = 16): Build = {
     val (fp, n) = fingerprint(train, idCol, textCol)
-    val want = Manifest(fp, n, idCol, textCol, gbParts = gbParts,
-      ibp = ibParts)
-    readManifest(path) match {
-      case Some(have) if have.sameIndexAs(want) =>
-        Build(path, fp, n, reused = true)
-      case _ =>
-        IndexDirs.uncommit(path)
-        val st = writeTables(train, textCol, idCol, 1, want, path)
-        writeManifest(path, want.copy(st = st))
-        Build(path, fp, n, reused = false)
-    }
+    val want = Artifact.Manifest(
+      LmLayout(idCol, textCol, LayoutVersion, gbParts, ibParts), fp, n)
+    buildOr(path, want)(stage(train, 1, want, path, path))
   }
 
-  /** Extend the LM with NEW documents: only the delta pays the count
-    * pass; its counts stage in `deltas/d<N>` (manifest-gated), and
-    * the fingerprint composes in O(delta). `checkDisjoint` (default
-    * on) verifies no delta id is already live — double-counting a
-    * doc corrupts both the counts and the fingerprint.
+  /** `checkDisjoint` (default on) verifies no delta id is already
+    * live — double-counting a doc corrupts both the counts and the
+    * fingerprint. Verified against the manifest an attempt anchors at
+    * (a concurrent overlapping append must flip it to refuse on retry).
     */
-  def append(delta: DataFrame, path: String,
-      checkDisjoint: Boolean = true): Build =
-    appendImpl(delta, path, checkDisjoint, None)
-
-  private def appendImpl(delta: DataFrame, path: String,
-      checkDisjoint: Boolean, batchMark: Option[Long]): Build = {
-    val spark = delta.sparkSession
-    // layout/columns are immutable across appends (only a rebuild
-    // changes them, and a rebuild uncommits), so staging off this
-    // read is race-free; counters, delta list, and the disjointness
-    // guard re-derive per commit attempt (multi-writer liveness —
-    // the [[AggView]]/[[IndexDirs.commitWithRetry]] recipe)
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (batchMark.exists(_ <= decl.lastBatch))
-      return Build(path, decl.fp, decl.n, reused = true)
-    val (dfp, dn) = fingerprint(delta, decl.id, decl.text)
-    if (dn == 0) return Build(path, decl.fp, decl.n, reused = true)
-    val probeIds = delta.select(col(decl.id)).distinct()
+  override protected def insertGuard(delta: DataFrame, decl: Mf,
+      dn: Long, path: String): Guard = {
+    val probeIds = delta.select(col(decl.decl.id)).distinct()
       .localCheckpoint(false)
-    // disjointness guard, verified against the manifest an attempt
-    // anchors at (a concurrent overlapping append must flip this to
-    // refuse on retry)
-    def disjointOk(have: Manifest): Unit = if (checkDisjoint) {
-      val dupes = liveIdsPruned(spark, path, have, probeIds)
-        .join(broadcast(probeIds), Seq(have.id), "left_semi")
+    val ledger = ledgerOf(delta.sparkSession, path, decl, probeIds)
+    have => {
+      val dupes = ledger(have)
+        .join(broadcast(probeIds), Seq(have.decl.id), "left_semi")
         .count()
       require(dupes == 0,
         s"append delta shares $dupes live id(s) with the LM at " +
           s"$path — re-training a doc double-counts its grams " +
           "(pass checkDisjoint = false only when upstream proves it)")
-    }
-    val staged = IndexDirs.nextDeltaName(path, "d")
-    // guard ∥ staging (guide §2.6); re-verified in the loop only when
-    // another writer moved the manifest
-    @volatile var dst = 0L
-    try Par.inParallel(Seq(
-      () => disjointOk(decl),
-      () => dst = writeTables(delta, decl.text, decl.id, 1, decl,
-        s"$path/deltas/$staged")))
-    catch { case e: Throwable =>
-      IndexDirs.gcDeltas(path, Seq(staged)); throw e
-    }
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      if (batchMark.exists(_ <= have.lastBatch)) None
-      else {
-        if (have.mv != decl.mv) disjointOk(have)
-        Some(have.copy(fp = have.fp ^ dfp, n = have.n + dn,
-          st = have.st + dst, deltas = have.deltas :+ staged,
-          lastBatch = batchMark.getOrElse(have.lastBatch)))
-      }
-    } match {
-      case Some(next) => Build(path, next.fp, next.n, reused = false)
-      case None => // a racing replay landed this batch id first
-        val now = readManifest(path).getOrElse(decl)
-        Build(path, now.fp, now.n, reused = true)
     }
   }
 
@@ -390,248 +278,82 @@ object LmIndex {
     * `× -1`, reads sum to zero and drop the grams, and the
     * fingerprint folds the rows back out (xor self-inverse). After a
     * [[compactDeltas]], the artifact is bit-for-bit the one trained
-    * without those docs. `checkPresent` verifies liveness against
-    * the doc ledger.
+    * without those docs. `checkPresent` verifies liveness AND content
+    * against the doc ledger.
     */
   def delete(delta: DataFrame, path: String,
-      checkPresent: Boolean = true): Build = {
-    val spark = delta.sparkSession
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    val (dfp, dn) = fingerprint(delta, decl.id, decl.text)
-    if (dn == 0) return Build(path, decl.fp, decl.n, reused = true)
-    val probe = delta.select(col(decl.id),
-        xxhash64(col(decl.id), col(decl.text)).as("__pch"))
-      .distinct().localCheckpoint(false)
-    if (checkPresent) require(probe.count() == dn,
-      s"delete delta has duplicate ${decl.id} rows")
-    // liveness + content verified per commit attempt against the
-    // manifest the attempt anchors at (a concurrent delete of the
-    // same ids must flip this from pass to refuse on retry)
-    def presentOk(have: Manifest): Unit = if (checkPresent) {
-      val r = liveIdsPruned(spark, path, have, probe)
-        .join(broadcast(probe), Seq(have.id))
-        .agg(count(lit(1)).as("live"),
-          coalesce(sum(when(col("__ch") === col("__pch"), 1L)
-            .otherwise(0L)), lit(0L)).as("same"))
-        .collect()(0)
-      require(r.getLong(0) == dn,
-        s"delete delta names ${dn - r.getLong(0)} id(s) not live in " +
-          s"the LM at $path (pass checkPresent = false only when " +
-          "upstream proves liveness)")
-      require(r.getLong(1) == dn,
-        s"delete delta text differs from the trained text for " +
-          s"${dn - r.getLong(1)} id(s) at $path — negated counts " +
-          "computed from stale text would never cancel the stored grams")
+      checkPresent: Boolean = true): Build =
+    remove(delta, path) { (decl, dn) =>
+      val LmLayout(id, text, _, _, _) = decl.decl
+      val probe = delta.select(col(id),
+          xxhash64(col(id), col(text)).as("__pch"))
+        .distinct().localCheckpoint(false)
+      if (checkPresent) require(probe.count() == dn,
+        s"delete delta has duplicate $id rows")
+      val ledger = ledgerOf(delta.sparkSession, path, decl, probe)
+      have => if (checkPresent) {
+        val (nLive, same) = IdLedger.presence(ledger(have), id, probe)
+        require(nLive == dn,
+          s"delete delta names ${dn - nLive} id(s) not live in " +
+            s"the LM at $path (pass checkPresent = false only when " +
+            "upstream proves liveness)")
+        require(same == dn,
+          s"delete delta text differs from the trained text for " +
+            s"${dn - same} id(s) at $path — negated counts " +
+            "computed from stale text would never cancel the stored grams")
+      }
     }
-    val staged = IndexDirs.nextDeltaName(path, "d")
-    // guard ∥ staging (guide §2.6): both depend only on the anchor
-    // manifest; a guard failure interrupts the sibling staging and
-    // GCs its dir, and the commit loop re-verifies only when another
-    // writer moved the manifest — the no-race case pays the guard
-    // once, off the critical path
-    @volatile var dst = 0L
-    try Par.inParallel(Seq(
-      () => presentOk(decl),
-      () => dst = writeTables(delta, decl.text, decl.id, -1, decl,
-        s"$path/deltas/$staged")))
-    catch { case e: Throwable =>
-      IndexDirs.gcDeltas(path, Seq(staged)); throw e
-    }
-    val next = IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      if (have.mv != decl.mv) presentOk(have)
-      Some(have.copy(fp = have.fp ^ dfp, n = have.n - dn,
-        st = have.st + dst, deltas = have.deltas :+ staged))
-    }.get
-    Build(path, next.fp, next.n, reused = false)
-  }
-
-  /** Exactly-once streaming LM maintenance — the [[AnnIndex]]
-    * idempotent-sink recipe (`batchId <= lastBatch` ⇒ skip).
-    */
-  def appendBatch(batch: DataFrame, batchId: Long, path: String,
-      checkDisjoint: Boolean = false): Build =
-    appendImpl(batch, path, checkDisjoint, Some(batchId))
-
-  def foreachBatchSink(path: String, checkDisjoint: Boolean = false)
-      : (DataFrame, Long) => Unit =
-    (df, id) => { appendBatch(df, id, path, checkDisjoint); () }
-
-  /** Exactly-once OP-AWARE streaming maintenance: one CDC micro-batch
-    * of full `(id, text, op)` rows stages its deletes as NEGATED
-    * count tables and its inserts as positive ones, then commits BOTH
-    * in ONE manifest write with the batch watermark — an
-    * at-least-once replay (`batchId <= lastBatch`) skips the whole
-    * batch, and a crash between stagings leaves only orphans. The
-    * count algebra makes a same-batch delete + insert of one id a
-    * legal UPDATE (old counts cancel, new counts stand); delete rows
-    * must be the exact trained rows and live — the streaming feed
-    * proves this upstream (the guarded batch path is [[delete]]).
-    */
-  def applyBatch(batch: DataFrame, batchId: Long, path: String,
-      opCol: String = "op", deleteOp: String = "D"): Build = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (batchId <= decl.lastBatch)
-      return Build(path, decl.fp, decl.n, reused = true)
-    val rows = batch.localCheckpoint(false)
-    val ins = rows.filter(col(opCol) =!= deleteOp).drop(opCol)
-    val del = rows.filter(col(opCol) === deleteOp).drop(opCol)
-    val (ifp, inN) = fingerprint(ins, decl.id, decl.text)
-    val (dfp, delN) = fingerprint(del, decl.id, decl.text)
-    if (inN == 0 && delN == 0)
-      return Build(path, decl.fp, decl.n, reused = true)
-    var stagedDirs = Seq.empty[String]
-    var dst = 0L
-    if (delN > 0) {
-      val staged = IndexDirs.nextDeltaName(path, "d")
-      dst += writeTables(del, decl.text, decl.id, -1, decl,
-        s"$path/deltas/$staged")
-      stagedDirs :+= staged
-    }
-    if (inN > 0) {
-      val staged = IndexDirs.nextDeltaName(path, "d")
-      dst += writeTables(ins, decl.text, decl.id, 1, decl,
-        s"$path/deltas/$staged")
-      stagedDirs :+= staged
-    }
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, stagedDirs) { have =>
-      if (batchId <= have.lastBatch) None // a racing replay landed it
-      else Some(have.copy(fp = have.fp ^ ifp ^ dfp,
-        n = have.n + inN - delN, st = have.st + dst,
-        deltas = have.deltas ++ stagedDirs, lastBatch = batchId))
-    } match {
-      case Some(next) => Build(path, next.fp, next.n, reused = false)
-      case None =>
-        val now = readManifest(path).getOrElse(decl)
-        Build(path, now.fp, now.n, reused = true)
-    }
-  }
-
-  /** `writeStream.foreachBatch(LmIndex.cdcSink(path))`. */
-  def cdcSink(path: String, opCol: String = "op",
-      deleteOp: String = "D"): (DataFrame, Long) => Unit =
-    (df, id) => { applyBatch(df, id, path, opCol, deleteOp); () }
 
   /** Fold the DELTA stream into one directory, O(total delta size):
     * per-gram sums across the delta dirs only, nonzero rows kept —
     * including NEGATIVE ones, which must survive to keep cancelling
     * base counts (a delete of a base-trained doc lives in the deltas
-    * as negated counts until a [[purge]]). Bounds per-score listing
-    * and footer costs after long append/delete streams without
-    * touching the base. Crash-safe by the staging discipline.
+    * as negated counts until a [[purge]]).
     */
-  def compactDeltas(spark: SparkSession, path: String): Int = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (decl.deltas.length < 2) return 0
-    val folded = decl.deltas
-    val staged = IndexDirs.nextDeltaName(path, "c")
-    // the four table folds are independent — run them CONCURRENTLY
-    // (guide §2.6)
+  override protected def fold(spark: SparkSession, path: String, mf: Mf,
+      folded: Seq[String], root: String): Unit = {
     val gramFolds = tables.map { case (sub, key, cnt) => () =>
       folded.map(d => spark.read.parquet(s"$path/deltas/$d/$sub"))
         .reduce(_.unionByName(_))
         .groupBy(key).agg(sum(col(cnt)).as(cnt))
         .filter(col(cnt) =!= 0)
-        .withColumn("gb", gbCol(col(key), decl))
+        .withColumn("gb", gbCol(col(key), mf))
         .repartition(col("gb"))
-        .write.mode("overwrite").partitionBy("gb")
-        .parquet(s"$path/deltas/$staged/$sub")
+        .write.mode("overwrite").partitionBy("gb").parquet(s"$root/$sub")
     }
     // the ids ledger cancels per (id, contentHash) pair
-    val idsFold = () =>
-      folded.map(d => spark.read.parquet(s"$path/deltas/$d/ids")
-          .select(col(decl.id), col("__ch"), col("__lw")))
-        .reduce(_.unionByName(_))
-        .groupBy(decl.id, "__ch").agg(sum(col("__lw")).as("__lw"))
-        .filter(col("__lw") =!= 0)
-        .withColumn("ib", ibCol(col(decl.id), decl))
-        .repartition(col("ib"))
-        .write.mode("overwrite").partitionBy("ib")
-        .parquet(s"$path/deltas/$staged/ids")
+    val idsFold = () => IdLedger.write(
+      IdLedger.fold(spark, folded.map(d => s"$path/deltas/$d/ids"),
+        mf.decl.id), mf.decl.id, mf.decl.ibp, s"$root/ids")
     Par.inParallel(gramFolds :+ idsFold)
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      // deltas that landed after our fold survive (count algebra is
-      // order-free); a racing purge/compaction that already folded
-      // any of ours makes this fold stale — drop it, theirs covered it
-      if (!folded.forall(have.deltas.contains)) None
-      else Some(have.copy(
-        deltas = staged +: have.deltas.filterNot(folded.toSet)))
-    } match {
-      case Some(_) => IndexDirs.gcDeltas(path, folded); folded.length
-      case None => 0
-    }
   }
 
-  /** Full SEMANTIC rewrite: materialize the aggregated live counts
-    * into fresh `.v<N>` base dirs and commit with no deltas — after
-    * this, deleted docs leave no trace (their grams are gone, not
-    * cancelled). O(live counts); downtime-free (old manifest live
-    * until the atomic swap). Returns the live doc count.
-    */
-  def purge(spark: SparkSession, path: String): Long =
-    purgeImpl(spark, path, () => ())
+  override protected def baseSubs(mf: Mf) = "ids" +: tables.map(_._1)
 
-  /** [[purge]] with a test seam invoked between the survivors rewrite
-    * and the manifest commit — deterministic interleaving specs only.
+  /** [[purge]]'s rewrite: the aggregated live counts into fresh
+    * `.v<N>` base dirs — deleted docs leave no trace (their grams are
+    * gone, not cancelled). Returns the live doc count.
     */
-  private[operators] def purgeImpl(spark: SparkSession, path: String,
-      beforeCommit: () => Unit): Long = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (decl.deltas.isEmpty) return decl.n
-    // CLAIMED target version: two racing purges write disjoint .v<k>
-    // dirs ([[IndexDirs.claimBaseSuffix]])
-    val nextVer = IndexDirs.claimBaseSuffix(path, "base.v",
-      decl.baseVer + 1)
+  override protected def rewrite(spark: SparkSession, path: String,
+      mf: Mf, ver: Int): Long = {
     // eager checkpoint, then the four survivor rewrites run
     // CONCURRENTLY (guide §2.6) — independent reads of committed data
-    val live = liveIds(spark, path, decl).localCheckpoint()
+    val kept = IdLedger.live(spark, mf.roots(path, "ids"), mf.decl.id)
+      .localCheckpoint()
     Par.inParallel(tables.map { case (sub, key, cnt) => () =>
-      readAgg(spark, path, decl, sub, key, cnt)
-        .withColumn("gb", gbCol(col(key), decl))
+      readAgg(spark, path, mf, sub, key, cnt)
+        .withColumn("gb", gbCol(col(key), mf))
         .repartition(col("gb"))
         .write.mode("overwrite").partitionBy("gb")
-        .parquet(s"$path/$sub.v$nextVer")
+        .parquet(s"$path/$sub.v$ver")
     } :+ { () =>
-      live.withColumn("__lw", lit(1))
-        .withColumn("ib", ibCol(col(decl.id), decl))
-        .repartition(col("ib"))
-        .write.mode("overwrite").partitionBy("ib")
-        .parquet(s"$path/ids.v$nextVer")
+      IdLedger.write(kept.withColumn("__lw", lit(1)), mf.decl.id,
+        mf.decl.ibp, s"$path/ids.v$ver")
     })
-    beforeCommit()
-    try IndexDirs.commitWithRetry(readManifest(path),
-      writeManifest(path, _: Manifest), path) { have =>
-      require(have.baseVer == decl.baseVer,
-        s"a concurrent purge of $path committed base version " +
-          s"${have.baseVer} while this one rewrote from " +
-          s"${decl.baseVer} — rerun against the new base")
-      // a compaction committed mid-purge folds (some of) our snapshot
-      // deltas into a c<N> dir the filterNot below would keep while
-      // the new base already absorbed those rows — refuse instead of
-      // double-counting (mirrors compactDeltas' stale-fold skip)
-      require(decl.deltas.forall(have.deltas.contains),
-        s"a concurrent compaction of $path folded deltas this purge's " +
-          "rewrite already absorbed — committing would double-count " +
-          "them; rerun against the compacted state")
-      // appends that landed after our rewrite stay as deltas
-      Some(have.copy(deltas = have.deltas.filterNot(decl.deltas.toSet),
-        baseVer = nextVer))
-    } catch {
-      case e: IllegalArgumentException =>
-        ("ids" +: tables.map(_._1)).foreach(sub =>
-          IndexDirs.rmTree(s"$path/$sub.v$nextVer")) // orphaned rewrite
-        throw e
-    }
-    IndexDirs.gcDeltas(path, decl.deltas)
-    ("ids" +: tables.map(_._1)).foreach { sub =>
-      IndexDirs.rmTree(s"$path/${decl.baseOf(sub)}")
-    }
-    live.count()
+    kept.count()
   }
 }
+
+/** [[LmIndex]]'s declaration: columns, layout version, bucketing. */
+private[operators] final case class LmLayout(id: String, text: String,
+    lv: Int, gbParts: Int, ibp: Int)

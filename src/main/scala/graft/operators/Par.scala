@@ -1,8 +1,9 @@
 package graft.operators
 
-import java.util.concurrent.{Callable, Executors, TimeUnit}
+import java.util.UUID
+import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Two build-path throughput helpers shared by the artifact builders
   * (optimization guide §2.5 "input skew … repartition immediately
@@ -93,35 +94,49 @@ object Par {
     * collects) CONCURRENTLY and wait for all. Spark's scheduler runs
     * jobs from several driver threads side by side (guide §2.6), so
     * k independent metadata-scale writes cost max() instead of sum()
-    * of their job+round-trip times. Fails fast: the first failure is
-    * rethrown (after all tasks settle) with its original type, so
-    * callers' error contracts are unchanged. Daemon threads; pool is
-    * per-call (builds run a handful of tasks, pool reuse would buy
-    * nothing).
+    * of their job+round-trip times. Daemon threads; pool is per-call
+    * (builds run a handful of tasks, pool reuse would buy nothing).
+    *
+    * FAIL-FAST: results are awaited in COMPLETION order, so the first
+    * failure is seen the moment it happens, not after the tasks
+    * submitted before it finish. It then cancels every Spark job the
+    * siblings started — each call tags its tasks' jobs with one
+    * per-call job tag, because interrupting a driver thread does not
+    * stop the job it is blocked on — gives the siblings a moment to
+    * unwind from the cancellation, interrupts any still running
+    * (driver-side work), waits for them, and rethrows the original
+    * failure with its own type, so callers' error contracts are
+    * unchanged. Every caller's writes target pre-commit staging paths,
+    * so a cancelled sibling leaves garbage the caller GCs, never
+    * corruption.
     */
   def inParallel(tasks: Seq[() => Unit]): Unit = {
     if (tasks.isEmpty) return
     if (tasks.size == 1) { tasks.head(); return }
+    val sc = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val tag = s"graft-par-${UUID.randomUUID()}"
     val pool = Executors.newFixedThreadPool(tasks.size,
       r => { val t = new Thread(r, "graft-build-par"); t.setDaemon(true); t })
+    val done = new ExecutorCompletionService[Unit](pool)
     try {
-      val futures = tasks.map(t => pool.submit(new Callable[Unit] {
-        override def call(): Unit = t()
+      tasks.foreach(t => done.submit(new Callable[Unit] {
+        override def call(): Unit = {
+          sc.foreach(_.addJobTag(tag))
+          try t() finally sc.foreach(_.removeJobTag(tag))
+        }
       }))
-      var failure: Option[Throwable] = None
-      futures.foreach { f =>
-        try f.get()
+      tasks.foreach { _ =>
+        try done.take().get()
         catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (failure.isEmpty) failure = Some(e.getCause)
+          case e: ExecutionException =>
+            sc.foreach(_.cancelJobsWithTag(tag))
+            pool.shutdown()
+            if (!pool.awaitTermination(2, TimeUnit.SECONDS)) pool.shutdownNow()
+            pool.awaitTermination(1, TimeUnit.MINUTES)
+            throw e.getCause
         }
       }
-      // a failed build must stop its sibling writes, not leave them
-      // burning the cluster while the caller unwinds — interrupt
-      // anything still running (every write targets a pre-commit
-      // staging path, so an interrupted sibling leaves garbage, never
-      // corruption, under the staged-commit protocol)
-      failure.foreach { e => pool.shutdownNow(); throw e }
     } finally {
       pool.shutdown()
       pool.awaitTermination(1, TimeUnit.MINUTES)

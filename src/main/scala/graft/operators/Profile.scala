@@ -22,7 +22,7 @@ import graft.functions.StrExtremaAgg.{str_max, str_min}
   * (|cols| × (1 + 129 + 64) + bloom words) rows — and the six output
   * tables are cheap re-aggregations of that small set (checkpointed
   * once; checkpointing the AGGREGATE is metadata-scale, unlike the
-  * exploded stream [[ColStats.writeTables]] rightly refuses to
+  * exploded stream [[ColStats]]'s staging writer rightly refuses to
   * persist).
   *
   * EXACTNESS: every per-grain expression is the shared definition the

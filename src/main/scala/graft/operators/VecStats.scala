@@ -46,50 +46,24 @@ import org.apache.spark.sql.functions._
   * request (directory/directory.go:230-240), applied to monitoring
   * state.
   */
-object VecStats {
-
-  type Build = IndexBuild
-  val Build = IndexBuild
+object VecStats extends SignedArtifact[VecLayout] {
 
   def fingerprint(corpus: DataFrame, idCol: String,
       vecCol: String): (Long, Long) =
     IndexDirs.contentFingerprint(corpus, Seq(idCol, vecCol))
 
-  private case class Manifest(fp: Long, n: Long, id: String,
-      vec: String, ibp: Int = 0, deltas: Seq[String] = Nil,
-      lastBatch: Long = -1L, baseVer: Int = 0, mv: Long = 0L) {
-    /** ibp IS layout — a different ids bucketing must rebuild. */
-    def sameIndexAs(other: Manifest): Boolean =
-      copy(deltas = Nil, lastBatch = -1L, baseVer = 0, mv = 0L) ==
-        other.copy(deltas = Nil, lastBatch = -1L, baseVer = 0, mv = 0L)
-    def baseOf(sub: String): String =
-      if (baseVer == 0) sub else s"$sub.v$baseVer"
-  }
+  // ibp IS layout — a different ids bucketing must rebuild; a
+  // pre-bucketing manifest reads ibp=0, which can never match a
+  // requested layout — it rebuilds once, safely
+  override protected def readDecl(r: IndexDirs.ManifestReader) =
+    VecLayout(r.str("id"), r.str("vec"), r.intOr("ibp", 0))
 
-  private def toManifest(r: IndexDirs.ManifestReader): Manifest =
-    Manifest(r.long("fp"), r.long("n"), r.str("id"), r.str("vec"),
-      // a pre-bucketing manifest reads ibp=0, which can never match
-      // a requested layout — it rebuilds once, safely
-      r.intOr("ibp", 0),
-      r.seq("deltas"), r.longOr("lb", -1L), r.intOr("bv", 0),
-      mv = r.version)
+  override protected def writeDecl(w: IndexDirs.ManifestWriter,
+      d: VecLayout) =
+    w.put("id", d.id).put("vec", d.vec).put("ibp", d.ibp)
 
-  private def readManifest(path: String): Option[Manifest] =
-    IndexDirs.readManifest(path).map(toManifest)
-
-  private def writeManifest(path: String, mf: Manifest): Unit =
-    IndexDirs.manifest()
-      .put("fp", mf.fp).put("n", mf.n)
-      .put("id", mf.id).put("vec", mf.vec)
-      .put("ibp", mf.ibp)
-      .put("lb", mf.lastBatch).put("bv", mf.baseVer)
-      .put("deltas", mf.deltas)
-      .commit(path, mf.mv)
-
-  // max(,1): a legacy (ibp = 0) artifact's mutators bucket into one
-  // ib=0 partition instead of a null-partition write
-  private def ibCol(id: Column, mf: Manifest): Column =
-    pmod(xxhash64(id), lit(math.max(mf.ibp, 1))).cast("int")
+  override protected def fpOf(rows: DataFrame, d: VecLayout) =
+    fingerprint(rows, d.id, d.vec)
 
   /** The per-dim signed sums of `df` — one exploded pass, map-side
     * combined into ≤ dims rows.
@@ -102,53 +76,30 @@ object VecStats {
         (sum(col("__v")) * sign).as("__s"),
         (sum(col("__v") * col("__v")) * sign).as("__s2"))
 
-  private def writeTables(docs: DataFrame, vecCol: String,
-      idCol: String, sign: Int, mf: Manifest, root: String): Unit = {
+  override protected def stage(docs: DataFrame, sign: Int, mf: Mf,
+      path: String, root: String): Long = {
+    val VecLayout(idCol, vecCol, ibp) = mf.decl
     dimSums(docs, vecCol, sign).coalesce(1)
       .write.mode("overwrite").parquet(s"$root/stats")
-    // repartition on ib before the partitioned write: one file per
-    // bucket instead of (tasks × buckets) tiny files
-    docs.select(col(idCol),
+    IdLedger.write(docs.select(col(idCol),
         xxhash64(col(idCol), col(vecCol)).as("__ch"),
-        lit(sign).as("__lw"))
-      .withColumn("ib", ibCol(col(idCol), mf))
-      .repartition(col("ib"))
-      .write.mode("overwrite").partitionBy("ib").parquet(s"$root/ids")
+        lit(sign).as("__lw")), idCol, ibp, s"$root/ids")
+    0L
   }
+
+  /** Per-dim sums of `roots`, summed per dim. */
+  private def sums(spark: SparkSession, roots: Seq[String]): DataFrame =
+    roots.map(spark.read.parquet(_)).reduce(_.unionByName(_))
+      .groupBy("dim")
+      .agg(sum(col("__c")).as("__c"), sum(col("__s")).as("__s"),
+        sum(col("__s2")).as("__s2"))
 
   /** Live aggregated per-dim sums: base ∪ committed deltas, summed
     * per dim, zero-count dims dropped.
     */
   private def liveStats(spark: SparkSession, path: String,
-      mf: Manifest): DataFrame = {
-    val roots = s"$path/${mf.baseOf("stats")}" +:
-      mf.deltas.map(d => s"$path/deltas/$d/stats")
-    roots.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-      .groupBy("dim")
-      .agg(sum(col("__c")).as("__c"), sum(col("__s")).as("__s"),
-        sum(col("__s2")).as("__s2"))
-      .filter(col("__c") > 0)
-  }
-
-  /** Live `(id, __ch)` ledger rows, each root PRUNED to `parts` ib
-    * partitions when given (legacy unbucketed roots read whole —
-    * correct, just unpruned).
-    */
-  private def liveIds(spark: SparkSession, path: String, mf: Manifest,
-      parts: Option[Seq[Int]] = None): DataFrame = {
-    val roots = s"$path/${mf.baseOf("ids")}" +:
-      mf.deltas.map(d => s"$path/deltas/$d/ids")
-    roots.map { r =>
-        val df = spark.read.parquet(r)
-        val pruned =
-          if (parts.isDefined && df.columns.contains("ib"))
-            df.filter(col("ib").isin(parts.get.map(Int.box): _*))
-          else df
-        pruned.select(col(mf.id), col("__ch"), col("__lw"))
-      }.reduce(_.unionByName(_))
-      .groupBy(mf.id, "__ch").agg(sum(col("__lw")).as("__lw"))
-      .filter(col("__lw") > 0).select(col(mf.id), col("__ch"))
-  }
+      mf: Mf): DataFrame =
+    sums(spark, mf.roots(path, "stats")).filter(col("__c") > 0)
 
   /** The ledger read every append/delete guard runs: pruned to the
     * probe ids' own ib buckets (O(delta buckets), never the whole
@@ -158,83 +109,46 @@ object VecStats {
     */
   private[operators] def liveIdsForProbe(spark: SparkSession,
       path: String, probeIds: DataFrame): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    liveIdsPruned(spark, path, mf, probeIds)
+    val mf = live(path)
+    ledgerOf(spark, path, mf, probeIds)(mf)
   }
 
-  private def liveIdsPruned(spark: SparkSession, path: String,
-      mf: Manifest, probeIds: DataFrame): DataFrame = {
-    val parts =
-      if (mf.ibp == 0) None
-      else Some(probeIds.select(ibCol(col(mf.id), mf).as("ib"))
-        .distinct().collect().map(_.getInt(0)).toSeq)
-    liveIds(spark, path, mf, parts)
+  private def ledgerOf(spark: SparkSession, path: String,
+      mf: Mf, probeIds: DataFrame): Mf => DataFrame = {
+    val read = IdLedger.liveFor(spark, mf.decl.id, mf.decl.ibp, probeIds)
+    have => read(have.roots(path, "ids"))
   }
 
   def buildIfAbsent(corpus: DataFrame, vecCol: String, idCol: String,
       path: String, ibParts: Int = 32): Build = {
     val (fp, n) = fingerprint(corpus, idCol, vecCol)
-    val want = Manifest(fp, n, idCol, vecCol, ibp = ibParts)
-    readManifest(path) match {
-      case Some(have) if have.sameIndexAs(want) =>
-        Build(path, fp, n, reused = true)
-      case _ =>
-        IndexDirs.uncommit(path)
-        writeTables(corpus, vecCol, idCol, 1, want, path)
-        writeManifest(path, want)
-        Build(path, fp, n, reused = false)
+    val want = Artifact.Manifest(VecLayout(idCol, vecCol, ibParts), fp, n)
+    buildOr(path, want)(stage(corpus, 1, want, path, path))
+  }
+
+  override protected def insertGuard(delta: DataFrame, decl: Mf,
+      dn: Long, path: String): Guard = {
+    val probeIds = delta.select(col(decl.decl.id)).distinct()
+      .localCheckpoint(false)
+    val ledger = ledgerOf(delta.sparkSession, path, decl, probeIds)
+    have => {
+      val dupes = ledger(have)
+        .select(col(have.decl.id))
+        .join(broadcast(probeIds), Seq(have.decl.id), "left_semi").count()
+      require(dupes == 0,
+        s"append delta shares $dupes live id(s) with the stats " +
+          s"at $path — double-counted sums (pass checkDisjoint " +
+          "= false only when upstream proves disjointness)")
     }
   }
 
   def append(delta: DataFrame, path: String,
-      checkDisjoint: Boolean = true): Build =
-    appendImpl(delta, path, checkDisjoint, None)
+      checkDisjoint: Boolean): Build =
+    insert(delta, path, checkDisjoint, None)
 
-  private def appendImpl(delta: DataFrame, path: String,
-      checkDisjoint: Boolean, batchMark: Option[Long]): Build = {
-    val spark = delta.sparkSession
-    // id/vec columns are immutable across appends (only a rebuild
-    // changes them, and a rebuild uncommits), so staging off this
-    // read is race-free; counters, delta list, and the disjointness
-    // guard re-derive per commit attempt (multi-writer liveness —
-    // the [[AggView]]/[[IndexDirs.commitWithRetry]] recipe)
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (batchMark.exists(_ <= decl.lastBatch))
-      return Build(path, decl.fp, decl.n, reused = true)
-    val (dfp, dn) = fingerprint(delta, decl.id, decl.vec)
-    if (dn == 0) return Build(path, decl.fp, decl.n, reused = true)
-    val probeIds = delta.select(col(decl.id)).distinct()
-      .localCheckpoint(false)
-    val staged = IndexDirs.nextDeltaName(path, "d")
-    writeTables(delta, decl.vec, decl.id, 1, decl,
-      s"$path/deltas/$staged")
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      if (batchMark.exists(_ <= have.lastBatch)) None
-      else {
-        if (checkDisjoint) { // re-checked per attempt: a concurrent
-          val dupes = liveIdsPruned(spark, path, have, probeIds)
-            .select(col(have.id))                // overlapping append
-            .join(broadcast(probeIds), Seq(have.id), "left_semi")
-            .count()                             // must flip to refuse
-          require(dupes == 0,
-            s"append delta shares $dupes live id(s) with the stats " +
-              s"at $path — double-counted sums (pass checkDisjoint " +
-              "= false only when upstream proves disjointness)")
-        }
-        Some(have.copy(fp = have.fp ^ dfp, n = have.n + dn,
-          deltas = have.deltas :+ staged,
-          lastBatch = batchMark.getOrElse(have.lastBatch)))
-      }
-    } match {
-      case Some(next) => Build(path, next.fp, next.n, reused = false)
-      case None => // a racing replay landed this batch id first
-        val now = readManifest(path).getOrElse(decl)
-        Build(path, now.fp, now.n, reused = true)
-    }
-  }
+  def appendBatch(batch: DataFrame, batchId: Long, path: String,
+      checkDisjoint: Boolean): Build =
+    insert(batch, path, checkDisjoint, Some(batchId))
 
   /** Delete = append of negated sums; `checkPresent` verifies both
     * liveness AND content against the ledger's per-id hash (the
@@ -242,189 +156,52 @@ object VecStats {
     * cancel).
     */
   def delete(delta: DataFrame, path: String,
-      checkPresent: Boolean = true): Build = {
-    val spark = delta.sparkSession
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    val (dfp, dn) = fingerprint(delta, decl.id, decl.vec)
-    if (dn == 0) return Build(path, decl.fp, decl.n, reused = true)
-    val probe = delta.select(col(decl.id),
-        xxhash64(col(decl.id), col(decl.vec)).as("__pch"))
-      .distinct().localCheckpoint(false)
-    if (checkPresent) require(probe.count() == dn,
-      s"delete delta has duplicate ${decl.id} rows")
-    // liveness + content verified per commit attempt against the
-    // manifest the attempt anchors at (a concurrent delete of the
-    // same ids must flip this from pass to refuse on retry)
-    def presentOk(have: Manifest): Unit = if (checkPresent) {
-      val r = liveIdsPruned(spark, path, have, probe)
-        .join(broadcast(probe), Seq(have.id))
-        .agg(count(lit(1)).as("live"),
-          coalesce(sum(when(col("__ch") === col("__pch"), 1L)
-            .otherwise(0L)), lit(0L)).as("same"))
-        .collect()(0)
-      require(r.getLong(0) == dn,
-        s"delete delta names ${dn - r.getLong(0)} id(s) not live in " +
-          s"the stats at $path")
-      require(r.getLong(1) == dn,
-        s"delete delta vectors differ from the indexed vectors for " +
-          s"${dn - r.getLong(1)} id(s) at $path — negated sums " +
-          "computed from stale vectors would never cancel")
+      checkPresent: Boolean = true): Build =
+    remove(delta, path) { (decl, dn) =>
+      val VecLayout(id, vec, _) = decl.decl
+      val probe = delta.select(col(id), xxhash64(col(id), col(vec)).as("__pch"))
+        .distinct().localCheckpoint(false)
+      if (checkPresent) require(probe.count() == dn,
+        s"delete delta has duplicate $id rows")
+      val ledger = ledgerOf(delta.sparkSession, path, decl, probe)
+      have => if (checkPresent) {
+        val (nLive, same) = IdLedger.presence(ledger(have), id, probe)
+        require(nLive == dn,
+          s"delete delta names ${dn - nLive} id(s) not live in " +
+            s"the stats at $path")
+        require(same == dn,
+          s"delete delta vectors differ from the indexed vectors for " +
+            s"${dn - same} id(s) at $path — negated sums " +
+            "computed from stale vectors would never cancel")
+      }
     }
-    val staged = IndexDirs.nextDeltaName(path, "d")
-    writeTables(delta, decl.vec, decl.id, -1, decl,
-      s"$path/deltas/$staged")
-    val next = IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      presentOk(have)
-      Some(have.copy(fp = have.fp ^ dfp, n = have.n - dn,
-        deltas = have.deltas :+ staged))
-    }.get
-    Build(path, next.fp, next.n, reused = false)
-  }
-
-  /** Exactly-once streaming maintenance (`batchId <= lastBatch` ⇒
-    * skip) and the op-aware mixed form — the [[LmIndex]] recipes.
-    */
-  def appendBatch(batch: DataFrame, batchId: Long, path: String,
-      checkDisjoint: Boolean = false): Build =
-    appendImpl(batch, path, checkDisjoint, Some(batchId))
-
-  def applyBatch(batch: DataFrame, batchId: Long, path: String,
-      opCol: String = "op", deleteOp: String = "D"): Build = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (batchId <= decl.lastBatch)
-      return Build(path, decl.fp, decl.n, reused = true)
-    val rows = batch.localCheckpoint(false)
-    val ins = rows.filter(col(opCol) =!= deleteOp).drop(opCol)
-    val del = rows.filter(col(opCol) === deleteOp).drop(opCol)
-    val (ifp, inN) = fingerprint(ins, decl.id, decl.vec)
-    val (dfp, delN) = fingerprint(del, decl.id, decl.vec)
-    if (inN == 0 && delN == 0)
-      return Build(path, decl.fp, decl.n, reused = true)
-    var stagedDirs = Seq.empty[String]
-    if (delN > 0) {
-      val staged = IndexDirs.nextDeltaName(path, "d")
-      writeTables(del, decl.vec, decl.id, -1, decl,
-        s"$path/deltas/$staged")
-      stagedDirs :+= staged
-    }
-    if (inN > 0) {
-      val staged = IndexDirs.nextDeltaName(path, "d")
-      writeTables(ins, decl.vec, decl.id, 1, decl,
-        s"$path/deltas/$staged")
-      stagedDirs :+= staged
-    }
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, stagedDirs) { have =>
-      if (batchId <= have.lastBatch) None // a racing replay landed it
-      else Some(have.copy(fp = have.fp ^ ifp ^ dfp,
-        n = have.n + inN - delN, deltas = have.deltas ++ stagedDirs,
-        lastBatch = batchId))
-    } match {
-      case Some(next) => Build(path, next.fp, next.n, reused = false)
-      case None =>
-        val now = readManifest(path).getOrElse(decl)
-        Build(path, now.fp, now.n, reused = true)
-    }
-  }
-
-  def cdcSink(path: String, opCol: String = "op",
-      deleteOp: String = "D"): (DataFrame, Long) => Unit =
-    (df, id) => { applyBatch(df, id, path, opCol, deleteOp); () }
 
   /** Fold the delta stream into one directory (negatives kept — they
     * must go on cancelling base rows until a [[purge]]).
     */
-  def compactDeltas(spark: SparkSession, path: String): Int = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (decl.deltas.length < 2) return 0
-    val folded = decl.deltas
-    val staged = IndexDirs.nextDeltaName(path, "c")
-    folded.map(d => spark.read.parquet(s"$path/deltas/$d/stats"))
-      .reduce(_.unionByName(_))
-      .groupBy("dim")
-      .agg(sum(col("__c")).as("__c"), sum(col("__s")).as("__s"),
-        sum(col("__s2")).as("__s2"))
+  override protected def fold(spark: SparkSession, path: String, mf: Mf,
+      folded: Seq[String], root: String): Unit = {
+    sums(spark, folded.map(d => s"$path/deltas/$d/stats"))
       .filter(col("__c") =!= 0 || col("__s") =!= 0 || col("__s2") =!= 0)
       .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/deltas/$staged/stats")
-    folded.map(d => spark.read.parquet(s"$path/deltas/$d/ids")
-        .select(col(decl.id), col("__ch"), col("__lw")))
-      .reduce(_.unionByName(_))
-      .groupBy(decl.id, "__ch").agg(sum(col("__lw")).as("__lw"))
-      .filter(col("__lw") =!= 0)
-      .withColumn("ib", ibCol(col(decl.id), decl))
-      .repartition(col("ib"))
-      .write.mode("overwrite").partitionBy("ib")
-      .parquet(s"$path/deltas/$staged/ids")
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      // deltas that landed after our fold survive (sum algebra is
-      // order-free); a racing purge/compact that folded ours first
-      // makes this fold stale — drop it
-      if (!folded.forall(have.deltas.contains)) None
-      else Some(have.copy(
-        deltas = staged +: have.deltas.filterNot(folded.toSet)))
-    } match {
-      case Some(_) => IndexDirs.gcDeltas(path, folded); folded.length
-      case None => 0
-    }
+      .write.mode("overwrite").parquet(s"$root/stats")
+    IdLedger.write(
+      IdLedger.fold(spark, folded.map(d => s"$path/deltas/$d/ids"),
+        mf.decl.id), mf.decl.id, mf.decl.ibp, s"$root/ids")
   }
 
-  /** Survivors-only semantic rewrite into versioned base dirs. */
-  def purge(spark: SparkSession, path: String): Long =
-    purgeImpl(spark, path, () => ())
+  override protected def baseSubs(mf: Mf) = Seq("stats", "ids")
 
-  /** [[purge]] with a test seam invoked between the survivors rewrite
-    * and the manifest commit — deterministic interleaving specs only.
-    */
-  private[operators] def purgeImpl(spark: SparkSession, path: String,
-      beforeCommit: () => Unit): Long = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    if (decl.deltas.isEmpty) return decl.n
-    // claimed target version: racing purges write disjoint dirs
-    val nextVer = IndexDirs.claimBaseSuffix(path, "base.v",
-      decl.baseVer + 1)
-    liveStats(spark, path, decl).coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/stats.v$nextVer")
-    val live = liveIds(spark, path, decl).localCheckpoint(false)
-    live.withColumn("__lw", lit(1))
-      .withColumn("ib", ibCol(col(decl.id), decl))
-      .repartition(col("ib"))
-      .write.mode("overwrite").partitionBy("ib")
-      .parquet(s"$path/ids.v$nextVer")
-    beforeCommit()
-    try IndexDirs.commitWithRetry(readManifest(path),
-      writeManifest(path, _: Manifest), path) { have =>
-      require(have.baseVer == decl.baseVer,
-        s"a concurrent purge of $path committed base version " +
-          s"${have.baseVer} while this one rewrote from " +
-          s"${decl.baseVer} — rerun against the new base")
-      // a compaction committed mid-purge folds (some of) our snapshot
-      // deltas into a c<N> dir the filterNot below would keep while
-      // the new base already absorbed those rows — refuse instead of
-      // double-counting (mirrors compactDeltas' stale-fold skip).
-      require(decl.deltas.forall(have.deltas.contains),
-        s"a concurrent compaction of $path folded deltas this purge's " +
-          "rewrite already absorbed — committing would double-count " +
-          "them; rerun against the compacted state")
-      Some(have.copy(deltas = have.deltas.filterNot(decl.deltas.toSet),
-        baseVer = nextVer))
-    } catch {
-      case e: IllegalArgumentException =>
-        Seq("stats", "ids").foreach(sub =>
-          IndexDirs.rmTree(s"$path/$sub.v$nextVer"))
-        throw e
-    }
-    IndexDirs.gcDeltas(path, decl.deltas)
-    Seq("stats", "ids").foreach { sub =>
-      IndexDirs.rmTree(s"$path/${decl.baseOf(sub)}")
-    }
-    live.count()
+  /** Survivors-only semantic rewrite into versioned base dirs. */
+  override protected def rewrite(spark: SparkSession, path: String,
+      mf: Mf, ver: Int): Long = {
+    liveStats(spark, path, mf).coalesce(1)
+      .write.mode("overwrite").parquet(s"$path/stats.v$ver")
+    val kept = IdLedger.live(spark, mf.roots(path, "ids"), mf.decl.id)
+      .localCheckpoint(false)
+    IdLedger.write(kept.withColumn("__lw", lit(1)), mf.decl.id,
+      mf.decl.ibp, s"$path/ids.v$ver")
+    kept.count()
   }
 
   private def meanCol(s: Column, c: Column): Column =
@@ -434,11 +211,8 @@ object VecStats {
     * corpus — exact integer sums divided once at the end, so the
     * values replay bit-for-bit in any engine.
     */
-  def summary(spark: SparkSession, path: String): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
-    statsSummary(liveStats(spark, path, mf))
-  }
+  def summary(spark: SparkSession, path: String): DataFrame =
+    statsSummary(liveStats(spark, path, live(path)))
 
   /** Committed manifest versions, ascending — the valid arguments to
     * [[summaryAsOf]].
@@ -455,19 +229,7 @@ object VecStats {
     */
   def summaryAsOf(spark: SparkSession, path: String,
       version: Long): DataFrame = {
-    val mf = IndexDirs.readManifestAt(path, version).map(toManifest)
-      .getOrElse(throw new IllegalStateException(
-        s"no manifest version $version at $path — retained: " +
-          versions(path).mkString("[", ", ", "]")))
-    val f = IndexDirs.fs(path)
-    val gone = (s"${mf.baseOf("stats")}" +:
-        mf.deltas.map(d => s"deltas/$d"))
-      .filterNot(sub => f.exists(new org.apache.hadoop.fs.Path(path, sub)))
-    require(gone.isEmpty,
-      s"manifest version $version of $path lists " +
-        gone.mkString("[", ", ", "]") + ", garbage-collected by a " +
-        "later compaction/purge — this version's time-travel window " +
-        "has closed")
+    val mf = retained(path, version, "stats")
     statsSummary(liveStats(spark, path, mf))
   }
 
@@ -490,8 +252,7 @@ object VecStats {
     */
   def drift(spark: SparkSession, path: String, batch: DataFrame,
       vecCol: String): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no index at $path"))
+    val mf = live(path)
     val corpus = liveStats(spark, path, mf)
       .select(col("dim"), col("__c"), col("__s"), col("__s2"))
     val b = dimSums(batch, vecCol, 1)
@@ -507,3 +268,7 @@ object VecStats {
           when(std > 0, std), 4).as("z"))
   }
 }
+
+/** [[VecStats]]' declaration: columns and ledger bucketing. */
+private[operators] final case class VecLayout(id: String, vec: String,
+    ibp: Int)

@@ -63,10 +63,7 @@ import graft.functions.StrExtremaAgg.{str_max, str_min}
   * pruning is never trusted as exact ([[graft.sources.ZoneMapSource]]
   * reports every filter unhandled for the same reason).
   */
-object ZoneMap {
-
-  type Build = IndexBuild
-  val Build = IndexBuild
+object ZoneMap extends Store[ZoneLayout] {
 
   /** On-disk format version. 2 added the per-file BLOOM table
     * (`bloom/` — packed 64-bit words of a per-(file, col) bloom
@@ -93,37 +90,29 @@ object ZoneMap {
     */
   private val Fmt = 4
 
-  private case class Manifest(fp: Long, n: Long, tableDir: String,
-      numCols: Seq[String], strCols: Seq[String],
-      bloomCols: Seq[String] = Nil, bloomBits: Int = 8192,
-      bloomK: Int = 3, deltas: Seq[String] = Nil, baseVer: Int = 0,
-      fmt: Int = Fmt, mv: Long = 0L) {
-    def sameIndexAs(other: Manifest): Boolean =
-      copy(deltas = Nil, baseVer = 0, mv = 0L) ==
-        other.copy(deltas = Nil, baseVer = 0, mv = 0L)
-  }
+  override protected def noun = "zone map"
+  // a zone map tracks files, not a CDC feed: no batch watermark
+  override protected def batched = false
 
-  private def toManifest(r: IndexDirs.ManifestReader): Manifest = {
+  override protected def readDecl(r: IndexDirs.ManifestReader) = {
     val fmt = r.intOr("fmt", 1)
-    Manifest(r.long("fp"), r.long("n"), r.str("table"),
-      r.seq("num"), r.seq("str"),
+    ZoneLayout(r.str("table"), r.seq("num"), r.seq("str"),
       if (fmt >= 2) r.seq("bloom") else Nil,
       if (fmt >= 2) r.int("bloomm") else 8192,
-      if (fmt >= 2) r.int("bloomk") else 3,
-      r.seq("deltas"), r.intOr("bv", 0), fmt, mv = r.version)
+      if (fmt >= 2) r.int("bloomk") else 3, fmt)
   }
 
-  private def readManifest(path: String): Option[Manifest] =
-    IndexDirs.readManifest(path).map(toManifest)
+  override protected def writeDecl(w: IndexDirs.ManifestWriter,
+      d: ZoneLayout) =
+    w.put("table", d.tableDir).put("num", d.numCols).put("str", d.strCols)
+      .put("bloom", d.bloomCols).put("bloomm", d.bloomBits)
+      .put("bloomk", d.bloomK).put("fmt", d.fmt)
 
-  private def writeManifest(path: String, mf: Manifest): Unit =
-    IndexDirs.manifest()
-      .put("fp", mf.fp).put("n", mf.n).put("table", mf.tableDir)
-      .put("num", mf.numCols).put("str", mf.strCols)
-      .put("bloom", mf.bloomCols).put("bloomm", mf.bloomBits)
-      .put("bloomk", mf.bloomK).put("fmt", mf.fmt)
-      .put("bv", mf.baseVer).put("deltas", mf.deltas)
-      .commit(path, mf.mv)
+  private def want(fp: Long, n: Long, tableDir: String,
+      numCols: Seq[String], strCols: Seq[String], bloomCols: Seq[String],
+      bloomBits: Int, bloomK: Int): Mf =
+    Artifact.Manifest(ZoneLayout(tableDir, numCols, strCols, bloomCols,
+      bloomBits, bloomK, Fmt), fp, n)
 
   /** One listed data file: `key` is the scheme-free path
     * `input_file_name()` rows join on, `uri` the fully-qualified
@@ -223,16 +212,16 @@ object ZoneMap {
     * unrelated adds/removes instead of trusting the aggregate
     * fingerprint.
     */
-  private def profile(spark: SparkSession, mf: Manifest,
+  private def profile(spark: SparkSession, mf: Mf,
       files: Seq[FileEnt], outDir: String,
       rowsPerFile: Long = DefaultArtifactRowsPerFile): Unit = {
     import spark.implicits._
     val lens = files.map(f => (f.key, f.len)).toDF("file", "flen")
     val df = spark.read.parquet(files.map(_.uri): _*)
     val byName = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    mf.numCols.foreach { c =>
+    mf.decl.numCols.foreach { c =>
       val dt = byName.getOrElse(c, throw new IllegalArgumentException(
-        s"zone column $c missing from ${mf.tableDir}"))
+        s"zone column $c missing from ${mf.decl.tableDir}"))
       require(integral(dt) || dt == DateType,
         s"zone column $c is $dt: numeric zone maps require an " +
           "integral or date type (a truncating cast would prune " +
@@ -255,19 +244,19 @@ object ZoneMap {
     val nullL = lit(null).cast("long")
     val nullS = lit(null).cast("string")
     val pieces =
-      mf.numCols.map(c =>
+      mf.decl.numCols.map(c =>
         st(c, "num", lit(0L), numValue(c), nullS)) ++
-      mf.strCols.map(c =>
+      mf.decl.strCols.map(c =>
         st(c, "str", lit(0L), nullL, col(c).cast("string"))) ++
       // per-(file, col) bloom pieces, one per hash seed: vnum carries
       // the bit POSITION (the exact hash [[bloomPositions]] replays:
       // xxhash64 over "<rendered>:<seed>", position mod bloomBits),
       // bucket the packed 64-bit word index
-      mf.bloomCols.flatMap { c =>
-        (0 until mf.bloomK).map { seed =>
+      mf.decl.bloomCols.flatMap { c =>
+        (0 until mf.decl.bloomK).map { seed =>
           val r = col(c).cast("string")
           val pos = pmod(xxhash64(concat(r, lit(s":$seed"))),
-            lit(mf.bloomBits.toLong)).cast("int")
+            lit(mf.decl.bloomBits.toLong)).cast("int")
           st(c, "bl", (pos / 64).cast("int"), pos, r)
         }
       } :+
@@ -278,7 +267,7 @@ object ZoneMap {
       // fingerprint pass would compute. vstr = "x": never counted
       // as a null by the n_nulls expression below.
       st("", "fp", lit(0L),
-        xxhash64((mf.numCols ++ mf.strCols).map(col): _*), lit("x"))
+        xxhash64((mf.decl.numCols ++ mf.decl.strCols).map(col): _*), lit("x"))
     // ONE scan feeds stats, blooms AND the ledger fingerprints: the
     // grouped aggregate is metadata-scale (≤ |files|·(|cols| + 1 +
     // bloom words) rows), so checkpointing it is cheap where a second
@@ -286,7 +275,7 @@ object ZoneMap {
     // (input_file_name() is only valid in the scan's own stage); the
     // widen parallelizes the explosion when the scan has fewer splits
     // than cores and is the identity at corpus scale.
-    val needed = (mf.numCols ++ mf.strCols ++ mf.bloomCols).distinct
+    val needed = (mf.decl.numCols ++ mf.decl.strCols ++ mf.decl.bloomCols).distinct
     val agg = Par.widen(df
         .select(fileKey(input_file_name()).as("file") +:
           needed.map(col): _*))
@@ -329,7 +318,7 @@ object ZoneMap {
           col("n_rows"), col("n_nulls"), col("min_num"),
           col("max_num"), col("min_str"), col("max_str"))
         .join(broadcast(lens), Seq("file")),
-      files.size.toLong * (mf.numCols.size + mf.strCols.size),
+      files.size.toLong * (mf.decl.numCols.size + mf.decl.strCols.size),
       s"$outDir/stats", rowsPerFile)
     val writeFiles = () => writeArtifact(
       files.map { f =>
@@ -343,7 +332,7 @@ object ZoneMap {
     // size)
     val writeBloom = () => {
       val bloomRows =
-        if (mf.bloomCols.isEmpty)
+        if (mf.decl.bloomCols.isEmpty)
           // keep the table present (reads union it unconditionally)
           agg.limit(0).select(lit("").as("file"),
             lit("").as("col_name"), lit(0).as("word"),
@@ -354,7 +343,7 @@ object ZoneMap {
               col("bucket").cast("int").as("word"),
               col("orbits").as("bits"))
       writeArtifact(bloomRows,
-        files.size.toLong * mf.bloomCols.size * (mf.bloomBits / 64),
+        files.size.toLong * mf.decl.bloomCols.size * (mf.decl.bloomBits / 64),
         s"$outDir/bloom", rowsPerFile)
     }
     Par.inParallel(Seq(writeStats, writeFiles, writeBloom))
@@ -378,33 +367,19 @@ object ZoneMap {
     }
   }
 
-  private def baseOf(mf: Manifest): String =
-    if (mf.baseVer == 0) "stats" else s"stats.v${mf.baseVer}"
+  /** Base ∪ deltas of table `sub`. The `stats`, `bloom` and `files`
+    * bases are versioned in lockstep — one claimed suffix covers all
+    * three.
+    */
+  private def unionOf(spark: SparkSession, path: String, mf: Mf,
+      sub: String): DataFrame =
+    mf.roots(path, sub).map(spark.read.parquet(_)).reduce(_.unionByName(_))
 
   private def liveStats(spark: SparkSession, path: String,
-      mf: Manifest): DataFrame =
-    (s"$path/${baseOf(mf)}" +:
-      mf.deltas.map(d => s"$path/deltas/$d/stats"))
-      .map(spark.read.parquet(_)).reduce(_.unionByName(_))
-
-  /** Bloom rows ride a sibling base dir versioned in lockstep with
-    * the stats base (`bloom` / `bloom.vK` beside `stats` /
-    * `stats.vK` — one claimed suffix covers both).
-    */
-  private def bloomBaseOf(mf: Manifest): String =
-    if (mf.baseVer == 0) "bloom" else s"bloom.v${mf.baseVer}"
+      mf: Mf): DataFrame = unionOf(spark, path, mf, "stats")
 
   private def liveBloom(spark: SparkSession, path: String,
-      mf: Manifest): DataFrame =
-    (s"$path/${bloomBaseOf(mf)}" +:
-      mf.deltas.map(d => s"$path/deltas/$d/bloom"))
-      .map(spark.read.parquet(_)).reduce(_.unionByName(_))
-
-  /** The files ledger bases ride the same claimed version suffix as
-    * the stats bases.
-    */
-  private def filesBaseOf(mf: Manifest): String =
-    if (mf.baseVer == 0) "files" else s"files.v${mf.baseVer}"
+      mf: Mf): DataFrame = unionOf(spark, path, mf, "bloom")
 
   /** The live file LEDGER (key, uri, flen, fmtime) — base ∪ deltas,
     * one row per profiled file, COMPLETE even for zero-row files. A
@@ -413,11 +388,8 @@ object ZoneMap {
     * keeping reads working until the next rebuild.
     */
   private def liveLedger(spark: SparkSession, path: String,
-      mf: Manifest): DataFrame =
-    if (mf.fmt >= 3)
-      (s"$path/${filesBaseOf(mf)}" +:
-        mf.deltas.map(d => s"$path/deltas/$d/files"))
-        .map(spark.read.parquet(_)).reduce(_.unionByName(_))
+      mf: Mf): DataFrame =
+    if (mf.decl.fmt >= 3) unionOf(spark, path, mf, "files")
     else
       liveStats(spark, path, mf)
         .select(col("file"), col("file").as("uri"), col("flen"),
@@ -425,7 +397,7 @@ object ZoneMap {
         .distinct()
 
   private def liveLedgerEnts(spark: SparkSession, path: String,
-      mf: Manifest): Seq[FileEnt] =
+      mf: Mf): Seq[FileEnt] =
     // by-name select: the format-4 ledger carries fingerprint
     // columns after these four
     liveLedger(spark, path, mf)
@@ -435,7 +407,7 @@ object ZoneMap {
       .sortBy(_.key).toIndexedSeq
 
   private def liveFiles(spark: SparkSession, path: String,
-      mf: Manifest): Seq[String] =
+      mf: Mf): Seq[String] =
     liveLedgerEnts(spark, path, mf).map(_.key)
 
   /** `bloomCols` (optional): columns that ALSO get a per-file bloom
@@ -462,16 +434,11 @@ object ZoneMap {
     val files = listDataFiles(tableDir)
     require(files.nonEmpty, s"no parquet data files under $tableDir")
     val (fp, n) = listFingerprint(files)
-    val want = Manifest(fp, n, tableDir, numCols, strCols,
-      bloomCols, bloomBits, bloomK)
-    readManifest(path) match {
-      case Some(have) if have.sameIndexAs(want) =>
-        Build(path, fp, n, reused = true)
-      case _ =>
-        IndexDirs.uncommit(path)
-        profile(spark, want, files, path, artifactRowsPerFile)
-        writeManifest(path, want)
-        Build(path, fp, n, reused = false)
+    val mf = want(fp, n, tableDir, numCols, strCols, bloomCols, bloomBits,
+      bloomK)
+    buildOr(path, mf) {
+      profile(spark, mf, files, path, artifactRowsPerFile)
+      0L
     }
   }
 
@@ -483,13 +450,13 @@ object ZoneMap {
   private[operators] def reusableFor(path: String, fp: Long, n: Long,
       tableDir: String, numCols: Seq[String], strCols: Seq[String],
       bloomCols: Seq[String], bloomBits: Int, bloomK: Int): Boolean =
-    readManifest(path).exists(_.sameIndexAs(Manifest(fp, n, tableDir,
+    readManifest(path).exists(sameIndexAs(_, want(fp, n, tableDir,
       numCols, strCols, bloomCols, bloomBits, bloomK)))
 
   private[operators] def commitBuild(path: String, fp: Long, n: Long,
       tableDir: String, numCols: Seq[String], strCols: Seq[String],
       bloomCols: Seq[String], bloomBits: Int, bloomK: Int): Unit =
-    writeManifest(path, Manifest(fp, n, tableDir, numCols, strCols,
+    writeManifest(path, want(fp, n, tableDir, numCols, strCols,
       bloomCols, bloomBits, bloomK))
 
   /** Re-sync with the table directory. New files are profiled alone
@@ -501,14 +468,13 @@ object ZoneMap {
   def refresh(spark: SparkSession, path: String,
       artifactRowsPerFile: Long = DefaultArtifactRowsPerFile)
       : Build = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no zone map at $path"))
-    require(decl.fmt >= 4,
-      s"zone map at $path was written by format ${decl.fmt}; " +
+    val decl = live(path)
+    require(decl.decl.fmt >= 4,
+      s"zone map at $path was written by format ${decl.decl.fmt}; " +
         "refresh needs the format-4 files ledger (per-file pins + " +
         "fingerprint partials) — rebuild with buildIfAbsent to " +
         "upgrade (reads still work meanwhile)")
-    val now = listDataFiles(decl.tableDir)
+    val now = listDataFiles(decl.decl.tableDir)
     val (fp, n) = listFingerprint(now)
     if (fp == decl.fp && n == decl.n)
       return Build(path, decl.fp, decl.n, reused = true)
@@ -528,7 +494,7 @@ object ZoneMap {
       // changed under an existing name (in-place overwrite): the
       // profile is stale in a way the delta algebra can't patch
       throw new IllegalStateException(
-        s"table files changed in place under ${decl.tableDir} " +
+        s"table files changed in place under ${decl.decl.tableDir} " +
           s"(${changed.sorted.take(3).mkString(", ")}…) — zone maps " +
           "track immutable files; rebuild with buildIfAbsent after " +
           "an in-place rewrite")
@@ -537,21 +503,15 @@ object ZoneMap {
     if (removed.isEmpty) {
       // append-only growth: profile the new files, commit a delta
       val staged = IndexDirs.nextDeltaName(path, "d")
-      profile(spark, decl, added, s"$path/deltas/$staged",
-        artifactRowsPerFile)
-      IndexDirs.stagedCommit(readManifest(path),
-        writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
+      commitStaged(path, decl, None, Seq(staged -> { root =>
+        profile(spark, decl, added, root, artifactRowsPerFile); 0L
+      }), _ => ()) { (have, _) =>
         // a racing refresh that already profiled any of these files
         // makes this staging redundant — recheck per attempt
         val haveFiles = liveFiles(spark, path, have).toSet
         if (added.exists(a => haveFiles(a.key))) None
         else Some(have.copy(fp = have.fp ^ (fp ^ decl.fp),
           n = have.n + added.size, deltas = have.deltas :+ staged))
-      } match {
-        case Some(next) => Build(path, next.fp, next.n, reused = false)
-        case None =>
-          val cur = readManifest(path).getOrElse(decl)
-          Build(path, cur.fp, cur.n, reused = true)
       }
     } else {
       // retraction: per-file rows are exact, so the survivors-only
@@ -570,20 +530,20 @@ object ZoneMap {
         else survivorTable.unionByName(
           spark.read.parquet(s"$stagedNew/$sub"))
       val nSurvive = n // post-refresh file count, known driver-side
-      val nCols = (decl.numCols.size + decl.strCols.size).toLong
+      val nCols = (decl.decl.numCols.size + decl.decl.strCols.size).toLong
       writeArtifact(withNew(liveStats(spark, path, decl)
           .filter(!col("file").isin(removed: _*)), "stats"),
         nSurvive * nCols, target, artifactRowsPerFile)
       writeArtifact(withNew(liveBloom(spark, path, decl)
           .filter(!col("file").isin(removed: _*)), "bloom"),
-        nSurvive * decl.bloomCols.size * (decl.bloomBits / 64),
+        nSurvive * decl.decl.bloomCols.size * (decl.decl.bloomBits / 64),
         bloomTarget, artifactRowsPerFile)
       writeArtifact(withNew(liveLedger(spark, path, decl)
           .filter(!col("file").isin(removed: _*)), "files"),
         nSurvive, filesTarget, artifactRowsPerFile)
       val folded = decl.deltas
       IndexDirs.commitWithRetry(readManifest(path),
-        writeManifest(path, _: Manifest), path) { have =>
+        writeManifest(path, _: Mf), path) { have =>
         // the rewrite folded decl's exact base+delta view; any commit
         // since (new delta, new base) makes it stale — refuse
         if (have.baseVer != decl.baseVer ||
@@ -597,9 +557,8 @@ object ZoneMap {
           // the replaced base generation is unreferenced by the live
           // manifest — GC it eagerly (the AggView treatment; nothing
           // ever stages INTO an old base, so this races no writer)
-          IndexDirs.rmTree(s"$path/${baseOf(decl)}")
-          IndexDirs.rmTree(s"$path/${bloomBaseOf(decl)}")
-          IndexDirs.rmTree(s"$path/${filesBaseOf(decl)}")
+          Seq("stats", "bloom", "files").foreach(sub =>
+            IndexDirs.rmTree(s"$path/${decl.baseOf(sub)}"))
           Build(path, next.fp, next.n, reused = false)
         case None =>
           IndexDirs.rmTree(target)
@@ -620,31 +579,21 @@ object ZoneMap {
     * (skips, GC's its staging).
     */
   def compactDeltas(spark: SparkSession, path: String,
-      artifactRowsPerFile: Long = DefaultArtifactRowsPerFile): Int = {
-    val decl = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no zone map at $path"))
-    if (decl.fmt < 3 || decl.deltas.length < 2) return 0
-    val folded = decl.deltas
-    val staged = IndexDirs.nextDeltaName(path, "c")
-    val nCols = (decl.numCols.size + decl.strCols.size).toLong
-    val est = Map("stats" -> decl.n * nCols,
-      "bloom" -> decl.n * decl.bloomCols.size * (decl.bloomBits / 64),
-      "files" -> decl.n)
-    for (sub <- Seq("stats", "bloom", "files"))
-      writeArtifact(
-        folded.map(d => spark.read.parquet(s"$path/deltas/$d/$sub"))
-          .reduce(_.unionByName(_)),
-        est(sub), s"$path/deltas/$staged/$sub", artifactRowsPerFile)
-    IndexDirs.stagedCommit(readManifest(path),
-      writeManifest(path, _: Manifest), path, Seq(staged)) { have =>
-      if (!folded.forall(have.deltas.contains)) None
-      else Some(have.copy(
-        deltas = staged +: have.deltas.filterNot(folded.toSet)))
-    } match {
-      case Some(_) => IndexDirs.gcDeltas(path, folded); folded.length
-      case None => 0
+      artifactRowsPerFile: Long = DefaultArtifactRowsPerFile): Int =
+    compact(spark, path) { (decl, folded, root) =>
+      val nCols = (decl.decl.numCols.size + decl.decl.strCols.size).toLong
+      val est = Map("stats" -> decl.n * nCols,
+        "bloom" -> decl.n * decl.decl.bloomCols.size *
+          (decl.decl.bloomBits / 64),
+        "files" -> decl.n)
+      for (sub <- Seq("stats", "bloom", "files"))
+        writeArtifact(
+          folded.map(d => spark.read.parquet(s"$path/deltas/$d/$sub"))
+            .reduce(_.unionByName(_)),
+          est(sub), s"$root/$sub", artifactRowsPerFile)
     }
-  }
+
+  override protected def compactible(mf: Mf): Boolean = mf.decl.fmt >= 3
 
   /** The artifact's on-disk format version, if one is built —
     * integrators gate format-dependent maintenance on it
@@ -652,7 +601,7 @@ object ZoneMap {
     * pre-format-3 map instead of failing a committed compaction).
     */
   def format(path: String): Option[Int] =
-    readManifest(path).map(_.fmt)
+    readManifest(path).map(_.decl.fmt)
 
   /** The committed manifest VERSION of the artifact — every
     * build/refresh/compact commit is a higher version, so this is
@@ -661,8 +610,7 @@ object ZoneMap {
     * against an earlier state of the artifact.
     */
   def version(path: String): Long =
-    readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no zone map at $path")).mv
+    live(path).mv
 
   /** The artifact's committed declaration + freshness pins, as a
     * value: what a consumer pins at registration and compares
@@ -682,10 +630,9 @@ object ZoneMap {
       baseVer: Int, deltas: Seq[String])
 
   def declaration(path: String): Decl = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no zone map at $path"))
-    Decl(mf.tableDir, mf.numCols, mf.strCols, mf.bloomCols,
-      mf.bloomBits, mf.bloomK, mf.fmt, mf.mv, mf.fp, mf.n,
+    val mf = live(path)
+    Decl(mf.decl.tableDir, mf.decl.numCols, mf.decl.strCols, mf.decl.bloomCols,
+      mf.decl.bloomBits, mf.decl.bloomK, mf.decl.fmt, mf.mv, mf.fp, mf.n,
       mf.baseVer, mf.deltas)
   }
 
@@ -693,8 +640,7 @@ object ZoneMap {
     * by (file, col_name), no fold needed.
     */
   def stats(spark: SparkSession, path: String): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no zone map at $path"))
+    val mf = live(path)
     liveStats(spark, path, mf)
   }
 
@@ -705,8 +651,7 @@ object ZoneMap {
     * extra files, never drop unprofiled ones.
     */
   def profiledFiles(spark: SparkSession, path: String): Seq[String] = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no zone map at $path"))
+    val mf = live(path)
     liveFiles(spark, path, mf)
   }
 
@@ -714,9 +659,8 @@ object ZoneMap {
     * source), read from one footer.
     */
   def tableSchema(spark: SparkSession, path: String): StructType = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no zone map at $path"))
-    spark.read.parquet(mf.tableDir).schema
+    val mf = live(path)
+    spark.read.parquet(mf.decl.tableDir).schema
   }
 
   /** Can the file described by one stats row contain a row matching
@@ -741,8 +685,7 @@ object ZoneMap {
     */
   def prune(spark: SparkSession, path: String,
       filters: Seq[Filter]): (Seq[String], Long) = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no zone map at $path"))
+    val mf = live(path)
     pruneWith(spark, path, mf, liveLedgerEnts(spark, path, mf),
       filters)
   }
@@ -752,10 +695,10 @@ object ZoneMap {
     * artifact version (and pays one manifest/ledger read, not two).
     */
   private def pruneWith(spark: SparkSession, path: String,
-      mf: Manifest, ents: Seq[FileEnt],
+      mf: Mf, ents: Seq[FileEnt],
       filters: Seq[Filter]): (Seq[String], Long) = {
     val all = ents.map(_.key)
-    val declared = (mf.numCols ++ mf.strCols).toSet
+    val declared = (mf.decl.numCols ++ mf.decl.strCols).toSet
     val byCol = filters
       .flatMap(f => colOf(f).filter(declared).map(_ -> f))
       .groupBy(_._1).map { case (c, fs) => c -> fs.map(_._2) }
@@ -771,16 +714,16 @@ object ZoneMap {
     // a file passes the conjunct if ANY value set has ALL bits set
     // (EqualTo = one set; In = one per element). A literal that
     // doesn't render stays conservative: the whole filter is skipped.
-    val bloomDecl = mf.bloomCols.toSet
+    val bloomDecl = mf.decl.bloomCols.toSet
     val bloomTests: Seq[(String, Seq[Seq[Int]])] = filters.flatMap {
       case EqualTo(a, v) if bloomDecl(a) =>
         render(v).map(r => a ->
-          Seq(bloomPositions(r, mf.bloomBits, mf.bloomK)))
+          Seq(bloomPositions(r, mf.decl.bloomBits, mf.decl.bloomK)))
       case In(a, vs) if bloomDecl(a) && vs.nonEmpty =>
         val rs = vs.toSeq.map(render)
         if (rs.exists(_.isEmpty)) None
         else Some(a -> rs.flatten
-          .map(bloomPositions(_, mf.bloomBits, mf.bloomK)))
+          .map(bloomPositions(_, mf.decl.bloomBits, mf.decl.bloomK)))
       case _ => None
     }
     if (byCol.isEmpty && bloomTests.isEmpty)
@@ -844,8 +787,7 @@ object ZoneMap {
     */
   def pruneKilled(spark: SparkSession, path: String,
       filters: Seq[Filter]): Set[String] = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no zone map at $path"))
+    val mf = live(path)
     val ents = liveLedgerEnts(spark, path, mf)
     val (survivors, _) = pruneWith(spark, path, mf, ents, filters)
     ents.map(_.key).toSet -- survivors
@@ -859,8 +801,7 @@ object ZoneMap {
     * rows are stale in a way only a rebuild fixes.
     */
   def ledger(spark: SparkSession, path: String): Seq[FileEnt] = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no zone map at $path"))
+    val mf = live(path)
     liveLedgerEnts(spark, path, mf)
   }
 
@@ -878,9 +819,8 @@ object ZoneMap {
     */
   def fingerprintLedger(spark: SparkSession,
       path: String): Option[Map[String, (Long, Long, Long, Long)]] = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no zone map at $path"))
-    if (mf.fmt < 4) None
+    val mf = live(path)
+    if (mf.decl.fmt < 4) None
     else Some(liveLedger(spark, path, mf)
       .select("file", "flen", "fmtime", "cfp", "cn").collect()
       .map(r => r.getString(0) ->
@@ -895,8 +835,7 @@ object ZoneMap {
     */
   def scan(spark: SparkSession, path: String,
       filters: Seq[Filter]): DataFrame = {
-    val mf = readManifest(path).getOrElse(
-      throw new IllegalStateException(s"no zone map at $path"))
+    val mf = live(path)
     val schema = tableSchema(spark, path)
     // ONE manifest + ledger snapshot drives both the prune and the
     // uri resolution — a refresh committing mid-scan can't give a
@@ -913,3 +852,10 @@ object ZoneMap {
     else spark.read.schema(schema).parquet(uris: _*)
   }
 }
+
+/** [[ZoneMap]]'s declaration: the profiled table, zone and bloom
+  * columns, bloom shape, format.
+  */
+private[operators] final case class ZoneLayout(tableDir: String,
+    numCols: Seq[String], strCols: Seq[String], bloomCols: Seq[String],
+    bloomBits: Int, bloomK: Int, fmt: Int)

@@ -5,13 +5,18 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkEntry, SparkTestSession}
 
 /** The red-flag plan audit as a FAILING test, not a dev tool someone
-  * must remember to run (`graft.PlanSweep` stays for ad-hoc use):
-  * every declared query's physical plan is swept for the three
-  * scale-killer classes — BroadcastNestedLoopJoin, CartesianProduct,
-  * SortAggregate — against an explicit allowlist of the adjudicated
-  * intended shapes. A new query (or a plan regression in an old one)
-  * that introduces any of these fails `sbt test` with the offending
-  * plan named.
+  * must remember to run: every declared query's physical plan is
+  * swept for the three scale-killer classes — BroadcastNestedLoopJoin,
+  * CartesianProduct, SortAggregate — against an explicit allowlist of
+  * the adjudicated intended shapes, and for partition-less windows
+  * over unbounded children. A new query (or a plan regression in an
+  * old one) that introduces any of these fails `sbt test` with the
+  * offending plan named.
+  *
+  * Each query's DataFrame is built ONCE for all sweeps (building a
+  * lifecycle query runs its artifact builds); each sweep derives its
+  * physical plan from it right after the build, under that sweep's
+  * own AQE setting.
   */
 class SweepSpec extends AnyFunSuite {
   lazy val spark = {
@@ -95,11 +100,36 @@ class SweepSpec extends AnyFunSuite {
     */
   private val sortAggAllowed = Set.empty[String]
 
+  /** Per declared query: its physical plan text under the session's
+    * own settings (AQE on), and the partition-less windows over
+    * unbounded children of its plan with AQE disabled (so the physical
+    * tree is directly traversable — the shapes themselves are
+    * AQE-independent). Both come from one construction of the query,
+    * planned while the state it registered is live.
+    */
+  private lazy val swept: Seq[(String, String, Seq[String])] = {
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.execution.window.WindowExec
+    SparkEntry.queries.keys.toSeq.sorted.map { name =>
+      val df = SparkEntry.queries(name)(spark, sf)
+      val plan = df.queryExecution.executedPlan.toString
+      val prev = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val windows =
+        try GraftBridge.ofRows(spark, GraftBridge.analyzedPlan(df))
+          .queryExecution.executedPlan.collect {
+            case w: WindowExec
+                if w.partitionSpec.isEmpty && !bounded(w.child) =>
+              s"$name (${w.child.nodeName})"
+          }
+        finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+      (name, plan, windows)
+    }
+  }
+
   test("every declared query plans free of BNLJ / cartesian / " +
       "sort-aggregate outside the adjudicated allowlist") {
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val p = SparkEntry.queries(name)(spark, sf)
-        .queryExecution.executedPlan.toString
+    val offenders = swept.flatMap { case (name, p, _) =>
       Seq(
         ("BNLJ", p.contains("BroadcastNestedLoopJoin"), bnljAllowed),
         ("CARTESIAN", p.contains("CartesianProduct"), cartesianAllowed),
@@ -118,9 +148,7 @@ class SweepSpec extends AnyFunSuite {
     * bounds cardinality — an aggregate (output = #groups), a
     * limit/top-k, or a local (driver-built) table. Any declared
     * query that plans a global window straight over an unbounded
-    * scan fails here with the query named. AQE is disabled for the
-    * walk so the physical tree is directly traversable (the shapes
-    * themselves are AQE-independent).
+    * scan fails here with the query named.
     */
   private def bounded(p: org.apache.spark.sql.execution.SparkPlan)
       : Boolean = p.exists {
@@ -144,31 +172,18 @@ class SweepSpec extends AnyFunSuite {
 
   test("every partition-less window runs over a structurally bounded " +
       "child (aggregate / limit / local table)") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val offenders = SparkEntry.queries.keys.toSeq.sorted
-        .filterNot(globalWindowAllowed).flatMap { name =>
-          val plan = SparkEntry.queries(name)(spark, sf)
-            .queryExecution.executedPlan
-          plan.collect {
-            case w: WindowExec
-                if w.partitionSpec.isEmpty && !bounded(w.child) =>
-              s"$name (${w.child.nodeName})"
-          }
-        }.distinct
-      assert(offenders.isEmpty,
-        s"unbounded global windows: ${offenders.mkString(", ")}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    val offenders = swept.filterNot(q => globalWindowAllowed(q._1))
+      .flatMap(_._3).distinct
+    assert(offenders.isEmpty,
+      s"unbounded global windows: ${offenders.mkString(", ")}")
   }
 
   test("the allowlists stay honest: each named query still plans its " +
       "adjudicated flag (a vanished flag means the allowlist entry " +
       "should be deleted)") {
+    val plans = swept.map(q => q._1 -> q._2).toMap
     for (name <- bnljAllowed) {
-      val p = SparkEntry.queries(name)(spark, sf)
-        .queryExecution.executedPlan.toString
+      val p = plans(name)
       assert(p.contains("BroadcastNestedLoopJoin") ||
         p.contains("CartesianProduct"), s"$name no longer crosses")
     }
