@@ -1,10 +1,12 @@
 package graft.api
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.IpFunctions._
-import graft.operators.Ranges
+import graft.operators.{RangeStructIndex, RangeStructLookup, Ranges}
 
 /** The annotation pipeline (SURVEY §3): compose the range lookup (J1)
   * with dimension joins (J3/J4), family merge (J7), composite
@@ -15,7 +17,9 @@ import graft.operators.Ranges
   * Snapshot tables are denormalized at *build* time (dimension joins
   * run once per snapshot over ~4 M rows, broadcast) so the fact-side
   * path is exactly: parse → one binary-search probe per range family
-  * group → struct emit. At 100 TB of facts nothing shuffles.
+  * group → struct emit. At 100 TB of facts nothing shuffles. The
+  * probe indexes over a snapshot pair ([[Indexes]]) are built once per
+  * `Api.Snapshot`, at its first use, and live as long as it does.
   */
 object Annotate {
 
@@ -91,24 +95,47 @@ object Annotate {
           col("asn").isNull.as("missing")).as("network"))
   }
 
+  /** The two broadcast payload indexes a snapshot pair is probed
+    * through ([[RangeStructLookup.buildIndex]] over each table).
+    */
+  final case class Indexes(
+      geo: (Broadcast[RangeStructIndex], StructType),
+      asn: (Broadcast[RangeStructIndex], StructType))
+
+  /** Read both snapshot tables once and broadcast their indexes. */
+  def indexes(spark: SparkSession, geoSnapshot: DataFrame,
+      asnSnapshot: DataFrame): Indexes =
+    Indexes(RangeStructLookup.buildIndex(spark, geoSnapshot),
+      RangeStructLookup.buildIndex(spark, asnSnapshot))
+
   /** Annotate facts with both snapshot groups (J8 composite): one
     * probe per group, first-writer-wins by construction (each group
     * owns its output struct), misses defaulted to {missing: true}
-    * (P16, handler.go:66-76).
+    * (P16, handler.go:66-76). Builds both indexes on every call; a
+    * caller that annotates against the same snapshot again keeps the
+    * [[indexes]] and calls the indexed overload, as `Api.Snapshot`
+    * does.
     *
     * @param ipStr string IP column; 2002::/16 addresses are 6to4-
     *              rewritten first (handler.go:211-214)
     */
   def annotate(spark: SparkSession, facts: DataFrame, ipStr: Column,
-      geoSnapshot: DataFrame, asnSnapshot: DataFrame): DataFrame = {
+      geoSnapshot: DataFrame, asnSnapshot: DataFrame): DataFrame =
+    annotate(facts, ipStr, indexes(spark, geoSnapshot, asnSnapshot))
+
+  /** [[annotate]] through prebuilt indexes: plans the probe and runs
+    * no job, so over a local batch the whole projection folds to a
+    * local relation on the driver.
+    */
+  def annotate(facts: DataFrame, ipStr: Column, idx: Indexes): DataFrame = {
     val parsed = facts.withColumn("__ip_bin", ip_to_bin(rewrite6to4(ipStr)))
     // zero-join fact path: each probe returns its payload struct
     // straight from the broadcast index (RangeStructLookup)
-    val withGeo = graft.operators.RangeStructLookup
-      .lookup(spark, parsed, geoSnapshot, col("__ip_bin"), "__geo_p")
+    val withGeo = RangeStructLookup
+      .probe(parsed, idx.geo, col("__ip_bin"), "__geo_p")
       .withColumn("geo", col("__geo_p.geo")).drop("__geo_p")
-    val withAsn = graft.operators.RangeStructLookup
-      .lookup(spark, withGeo, asnSnapshot, col("__ip_bin"), "__net_p")
+    val withAsn = RangeStructLookup
+      .probe(withGeo, idx.asn, col("__ip_bin"), "__net_p")
       .withColumn("network", col("__net_p.network")).drop("__net_p")
     withAsn
       .withColumn("geo", when(col("__ip_bin").isNull || col("geo").isNull,
@@ -163,7 +190,7 @@ object Annotate {
   def annotateLegacy(spark: SparkSession, facts: DataFrame, ipStr: Column,
       legacySnapshot: DataFrame): DataFrame = {
     val parsed = facts.withColumn("__ip_bin", ip_to_bin(rewrite6to4(ipStr)))
-    graft.operators.RangeStructLookup
+    RangeStructLookup
       .lookup(spark, parsed, legacySnapshot, col("__ip_bin"), "__geo_p")
       .withColumn("geo",
         when(col("__ip_bin").isNull || col("__geo_p").isNull, missingGeo)

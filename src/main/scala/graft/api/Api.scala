@@ -9,11 +9,29 @@ import org.apache.spark.sql.functions._
   * shape of the v2 batch API — one as-of dataset selection per batch,
   * per-IP annotation keyed by the *original* request string, JSON
   * with omit-empty parity — plus the v1 compat key scheme.
+  *
+  * Like the reference, which holds every dataset in RAM and answers a
+  * batch with one as-of pick and a binary search per IP, a
+  * [[Snapshot]]'s tables are read once, at its first use, into
+  * broadcast range indexes that live exactly as long as the snapshot.
+  * After that a request-scale batch (a local `Seq.toDF`) is annotated
+  * and rendered without a Spark job: the whole projection folds to a
+  * local relation on the driver.
   */
 object Api {
 
-  /** One loaded dataset snapshot pair. */
-  final case class Snapshot(date: Date, geo: DataFrame, asn: DataFrame)
+  /** One loaded dataset snapshot pair. [[indexes]] reads both tables
+    * and broadcasts their range indexes on first use — never when the
+    * snapshot is constructed — and keeps them for the snapshot's
+    * lifetime. A refresh that keeps this snapshot in the new
+    * [[Directory]] keeps its indexes; once no directory holds it, the
+    * broadcasts are unreachable and Spark's ContextCleaner removes
+    * them. `copy` yields a new snapshot whose indexes are built anew.
+    */
+  final case class Snapshot(date: Date, geo: DataFrame, asn: DataFrame) {
+    @transient lazy val indexes: Annotate.Indexes =
+      Annotate.indexes(geo.sparkSession, geo, asn)
+  }
 
   /** The annotator directory: date-sorted snapshots with the as-of
     * pick rule of directory.go:230-240 (latest ≤ d, clamp to
@@ -30,40 +48,54 @@ object Api {
   }
 
   /** v2 batch annotate (handler.go:194-243): one snapshot for the
-    * whole batch, per-row annotation, Missing defaulting inside
+    * whole batch, per-row annotation through the snapshot's
+    * [[Snapshot.indexes]], Missing defaulting inside
     * [[Annotate.annotate]]. Output: (ip, geo, network).
     */
   def annotateV2(spark: SparkSession, dir: Directory, date: Date,
-      ips: DataFrame, ipCol: String = "ip"): DataFrame = {
-    val snap = dir.forDate(date)
-    Annotate.annotate(spark, ips, col(ipCol), snap.geo, snap.asn)
-  }
+      ips: DataFrame, ipCol: String = "ip"): DataFrame =
+    Annotate.annotate(ips, col(ipCol), dir.forDate(date).indexes)
 
   /** Render a v2 response document: `{"AnnotatorDate": …,
     * "Annotations": {ip: {Geo…, Network…}}}` (api-v2.go:51-55).
     * to_json drops NULL fields, matching Go's `omitempty`.
+    *
+    * Spark renders each row's `{"<ip>":{"Geo":…,"Network":…}}` (key
+    * escaping and NULL omission included); the driver keeps the first
+    * row per IP and splices the entries into the document. Over a
+    * local batch the projection folds to a local relation and no job
+    * runs; any other input costs one narrow job.
     *
     * REQUEST-scale only: this materializes one JSON string on the
     * driver, faithful to the reference's per-HTTP-request response
     * (batches are capped at ~tens of k IPs). Dataset-scale output
     * goes through the parquet/JSON sinks (Verify / writeStream), not
     * through this.
+    *
+    * @throws IllegalArgumentException if `ipCol` holds a NULL: a JSON
+    *         object has no NULL key
     */
   def toV2ResponseJson(annotated: DataFrame, annotatorDate: Date,
       ipCol: String = "ip"): String = {
+    val ip = col(ipCol)
+    val rows = annotated.select(ip, when(ip.isNotNull, to_json(map(ip,
+      struct(col("geo").as("Geo"), col("network").as("Network"))))))
+      .collect()
+    val out = new java.lang.StringBuilder(
+      s"""{"AnnotatorDate":"$annotatorDate","Annotations":{""")
     // a batch may legally repeat an IP (the reference's map just
-    // overwrites the key); keep one row per key or map_from_arrays
-    // throws under the default EXCEPTION dedup policy
-    val row = annotated.dropDuplicates(ipCol).agg(
-      to_json(struct(
-        lit(annotatorDate.toString).as("AnnotatorDate"),
-        map_from_arrays(
-          collect_list(col(ipCol)),
-          collect_list(struct(col("geo").as("Geo"),
-            col("network").as("Network")))).as("Annotations")))
-        .as("json"))
-      .collect()(0)
-    row.getString(0)
+    // overwrites the key); its rows annotate alike, so keep the first
+    val seen = scala.collection.mutable.HashSet.empty[Any]
+    rows.foreach { r =>
+      if (r.isNullAt(0))
+        throw new IllegalArgumentException(s"NULL in IP column '$ipCol'")
+      if (seen.add(r.get(0))) {
+        if (seen.size > 1) out.append(',')
+        val entry = r.getString(1) // {"<ip>":{…}} → "<ip>":{…}
+        out.append(entry, 1, entry.length - 1)
+      }
+    }
+    out.append("}}").toString
   }
 
   /** v1 legacy response key: ip + base-36 unix seconds, lower-case
@@ -81,15 +113,16 @@ object Api {
       requests: DataFrame, ipCol: String = "ip",
       tsCol: String = "ts"): DataFrame = {
     import graft.functions.IpFunctions.ip_to_bin
-    val bad = requests.filter(ip_to_bin(col(ipCol)).isNull).limit(1).count()
-    if (bad > 0)
+    // one aggregate answers both checks, a bad IP before an empty
+    // batch. The reference uses request[0]'s timestamp for the whole
+    // batch; a DataFrame is unordered, so the earliest timestamp is
+    // the deterministic analogue of "first"
+    val first = requests.agg(bool_or(ip_to_bin(col(ipCol)).isNull),
+      min(col(tsCol))).collect()(0)
+    if (!first.isNullAt(0) && first.getBoolean(0))
       throw new IllegalArgumentException("invalid IP in v1 batch")
-    // the reference uses request[0]'s timestamp for the whole batch;
-    // a DataFrame is unordered, so the earliest timestamp is the
-    // deterministic analogue of "first"
-    val first = requests.agg(min(col(tsCol))).collect()
-    require(first.nonEmpty && !first(0).isNullAt(0), "empty v1 batch")
-    val batchDate = new Date(first(0).getTimestamp(0).getTime)
+    require(!first.isNullAt(1), "empty v1 batch")
+    val batchDate = new Date(first.getTimestamp(1).getTime)
     annotateV2(spark, dir, batchDate,
       requests.withColumn("key", v1Key(col(ipCol), col(tsCol))), ipCol)
   }

@@ -213,11 +213,17 @@ object RangeStructLookup {
     */
   def lookup(spark: SparkSession, facts: DataFrame, ranges: DataFrame,
       ipCol: Column, as: String = "payload",
-      loCol: String = "lo", hiCol: String = "hi"): DataFrame = {
-    val (bc, schema) = buildIndex(spark, ranges, loCol, hiCol)
-    facts.withColumn(as,
-      GraftBridge.column(RangePayload(GraftBridge.expression(ipCol), bc, schema)))
-  }
+      loCol: String = "lo", hiCol: String = "hi"): DataFrame =
+    probe(facts, buildIndex(spark, ranges, loCol, hiCol), ipCol, as)
+
+  /** [[lookup]] through an index built earlier by [[buildIndex]]: no
+    * job runs here, so a caller that keeps the index pays its build
+    * once.
+    */
+  def probe(facts: DataFrame, index: (Broadcast[RangeStructIndex], StructType),
+      ipCol: Column, as: String): DataFrame =
+    facts.withColumn(as, GraftBridge.column(
+      RangePayload(GraftBridge.expression(ipCol), index._1, index._2)))
 }
 
 /** Shuffle path for range tables that outgrow a broadcast: bucket

@@ -1,8 +1,14 @@
 package graft.api
 
-import java.sql.Date
+import java.sql.{Date, Timestamp}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import com.fasterxml.jackson.core.JsonParser
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestSession
@@ -20,6 +26,48 @@ class ApiSpec extends AnyFunSuite {
     Annotate.buildAsnSnapshot(
       Ingest.pfx2as(spark, fixture("routeviews.pfx2as")),
       Ingest.asNames(spark, fixture("asnames.csv"))))
+
+  /** The aggregate renderer `toV2ResponseJson` replaced: one
+    * dropDuplicates + collect_list document, kept as the oracle.
+    */
+  private def aggregateJson(annotated: DataFrame, date: Date): String =
+    annotated.dropDuplicates("ip").agg(to_json(struct(
+      lit(date.toString).as("AnnotatorDate"),
+      map_from_arrays(
+        collect_list(col("ip")),
+        collect_list(struct(col("geo").as("Geo"),
+          col("network").as("Network")))).as("Annotations"))))
+      .collect()(0).getString(0)
+
+  /** Spark jobs started from this thread while `body` runs. A tagged
+    * marker job after `body` drains the listener bus: once the
+    * listener sees it, every earlier job start has been delivered.
+    */
+  private def jobsRunBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"api-spec-${java.util.UUID.randomUUID}"
+    val marker = s"$tag-marker"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val p = Option(j.properties)
+        if (p.exists(_.getProperty("spark.job.description") == marker))
+          drained.countDown()
+        else if (p.flatMap(x => Option(x.getProperty("spark.job.tags")))
+            .exists(_.split(',').contains(tag))) jobs.incrementAndGet()
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.addJobTag(tag)
+      try body finally sc.removeJobTag(tag)
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(drained.await(30, TimeUnit.SECONDS), "listener bus not drained")
+    } finally sc.removeSparkListener(l)
+    jobs.get
+  }
 
   test("directory as-of pick + clamp (directory.go:230-240)") {
     val dir = Api.Directory(Seq(snap("2020-01-01"), snap("2021-01-01")))
@@ -66,6 +114,92 @@ class ApiSpec extends AnyFunSuite {
       Seq("1.0.0.200", "1.0.0.200", "9.9.9.9").toDF("ip"))
     val json = Api.toV2ResponseJson(out, Date.valueOf("2020-01-01"))
     assert(json.contains(""" "1.0.0.200":{"Geo": """.trim))
+  }
+
+  test("v1 checks a bad IP before an empty batch, in one aggregate") {
+    import spark.implicits._
+    val dir = Api.Directory(Seq(snap("2020-01-01")))
+    val empty = intercept[IllegalArgumentException] {
+      Api.annotateV1(spark, dir, Seq.empty[(String, Timestamp)].toDF("ip", "ts"))
+    }
+    assert(empty.getMessage.contains("empty v1 batch"))
+    // a bad IP wins even when no row carries a timestamp
+    val bad = intercept[IllegalArgumentException] {
+      Api.annotateV1(spark, dir,
+        Seq(("nope", null: Timestamp)).toDF("ip", "ts"))
+    }
+    assert(bad.getMessage.contains("invalid IP"))
+    val ts = Timestamp.valueOf("2021-01-01 00:00:00")
+    val reqs = Seq(("1.0.0.200", ts)).toDF("ip", "ts")
+    dir.latest.indexes // built at first use, not by the checks
+    // both checks cost what one aggregate over the batch costs
+    assert(jobsRunBy(Api.annotateV1(spark, dir, reqs)) ==
+      jobsRunBy(reqs.agg(min("ts")).collect()))
+  }
+
+  test("v2 response JSON equals the aggregate renderer's document") {
+    import spark.implicits._
+    val dir = Api.Directory(Seq(snap("2020-01-01")))
+    val date = Date.valueOf("2020-01-01")
+    // a document that repeats a key is wrong even where the last
+    // value would win, so the parser refuses duplicates
+    val mapper = new ObjectMapper()
+      .enable(JsonParser.Feature.STRICT_DUPLICATE_DETECTION)
+    def same(ips: DataFrame): String = {
+      val out = Api.annotateV2(spark, dir, date, ips)
+      val got = Api.toV2ResponseJson(out, date)
+      assert(mapper.readTree(got) == mapper.readTree(aggregateJson(out, date)),
+        got)
+      got
+    }
+    // duplicates, a miss, unparseable strings, 6to4, native v6 and a
+    // key that needs escaping
+    val ips = Seq("1.0.0.200", "9.9.9.9", "1.0.0.200", "nope", "",
+      "2002:100:c8::", "2001:200::1", "a\"b\\c", "9.9.9.9")
+    val got = same(ips.toDF("ip"))
+    val doc = mapper.readTree(got).get("Annotations")
+    assert(doc.size == ips.distinct.length)
+    assert(doc.get("a\"b\\c").get("Geo").get("missing").asBoolean)
+    assert(doc.get("2001:200::1").get("Network").get("asn").asLong == 55967L)
+    // any other input takes the one-job path to the same document
+    same(ips.toDF("ip").repartition(3))
+    assert(same(Seq.empty[String].toDF("ip")) ==
+      """{"AnnotatorDate":"2020-01-01","Annotations":{}}""")
+  }
+
+  test("v2 response rejects a NULL IP, naming the column") {
+    import spark.implicits._
+    val dir = Api.Directory(Seq(snap("2020-01-01")))
+    val out = Api.annotateV2(spark, dir, Date.valueOf("2021-01-01"),
+      Seq(Some("1.0.0.200"), None).toDF("addr"), "addr")
+    val e = intercept[IllegalArgumentException] {
+      Api.toV2ResponseJson(out, Date.valueOf("2020-01-01"), "addr")
+    }
+    assert(e.getMessage.contains("'addr'"))
+  }
+
+  test("a snapshot builds its indexes once: later local batches run no job") {
+    import spark.implicits._
+    val (s1, s2) = (snap("2020-01-01"), snap("2021-01-01"))
+    val old = Api.Directory(Seq(s1))
+    val d = Date.valueOf("2020-06-01")
+    def request(dir: Api.Directory, ips: String*): String =
+      Api.toV2ResponseJson(Api.annotateV2(spark, dir, d, ips.toDF("ip")),
+        dir.forDate(d).date)
+    // the first call reads the snapshot tables and broadcasts the pair
+    assert(jobsRunBy(request(old, "1.0.0.200")) > 0)
+    var body = ""
+    assert(jobsRunBy { body = request(old, "1.0.0.1", "9.9.9.9", "2001:200::1") } == 0)
+    assert(body.contains(""""1.0.0.1":{"Geo":"""))
+    // a refresh that keeps the old snapshot keeps its broadcasts
+    val refreshed = Api.Directory(old.snapshots ++ Seq(s2))
+    val ids = (s: Api.Snapshot) => (s.indexes.geo._1.id, s.indexes.asn._1.id)
+    assert(ids(refreshed.forDate(d)) == ids(s1))
+    assert(jobsRunBy(request(refreshed, "1.0.0.200")) == 0)
+    // a copy with another table is a new snapshot with its own index
+    val copied = s1.copy(geo = s2.geo)
+    assert(copied.indexes.geo._1.id != s1.indexes.geo._1.id)
+    assert(copied.indexes.asn._1.id != s1.indexes.asn._1.id)
   }
 
   test("batch size buckets (P18)") {
