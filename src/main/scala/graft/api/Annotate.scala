@@ -1,7 +1,8 @@
 package graft.api
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -127,23 +128,30 @@ object Annotate {
     * no job, so over a local batch the whole projection folds to a
     * local relation on the driver.
     */
-  def annotate(facts: DataFrame, ipStr: Column, idx: Indexes): DataFrame = {
-    val parsed = facts.withColumn("__ip_bin", ip_to_bin(rewrite6to4(ipStr)))
-    // zero-join fact path: each probe returns its payload struct
-    // straight from the broadcast index (RangeStructLookup)
-    val withGeo = RangeStructLookup
-      .probe(parsed, idx.geo, col("__ip_bin"), "__geo_p")
-      .withColumn("geo", col("__geo_p.geo")).drop("__geo_p")
-    val withAsn = RangeStructLookup
-      .probe(withGeo, idx.asn, col("__ip_bin"), "__net_p")
-      .withColumn("network", col("__net_p.network")).drop("__net_p")
-    withAsn
-      .withColumn("geo", when(col("__ip_bin").isNull || col("geo").isNull,
-        missingGeo).otherwise(col("geo")))
-      .withColumn("network",
-        when(col("__ip_bin").isNull || col("network").isNull,
-          missingNetwork).otherwise(col("network")))
-      .drop("__ip_bin")
+  def annotate(facts: DataFrame, ipStr: Column, idx: Indexes): DataFrame =
+    annotateWith(facts, ipStr,
+      Seq(("geo", idx.geo, missingGeo), ("network", idx.asn, missingNetwork)))
+
+  /** Two projections: parse each IP once, then emit the fact columns
+    * plus each (name, index, missing) group's payload field or
+    * `missing`, replacing a fact column `name` in place (`withColumn`).
+    */
+  private def annotateWith(facts: DataFrame, ipStr: Column,
+      groups: Seq[(String, (Broadcast[RangeStructIndex], StructType), Column)])
+      : DataFrame = {
+    val parsed = castToImpl(facts.select(col("*"),
+      ip_to_bin(rewrite6to4(ipStr)).as("__ip_bin")))
+    val same = parsed.sparkSession.sessionState.conf.resolver
+    val (output, bin) = (parsed.queryExecution.analyzed.output.init,
+      GraftBridge.column(parsed.queryExecution.analyzed.output.last))
+    val emitted = groups.map { case (name, index, missing) =>
+      val hit = RangeStructLookup.payload(bin, index).getField(name)
+      name -> when(hit.isNull, missing).otherwise(hit).as(name)
+    }
+    val kept = output.map(a => emitted.find(e => same(a.name, e._1))
+      .fold(GraftBridge.column(a))(_._2))
+    parsed.select(kept ++ emitted.filterNot(e =>
+      output.exists(a => same(a.name, e._1))).map(_._2): _*)
   }
 
   /** S11 end-to-end legacy path, build side: flatten the legacy range
@@ -188,15 +196,9 @@ object Annotate {
     * data — legacy-dataset.go:129-166 fills api.GeoData.Geo alone).
     */
   def annotateLegacy(spark: SparkSession, facts: DataFrame, ipStr: Column,
-      legacySnapshot: DataFrame): DataFrame = {
-    val parsed = facts.withColumn("__ip_bin", ip_to_bin(rewrite6to4(ipStr)))
-    RangeStructLookup
-      .lookup(spark, parsed, legacySnapshot, col("__ip_bin"), "__geo_p")
-      .withColumn("geo",
-        when(col("__ip_bin").isNull || col("__geo_p").isNull, missingGeo)
-          .otherwise(col("__geo_p.geo")))
-      .drop("__geo_p", "__ip_bin")
-  }
+      legacySnapshot: DataFrame): DataFrame =
+    annotateWith(facts, ipStr, Seq(("geo",
+      RangeStructLookup.buildIndex(spark, legacySnapshot), missingGeo)))
 
   /** {Missing: true} geo placeholder (api.go:50, handler.go:66-76). */
   def missingGeo: Column = struct(

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * [[Snapshot]]'s tables are read once, at its first use, into
   * broadcast range indexes that live exactly as long as the snapshot.
   * After that a request-scale batch (a local `Seq.toDF`) is annotated
-  * and rendered without a Spark job: the whole projection folds to a
-  * local relation on the driver.
+  * and rendered without a Spark job: its two projections (parse, then
+  * probe and emit) fold to a local relation on the driver.
   */
 object Api {
 
@@ -50,7 +50,7 @@ object Api {
   /** v2 batch annotate (handler.go:194-243): one snapshot for the
     * whole batch, per-row annotation through the snapshot's
     * [[Snapshot.indexes]], Missing defaulting inside
-    * [[Annotate.annotate]]. Output: (ip, geo, network).
+    * [[Annotate.annotate]]. Output: the input's columns + geo, network.
     */
   def annotateV2(spark: SparkSession, dir: Directory, date: Date,
       ips: DataFrame, ipCol: String = "ip"): DataFrame =

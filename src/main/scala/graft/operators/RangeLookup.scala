@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -139,9 +140,8 @@ object RangeLookup {
   * join-reattach path's throughput on the probe microbench).
   */
 final class RangeStructIndex(val bounds: RangeIndex,
-    val payloads: Array[org.apache.spark.sql.catalyst.InternalRow])
-  extends Serializable {
-  def searchRow(ip: Array[Byte]): org.apache.spark.sql.catalyst.InternalRow = {
+    val payloads: Array[InternalRow]) extends Serializable {
+  def searchRow(ip: Array[Byte]): InternalRow = {
     val i = bounds.search(ip) // single shared binary-search impl
     if (i < 0) null else payloads(i)
   }
@@ -150,11 +150,8 @@ final class RangeStructIndex(val bounds: RangeIndex,
 /** range_payload(ip) → STRUCT of the matched range's payload columns,
   * NULL on miss. Codegen-friendly; keeps whole-stage codegen intact.
   */
-case class RangePayload(child: org.apache.spark.sql.catalyst.expressions.Expression,
-    bc: Broadcast[RangeStructIndex],
-    payloadSchema: org.apache.spark.sql.types.StructType)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+case class RangePayload(child: Expression, bc: Broadcast[RangeStructIndex],
+    payloadSchema: StructType) extends UnaryExpression {
   override def dataType: DataType = payloadSchema
   override def nullable: Boolean = true
   override protected def nullSafeEval(ip: Any): Any =
@@ -170,17 +167,12 @@ case class RangePayload(child: org.apache.spark.sql.catalyst.expressions.Express
        """.stripMargin
     })
   }
-  override protected def withNewChildInternal(
-      c: org.apache.spark.sql.catalyst.expressions.Expression): RangePayload =
+  override protected def withNewChildInternal(c: Expression): RangePayload =
     copy(child = c)
   override def prettyName: String = "range_payload"
 }
 
 object RangeStructLookup {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-  import org.apache.spark.sql.GraftBridge
-
   /** Build the payload-carrying broadcast index. */
   def buildIndex(spark: SparkSession, ranges: DataFrame,
       loCol: String = "lo", hiCol: String = "hi")
@@ -214,16 +206,15 @@ object RangeStructLookup {
   def lookup(spark: SparkSession, facts: DataFrame, ranges: DataFrame,
       ipCol: Column, as: String = "payload",
       loCol: String = "lo", hiCol: String = "hi"): DataFrame =
-    probe(facts, buildIndex(spark, ranges, loCol, hiCol), ipCol, as)
+    facts.withColumn(as, payload(ipCol, buildIndex(spark, ranges, loCol, hiCol)))
 
-  /** [[lookup]] through an index built earlier by [[buildIndex]]: no
-    * job runs here, so a caller that keeps the index pays its build
-    * once.
+  /** The payload struct `index` holds for binary IP `ip`, NULL on a
+    * miss: a column a caller composes into its own projection.
     */
-  def probe(facts: DataFrame, index: (Broadcast[RangeStructIndex], StructType),
-      ipCol: Column, as: String): DataFrame =
-    facts.withColumn(as, GraftBridge.column(
-      RangePayload(GraftBridge.expression(ipCol), index._1, index._2)))
+  def payload(ip: Column,
+      index: (Broadcast[RangeStructIndex], StructType)): Column =
+    GraftBridge.column(
+      RangePayload(GraftBridge.expression(ip), index._1, index._2))
 }
 
 /** Shuffle path for range tables that outgrow a broadcast: bucket

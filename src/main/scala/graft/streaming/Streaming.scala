@@ -47,8 +47,10 @@ object Streaming {
     annotateStreamTo(spark, requests, dir,
       (out, _) => out.foreach(_ => ()), ipCol, dateCol)
 
-  /** T3 with a caller-supplied sink: annotate then hand the result
-    * DataFrame to `sink` per micro-batch.
+  /** T3 with a caller-supplied sink, called once per date group of a
+    * micro-batch, all with its batch id. At-least-once, so a replay-
+    * safe sink keys its output by (batch id, date): by id alone, an
+    * overwrite keeps only the batch's last date group.
     */
   def annotateStreamTo(spark: SparkSession, requests: DataFrame,
       dir: DirectoryRef, sink: (DataFrame, Long) => Unit,

@@ -1,10 +1,12 @@
 package graft.api
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestSession
+import graft.functions.IpFunctions.{ip_to_bin, rewrite6to4}
+import graft.operators.RangeStructLookup
 import graft.sources.Ingest
 
 /** End-to-end §7.2 slice: fixture CSVs → ingest → flatten → snapshot
@@ -73,6 +75,85 @@ class AnnotateSpec extends AnyFunSuite {
     // unparseable IP → both missing (F5)
     assert(rows("junk").getAs[Row]("geo").getAs[Boolean]("missing"))
     assert(rows("junk").getAs[Row]("network").getAs[Boolean]("missing"))
+  }
+
+  /** The `withColumn` chain the two-projection plan replaced, kept as
+    * the differential oracle for [[Annotate.annotate]].
+    */
+  private def annotateChain(facts: DataFrame, ipStr: Column,
+      idx: Annotate.Indexes): DataFrame = {
+    val parsed = facts.withColumn("__ip_bin", ip_to_bin(rewrite6to4(ipStr)))
+    val withGeo = parsed
+      .withColumn("__geo_p", RangeStructLookup.payload(col("__ip_bin"), idx.geo))
+      .withColumn("geo", col("__geo_p.geo")).drop("__geo_p")
+    val withAsn = withGeo
+      .withColumn("__net_p", RangeStructLookup.payload(col("__ip_bin"), idx.asn))
+      .withColumn("network", col("__net_p.network")).drop("__net_p")
+    withAsn
+      .withColumn("geo", when(col("__ip_bin").isNull || col("geo").isNull,
+        Annotate.missingGeo).otherwise(col("geo")))
+      .withColumn("network",
+        when(col("__ip_bin").isNull || col("network").isNull,
+          Annotate.missingNetwork).otherwise(col("network")))
+      .drop("__ip_bin")
+  }
+
+  /** The same oracle for [[Annotate.annotateLegacy]]. */
+  private def annotateLegacyChain(facts: DataFrame, ipStr: Column,
+      legacySnapshot: DataFrame): DataFrame = {
+    val parsed = facts.withColumn("__ip_bin", ip_to_bin(rewrite6to4(ipStr)))
+    RangeStructLookup
+      .lookup(spark, parsed, legacySnapshot, col("__ip_bin"), "__geo_p")
+      .withColumn("geo",
+        when(col("__ip_bin").isNull || col("__geo_p").isNull,
+          Annotate.missingGeo).otherwise(col("__geo_p.geo")))
+      .drop("__geo_p", "__ip_bin")
+  }
+
+  /** Fact batches the plan must treat like the chain: hits, a miss,
+    * unparseable input, "" and NULL, 6to4 and native v6, a column
+    * name with a dot, and inputs that already carry `geo`/`network`
+    * (one under another case) to be replaced in place.
+    */
+  private def factBatches: Seq[DataFrame] = {
+    import spark.implicits._
+    val ips = Seq(Some("1.0.0.200"), Some("1.0.0.42"), Some("9.9.9.9"),
+      Some("junk"), Some(""), None, Some("2002:100:c8::"),
+      Some("2002:100:2a::"), Some("2001:200::55"), Some("2001:dead::1"))
+    val rows = ips.zipWithIndex
+    val plain = rows.toDF("ip", "a.b")
+    Seq(plain,
+      rows.map { case (ip, i) => (s"n$i", ip, i, i * 2L) }
+        .toDF("network", "ip", "a.b", "geo"),
+      rows.map { case (ip, i) => (ip, s"g$i") }.toDF("ip", "GEO"),
+      plain.repartition(2))
+  }
+
+  private def assertSameAs(got: DataFrame, want: DataFrame): Unit = {
+    assert(got.schema == want.schema, got.schema.treeString)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(got) == rows(want))
+  }
+
+  test("annotate's two projections match the withColumn chain: " +
+      "schema, column order, nullability and rows") {
+    val idx = Annotate.indexes(spark, geoSnap, asnSnap)
+    factBatches.foreach(f => assertSameAs(
+      Annotate.annotate(f, col("ip"), idx), annotateChain(f, col("ip"), idx)))
+    val hits = Annotate.annotate(factBatches.head, col("ip"), idx)
+      .filter(!col("geo.missing") && !col("network.missing")).count()
+    assert(hits == 4) // 1.0.0.200, 1.0.0.42 and their 6to4 forms
+  }
+
+  test("annotateLegacy's two projections match the withColumn chain") {
+    val legacySnap = Annotate.buildLegacySnapshot(
+      Ingest.legacyGeo(spark, fixture("legacy-geo.csv")),
+      Ingest.fipsMap(spark, fixture("fips.csv")))
+    factBatches.foreach(f => assertSameAs(
+      Annotate.annotateLegacy(spark, f, col("ip"), legacySnap),
+      annotateLegacyChain(f, col("ip"), legacySnap)))
+    assert(Annotate.annotateLegacy(spark, factBatches.head, col("ip"),
+      legacySnap).filter(!col("geo.missing")).count() > 0)
   }
 
   test("site annotation: /26 mask exact-match (J6)") {

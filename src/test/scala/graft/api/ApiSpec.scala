@@ -202,6 +202,28 @@ class ApiSpec extends AnyFunSuite {
     assert(copied.indexes.asn._1.id != s1.indexes.asn._1.id)
   }
 
+  test("a v2 request plans two projections and parses each IP once") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    import graft.functions.IpToBin
+    val dir = Api.Directory(Seq(snap("2020-01-01")))
+    val d = Date.valueOf("2020-06-01")
+    val batch = Seq("1.0.0.200", "9.9.9.9").toDF("ip")
+    def analyzed(df: DataFrame) = castToImpl(df).queryExecution.analyzed
+    def projects(p: LogicalPlan) = p.collect { case x: Project => x }.size
+    // every step of a plan is analyzed on its own, and each Project is
+    // one more node the optimizer walks: the request adds at most two
+    assert(projects(analyzed(Api.annotateV2(spark, dir, d, batch))) -
+      projects(analyzed(batch)) <= 2)
+    // over a non-local input the optimizer keeps the parse in its own
+    // projection instead of inlining it into both probes
+    val optimized = castToImpl(Api.annotateV2(spark, dir, d,
+      batch.repartition(2))).queryExecution.optimizedPlan
+    assert(optimized.flatMap(_.expressions.flatMap(_.collect {
+      case e: IpToBin => e })).size == 1, optimized.treeString)
+  }
+
   test("batch size buckets (P18)") {
     import spark.implicits._
     val got = Seq(1, 7, 50, 200, 999).toDF("n")

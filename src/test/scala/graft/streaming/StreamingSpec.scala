@@ -627,10 +627,11 @@ class StreamingSpec extends AnyFunSuite {
     val ref = new Streaming.DirectoryRef(Api.Directory(Seq(snapshot)))
     val attempts = new java.util.concurrent.ConcurrentHashMap[Long, Integer]()
     val failedOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
-    // the replay-safe sink contract: output keyed by batchId, written
-    // with overwrite — a replayed batch REPLACES its own earlier
-    // (possibly partial) output instead of appending a second copy.
-    // foreachBatch is at-least-once by design; idempotence lives here.
+    // the replay-safe sink contract: output keyed by batchId (and by
+    // date, which here is one per batch), written with overwrite — a
+    // replayed batch REPLACES its own earlier (possibly partial)
+    // output instead of appending a second copy. foreachBatch is
+    // at-least-once by design; idempotence lives here.
     def sink(out: org.apache.spark.sql.DataFrame, id: Long): Unit = {
       out.select(col("ip"), col("geo.city").as("city"))
         .write.mode("overwrite").parquet(s"$dir/out/batch=$id")
@@ -661,6 +662,47 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.select("ip", "city").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet ==
       Set(("1.0.0.200", "Scarborough"), ("9.9.9.9", null)))
+  }
+
+  test("annotate sink gets one call per date group of a micro-batch, " +
+      "all with the batch id: a sink keyed by (batchId, date) keeps " +
+      "every row (T3)") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("annotate-dates")
+    // one file → one micro-batch carrying two request dates
+    Seq(("1.0.0.200", Date.valueOf("2021-06-01")),
+      ("1.0.0.130", Date.valueOf("2021-06-02")),
+      ("9.9.9.9", Date.valueOf("2021-06-02")))
+      .toDF("ip", "date").coalesce(1).write.parquet(s"$dir/in")
+
+    val ref = new Streaming.DirectoryRef(Api.Directory(Seq(snapshot)))
+    val calls = scala.collection.mutable.ArrayBuffer[(Long, Set[String])]()
+    def sink(out: org.apache.spark.sql.DataFrame, id: Long): Unit = {
+      calls.synchronized {
+        calls += (id -> out.select("ip").collect().map(_.getString(0)).toSet)
+      }
+      val rows = out.select(col("ip"), col("date"), col("geo.city").as("city"))
+      // keyed by (batchId, date): each call replaces only its own date
+      rows.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("date").parquet(s"$dir/out/batch=$id")
+      // keyed by batchId alone: each call replaces the previous one's
+      rows.write.mode("overwrite").parquet(s"$dir/by-id/batch=$id")
+    }
+    val stream = spark.readStream.schema("ip STRING, date DATE")
+      .parquet(s"$dir/in")
+    val q = Streaming.annotateStreamTo(spark, stream, ref, sink)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(120000)
+
+    assert(calls.size == 2 && calls.map(_._1).toSet == Set(0L), calls)
+    assert(calls.map(_._2).toSet ==
+      Set(Set("1.0.0.200"), Set("1.0.0.130", "9.9.9.9")), calls)
+    assert(spark.read.parquet(s"$dir/out").select("ip", "city").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet ==
+      Set(("1.0.0.200", "Scarborough"), ("1.0.0.130", "Hartford"),
+        ("9.9.9.9", null)))
+    assert(spark.read.parquet(s"$dir/by-id").count() < 3)
   }
 
   test("stream-stream interval join: cross-batch matches equal the batch join") {
