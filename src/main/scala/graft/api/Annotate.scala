@@ -3,8 +3,11 @@ package graft.api
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType,
+  DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.functions.IpFunctions._
 import graft.operators.{RangeStructIndex, RangeStructLookup, Ranges}
@@ -132,26 +135,36 @@ object Annotate {
     annotateWith(facts, ipStr,
       Seq(("geo", idx.geo, missingGeo), ("network", idx.asn, missingNetwork)))
 
-  /** Two projections: parse each IP once, then emit the fact columns
-    * plus each (name, index, missing) group's payload field or
-    * `missing`, replacing a fact column `name` in place (`withColumn`).
+  /** One analyzed plan, `Project(emitted, Project(facts :+ __ip_bin,
+    * facts))`: parse each IP once, then emit the fact columns plus
+    * each (name, index, missing) group's payload field or `missing`,
+    * replacing a fact column `name` in place under the session's
+    * resolver (`withColumn`). Built over the facts' analyzed plan and
+    * analyzed once, by `ofRows`. The probes reach `__ip_bin` by its
+    * alias's `exprId`, so a fact column of that name cannot shadow it.
+    * Columns go through the session's converter, which expands nested
+    * column nodes the analyzer alone leaves unresolved.
     */
   private def annotateWith(facts: DataFrame, ipStr: Column,
       groups: Seq[(String, (Broadcast[RangeStructIndex], StructType), Column)])
       : DataFrame = {
-    val parsed = castToImpl(facts.select(col("*"),
-      ip_to_bin(rewrite6to4(ipStr)).as("__ip_bin")))
-    val same = parsed.sparkSession.sessionState.conf.resolver
-    val (output, bin) = (parsed.queryExecution.analyzed.output.init,
-      GraftBridge.column(parsed.queryExecution.analyzed.output.last))
+    val spark = castToImpl(facts.sparkSession)
+    val input = castToImpl(facts).queryExecution.analyzed
+    val same = spark.sessionState.conf.resolver
+    val bin =
+      Alias(spark.expression(ip_to_bin(rewrite6to4(ipStr))), "__ip_bin")()
+    val binRef = GraftBridge.column(
+      AttributeReference(bin.name, BinaryType)(exprId = bin.exprId))
     val emitted = groups.map { case (name, index, missing) =>
-      val hit = RangeStructLookup.payload(bin, index).getField(name)
-      name -> when(hit.isNull, missing).otherwise(hit).as(name)
+      val hit = RangeStructLookup.payload(binRef, index).getField(name)
+      Alias(spark.expression(when(hit.isNull, missing).otherwise(hit)), name)()
     }
-    val kept = output.map(a => emitted.find(e => same(a.name, e._1))
-      .fold(GraftBridge.column(a))(_._2))
-    parsed.select(kept ++ emitted.filterNot(e =>
-      output.exists(a => same(a.name, e._1))).map(_._2): _*)
+    val kept = input.output.map(a =>
+      emitted.find(e => same(a.name, e.name)).getOrElse(a))
+    val added =
+      emitted.filterNot(e => input.output.exists(a => same(a.name, e.name)))
+    GraftBridge.ofRows(spark,
+      Project(kept ++ added, Project(input.output :+ bin, input)))
   }
 
   /** S11 end-to-end legacy path, build side: flatten the legacy range
@@ -200,32 +213,27 @@ object Annotate {
     annotateWith(facts, ipStr, Seq(("geo",
       RangeStructLookup.buildIndex(spark, legacySnapshot), missingGeo)))
 
+  /** A struct of typed NULL fields and `missing = true`. */
+  private def placeholder(fields: (String, DataType)*): Column =
+    struct(fields.map { case (n, t) => lit(null).cast(t).as(n) } :+
+      lit(true).as("missing"): _*)
+
   /** {Missing: true} geo placeholder (api.go:50, handler.go:66-76). */
-  def missingGeo: Column = struct(
-    lit(null).cast("string").as("continent_code"),
-    lit(null).cast("string").as("country_code"),
-    lit(null).cast("string").as("country_code3"),
-    lit(null).cast("string").as("country_name"),
-    lit(null).cast("string").as("region"),
-    lit(null).cast("string").as("subdivision1_iso_code"),
-    lit(null).cast("string").as("subdivision1_name"),
-    lit(null).cast("string").as("subdivision2_iso_code"),
-    lit(null).cast("string").as("subdivision2_name"),
-    lit(null).cast("long").as("metro_code"),
-    lit(null).cast("string").as("city"),
-    lit(null).cast("long").as("area_code"),
-    lit(null).cast("string").as("postal_code"),
-    lit(null).cast("double").as("latitude"),
-    lit(null).cast("double").as("longitude"),
-    lit(true).as("missing"))
+  val missingGeo: Column = placeholder(
+    "continent_code" -> StringType, "country_code" -> StringType,
+    "country_code3" -> StringType, "country_name" -> StringType,
+    "region" -> StringType, "subdivision1_iso_code" -> StringType,
+    "subdivision1_name" -> StringType, "subdivision2_iso_code" -> StringType,
+    "subdivision2_name" -> StringType, "metro_code" -> LongType,
+    "city" -> StringType, "area_code" -> LongType,
+    "postal_code" -> StringType, "latitude" -> DoubleType,
+    "longitude" -> DoubleType)
 
   /** {Missing: true} network placeholder (api.go:106). */
-  def missingNetwork: Column = struct(
-    lit(null).cast("string").as("cidr"),
-    lit(null).cast("long").as("asn"),
-    lit(null).cast("string").as("as_name"),
-    lit(null).cast("array<struct<asns:array<bigint>>>").as("systems"),
-    lit(true).as("missing"))
+  val missingNetwork: Column = placeholder(
+    "cidr" -> StringType, "asn" -> LongType, "as_name" -> StringType,
+    "systems" -> ArrayType(StructType(Seq(
+      StructField("asns", ArrayType(LongType))))))
 
   /** J6 site-network annotation: mask the request IP to /26 (v4) or
     * /64 (v6) and exact-match the broadcast siteinfo dimension

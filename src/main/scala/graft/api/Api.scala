@@ -2,8 +2,15 @@ package graft.api
 
 import java.sql.Date
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{MapType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Request/response surface (SURVEY §2.1 S12, §3.1-3.2): the Spark
   * shape of the v2 batch API — one as-of dataset selection per batch,
@@ -15,8 +22,9 @@ import org.apache.spark.sql.functions._
   * [[Snapshot]]'s tables are read once, at its first use, into
   * broadcast range indexes that live exactly as long as the snapshot.
   * After that a request-scale batch (a local `Seq.toDF`) is annotated
-  * and rendered without a Spark job: its two projections (parse, then
-  * probe and emit) fold to a local relation on the driver.
+  * and rendered without a Spark job: its one analyzed plan (parse,
+  * then probe and emit) folds to a local relation on the driver and
+  * the response is written from that plan's rows.
   */
 object Api {
 
@@ -58,13 +66,18 @@ object Api {
 
   /** Render a v2 response document: `{"AnnotatorDate": …,
     * "Annotations": {ip: {Geo…, Network…}}}` (api-v2.go:51-55).
-    * to_json drops NULL fields, matching Go's `omitempty`.
+    * NULL fields are dropped, matching Go's `omitempty`.
     *
-    * Spark renders each row's `{"<ip>":{"Geo":…,"Network":…}}` (key
-    * escaping and NULL omission included); the driver keeps the first
-    * row per IP and splices the entries into the document. Over a
-    * local batch the projection folds to a local relation and no job
-    * runs; any other input costs one narrow job.
+    * Executes `annotated`'s own plan once, as a tracked SQL execution
+    * named `collect` (so `QueryExecutionListener`s see the request),
+    * without a second projection, analysis or row encoder. `ipCol`,
+    * `geo` and `network` are resolved under the session's resolver
+    * and read from the plan's rows; the first row per IP is kept, in
+    * row order. The document is written by the generator `to_json`
+    * uses ([[org.apache.spark.sql.GraftBridge.toJson]]), so key
+    * escaping, NULL omission and number format are `to_json`'s. Over a
+    * local batch the plan folds to a local relation and no job runs;
+    * any other input costs one narrow job.
     *
     * REQUEST-scale only: this materializes one JSON string on the
     * driver, faithful to the reference's per-HTTP-request response
@@ -77,25 +90,34 @@ object Api {
     */
   def toV2ResponseJson(annotated: DataFrame, annotatorDate: Date,
       ipCol: String = "ip"): String = {
-    val ip = col(ipCol)
-    val rows = annotated.select(ip, when(ip.isNotNull, to_json(map(ip,
-      struct(col("geo").as("Geo"), col("network").as("Network"))))))
-      .collect()
-    val out = new java.lang.StringBuilder(
-      s"""{"AnnotatorDate":"$annotatorDate","Annotations":{""")
+    val qe = castToImpl(annotated).queryExecution
+    val conf = qe.sparkSession.sessionState.conf
+    def field(name: String): Expression = BindReferences.bindReference(
+      qe.analyzed.resolveQuoted(name, conf.resolver).getOrElse(
+        throw new IllegalArgumentException(s"no column '$name'")),
+      qe.analyzed.output)
+    val (ip, geo, network) = (field(ipCol), field("geo"), field("network"))
+    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
     // a batch may legally repeat an IP (the reference's map just
     // overwrites the key); its rows annotate alike, so keep the first
-    val seen = scala.collection.mutable.HashSet.empty[Any]
+    val entries = new java.util.LinkedHashMap[Any, InternalRow]
     rows.foreach { r =>
-      if (r.isNullAt(0))
+      val key = ip.eval(r)
+      if (key == null)
         throw new IllegalArgumentException(s"NULL in IP column '$ipCol'")
-      if (seen.add(r.get(0))) {
-        if (seen.size > 1) out.append(',')
-        val entry = r.getString(1) // {"<ip>":{…}} → "<ip>":{…}
-        out.append(entry, 1, entry.length - 1)
-      }
+      if (!entries.containsKey(key))
+        entries.put(key, InternalRow(geo.eval(r), network.eval(r)))
     }
-    out.append("}}").toString
+    val entry = StructType(Seq(StructField("Geo", geo.dataType),
+      StructField("Network", network.dataType)))
+    GraftBridge.toJson(
+      StructType(Seq(StructField("AnnotatorDate", StringType),
+        StructField("Annotations", MapType(ip.dataType, entry)))),
+      InternalRow(UTF8String.fromString(annotatorDate.toString),
+        new ArrayBasedMapData(new GenericArrayData(entries.keySet.toArray),
+          new GenericArrayData(entries.values.toArray))),
+      conf.sessionLocalTimeZone)
   }
 
   /** v1 legacy response key: ip + base-36 unix seconds, lower-case

@@ -200,14 +200,6 @@ object RangeStructLookup {
     (spark.sparkContext.broadcast(idx), payloadSchema)
   }
 
-  /** One-expression lookup: adds `as` as a payload struct column
-    * (NULL on miss). The fastest fact-side path — zero joins.
-    */
-  def lookup(spark: SparkSession, facts: DataFrame, ranges: DataFrame,
-      ipCol: Column, as: String = "payload",
-      loCol: String = "lo", hiCol: String = "hi"): DataFrame =
-    facts.withColumn(as, payload(ipCol, buildIndex(spark, ranges, loCol, hiCol)))
-
   /** The payload struct `index` holds for binary IP `ip`, NULL on a
     * miss: a column a caller composes into its own projection.
     */

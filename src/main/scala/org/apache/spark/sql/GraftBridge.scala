@@ -61,6 +61,22 @@ object GraftBridge {
     classic.Dataset.ofRows(
       classic.ClassicConversions.castToImpl(spark), plan)
 
+  /** `row` of `schema` as one JSON document, written by the generator
+    * `to_json` uses (`JacksonGenerator` with default `JSONOptions`):
+    * its key escaping, number format and NULL-field omission
+    * (`spark.sql.jsonGenerator.ignoreNullFields`). Lets a driver-side
+    * renderer write Catalyst rows without a `to_json` projection.
+    */
+  def toJson(schema: types.StructType, row: catalyst.InternalRow,
+      timeZoneId: String): String = {
+    val out = new java.io.CharArrayWriter
+    val gen = new catalyst.json.JacksonGenerator(schema, out,
+      new catalyst.json.JSONOptions(Map.empty[String, String], timeZoneId))
+    gen.write(row)
+    gen.flush()
+    out.toString
+  }
+
   /** The ANALYZED logical plan of a DataFrame. */
   def analyzedPlan(df: Dataset[_]): catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed

@@ -102,8 +102,8 @@ class AnnotateSpec extends AnyFunSuite {
   private def annotateLegacyChain(facts: DataFrame, ipStr: Column,
       legacySnapshot: DataFrame): DataFrame = {
     val parsed = facts.withColumn("__ip_bin", ip_to_bin(rewrite6to4(ipStr)))
-    RangeStructLookup
-      .lookup(spark, parsed, legacySnapshot, col("__ip_bin"), "__geo_p")
+    parsed.withColumn("__geo_p", RangeStructLookup.payload(col("__ip_bin"),
+        RangeStructLookup.buildIndex(spark, legacySnapshot)))
       .withColumn("geo",
         when(col("__ip_bin").isNull || col("__geo_p").isNull,
           Annotate.missingGeo).otherwise(col("__geo_p.geo")))

@@ -145,13 +145,14 @@ class ApiSpec extends AnyFunSuite {
     // value would win, so the parser refuses duplicates
     val mapper = new ObjectMapper()
       .enable(JsonParser.Feature.STRICT_DUPLICATE_DETECTION)
-    def same(ips: DataFrame): String = {
-      val out = Api.annotateV2(spark, dir, date, ips)
+    def agrees(out: DataFrame): String = {
       val got = Api.toV2ResponseJson(out, date)
       assert(mapper.readTree(got) == mapper.readTree(aggregateJson(out, date)),
         got)
       got
     }
+    def same(ips: DataFrame): String =
+      agrees(Api.annotateV2(spark, dir, date, ips))
     // duplicates, a miss, unparseable strings, 6to4, native v6 and a
     // key that needs escaping
     val ips = Seq("1.0.0.200", "9.9.9.9", "1.0.0.200", "nope", "",
@@ -165,6 +166,27 @@ class ApiSpec extends AnyFunSuite {
     same(ips.toDF("ip").repartition(3))
     assert(same(Seq.empty[String].toDF("ip")) ==
       """{"AnnotatorDate":"2020-01-01","Annotations":{}}""")
+    // the IP column under another case resolves as `col("ip")` does
+    same(ips.toDF("IP"))
+    // a frame with extra columns: v1's output carries `key`, and its
+    // repeated IPs have different keys
+    val ts = (i: Int) => new Timestamp(1609459200000L + i * 1000L)
+    val valid = Seq("1.0.0.200", "9.9.9.9", "1.0.0.200", "2002:100:c8::",
+      "2001:200::1", "9.9.9.9")
+    agrees(Api.annotateV1(spark, dir,
+      valid.zipWithIndex.map { case (ip, i) => (ip, ts(i)) }.toDF("ip", "ts")))
+    // a batch at the service's largest size, with repeats, hits and
+    // misses over both families, local and distributed
+    val big = (0 until 599).map(i => i % 5 match {
+      case 0 => "1.0.0.200"
+      case 1 => s"1.0.${i % 3}.${i % 256}"
+      case 2 => s"2001:200::${i % 40}"
+      case 3 => s"9.9.${i % 7}.9"
+      case _ => s"2002:100:${i % 4}::"
+    })
+    val bigDoc = mapper.readTree(same(big.toDF("ip"))).get("Annotations")
+    assert(bigDoc.size == big.distinct.length && big.distinct.length < 599)
+    same(big.toDF("ip").repartition(3))
   }
 
   test("v2 response rejects a NULL IP, naming the column") {
@@ -222,6 +244,36 @@ class ApiSpec extends AnyFunSuite {
       batch.repartition(2))).queryExecution.optimizedPlan
     assert(optimized.flatMap(_.expressions.flatMap(_.collect {
       case e: IpToBin => e })).size == 1, optimized.treeString)
+  }
+
+  test("a warm v2 request runs one tracked execution and no job") {
+    import spark.implicits._
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Api.Directory(Seq(snap("2020-01-01")))
+    val d = Date.valueOf("2020-06-01")
+    def request(): String = Api.toV2ResponseJson(Api.annotateV2(spark,
+      dir, d, Seq("1.0.0.200", "9.9.9.9", "1.0.0.200").toDF("ip")),
+      dir.forDate(d).date)
+    request() // builds the snapshot's indexes
+    val successes = new AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        successes.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    // drain earlier events first; the listener shares the bus queue the
+    // marker job drains, so every success is counted once body returns
+    jobsRunBy(())
+    castToImpl(spark).listenerManager.register(listener)
+    try assert(jobsRunBy(request()) == 0)
+    finally castToImpl(spark).listenerManager.unregister(listener)
+    assert(successes.get == 1)
+    // the placeholders are values, built once
+    assert(Annotate.missingGeo eq Annotate.missingGeo)
+    assert(Annotate.missingNetwork eq Annotate.missingNetwork)
   }
 
   test("batch size buckets (P18)") {
