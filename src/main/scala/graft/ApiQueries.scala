@@ -265,7 +265,8 @@ object ApiQueries {
             Annotate.annotateLegacy(s, f, col("ip"), legacySnap)
               .withColumn("network", Annotate.missingNetwork)),
           modern = f => shared(
-            Annotate.annotate(s, f, col("ip"), geoSnap, asnSnap)))
+            Annotate.annotate(f, col("ip"),
+              Annotate.indexes(s, geoSnap, asnSnap))))
         .orderBy("ip")
     }))
 

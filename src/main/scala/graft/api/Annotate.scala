@@ -115,39 +115,41 @@ object Annotate {
   /** Annotate facts with both snapshot groups (J8 composite): one
     * probe per group, first-writer-wins by construction (each group
     * owns its output struct), misses defaulted to {missing: true}
-    * (P16, handler.go:66-76). Builds both indexes on every call; a
-    * caller that annotates against the same snapshot again keeps the
-    * [[indexes]] and calls the indexed overload, as `Api.Snapshot`
-    * does.
+    * (P16, handler.go:66-76). Plans the probe and runs no job, so over
+    * a local batch the whole projection folds to a local relation on
+    * the driver.
     *
     * @param ipStr string IP column; 2002::/16 addresses are 6to4-
     *              rewritten first (handler.go:211-214)
     */
-  def annotate(spark: SparkSession, facts: DataFrame, ipStr: Column,
-      geoSnapshot: DataFrame, asnSnapshot: DataFrame): DataFrame =
-    annotate(facts, ipStr, indexes(spark, geoSnapshot, asnSnapshot))
-
-  /** [[annotate]] through prebuilt indexes: plans the probe and runs
-    * no job, so over a local batch the whole projection folds to a
-    * local relation on the driver.
-    */
   def annotate(facts: DataFrame, ipStr: Column, idx: Indexes): DataFrame =
-    annotateWith(facts, ipStr,
-      Seq(("geo", idx.geo, missingGeo), ("network", idx.asn, missingNetwork)))
+    annotatePicked(facts, ipStr, probe => probe(idx))
+
+  /** [[annotate]] through the indexes `pick` chooses per row:
+    * `pick(probe)` is the column of `probe(indexes)` over the row's
+    * indexes, e.g. a `CaseWhen` over several snapshots' probes.
+    */
+  private[api] def annotatePicked(facts: DataFrame, ipStr: Column,
+      pick: (Indexes => Column) => Column): DataFrame =
+    annotateWith(facts, ipStr, Seq(
+      ("geo", bin => pick(i => RangeStructLookup.payload(bin, i.geo)),
+        missingGeo),
+      ("network", bin => pick(i => RangeStructLookup.payload(bin, i.asn)),
+        missingNetwork)))
 
   /** One analyzed plan, `Project(emitted, Project(facts :+ __ip_bin,
     * facts))`: parse each IP once, then emit the fact columns plus
-    * each (name, index, missing) group's payload field or `missing`,
-    * replacing a fact column `name` in place under the session's
-    * resolver (`withColumn`). Built over the facts' analyzed plan and
-    * analyzed once, by `ofRows`. The probes reach `__ip_bin` by its
-    * alias's `exprId`, so a fact column of that name cannot shadow it.
+    * each (name, payload, missing) group's field `name` of
+    * `payload(__ip_bin)`, or `missing` where that is NULL, replacing a
+    * fact column `name` in place under the session's resolver
+    * (`withColumn`). Built over the facts' analyzed plan and analyzed
+    * once, by `ofRows`. The probes reach `__ip_bin` by its alias's
+    * `exprId`, so a fact column of that name cannot shadow it.
     * Columns go through the session's converter, which expands nested
     * column nodes the analyzer alone leaves unresolved.
     */
   private def annotateWith(facts: DataFrame, ipStr: Column,
-      groups: Seq[(String, (Broadcast[RangeStructIndex], StructType), Column)])
-      : DataFrame = {
+      groups: Seq[(String, Column => Column, Column)]): DataFrame = {
     val spark = castToImpl(facts.sparkSession)
     val input = castToImpl(facts).queryExecution.analyzed
     val same = spark.sessionState.conf.resolver
@@ -155,8 +157,8 @@ object Annotate {
       Alias(spark.expression(ip_to_bin(rewrite6to4(ipStr))), "__ip_bin")()
     val binRef = GraftBridge.column(
       AttributeReference(bin.name, BinaryType)(exprId = bin.exprId))
-    val emitted = groups.map { case (name, index, missing) =>
-      val hit = RangeStructLookup.payload(binRef, index).getField(name)
+    val emitted = groups.map { case (name, payload, missing) =>
+      val hit = payload(binRef).getField(name)
       Alias(spark.expression(when(hit.isNull, missing).otherwise(hit)), name)()
     }
     val kept = input.output.map(a =>
@@ -209,9 +211,11 @@ object Annotate {
     * data — legacy-dataset.go:129-166 fills api.GeoData.Geo alone).
     */
   def annotateLegacy(spark: SparkSession, facts: DataFrame, ipStr: Column,
-      legacySnapshot: DataFrame): DataFrame =
-    annotateWith(facts, ipStr, Seq(("geo",
-      RangeStructLookup.buildIndex(spark, legacySnapshot), missingGeo)))
+      legacySnapshot: DataFrame): DataFrame = {
+    val index = RangeStructLookup.buildIndex(spark, legacySnapshot)
+    annotateWith(facts, ipStr,
+      Seq(("geo", RangeStructLookup.payload(_, index), missingGeo)))
+  }
 
   /** A struct of typed NULL fields and `missing = true`. */
   private def placeholder(fields: (String, DataType)*): Column =

@@ -43,16 +43,31 @@ object Api {
 
   /** The annotator directory: date-sorted snapshots with the as-of
     * pick rule of directory.go:230-240 (latest ≤ d, clamp to
-    * earliest).
+    * earliest). A NULL date takes the earliest snapshot, the
+    * reference's clamp of the zero time. Of two snapshots on one date
+    * the later-listed one wins.
     */
   final case class Directory(snapshots: Seq[Snapshot]) {
     require(snapshots.nonEmpty, "empty directory")
-    private val sorted = snapshots.sortBy(_.date.getTime)
-    def forDate(d: Date): Snapshot = {
-      val earlier = sorted.takeWhile(!_.date.after(d))
-      earlier.lastOption.getOrElse(sorted.head)
-    }
-    def latest: Snapshot = sorted.last
+    private val latestFirst = snapshots.sortBy(_.date.getTime).reverse
+    def forDate(d: Date): Snapshot =
+      Option(d).flatMap(d => latestFirst.find(!_.date.after(d)))
+        .getOrElse(latestFirst.last)
+    def latest: Snapshot = latestFirst.head
+
+    /** [[forDate]] per row, as one column: a `CaseWhen` over the
+      * snapshot dates, latest first, whose branch for snapshot `s` is
+      * `branch(s)` and whose ELSE branch (dates before the earliest
+      * snapshot, and NULL) is the earliest snapshot's.
+      */
+    def asOf(date: Column)(branch: Snapshot => Column): Column =
+      latestFirst.init match {
+        case Seq() => branch(latestFirst.last)
+        case s +: rest =>
+          rest.foldLeft(when(date >= lit(s.date), branch(s))) { (c, s) =>
+            c.when(date >= lit(s.date), branch(s))
+          }.otherwise(branch(latestFirst.last))
+      }
   }
 
   /** v2 batch annotate (handler.go:194-243): one snapshot for the
@@ -63,6 +78,16 @@ object Api {
   def annotateV2(spark: SparkSession, dir: Directory, date: Date,
       ips: DataFrame, ipCol: String = "ip"): DataFrame =
     Annotate.annotate(ips, col(ipCol), dir.forDate(date).indexes)
+
+  /** [[annotateV2]] with the as-of pick made per row, in the one plan
+    * [[Annotate.annotate]] builds: each probe is a [[Directory.asOf]]
+    * column over every snapshot's [[Snapshot.indexes]], all of which
+    * are built (once per snapshot) when the plan is.
+    */
+  def annotateAsOf(facts: DataFrame, ip: Column, date: Column,
+      dir: Directory): DataFrame =
+    Annotate.annotatePicked(facts, ip,
+      probe => dir.asOf(date)(s => probe(s.indexes)))
 
   /** Render a v2 response document: `{"AnnotatorDate": …,
     * "Annotations": {ip: {Geo…, Network…}}}` (api-v2.go:51-55).

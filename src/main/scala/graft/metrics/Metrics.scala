@@ -98,13 +98,6 @@ object Metrics {
     df.groupBy(bucket.as("le")).agg(count(lit(1)).as("n")).orderBy("le")
   }
 
-  /** A5: per-class counts (missing-annotation tallies, lookup
-    * classes, dataset counts).
-    */
-  def cardinalityStats(df: DataFrame, classCol: Column): DataFrame =
-    df.groupBy(classCol.as("class")).agg(count(lit(1)).as("n"))
-      .orderBy("class")
-
   /** Missing-annotation tallies over an annotated frame
     * (handler.go:352-379 analogue).
     */

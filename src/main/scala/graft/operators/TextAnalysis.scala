@@ -389,15 +389,6 @@ object TextAnalysis {
   private[operators] def tokenCountComposed(text: Column): Column =
     size(tokens(text))
 
-  /** BPE-ish subword count: alpha runs, digit runs, and single
-    * punctuation marks each count as one token — a cheap, stable
-    * proxy for byte-pair tokenizer budgets.
-    */
-  def bpeishTokenCount(text: Column): Column =
-    size(filter(
-      split(text, "(?<=[^A-Za-z0-9])|(?=[^A-Za-z0-9])"),
-      t => length(trim(t)) > 0))
-
   /** Ratio of tokens found in `words`, 0.0 for empty docs. */
   def wordHitRatio(text: Column, words: Seq[String]): Column = {
     val st = graft.functions.TokenFunctions.token_stats(lower(text), words)

@@ -2,7 +2,9 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.concurrent.ExecutionContext
+
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, StreamingQuery, Trigger}
 
@@ -35,41 +37,30 @@ object Streaming {
   }
 
   /** T3 request stream: annotate each micro-batch against the
-    * directory current at batch time. Batches may carry several
-    * request dates; each date group gets its own as-of snapshot
-    * (a superset of the reference's one-date-per-batch contract).
-    */
-  def annotateStream(spark: SparkSession, requests: DataFrame,
-      dir: DirectoryRef, ipCol: String = "ip",
-      dateCol: String = "date"): DataStreamWriter[org.apache.spark.sql.Row] =
-    // distributed terminal action per batch — results never funnel
-    // through the driver; use annotateStreamTo for a real sink
-    annotateStreamTo(spark, requests, dir,
-      (out, _) => out.foreach(_ => ()), ipCol, dateCol)
-
-  /** T3 with a caller-supplied sink, called once per date group of a
-    * micro-batch, all with its batch id. At-least-once, so a replay-
-    * safe sink keys its output by (batch id, date): by id alone, an
-    * overwrite keeps only the batch's last date group.
+    * directory current at batch time, each row through the as-of
+    * snapshot of its own date ([[Api.annotateAsOf]]: a NULL date takes
+    * the earliest), and call `sink` once per micro-batch, whatever its
+    * dates, with its batch id. At-least-once, so a replay-safe sink
+    * keys its output by batch id alone.
+    *
+    * Each micro-batch is one request-size observation
+    * (handler.go:270-283 via `Metrics.observeRequestBatch`): the sink
+    * call's time and the row count `Dataset.observe` takes in the
+    * sink's first action, recorded once that action's listener event
+    * arrives. A sink that runs no action records none, and no one waits.
     */
   def annotateStreamTo(spark: SparkSession, requests: DataFrame,
       dir: DirectoryRef, sink: (DataFrame, Long) => Unit,
       ipCol: String = "ip", dateCol: String = "date")
       : DataStreamWriter[org.apache.spark.sql.Row] =
     requests.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      val d = dir.get
-      // one job for BOTH the date groups and their sizes — the sizes
-      // feed the reference-parity request-size bucket observations
-      // (handler.go:270-283 via Metrics.observeRequestBatch)
-      val dates = batch.groupBy(dateCol).count().collect()
-        .map(r => (r.getDate(0), r.getLong(1)))
-      dates.foreach { case (dt, n) =>
-        val t0 = System.nanoTime()
-        sink(Api.annotateV2(spark, d, dt,
-          batch.filter(col(dateCol) === lit(dt)), ipCol), id)
-        graft.metrics.Metrics.observeRequestBatch("v2", n,
-          System.nanoTime() - t0)
-      }
+      val rows = Observation()
+      val t0 = System.nanoTime()
+      sink(Api.annotateAsOf(batch, col(ipCol), col(dateCol), dir.get)
+        .observe(rows, count(lit(1))), id)
+      val nanos = System.nanoTime() - t0
+      rows.future.foreach(r => graft.metrics.Metrics.observeRequestBatch(
+        "v2", r.getLong(0), nanos))(ExecutionContext.parasitic)
     }
 
   /** T1/T2 event-driven refresh: watch a path for new dataset files

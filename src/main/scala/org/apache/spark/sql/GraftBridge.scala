@@ -49,12 +49,6 @@ object GraftBridge {
       exp.extraOptimizations = exp.extraOptimizations :+ r
   }
 
-  def removeOptimization(spark: SparkSession,
-      r: catalyst.rules.Rule[catalyst.plans.logical.LogicalPlan]): Unit = {
-    val exp = classic.ClassicConversions.castToImpl(spark).experimental
-    exp.extraOptimizations = exp.extraOptimizations.filterNot(_ eq r)
-  }
-
   /** Wrap a (resolved) logical plan as a DataFrame on this session. */
   def ofRows(spark: SparkSession,
       plan: catalyst.plans.logical.LogicalPlan): DataFrame =

@@ -29,7 +29,7 @@ class AnnotateSpec extends AnyFunSuite {
   private def annotateIps(ips: String*): Map[String, Row] = {
     import spark.implicits._
     val facts = ips.toDF("ip")
-    Annotate.annotate(spark, facts, col("ip"), geoSnap, asnSnap)
+    Annotate.annotate(facts, col("ip"), Annotate.indexes(spark, geoSnap, asnSnap))
       .collect().map(r => r.getAs[String]("ip") -> r).toMap
   }
 
@@ -247,7 +247,8 @@ class AnnotateSpec extends AnyFunSuite {
         java.sql.Date.valueOf("2017-08-15"),
         legacy = f => Annotate.annotateLegacy(spark, f, col("ip"), legacySnap)
           .select("ip", "d", "geo"),
-        modern = f => Annotate.annotate(spark, f, col("ip"), geoSnap, asnSnap)
+        modern = f => Annotate.annotate(f, col("ip"),
+            Annotate.indexes(spark, geoSnap, asnSnap))
           .select("ip", "d", "geo"))
       .collect().map(r => r.getAs[String]("ip") -> r.getAs[Row]("geo")).toMap
     // pre-cutoff row went through legacy: country_code3 + area_code set
@@ -291,7 +292,8 @@ class AnnotateSpec extends AnyFunSuite {
         Catalog.GeoLite2StartDate,
         legacy = f => Annotate.annotateLegacy(spark, f, col("ip"), legacySnap)
           .select("ip", "d", "geo"),
-        modern = f => Annotate.annotate(spark, f, col("ip"), geoSnap, asnSnap)
+        modern = f => Annotate.annotate(f, col("ip"),
+            Annotate.indexes(spark, geoSnap, asnSnap))
           .select("ip", "d", "geo"))
       .collect().map(r => r.getAs[String]("ip") -> r.getAs[Row]("geo")).toMap
     // pre-cutoff row resolved through the binary legacy snapshot

@@ -8,7 +8,7 @@ import com.fasterxml.jackson.core.JsonParser
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestSession
@@ -74,6 +74,54 @@ class ApiSpec extends AnyFunSuite {
     assert(dir.forDate(Date.valueOf("2020-06-01")).date.toString == "2020-01-01")
     assert(dir.forDate(Date.valueOf("2021-01-01")).date.toString == "2021-01-01")
     assert(dir.forDate(Date.valueOf("2019-01-01")).date.toString == "2020-01-01")
+    // a NULL date takes the earliest snapshot, as a date before it does
+    assert(dir.forDate(null).date.toString == "2020-01-01")
+  }
+
+  test("the per-row as-of pick equals per-date annotateV2 and forDate") {
+    import spark.implicits._
+    // three snapshots whose payloads carry their own date (city and AS
+    // name), the latest missing the Hartford range, listed out of order
+    def marked(d: String, dropCity: String = ""): Api.Snapshot = {
+      val s = snap(d)
+      s.copy(
+        geo = s.geo.filter(coalesce(col("geo.city"), lit("")) =!= dropCity)
+          .withColumn("geo", col("geo").withField("city",
+            concat_ws("@", col("geo.city"), lit(d)))),
+        asn = s.asn.withColumn("network",
+          col("network").withField("as_name", lit(d))))
+    }
+    val dir = Api.Directory(Seq(marked("2021-01-01"),
+      marked("2022-01-01", dropCity = "Hartford"), marked("2020-01-01")))
+    // before the earliest, on each snapshot date, between snapshots,
+    // after the latest, and NULL
+    val dates = Seq("2019-06-01", "2020-01-01", "2020-06-01", "2021-01-01",
+      "2021-06-01", "2022-01-01", "2023-01-01").map(Date.valueOf) :+
+      (null: Date)
+    val ips = Seq("1.0.0.200", "1.0.0.130", "1.0.1.50", "9.9.9.9",
+      "2002:100:c8::", "2001:200::1", "junk")
+    val facts = (for (d <- dates; ip <- ips) yield (ip, d)).toDF("ip", "date")
+      .repartition(3)
+    def rows(df: DataFrame) = df.collect().map(r =>
+      (r.getAs[String]("ip"), Option(r.getAs[Date]("date"))) -> r).toMap
+    val perRow = rows(Api.annotateAsOf(facts, col("ip"), col("date"), dir))
+    val perDate = dates.map { d =>
+      val day = if (d == null) col("date").isNull else col("date") === lit(d)
+      rows(Api.annotateV2(spark, dir, d, facts.filter(day)))
+    }.reduce(_ ++ _)
+    assert(perRow.size == dates.size * ips.size)
+    assert(perRow == perDate)
+    // each row's payload is the one of the snapshot forDate picks
+    dates.foreach { d =>
+      val r = perRow(("1.0.0.200", Option(d)))
+      val picked = dir.forDate(d).date.toString
+      assert(r.getAs[Row]("network").getAs[String]("as_name") == picked)
+      assert(r.getAs[Row]("geo").getAs[String]("city") == s"Scarborough@$picked")
+      assert(perRow(("1.0.0.130", Option(d))).getAs[Row]("geo")
+        .getAs[Boolean]("missing") == (picked == "2022-01-01"))
+    }
+    assert(dates.map(d => dir.forDate(d).date.toString).distinct ==
+      Seq("2020-01-01", "2021-01-01", "2022-01-01"))
   }
 
   test("v2 response JSON: original-key map, omit-empty nulls (S12)") {

@@ -64,28 +64,33 @@ class SplitMetricsSpec extends AnyFunSuite {
         Ingest.asNames(spark, fixture("asnames.csv"))))
     val ref = new Streaming.DirectoryRef(Api.Directory(Seq(snapshot)))
     import spark.implicits._
-    // three date groups sized 3 / 6 / 25 — one served "request batch"
-    // each, per the reference's one-date-per-request contract
-    val reqs =
-      (1 to 3).map(i => (s"1.0.0.$i", Date.valueOf("2020-01-01"))) ++
-      (1 to 6).map(i => (s"1.0.0.$i", Date.valueOf("2020-01-02"))) ++
-      (1 to 25).map(i => (s"1.0.0.$i", Date.valueOf("2020-01-03")))
+    // three files sized 3 / 6 / 25, one micro-batch each
+    // (maxFilesPerTrigger 1) — one served "request batch" each
     val dir = java.nio.file.Files.createTempDirectory("sizebuckets")
-    reqs.toDF("ip", "date").write.parquet(s"$dir/in")
-    val stream = spark.readStream
-      .schema("ip string, date date").parquet(s"$dir/in")
+    Seq(3 -> "2020-01-01", 6 -> "2020-01-02", 25 -> "2020-01-03").foreach {
+      case (n, d) =>
+        (1 to n).map(i => (s"1.0.0.$i", Date.valueOf(d))).toDF("ip", "date")
+          .coalesce(1).write.mode("append").parquet(s"$dir/in")
+    }
+    val stream = spark.readStream.schema("ip string, date date")
+      .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
     def bucketCount(b: String): Long =
       Metrics.registry.get(s"request_time_hist{source=v2,size=$b}")
-    val before = Seq("<5", "5+", "20+").map(b => b -> bucketCount(b)).toMap
+    val buckets = Seq("<5", "5+", "20+")
+    val before = buckets.map(b => b -> bucketCount(b)).toMap
     val q = Streaming.annotateStreamTo(spark, stream, ref,
         (out, _) => { out.count(); () })
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination(120000)
+    // an observation lands when its batch's listener event is delivered
+    val deadline = System.currentTimeMillis() + 30000
+    while (buckets.exists(b => bucketCount(b) <= before(b)) &&
+      System.currentTimeMillis() < deadline) Thread.sleep(50)
     assert(bucketCount("<5") == before("<5") + 1)
     assert(bucketCount("5+") == before("5+") + 1)
     assert(bucketCount("20+") == before("20+") + 1)
-    // and time was observed for each served group
+    // and time was observed for each served batch
     assert(Metrics.registry.snapshot.keys.exists(
       _.startsWith("request_time_usec_total{source=v2")))
   }

@@ -184,8 +184,8 @@ class CatalogSpec extends AnyFunSuite {
       lit(null).cast("string").as("subdivision_2_name"),
       concat(lit("City"), col("k").cast("string")).as("city_name"),
       (col("k") * 10).cast("long").as("metro_code"))
-    val direct = shape(Annotate.annotate(spark, reqs, col("ip"),
-      Annotate.buildGeoSnapshot(directBlocks, directLocs), asnSnap))
+    val direct = shape(Annotate.annotate(reqs, col("ip"), Annotate.indexes(
+      spark, Annotate.buildGeoSnapshot(directBlocks, directLocs), asnSnap)))
     assert(fromTree == direct)
   }
 

@@ -627,11 +627,10 @@ class StreamingSpec extends AnyFunSuite {
     val ref = new Streaming.DirectoryRef(Api.Directory(Seq(snapshot)))
     val attempts = new java.util.concurrent.ConcurrentHashMap[Long, Integer]()
     val failedOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
-    // the replay-safe sink contract: output keyed by batchId (and by
-    // date, which here is one per batch), written with overwrite — a
-    // replayed batch REPLACES its own earlier (possibly partial)
-    // output instead of appending a second copy. foreachBatch is
-    // at-least-once by design; idempotence lives here.
+    // the replay-safe sink contract: output keyed by batchId, written
+    // with overwrite — a replayed batch REPLACES its own earlier
+    // (possibly partial) output instead of appending a second copy.
+    // foreachBatch is at-least-once by design; idempotence lives here.
     def sink(out: org.apache.spark.sql.DataFrame, id: Long): Unit = {
       out.select(col("ip"), col("geo.city").as("city"))
         .write.mode("overwrite").parquet(s"$dir/out/batch=$id")
@@ -664,29 +663,43 @@ class StreamingSpec extends AnyFunSuite {
       Set(("1.0.0.200", "Scarborough"), ("9.9.9.9", null)))
   }
 
-  test("annotate sink gets one call per date group of a micro-batch, " +
-      "all with the batch id: a sink keyed by (batchId, date) keeps " +
-      "every row (T3)") {
+  /** [[snapshot]] dated `d`, whose city and AS name carry `d`, so a
+    * row's as-of pick shows in its payload.
+    */
+  private def marked(d: String): Api.Snapshot = snapshot.copy(
+    date = Date.valueOf(d),
+    geo = snapshot.geo.withColumn("geo", col("geo").withField("city",
+      concat(col("geo.city"), lit(s"@$d")))),
+    asn = snapshot.asn.withColumn("network",
+      col("network").withField("as_name", lit(d))))
+
+  /** One file carrying two request dates: one micro-batch. */
+  private def twoDateBatch(name: String): java.nio.file.Path = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("annotate-dates")
-    // one file → one micro-batch carrying two request dates
+    val dir = java.nio.file.Files.createTempDirectory(name)
     Seq(("1.0.0.200", Date.valueOf("2021-06-01")),
       ("1.0.0.130", Date.valueOf("2021-06-02")),
       ("9.9.9.9", Date.valueOf("2021-06-02")))
       .toDF("ip", "date").coalesce(1).write.parquet(s"$dir/in")
+    dir
+  }
 
-    val ref = new Streaming.DirectoryRef(Api.Directory(Seq(snapshot)))
+  test("annotate sink gets one call per micro-batch carrying every " +
+      "date, each row against its own as-of snapshot: a sink keyed by " +
+      "batchId alone keeps every row (T3)") {
+    val dir = twoDateBatch("annotate-dates")
+    val ref = new Streaming.DirectoryRef(
+      Api.Directory(Seq(marked("2021-06-02"), marked("2021-06-01"))))
     val calls = scala.collection.mutable.ArrayBuffer[(Long, Set[String])]()
     def sink(out: org.apache.spark.sql.DataFrame, id: Long): Unit = {
       calls.synchronized {
         calls += (id -> out.select("ip").collect().map(_.getString(0)).toSet)
       }
-      val rows = out.select(col("ip"), col("date"), col("geo.city").as("city"))
-      // keyed by (batchId, date): each call replaces only its own date
-      rows.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("date").parquet(s"$dir/out/batch=$id")
-      // keyed by batchId alone: each call replaces the previous one's
-      rows.write.mode("overwrite").parquet(s"$dir/by-id/batch=$id")
+      // keyed by batchId alone: a second call for this id would
+      // replace the first one's rows
+      out.select(col("ip"), col("date"), col("geo.city").as("city"),
+          col("network.as_name").as("as_name"))
+        .write.mode("overwrite").parquet(s"$dir/by-id/batch=$id")
     }
     val stream = spark.readStream.schema("ip STRING, date DATE")
       .parquet(s"$dir/in")
@@ -695,14 +708,55 @@ class StreamingSpec extends AnyFunSuite {
       .start()
     q.awaitTermination(120000)
 
-    assert(calls.size == 2 && calls.map(_._1).toSet == Set(0L), calls)
-    assert(calls.map(_._2).toSet ==
-      Set(Set("1.0.0.200"), Set("1.0.0.130", "9.9.9.9")), calls)
-    assert(spark.read.parquet(s"$dir/out").select("ip", "city").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet ==
-      Set(("1.0.0.200", "Scarborough"), ("1.0.0.130", "Hartford"),
-        ("9.9.9.9", null)))
-    assert(spark.read.parquet(s"$dir/by-id").count() < 3)
+    assert(calls.toSeq ==
+      Seq(0L -> Set("1.0.0.200", "1.0.0.130", "9.9.9.9")), calls)
+    assert(spark.read.parquet(s"$dir/by-id")
+      .select("ip", "city", "as_name").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet ==
+      Set(("1.0.0.200", "Scarborough@2021-06-01", "2021-06-01"),
+        ("1.0.0.130", "Hartford@2021-06-02", "2021-06-02"),
+        ("9.9.9.9", null, null)))
+  }
+
+  test("a micro-batch carrying two dates, into a one-action sink, " +
+      "runs one Spark job (T3)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = twoDateBatch("annotate-jobs")
+    val d = Api.Directory(Seq(marked("2021-06-01"), marked("2021-06-02")))
+    d.snapshots.foreach(_.indexes) // built once per snapshot, not per batch
+    val sc = spark.sparkContext
+    val marker = s"annotate-jobs-${java.util.UUID.randomUUID}"
+    val queries = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).foreach { p =>
+          if (p.getProperty("spark.job.description") == marker)
+            drained.countDown()
+          Option(p.getProperty("sql.streaming.queryId")).foreach(queries.add)
+        }
+    }
+    sc.addSparkListener(l)
+    val rows = new java.util.concurrent.atomic.AtomicLong
+    val q = try {
+      val q = Streaming.annotateStreamTo(spark,
+          spark.readStream.schema("ip STRING, date DATE").parquet(s"$dir/in"),
+          new Streaming.DirectoryRef(d),
+          (out, _) => { rows.addAndGet(out.collect().length); () })
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(120000)
+      // every job start before the marker's has been delivered once
+      // the listener sees the marker
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      q
+    } finally sc.removeSparkListener(l)
+    assert(q.exception.isEmpty)
+    assert(rows.get == 3)
+    val id = q.id.toString
+    assert(queries.toArray.count(_ == id) == 1, queries)
   }
 
   test("stream-stream interval join: cross-batch matches equal the batch join") {
