@@ -115,12 +115,13 @@ object Bench {
     def named(name: String, pass: String, e: Throwable): Unit =
       System.err.println(s"[bench] $name $pass failed: " +
         s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(200)}")
-    val (fullJson, fullPath, compact) = contractLines(results, sfDir, cpus)
     // cwd-relative by default (works on any checkout), env-overridable;
-    // the per-cpu copy keeps a 2-core-count scaling session's maps
-    // both readable after the fact
-    Seq(sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json"),
-        fullPath).distinct.foreach { p =>
+    // the per-cpu copy, written beside it, keeps a 2-core-count
+    // scaling session's maps both readable after the fact
+    val mainFull = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json")
+    val (fullJson, fullPath, compact) =
+      contractLines(results, sfDir, cpus, mainFull)
+    Seq(mainFull, fullPath).distinct.foreach { p =>
       try {
         val w = new java.io.PrintWriter(p, "UTF-8")
         try w.println(fullJson) finally w.close()
@@ -129,12 +130,15 @@ object Bench {
     println(compact)
   }
 
-  /** Builds (full JSON, per-cpu full filename, compact ≤1850-char
+  /** Builds (full JSON, per-cpu full path, compact ≤1850-char
     * contract line) — package-visible so BenchLineSpec can pin the
-    * compact line's length and shape without running queries.
+    * compact line's length and shape without running queries. The
+    * per-cpu path `BENCH_FULL_c<cpus>.json` lies in `mainFull`'s
+    * directory.
     */
   private[graft] def contractLines(results: Seq[(String, Double)],
-      sfDir: String, cpus: String): (String, String, String) = {
+      sfDir: String, cpus: String,
+      mainFull: String = "BENCH_FULL.json"): (String, String, String) = {
     // STATE-LIFECYCLE queries (persisted-index builds, merge-on-read
     // create/append/compact) are dominated by storage I/O on their
     // first run, not plan latency — report them in their own "state"
@@ -202,7 +206,8 @@ object Bench {
     // override with anything else must not produce invalid JSON
     val cpusJson =
       if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else jstr(cpus)
-    val fullPath = s"BENCH_FULL_c$cpus.json"
+    val fullPath = new java.io.File(
+      new java.io.File(mainFull).getParent, s"BENCH_FULL_c$cpus.json").getPath
     val fullJson =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${obj(results)},"failed":$failed,"base46":${fmt(baseSum)},"state":${obj(stateRes)},"state_total":${fmt(stateTotal)},"cpus":$cpusJson,"sf":"$sfName"}"""
     // compact line: every failed query is always named (in the

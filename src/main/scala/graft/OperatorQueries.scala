@@ -20,6 +20,17 @@ object OperatorQueries {
     b
   }
 
+  /** q69/q73: left-join (ck, ip) facts to (lo, hi, range_tag) ranges
+    * on containment of the binary IP, through the `merge`-hinted
+    * shuffle range join.
+    */
+  private def mergeRangeJoin(facts: DataFrame, ranges: DataFrame): DataFrame = {
+    val bin = ip_to_bin(col("ip"))
+    facts.join(ranges.hint("merge"), bin >= col("lo") && bin <= col("hi"), "left")
+      .select(col("ck"), col("ip"), col("range_tag"))
+      .orderBy("ck")
+  }
+
   /** q207/q209 share this persisted [[graft.operators.AggView]] over
     * lineitem — keys (rf, ls), exact-cent SUM measures
     * (fingerprint-reused on every later call).
@@ -108,17 +119,19 @@ object OperatorQueries {
         .orderBy("lo")
     }),
 
-    /** J1's over-broadcast escape hatch under the hash contract: the
-      * same containment semantics as the broadcast probes (q25/q67),
-      * but executed through [[graft.operators.BucketedRangeJoin]] —
-      * the documented 100 TB path when a range table outgrows a
-      * broadcast. Ranges band into fixed-width prefix buckets and the
-      * join is a bucket EQUI-join with the containment predicate as
-      * residual (no broadcast of the range table, no BNLJ, no driver
-      * collect). Both families run through the one call: v4 ranges
+    /** J1's over-broadcast escape hatch: the same containment
+      * semantics as the broadcast probes (q25/q67), but the ranges
+      * side carries a `merge` hint, so the planner strategy runs the
+      * left join as [[graft.plans.ShuffleRangeJoinExec]] — fact keys
+      * sampled for partition boundaries, each range shipped to every
+      * partition it overlaps, one interval-tree probe per partition
+      * (no broadcast of the range table, no BNLJ, no driver collect).
+      * Both families run through the one join: v4 ranges
       * (10.n.0.0/16 per nation) and native-v6 ranges
       * (2001:db8:n::/48), probed with a covered/uncovered request
-      * mix; the left join keeps misses with a NULL payload.
+      * mix; the left join keeps misses with a NULL payload. (The
+      * name predates the shuffle exec; results and bench history key
+      * on it.)
       */
     "q69_bucketed_range_join" -> ((s, d) => {
       val n = col("n_nationkey")
@@ -143,22 +156,14 @@ object OperatorQueries {
             (c % 256).cast("string"), lit(".7")))
       val facts = Tables.customer(s, d).filter(c < 300)
         .select(c.as("ck"), ipExpr.as("ip"))
-      // width pinned: the table shape is statically known (/16 + /48
-      // → 2-byte buckets, span 1 each), so the adaptive span-stats
-      // job would be a pure extra roundtrip here
-      graft.operators.BucketedRangeJoin
-        .lookup(facts, ranges, ip_to_bin(col("ip")), nBytes = 2)
-        .select(col("ck"), col("ip"), col("range_tag"))
-        .orderBy("ck")
+      mergeRangeJoin(facts, ranges)
     }),
 
     /** The q69 twin with WIDE-span ranges: one v4 /8 per nation
-      * ((100+n).0.0.0/8). At the old fixed 2-byte width every /8
-      * exploded into 256 bucket rows; the adaptive width
-      * ([[graft.operators.BucketedRangeJoin.deriveWidth]]) picks
-      * 1-byte buckets for this table, so each /8 stays ONE build row
-      * (span-stat bound, asserted in LookupSpec) while the join keeps
-      * the same equi-join + residual shape and the identical answer.
+      * ((100+n).0.0.0/8), through the same `merge`-hinted shuffle
+      * join. Each /8 ships only to the partitions it overlaps, and
+      * the per-partition interval tree stabs it in O(log n) however
+      * wide it is.
       */
     "q73_bucketed_range_join_wide" -> ((s, d) => {
       val n = col("n_nationkey")
@@ -176,21 +181,15 @@ object OperatorQueries {
             (c % 256).cast("string"), lit(".3."), (c % 100).cast("string")))
       val facts = Tables.customer(s, d).filter(c < 300)
         .select(c.as("ck"), ipExpr.as("ip"))
-      // q73 exercises the ADAPTIVE width path (deriveWidth picks
-      // 1-byte buckets from the /8 span stats → 25 build rows, not
-      // the 6400 a fixed 2-byte width would explode into)
-      graft.operators.BucketedRangeJoin
-        .lookup(facts, ranges, ip_to_bin(col("ip")))
-        .select(col("ck"), col("ip"), col("range_tag"))
-        .orderBy("ck")
+      mergeRangeJoin(facts, ranges)
     }),
 
     /** J1 through [[graft.plans.ShuffleRangeJoinExec]] — the
-      * range-partitioned sorted-interval join for range tables that
+      * range-partitioned interval join for range tables that
       * outgrow a broadcast: the ranges side's `merge` hint makes the
       * planner strategy take the shuffle path (fact keys sampled for
       * boundaries, each range shipped to every partition it
-      * overlaps, per-partition binary-search probe). Same oracle
+      * overlaps, per-partition interval-tree probe). Same oracle
       * semantics as q07; PlanInvariantSpec locks the exec node.
       */
     "q171_shuffle_range_join" -> ((s, d) => {

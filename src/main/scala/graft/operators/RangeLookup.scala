@@ -208,128 +208,3 @@ object RangeStructLookup {
     GraftBridge.column(
       RangePayload(GraftBridge.expression(ip), index._1, index._2))
 }
-
-/** Shuffle path for range tables that outgrow a broadcast: bucket
-  * both sides by a fixed-width binary prefix and equi-join on the
-  * bucket with the range predicate as residual. Each range explodes
-  * into every prefix bucket it spans (dimension-side cost only), so
-  * the join shuffles on a dense integer key that AQE can coalesce or
-  * skew-split — no BNLJ, no driver collect, works at any range-table
-  * size. The broadcast paths above stay preferable whenever the
-  * ranges fit executor memory.
-  */
-object BucketedRangeJoin {
-  import graft.functions.IpFunctions.{ip_family, ip_minus_one, ip_plus_one}
-
-  /** Canonical v4-mapped region, ::ffff:0.0.0.0 … ::ffff:255.255.255.255. */
-  private val V4RegionLo =
-    Array[Byte](0, 0, 0, 0, 0, 0, 0, 0, 0, 0, -1, -1, 0, 0, 0, 0)
-  private val V4RegionHi =
-    Array[Byte](0, 0, 0, 0, 0, 0, 0, 0, 0, 0, -1, -1, -1, -1, -1, -1)
-
-  /** Family-relative bucket prefix: v4-mapped keys bucket on the v4
-    * octets (bytes 13…, skipping the constant 12-byte ::ffff: prefix
-    * that would otherwise land every v4 key in bucket 0); native-v6
-    * keys on the leading bytes. Always joined together with the
-    * family column, so buckets never collide across families.
-    */
-  private[operators] def prefixKey(c: Column, nBytes: Int): Column = {
-    val off = when(ip_family(c) === 4, lit(13)).otherwise(lit(1))
-    conv(hex(c.substr(off, lit(nBytes))), 16, 10).cast("long")
-  }
-
-  /** Split a range at the v4-mapped region boundaries so each output
-    * segment lies in a single family — the family-relative prefix is
-    * only monotonic within one family. Real IP range tables never
-    * straddle the boundary (and flattenRanges grouped by family can't
-    * emit one that does); the split keeps the operator total anyway.
-    */
-  private[operators] def familySegments(lo: Column, hi: Column): Column = {
-    val rLo = lit(V4RegionLo)
-    val rHi = lit(V4RegionHi)
-    filter(array(
-      when(lo < rLo,
-        struct(lo.as("lo"), least(hi, ip_minus_one(rLo)).as("hi"))),
-      when(hi >= rLo && lo <= rHi,
-        struct(greatest(lo, rLo).as("lo"), least(hi, rHi).as("hi"))),
-      when(hi > rHi,
-        struct(greatest(lo, ip_plus_one(rHi)).as("lo"), hi.as("hi")))),
-      s => s.isNotNull)
-  }
-
-  /** Sentinel for [[lookup]]'s `nBytes`: derive the width from the
-    * range table's span statistics.
-    */
-  val Adaptive = 0
-
-  /** Build-side growth budget for the adaptive width: the exploded
-    * bucket rows may average at most this multiple of the range count.
-    */
-  private val MaxAvgExplosion = 4.0
-
-  /** Derive the bucket width from range-span statistics: the FINEST
-    * width (densest buckets → best residual pruning) whose average
-    * per-range bucket explosion stays ≤ [[MaxAvgExplosion]]. A
-    * /24-dominated table gets 3-byte buckets (span 1 each); a
-    * /16-dominated table 2 bytes; a table of v4 /8s falls back to
-    * 1-byte buckets (span 1) instead of exploding every /8 into 256
-    * two-byte bucket rows. AVERAGE, not max, is the right statistic:
-    * the guarded quantity is total build-side row count, and one wide
-    * outlier in a million-range table should not coarsen every
-    * bucket (its own explosion is bounded by the next-coarser width's
-    * acceptance). One aggregation job over the DIMENSION-scale range
-    * table at plan-build time (the trainCentroids/mixToTarget
-    * precedent); width 1 is the floor — per-family spans there are
-    * ≤ 256 by construction.
-    */
-  private[operators] def deriveWidth(ranges: DataFrame,
-      loCol: String = "lo", hiCol: String = "hi"): Int = {
-    val segs = ranges
-      .filter(col(loCol).isNotNull && col(hiCol).isNotNull)
-      .select(explode(familySegments(col(loCol), col(hiCol))).as("__seg"))
-    val row = segs.agg(count(lit(1)).as("n"),
-      (1 to 3).map(n => sum(prefixKey(col("__seg.hi"), n) -
-        prefixKey(col("__seg.lo"), n) + 1).as(s"s$n")): _*)
-      .collect()(0)
-    val cnt = row.getLong(0)
-    if (cnt == 0L) 2
-    else (3 to 1 by -1)
-      .find(n => row.getLong(n) <= MaxAvgExplosion * cnt)
-      .getOrElse(1)
-  }
-
-  /** Left-join facts to ranges on containment, via per-family prefix
-    * buckets.
-    *
-    * @param nBytes bucket width: 2 → 65 536 buckets per family; a
-    *               range spanning w buckets contributes w rows to the
-    *               build side (a v4 /8 spans 256 two-byte buckets).
-    *               Default [[Adaptive]] derives the width from the
-    *               table's span stats ([[deriveWidth]]) so build-side
-    *               growth stays bounded for any prefix mix.
-    */
-  def lookup(facts: DataFrame, ranges: DataFrame, ipCol: Column,
-      nBytes: Int = Adaptive, loCol: String = "lo", hiCol: String = "hi",
-      joinType: String = "left"): DataFrame = {
-    val width =
-      if (nBytes == Adaptive) deriveWidth(ranges, loCol, hiCol) else nBytes
-    val exploded = ranges
-      .filter(col(loCol).isNotNull && col(hiCol).isNotNull)
-      .withColumn("__seg", explode(familySegments(col(loCol), col(hiCol))))
-      .withColumn("__fam", ip_family(col("__seg.lo")))
-      .withColumn("__bucket",
-        explode(sequence(prefixKey(col("__seg.lo"), width),
-          prefixKey(col("__seg.hi"), width))))
-      .drop("__seg")
-    val keyedFacts = facts
-      .withColumn("__fam", ip_family(ipCol))
-      .withColumn("__bucket", prefixKey(ipCol, width))
-    keyedFacts
-      .join(exploded,
-        keyedFacts("__fam") === exploded("__fam") &&
-          keyedFacts("__bucket") === exploded("__bucket") &&
-          ipCol >= col(loCol) && ipCol <= col(hiCol),
-        joinType)
-      .drop("__fam", "__bucket", loCol, hiCol)
-  }
-}

@@ -12,7 +12,6 @@ import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, JoinHint, LogicalPlan, SHUFFLE_MERGE}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.types.DataType
 
 /** Whole-operator Catalyst integration for point-in-range joins
   * (SURVEY §4: the escalation beyond the broadcast binary-search
@@ -20,21 +19,17 @@ import org.apache.spark.sql.types.DataType
   *
   *   facts JOIN ranges ON ip >= lo AND ip <= hi
   *
-  * with a broadcastable `ranges` side and plans a broadcast
-  * sorted-interval join instead of Spark's BroadcastNestedLoopJoin.
-  *
-  * Physical algorithm: collect + sort ranges by `lo`, precompute the
-  * running max of `hi`; each probe binary-searches the last range
-  * with lo ≤ ip, then walks back while the prefix max-hi can still
-  * cover ip. O(log n + k) per probe for k matches — O(log n) on the
-  * disjoint tables the annotation pipeline produces — and correct
-  * for arbitrary overlapping intervals (the prefix max bounds the
-  * walk-back). The fact side streams: no shuffle, no BNLJ, and the
-  * 100 TB scan shape is one broadcast fetch per executor.
+  * and plans one of two execs instead of Spark's
+  * BroadcastNestedLoopJoin. Both probe the same [[IntervalTree]] —
+  * O(log n + k) per probe for k matches, correct for arbitrary
+  * overlapping or nested intervals — and differ only in how the
+  * ranges reach a partition: [[BroadcastRangeJoinExec]] builds one
+  * tree on the driver and broadcasts it; [[ShuffleRangeJoinExec]]
+  * range-partitions both sides and builds a tree per partition.
   *
   * Registered via `spark.sql.extensions=graft.plans.GraftExtensions`;
-  * declared query q07 exercises it end-to-end against the DuckDB
-  * oracle with no query change.
+  * declared queries q07 (broadcast) and q69/q73/q171 (shuffle)
+  * exercise it end-to-end against the DuckDB oracle.
   */
 object RangeJoinPattern {
   /** (facts, ranges, ip, lo, hi, loStrict, hiStrict, rest, joinType,
@@ -118,100 +113,23 @@ object RangeJoinPattern {
   }
 }
 
-/** Shared probe machinery for the sorted-interval join execs: sort
-  * ranges by `lo`, attach the prefix running max of `hi`; each probe
-  * binary-searches the last range with lo ≤ ip then walks back while
-  * the prefix max-hi can still cover ip — O(log n + k) per probe,
-  * correct for arbitrary overlapping intervals.
-  */
-private[plans] object RangeProbe {
-  /** (rows sorted by lo, lo, hi, prefix-max-hi). Null-lo rows sort
-    * last (they can never match a probe; the walk-back stops on a
-    * null prefix max before reaching them).
-    */
-  def buildArrays(input: Array[InternalRow], boundLo: Expression,
-      boundHi: Expression, ordering: Ordering[Any])
-      : (Array[InternalRow], Array[Any], Array[Any], Array[Any]) = {
-    val keyed = input.map(r => (r, boundLo.eval(r), boundHi.eval(r)))
-    val sorted = keyed.sortWith { (a, b) =>
-      if (a._2 == null) false
-      else if (b._2 == null) true
-      else ordering.lt(a._2, b._2)
-    }
-    val n = sorted.length
-    val rows = new Array[InternalRow](n)
-    val los = new Array[Any](n)
-    val his = new Array[Any](n)
-    val maxHi = new Array[Any](n)
-    var i = 0
-    var runMax: Any = null
-    while (i < n) {
-      rows(i) = sorted(i)._1
-      los(i) = sorted(i)._2
-      his(i) = sorted(i)._3
-      if (his(i) != null && (runMax == null || ordering.gt(his(i), runMax)))
-        runMax = his(i)
-      maxHi(i) = runMax
-      i += 1
-    }
-    (rows, los, his, maxHi)
-  }
-}
-
-/** Executor-local probe index over [[RangeProbe.buildArrays]] output. */
-private[plans] final class RangeProbeIndex(
-    rows: Array[InternalRow], lo: Array[Any], hi: Array[Any],
-    maxHi: Array[Any], ordering: Ordering[Any],
-    loStrict: Boolean, hiStrict: Boolean) {
-  private val m = rows.length
-
-  /** Greatest j with lo(j) <= ip (< for a strict lower bound). */
-  private def lastLoLeq(ip: Any): Int = {
-    var s = 0; var e = m - 1; var ans = -1
-    while (s <= e) {
-      val mid = (s + e) >>> 1
-      val l = lo(mid)
-      val ok = l != null &&
-        (if (loStrict) ordering.lt(l, ip) else ordering.lteq(l, ip))
-      if (ok) { ans = mid; s = mid + 1 } else e = mid - 1
-    }
-    ans
-  }
-
-  /** Visit every range row covering `ip`, in descending-lo order. */
-  def foreachMatch(ip: Any)(f: InternalRow => Unit): Unit = {
-    if (ip == null || m == 0) return
-    var j = lastLoLeq(ip)
-    // walk back while some range in the prefix may still cover ip
-    while (j >= 0 && maxHi(j) != null &&
-        (if (hiStrict) ordering.gt(maxHi(j), ip)
-        else ordering.gteq(maxHi(j), ip))) {
-      val h = hi(j)
-      val covers = h != null &&
-        (if (hiStrict) ordering.lt(ip, h) else ordering.lteq(ip, h))
-      if (covers) f(rows(j))
-      j -= 1
-    }
-  }
-}
-
-/** Static centered interval tree — the shuffle exec's per-partition
-  * probe structure. O(log n + k) point stabbing with NO mixed-width
-  * degeneracy: a /8-wide range sharing a partition with thousands of
-  * /24s never drags probes into a linear walk (the prefix-max
-  * walk-back's worst case — every node-stored interval this query
-  * scans is guaranteed covering, so work is exactly matches + depth).
+/** Static centered interval tree — the probe structure of both
+  * range-join execs. O(log n + k) point stabbing with no mixed-width
+  * degeneracy: a /8-wide range among thousands of nested /24s never
+  * drags probes into a linear walk (every node-stored interval a
+  * probe scans is guaranteed covering, so work is exactly matches +
+  * depth).
   *
   * Build: center = median endpoint; intervals overlapping the center
   * live at the node (sorted by lo asc AND hi desc), the rest recurse
   * left (hi < center) / right (lo > center). Each level consumes at
   * least the center-owning interval and halves the endpoint set →
-  * O(log n) depth, O(n log² n) build on the DIMENSION-scale
-  * per-partition range set.
+  * O(log n) depth, O(n log² n) build on the dimension-scale range
+  * set. Serializable, so the broadcast exec ships one built tree.
   */
 private[plans] final class IntervalTree private (
     root: IntervalTree.Node, ordering: Ordering[Any],
-    loStrict: Boolean, hiStrict: Boolean) {
+    loStrict: Boolean, hiStrict: Boolean) extends Serializable {
 
   /** Visit every interval's row covering `ip` (strictness per the
     * join bounds).
@@ -268,7 +186,7 @@ private[plans] object IntervalTree {
     val loAscLo: Array[Any], val loAscHi: Array[Any],
     val loAscRows: Array[InternalRow],
     val hiDescHi: Array[Any], val hiDescRows: Array[InternalRow],
-    val left: Node, val right: Node)
+    val left: Node, val right: Node) extends Serializable
 
   /** Build from parallel (row, lo, hi) arrays; null or inverted
     * bounds are dropped (they can never match).
@@ -305,8 +223,90 @@ private[plans] object IntervalTree {
   }
 }
 
-/** Broadcast sorted-interval join exec. `left` = facts (streamed),
-  * `right` = ranges (collected, sorted, broadcast).
+/** What the two range-join execs share: the join's output, its
+  * `numOutputRows` metric and the per-fact probe loop over an
+  * [[IntervalTree]]. Each exec adds only how the ranges reach a
+  * partition.
+  */
+private[plans] trait RangeJoinExec extends BinaryExecNode {
+  def ipExpr: Expression
+  def loExpr: Expression
+  def hiExpr: Expression
+  def loStrict: Boolean
+  def hiStrict: Boolean
+  def extraCond: Option[Expression]
+  def joinType: JoinType
+  def factsOutput: Seq[Attribute]
+  def rangesOutput: Seq[Attribute]
+  def rangesOnRight: Boolean
+
+  override lazy val metrics = Map(
+    "numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
+      .createMetric(sparkContext, "number of output rows"))
+
+  override def output: Seq[Attribute] = {
+    val ranges =
+      if (joinType == LeftOuter) rangesOutput.map(_.withNullability(true))
+      else rangesOutput
+    if (rangesOnRight) factsOutput ++ ranges else ranges ++ factsOutput
+  }
+
+  protected def ordering: Ordering[Any] =
+    TypeUtils.getInterpretedOrdering(ipExpr.dataType)
+  protected def boundLo: Expression =
+    BindReferences.bindReference(loExpr, rangesOutput)
+  protected def boundHi: Expression =
+    BindReferences.bindReference(hiExpr, rangesOutput)
+
+  /** Builds the join's interval tree over range rows; captures no
+    * exec, so it ships in task closures.
+    */
+  protected def treeBuilder: Array[InternalRow] => IntervalTree = {
+    val (lo, hi, ord) = (boundLo, boundHi, ordering)
+    val (ls, hs) = (loStrict, hiStrict)
+    ranges => IntervalTree.build(ranges, lo, hi, ord, ls, hs)
+  }
+
+  /** The per-partition join of fact rows against a tree: every
+    * covering range passing the extra condition, or one
+    * null-extended row for an unmatched fact of a left outer join.
+    * Like [[treeBuilder]], it captures no exec.
+    */
+  protected def probeLoop: (IntervalTree, Iterator[InternalRow]) => Iterator[InternalRow] = {
+    val boundIp = BindReferences.bindReference(ipExpr, factsOutput)
+    val boundExtra = extraCond.map(BindReferences.bindReference(_,
+      if (rangesOnRight) factsOutput ++ rangesOutput
+      else rangesOutput ++ factsOutput))
+    val numOutputRows = longMetric("numOutputRows")
+    val outAttrs = output
+    val nRangeCols = rangesOutput.length
+    val onRight = rangesOnRight
+    val outer = joinType == LeftOuter
+    (tree, facts) => {
+      val joined = new JoinedRow
+      val nullRange = new GenericInternalRow(nRangeCols)
+      val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
+      facts.flatMap { factRow =>
+        val out = ArrayBuffer[InternalRow]()
+        tree.foreachMatch(boundIp.eval(factRow)) { rangeRow =>
+          val jr = if (onRight) joined(factRow, rangeRow)
+            else joined(rangeRow, factRow)
+          if (boundExtra.forall(_.eval(jr) == true))
+            out += resultProj(jr).copy()
+        }
+        if (out.isEmpty && outer)
+          out += resultProj(joined(factRow, nullRange)).copy()
+        numOutputRows += out.length
+        out.iterator
+      }
+    }
+  }
+}
+
+/** Broadcast interval join. `left` = facts (streamed), `right` =
+  * ranges: collected, built into one [[IntervalTree]] on the driver
+  * and broadcast, so executors fetch it once and build nothing. The
+  * fact side never shuffles.
   */
 case class BroadcastRangeJoinExec(
     left: SparkPlan, right: SparkPlan,
@@ -315,7 +315,7 @@ case class BroadcastRangeJoinExec(
     extraCond: Option[Expression], joinType: JoinType,
     factsOutput: Seq[Attribute], rangesOutput: Seq[Attribute],
     rangesOnRight: Boolean)
-  extends BinaryExecNode {
+  extends RangeJoinExec {
 
   // the fact (left) side streams through unchanged — advertise its
   // partitioning/ordering so downstream operators don't re-shuffle
@@ -323,58 +323,10 @@ case class BroadcastRangeJoinExec(
   override def outputPartitioning = left.outputPartitioning
   override def outputOrdering = left.outputOrdering
 
-  override lazy val metrics = Map(
-    "numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "number of output rows"))
-
-  override def output: Seq[Attribute] = joinType match {
-    case LeftOuter =>
-      (if (rangesOnRight) factsOutput ++ rangesOutput.map(_.withNullability(true))
-      else rangesOutput.map(_.withNullability(true)) ++ factsOutput)
-    case _ => if (rangesOnRight) factsOutput ++ rangesOutput
-      else rangesOutput ++ factsOutput
-  }
-
   override protected def doExecute(): RDD[InternalRow] = {
-    val dt: DataType = ipExpr.dataType
-    val ordering = TypeUtils.getInterpretedOrdering(dt)
-    val boundLo = BindReferences.bindReference(loExpr, rangesOutput)
-    val boundHi = BindReferences.bindReference(hiExpr, rangesOutput)
-
-    val collected = right.executeCollect() // ranges side, broadcast scale
-    val bc = sparkContext.broadcast(
-      RangeProbe.buildArrays(collected, boundLo, boundHi, ordering))
-
-    val boundIp = BindReferences.bindReference(ipExpr, factsOutput)
-    val joinedInput =
-      if (rangesOnRight) factsOutput ++ rangesOutput
-      else rangesOutput ++ factsOutput
-    val boundExtra = extraCond.map(BindReferences.bindReference(_, joinedInput))
-    val numOutputRows = longMetric("numOutputRows")
-
-    left.execute().mapPartitions { iter =>
-      val (ranges, lo, hi, mh) = bc.value
-      val index = new RangeProbeIndex(ranges, lo, hi, mh, ordering,
-        loStrict, hiStrict)
-      val joined = new JoinedRow
-      val nullRange = new GenericInternalRow(rangesOutput.length)
-      val resultProj = UnsafeProjection.create(output, output)
-
-      iter.flatMap { factRow =>
-        val out = ArrayBuffer[InternalRow]()
-        index.foreachMatch(boundIp.eval(factRow)) { rangeRow =>
-          val jr = if (rangesOnRight) joined(factRow, rangeRow)
-            else joined(rangeRow, factRow)
-          if (boundExtra.forall(_.eval(jr) == true))
-            out += resultProj(jr).copy()
-        }
-        if (out.isEmpty && joinType == LeftOuter) {
-          out += resultProj(joined(factRow, nullRange)).copy()
-        }
-        numOutputRows += out.length
-        out.iterator
-      }
-    }
+    val bc = sparkContext.broadcast(treeBuilder(right.executeCollect()))
+    val probe = probeLoop
+    left.execute().mapPartitions(facts => probe(bc.value, facts))
   }
 
   override protected def withNewChildrenInternal(
@@ -382,26 +334,25 @@ case class BroadcastRangeJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** Range-partitioned sorted-interval join — the escalation for range
-  * tables that OUTGROW a broadcast (SURVEY §4's "proper engine
-  * feature" milestone; reference probe semantics iputils.go:111-128).
+/** Range-partitioned interval join — the escalation for range tables
+  * that outgrow a broadcast (SURVEY §4's "proper engine feature"
+  * milestone; reference probe semantics iputils.go:111-128).
   *
   * Physical algorithm:
   *  1. Sample the FACT side's probe keys (Spark's own
   *     [[RangePartitioner]] sketch — the same machinery behind every
   *     global sort) to derive partition boundaries. Sampling the
   *     facts, not the ranges, is what makes the operator robust to
-  *     fact skew: a /8-heavy range table over facts piled into one
-  *     /8 still splits that hot /8 across many partitions, where a
-  *     prefix-bucket join funnels them all into one bucket.
+  *     fact skew: facts piled into one hot /8 still split across
+  *     many partitions.
   *  2. Shuffle facts by probe-key partition; ship each range row to
   *     EVERY partition its [lo, hi] overlaps (duplication factor ≤
   *     the partition count, dimension-side cost only — the
   *     partitioner is monotonic, so lo ≤ ip ≤ hi pins every cover
   *     to the probe's partition).
-  *  3. Per partition: sort the local ranges by lo with the prefix
-  *     max-hi ([[RangeProbe]]), probe each fact by binary search —
-  *     O(log n + k), overlap-correct, no BNLJ, no driver collect.
+  *  3. Per partition: build an [[IntervalTree]] over the local ranges
+  *     and probe each fact — O(log n + k), overlap-correct, no BNLJ,
+  *     no driver collect.
   *
   * The extra job is the boundary sample (the cost every range
   * shuffle pays); facts then move ONCE. Null probe keys route to
@@ -416,26 +367,12 @@ case class ShuffleRangeJoinExec(
     extraCond: Option[Expression], joinType: JoinType,
     factsOutput: Seq[Attribute], rangesOutput: Seq[Attribute],
     rangesOnRight: Boolean)
-  extends BinaryExecNode {
-
-  override lazy val metrics = Map(
-    "numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "number of output rows"))
-
-  override def output: Seq[Attribute] = joinType match {
-    case LeftOuter =>
-      (if (rangesOnRight) factsOutput ++ rangesOutput.map(_.withNullability(true))
-      else rangesOutput.map(_.withNullability(true)) ++ factsOutput)
-    case _ => if (rangesOnRight) factsOutput ++ rangesOutput
-      else rangesOutput ++ factsOutput
-  }
+  extends RangeJoinExec {
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val dt: DataType = ipExpr.dataType
-    val ordering = TypeUtils.getInterpretedOrdering(dt)
+    val ord = ordering
     val boundIp = BindReferences.bindReference(ipExpr, factsOutput)
-    val boundLo = BindReferences.bindReference(loExpr, rangesOutput)
-    val boundHi = BindReferences.bindReference(hiExpr, rangesOutput)
+    val (lo, hi) = (boundLo, boundHi)
 
     // UnsafeRow-project both sides before the RDD shuffle: UnsafeRow
     // serializes as one buffer write, and each deserialized record is
@@ -448,7 +385,7 @@ case class ShuffleRangeJoinExec(
           (boundIp.eval(r), r: InternalRow)
         }
       }
-    implicit val ordAny: Ordering[Any] = ordering
+    implicit val ordAny: Ordering[Any] = ord
     implicit val tagAny: ClassTag[Any] = ClassTag.Any
     val parts = math.max(1, conf.numShufflePartitions)
     val rp = new RangePartitioner[Any, InternalRow](parts,
@@ -466,15 +403,11 @@ case class ShuffleRangeJoinExec(
         val proj = UnsafeProjection.create(rangesOutput, rangesOutput)
         it.flatMap { r0 =>
           val r = proj(r0).copy()
-          val lo = boundLo.eval(r)
-          val hi = boundHi.eval(r)
-          if (lo == null || hi == null || ordering.gt(lo, hi))
-            Iterator.empty
-          else {
-            val p0 = rp.getPartition(lo)
-            val p1 = rp.getPartition(hi)
-            (p0 to p1).iterator.map(p => (p, r: InternalRow))
-          }
+          val l = lo.eval(r)
+          val h = hi.eval(r)
+          if (l == null || h == null || ord.gt(l, h)) Iterator.empty
+          else (rp.getPartition(l) to rp.getPartition(h)).iterator
+            .map(p => (p, r: InternalRow))
         }
       }
     val rangesPart = rangesDup.partitionBy(new Partitioner {
@@ -482,34 +415,10 @@ case class ShuffleRangeJoinExec(
       override def getPartition(key: Any): Int = key.asInstanceOf[Int]
     })
 
-    val joinedInput =
-      if (rangesOnRight) factsOutput ++ rangesOutput
-      else rangesOutput ++ factsOutput
-    val boundExtra = extraCond.map(BindReferences.bindReference(_, joinedInput))
-    val numOutputRows = longMetric("numOutputRows")
-    val outAttrs = output
-
+    val build = treeBuilder
+    val probe = probeLoop
     factsPart.zipPartitions(rangesPart) { (fIt, rIt) =>
-      val index = IntervalTree.build(rIt.map(_._2).toArray,
-        boundLo, boundHi, ordering, loStrict, hiStrict)
-      val joined = new JoinedRow
-      val nullRange = new GenericInternalRow(rangesOutput.length)
-      val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-
-      fIt.flatMap { case (ip, factRow) =>
-        val out = ArrayBuffer[InternalRow]()
-        index.foreachMatch(ip) { rangeRow =>
-          val jr = if (rangesOnRight) joined(factRow, rangeRow)
-            else joined(rangeRow, factRow)
-          if (boundExtra.forall(_.eval(jr) == true))
-            out += resultProj(jr).copy()
-        }
-        if (out.isEmpty && joinType == LeftOuter) {
-          out += resultProj(joined(factRow, nullRange)).copy()
-        }
-        numOutputRows += out.length
-        out.iterator
-      }
+      probe(build(rIt.map(_._2).toArray), fIt.map(_._2))
     }
   }
 
@@ -528,8 +437,8 @@ case class ShuffleRangeJoinExec(
   *    condition → [[ShuffleRangeJoinExec]] (Spark's own fallback
   *    would be a BroadcastNestedLoopJoin);
   *  - otherwise decline — an equi-conjunct means Spark can plan a
-  *    hash join with the range predicate as residual (the
-  *    BucketedRangeJoin shape), which must not be hijacked.
+  *    hash join with the range predicate as residual, which must not
+  *    be hijacked.
   */
 object RangeJoinStrategy extends SparkStrategy {
   private def hasEquiConjunct(rest: Seq[Expression], facts: LogicalPlan,

@@ -75,4 +75,13 @@ class BenchLineSpec extends AnyFunSuite {
     assert(c.get("sf").asText == "sf0.01")
     assert(c.get("full").asText == "BENCH_FULL_c8.json")
   }
+
+  test("per-cpu full path lies beside an overridden full path") {
+    val green = SparkEntry.queries.keys.toSeq.sorted.map(_ -> 0.123)
+    val (_, fullPath, compact) = Bench.contractLines(green,
+      "/root/testdata/sf0.01", "4", "/tmp/bench-out/full.json")
+    assert(fullPath == "/tmp/bench-out/BENCH_FULL_c4.json")
+    assert(compact.length <= 1850)
+    assert(mapper.readTree(compact).get("full").asText == fullPath)
+  }
 }

@@ -65,125 +65,6 @@ class LookupSpec extends AnyFunSuite {
     assert(fast.values.exists(_ != null) && fast.values.exists(_ == null))
   }
 
-  test("bucketed range join agrees with naive on bucket-spanning ranges") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(9)
-    // mix of narrow ranges and wide ones spanning many /16 buckets
-    val ranges = ((0 until 300).map { i =>
-      val base = IpMath.parseIp(s"10.${i % 50}.${rnd.nextInt(250)}.0")
-      (base, IpMath.ipAdd(base, 100 + rnd.nextInt(300)), s"n$i")
-    } ++ (0 until 10).map { i =>
-      val base = IpMath.parseIp(s"${20 + i}.0.0.0")
-      (base, IpMath.ipAdd(base, 3L << 16), s"w$i") // spans 4 buckets
-    }).toDF("lo", "hi", "payload")
-    val probes = (1 to 4000).map { i =>
-      (i.toLong, IpMath.parseIp(
-        s"${10 + rnd.nextInt(22)}.${rnd.nextInt(52)}.${rnd.nextInt(256)}.${rnd.nextInt(256)}"))
-    }.toDF("id", "bin")
-    val fast = BucketedRangeJoin.lookup(probes, ranges, col("bin"))
-      .select("id", "payload").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-    val naive = RangeLookup.lookupNaive(probes, ranges, col("bin"))
-      .select("id", "payload").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-    assert(fast == naive)
-    assert(fast.exists(_._2 != null) && fast.exists(_._2 == null))
-  }
-
-  test("adaptive bucket width follows the table's span stats and " +
-      "bounds the build side (wide /8 ranges stay ONE row each)") {
-    import spark.implicits._
-    def table(cidrs: Seq[String]) = cidrs.zipWithIndex.map { case (c, i) =>
-      val r = IpMath.cidrToRange(c)
-      (r._1, r._2, s"t$i")
-    }.toDF("lo", "hi", "payload")
-    // prefix-homogeneous tables pick the finest width with span ≈ 1
-    val slash24 = table((0 until 40).map(i => s"10.1.$i.0/24"))
-    val slash16 = table((0 until 40).map(i => s"10.$i.0.0/16"))
-    val slash8 = table((0 until 25).map(i => s"${100 + i}.0.0.0/8"))
-    assert(BucketedRangeJoin.deriveWidth(slash24) == 3)
-    assert(BucketedRangeJoin.deriveWidth(slash16) == 2)
-    assert(BucketedRangeJoin.deriveWidth(slash8) == 1)
-    // the statistic is the AVERAGE (total build-side growth), not the
-    // max: in a large narrow-dominated table one /8 outlier amortizes
-    // and must NOT coarsen the width (40k /24s + one /8 → 65k bucket
-    // rows ≈ 2.6× the table, within budget → stays 3)...
-    val manyNarrow = (0 until 156).flatMap(a =>
-      (0 until 256).map(b => s"10.$a.$b.0/24")).take(40000)
-    assert(BucketedRangeJoin.deriveWidth(
-      table(manyNarrow :+ "99.0.0.0/8")) == 3)
-    // ...while in a SMALL table the same outlier genuinely dominates
-    // the build size (65k rows vs 200 ranges) and the width correctly
-    // degrades one step
-    val smallMixed = table((0 until 200).map(i => s"10.1.${i % 250}.0/24")
-      :+ "99.0.0.0/8")
-    assert(BucketedRangeJoin.deriveWidth(smallMixed) == 2)
-    // build-side row count at the derived width: every /8 contributes
-    // exactly ONE bucket row (vs 256 each at the old fixed 2-byte
-    // width — 25 rows instead of 6400)
-    def explodedRows(ranges: org.apache.spark.sql.DataFrame,
-        w: Int): Long =
-      ranges.select(explode(sequence(
-        BucketedRangeJoin.prefixKey(col("lo"), w),
-        BucketedRangeJoin.prefixKey(col("hi"), w)))).count()
-    assert(explodedRows(slash8, 1) == 25L)
-    assert(explodedRows(slash8, 2) == 25L * 256)
-    // and the adaptive-width join still answers exactly like naive
-    val probes = (1 to 500).map { i =>
-      (i.toLong, IpMath.parseIp(
-        s"${90 + i % 40}.${i % 256}.3.${i % 100}"))
-    }.toDF("id", "bin")
-    val fast = BucketedRangeJoin.lookup(probes, slash8, col("bin"))
-      .select("id", "payload").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-    val naive = RangeLookup.lookupNaive(probes, slash8, col("bin"))
-      .select("id", "payload").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-    assert(fast == naive)
-    assert(fast.exists(_._2 != null) && fast.exists(_._2 == null))
-  }
-
-  test("v4 bucket keys spread across buckets (skip the ::ffff: prefix)") {
-    import spark.implicits._
-    // before the family-relative fix every v4-mapped key hashed the
-    // constant 0x0000 leading bytes → one bucket for all v4 data
-    val keys = Seq("10.0.0.1", "10.1.0.1", "11.0.0.1", "192.168.1.1")
-      .map(IpMath.parseIp).toDF("bin")
-    val buckets = keys
-      .select(BucketedRangeJoin.prefixKey(col("bin"), 2).as("b"))
-      .distinct().count()
-    assert(buckets == 4)
-  }
-
-  test("bucketed range join agrees with naive on mixed v4/v6 + straddling range") {
-    import spark.implicits._
-    val v4RegionHi = IpMath.parseIp("255.255.255.255")
-    val ranges = Seq(
-      (IpMath.parseIp("10.0.0.0"), IpMath.parseIp("10.0.255.255"), "v4a"),
-      (IpMath.parseIp("2001:db8::"), IpMath.parseIp("2001:db8::ffff"), "v6a"),
-      (IpMath.parseIp("2600::"), IpMath.parseIp("2600::1:0"), "v6b"),
-      // straddles the v4-mapped region's upper boundary: exercises
-      // the familySegments split (never occurs in real tables)
-      (IpMath.parseIp("255.255.255.250"), IpMath.ipAdd(v4RegionHi, 5L), "odd"))
-      .toDF("lo", "hi", "payload")
-    val probes = Seq(
-      (1L, IpMath.parseIp("10.0.1.2")), // v4a
-      (2L, IpMath.parseIp("10.1.0.1")), // miss
-      (3L, IpMath.parseIp("2001:db8::5")), // v6a
-      (4L, IpMath.parseIp("2600::5")), // v6b
-      (5L, IpMath.parseIp("255.255.255.252")), // odd, v4 side
-      (6L, IpMath.ipAdd(v4RegionHi, 2L)), // odd, v6 side
-      (7L, IpMath.parseIp("::1"))) // miss
-      .toDF("id", "bin")
-    def res(df: org.apache.spark.sql.DataFrame) = df
-      .select("id", "payload").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-    val fast = res(BucketedRangeJoin.lookup(probes, ranges, col("bin")))
-    val naive = res(RangeLookup.lookupNaive(probes, ranges, col("bin")))
-    assert(fast == naive)
-    assert(fast.toMap.apply(5L) == "odd" && fast.toMap.apply(6L) == "odd")
-  }
-
   test("as-of snapshot selection golden (directory_test.go:44-79)") {
     import spark.implicits._
     val base = java.time.LocalDate.of(2009, 2, 8)

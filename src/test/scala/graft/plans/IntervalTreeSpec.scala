@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInterna
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.types.LongType
 
-/** The shuffle exec's per-partition probe structure, differentially
+/** Both range-join execs' probe structure, differentially
   * checked against the naive linear scan: random overlapping /
   * nested / degenerate interval sets, every strictness combination,
   * probes on and off endpoints — the stabbing set must match exactly

@@ -86,17 +86,14 @@ class PlanInvariantSpec extends AnyFunSuite {
     assert(!p.contains("Join"))
   }
 
-  test("bucketed range join is a bucket equi-join plus residual — " +
+  test("merge-hinted containment joins plan ShuffleRangeJoinExec — " +
       "never a BNLJ or cartesian product (q69, and q73's wide-span " +
-      "twin under the adaptive width)") {
+      "twin)") {
     for (q <- Seq("q69_bucketed_range_join", "q73_bucketed_range_join_wide")) {
       val p = plan(q)
+      assert(p.contains("ShuffleRangeJoin"), q)
       assert(!p.contains("BroadcastNestedLoopJoin"), q)
       assert(!p.contains("CartesianProduct"), q)
-      // the join key is the exploded prefix bucket (+ family) — the
-      // range predicate rides along as residual on an equi-join, which
-      // shuffles (or broadcasts, at dimension scale) on a dense key
-      assert(p.contains("__bucket"), q)
     }
   }
 
