@@ -177,7 +177,7 @@ object ZoneMap extends Store[ZoneLayout] {
     * tables are metadata-scale but GROW WITH |files|: at 10⁶ base
     * files × 40 columns the stats table is 4·10⁷ rows — `coalesce(1)`
     * would funnel the whole build through one reducer and write one
-    * giant file. Above this bound the writers hash-distribute on
+    * giant file. Above this bound the writers range-distribute on
     * `file` (per-file rows stay co-located, so file-keyed reads and
     * the killed-set subtraction are unaffected); at or below it they
     * keep the single-file layout small artifacts want.
@@ -185,8 +185,10 @@ object ZoneMap extends Store[ZoneLayout] {
   val DefaultArtifactRowsPerFile: Long = 1L << 22
 
   /** Write one artifact table sized by its own (driver-estimable)
-    * row bound — 1 file below `rowsPerFile`, hash-bucketed on `file`
-    * above it (≤ 256 output files).
+    * row bound — 1 file below `rowsPerFile`, range-partitioned on
+    * `file` above it (≤ 256 output files). Range bounds split the
+    * sampled rows evenly, so the bound holds up to one file's rows;
+    * hashing a few distinct files could land them all in one bucket.
     */
   private[operators] def writeArtifact(df: DataFrame, estRows: Long,
       target: String, rowsPerFile: Long): Unit = {
@@ -195,7 +197,7 @@ object ZoneMap extends Store[ZoneLayout] {
       (estRows + rowsPerFile - 1) / rowsPerFile)).toInt
     val out =
       if (parts == 1) df.coalesce(1)
-      else df.repartition(parts, col("file"))
+      else df.repartitionByRange(parts, col("file"))
     out.write.mode("overwrite").parquet(target)
   }
 

@@ -224,9 +224,9 @@ private[plans] object IntervalTree {
 }
 
 /** What the two range-join execs share: the join's output, its
-  * `numOutputRows` metric and the per-fact probe loop over an
-  * [[IntervalTree]]. Each exec adds only how the ranges reach a
-  * partition.
+  * `numOutputRows`/`numRangeRows` metrics and the per-fact probe
+  * loop over an [[IntervalTree]]. Each exec adds only how the ranges
+  * reach a partition.
   */
 private[plans] trait RangeJoinExec extends BinaryExecNode {
   def ipExpr: Expression
@@ -240,9 +240,13 @@ private[plans] trait RangeJoinExec extends BinaryExecNode {
   def rangesOutput: Seq[Attribute]
   def rangesOnRight: Boolean
 
-  override lazy val metrics = Map(
-    "numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "number of output rows"))
+  override lazy val metrics = {
+    import org.apache.spark.sql.execution.metric.SQLMetrics.createMetric
+    Map(
+      "numOutputRows" -> createMetric(sparkContext, "number of output rows"),
+      "numRangeRows" -> createMetric(sparkContext,
+        "number of range rows built into trees"))
+  }
 
   override def output: Seq[Attribute] = {
     val ranges =
@@ -258,13 +262,19 @@ private[plans] trait RangeJoinExec extends BinaryExecNode {
   protected def boundHi: Expression =
     BindReferences.bindReference(hiExpr, rangesOutput)
 
-  /** Builds the join's interval tree over range rows; captures no
-    * exec, so it ships in task closures.
+  /** Builds the join's interval tree over range rows, counting them
+    * in `numRangeRows` (the broadcast tree's size, or the shuffle
+    * path's ranges summed over partitions, duplicates included);
+    * captures no exec, so it ships in task closures.
     */
   protected def treeBuilder: Array[InternalRow] => IntervalTree = {
     val (lo, hi, ord) = (boundLo, boundHi, ordering)
     val (ls, hs) = (loStrict, hiStrict)
-    ranges => IntervalTree.build(ranges, lo, hi, ord, ls, hs)
+    val numRangeRows = longMetric("numRangeRows")
+    ranges => {
+      numRangeRows += ranges.length
+      IntervalTree.build(ranges, lo, hi, ord, ls, hs)
+    }
   }
 
   /** The per-partition join of fact rows against a tree: every

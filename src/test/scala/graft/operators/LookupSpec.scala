@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestSession
 import graft.functions.IpMath
+import graft.plans.RangeJoinDifferential
 
 class LookupSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -63,6 +64,77 @@ class LookupSpec extends AnyFunSuite {
       .map(r => r.getInt(0) -> r.getString(1)).toMap
     assert(fast == naive)
     assert(fast.values.exists(_ != null) && fast.values.exists(_ == null))
+  }
+
+  // q69/q73's over-broadcast range join, once a bucketed equi-join,
+  // is now the merge-hinted ShuffleRangeJoinExec; these three checks
+  // keep the bucket join's tables and run them through both
+  // range-join execs against lookupNaive.
+
+  test("bucketed range join agrees with naive on bucket-spanning ranges") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(9)
+    // mix of narrow ranges and wide ones spanning many /16s
+    val ranges = ((0 until 300).map { i =>
+      val base = IpMath.parseIp(s"10.${i % 50}.${rnd.nextInt(250)}.0")
+      (base, IpMath.ipAdd(base, 100 + rnd.nextInt(300)), s"n$i")
+    } ++ (0 until 10).map { i =>
+      val base = IpMath.parseIp(s"${20 + i}.0.0.0")
+      (base, IpMath.ipAdd(base, 3L << 16), s"w$i") // spans 4 /16s
+    }).toDF("lo", "hi", "payload")
+    val probes = (1 to 4000).map { i =>
+      (i.toLong, IpMath.parseIp(
+        s"${10 + rnd.nextInt(22)}.${rnd.nextInt(52)}.${rnd.nextInt(256)}.${rnd.nextInt(256)}"))
+    }.toDF("id", "bin")
+    val (rows, _) = RangeJoinDifferential.check("spanning", ranges, probes)
+    assert(rows.exists(r => r._2 != null && r._2.startsWith("w")))
+  }
+
+  test("adaptive bucket width follows the table's span stats and " +
+      "bounds the build side (wide /8 ranges stay ONE row each)") {
+    import spark.implicits._
+    // no bucket width is left to adapt: the shuffle path's partition
+    // bounds follow the facts' quantiles instead. The build-side
+    // bound still holds: each /8 is one tree row, not 256 /16-bucket
+    // rows, and the shuffle path copies a range only into the
+    // partitions it overlaps
+    val slash8 = (0 until 25).map { i =>
+      val r = IpMath.cidrToRange(s"${100 + i}.0.0.0/8")
+      (r._1, r._2, s"t$i")
+    }.toDF("lo", "hi", "payload")
+    val probes = (1 to 500).map { i =>
+      (i.toLong, IpMath.parseIp(
+        s"${90 + i % 40}.${i % 256}.3.${i % 100}"))
+    }.toDF("id", "bin")
+    val (_, built) = RangeJoinDifferential.check("/8s", slash8, probes)
+    assert(built("BroadcastRangeJoin") == 25L)
+    // disjoint ranges: each partition boundary splits at most one
+    val parts = RangeJoinDifferential.shufflePartitions
+    val shuffled = built("ShuffleRangeJoin")
+    assert(shuffled >= 25L && shuffled <= 25L + parts - 1, shuffled)
+  }
+
+  test("bucketed range join agrees with naive on mixed v4/v6 + straddling range") {
+    import spark.implicits._
+    val v4RegionHi = IpMath.parseIp("255.255.255.255")
+    val ranges = Seq(
+      (IpMath.parseIp("10.0.0.0"), IpMath.parseIp("10.0.255.255"), "v4a"),
+      (IpMath.parseIp("2001:db8::"), IpMath.parseIp("2001:db8::ffff"), "v6a"),
+      (IpMath.parseIp("2600::"), IpMath.parseIp("2600::1:0"), "v6b"),
+      // straddles the v4-mapped region's upper boundary
+      (IpMath.parseIp("255.255.255.250"), IpMath.ipAdd(v4RegionHi, 5L), "odd"))
+      .toDF("lo", "hi", "payload")
+    val probes = Seq(
+      (1L, IpMath.parseIp("10.0.1.2")), // v4a
+      (2L, IpMath.parseIp("10.1.0.1")), // miss
+      (3L, IpMath.parseIp("2001:db8::5")), // v6a
+      (4L, IpMath.parseIp("2600::5")), // v6b
+      (5L, IpMath.parseIp("255.255.255.252")), // odd, v4 side
+      (6L, IpMath.ipAdd(v4RegionHi, 2L)), // odd, v6 side
+      (7L, IpMath.parseIp("::1"))) // miss
+      .toDF("id", "bin")
+    val (rows, _) = RangeJoinDifferential.check("mixed", ranges, probes)
+    assert(rows.toMap.apply(5L) == "odd" && rows.toMap.apply(6L) == "odd")
   }
 
   test("as-of snapshot selection golden (directory_test.go:44-79)") {

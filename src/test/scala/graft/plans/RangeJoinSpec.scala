@@ -1,12 +1,11 @@
 package graft.plans
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestSession
 import graft.functions.IpMath
-import graft.operators.RangeLookup
 
 class RangeJoinSpec extends AnyFunSuite {
   lazy val spark = {
@@ -145,86 +144,16 @@ class RangeJoinSpec extends AnyFunSuite {
     }
   }
 
-  /** A session without the range-join strategy: `lookupNaive` planned
-    * there is Spark's own nested-loop join, an oracle independent of
-    * both execs.
-    */
-  private lazy val oracle = spark.newSession()
-  private def inOracle(df: DataFrame): DataFrame =
-    oracle.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-
-  /** (name, ranges(lo, hi, payload), probes(id: Long, bin)) */
-  private def differentialTables: Seq[(String, DataFrame, DataFrame)] = {
+  test("differential: broadcast and merge-hinted left joins equal " +
+      "lookupNaive on fully nested ranges") {
     import spark.implicits._
-    val rnd = new scala.util.Random(9)
-    // 300 narrow ranges plus 10 wide ones, each 4 /16s wide
-    val spanning = ((0 until 300).map { i =>
-      val base = IpMath.parseIp(s"10.${i % 50}.${rnd.nextInt(250)}.0")
-      (base, IpMath.ipAdd(base, 100 + rnd.nextInt(300)), s"n$i")
-    } ++ (0 until 10).map { i =>
-      val base = IpMath.parseIp(s"${20 + i}.0.0.0")
-      (base, IpMath.ipAdd(base, 3L << 16), s"w$i")
-    }).toDF("lo", "hi", "payload")
-    val spanningProbes = (1 to 4000).map { i =>
-      (i.toLong, IpMath.parseIp(
-        s"${10 + rnd.nextInt(22)}.${rnd.nextInt(52)}.${rnd.nextInt(256)}.${rnd.nextInt(256)}"))
-    }.toDF("id", "bin")
-    // 25 v4 /8s, probed inside and outside them
-    val slash8 = (0 until 25).map { i =>
-      val r = IpMath.cidrToRange(s"${100 + i}.0.0.0/8")
-      (r._1, r._2, s"t$i")
-    }.toDF("lo", "hi", "payload")
-    val slash8Probes = (1 to 500).map { i =>
-      (i.toLong, IpMath.parseIp(s"${90 + i % 40}.${i % 256}.3.${i % 100}"))
-    }.toDF("id", "bin")
-    // both families, plus one range straddling the v4-mapped
-    // region's upper boundary
-    val v4RegionHi = IpMath.parseIp("255.255.255.255")
-    val mixed = Seq(
-      (IpMath.parseIp("10.0.0.0"), IpMath.parseIp("10.0.255.255"), "v4a"),
-      (IpMath.parseIp("2001:db8::"), IpMath.parseIp("2001:db8::ffff"), "v6a"),
-      (IpMath.parseIp("2600::"), IpMath.parseIp("2600::1:0"), "v6b"),
-      (IpMath.parseIp("255.255.255.250"), IpMath.ipAdd(v4RegionHi, 5L), "odd"))
-      .toDF("lo", "hi", "payload")
-    val mixedProbes = Seq(
-      (1L, IpMath.parseIp("10.0.1.2")),
-      (2L, IpMath.parseIp("10.1.0.1")),
-      (3L, IpMath.parseIp("2001:db8::5")),
-      (4L, IpMath.parseIp("2600::5")),
-      (5L, IpMath.parseIp("255.255.255.252")),
-      (6L, IpMath.ipAdd(v4RegionHi, 2L)),
-      (7L, IpMath.parseIp("::1")))
-      .toDF("id", "bin")
     // 200 fully nested intervals, all containing 500: up to 200
     // matches per probe
     val nested = (0 until 200).map(i => (i.toLong, (1000 - i).toLong, s"n$i"))
       .toDF("lo", "hi", "payload")
-    val nestedProbes = (-1L to 1001L by 7L).map(ip => (ip, ip)).toDF("id", "bin")
-    Seq(("bucket-spanning", spanning, spanningProbes),
-      ("25 /8s", slash8, slash8Probes),
-      ("mixed v4/v6", mixed, mixedProbes),
-      ("all-nested", nested, nestedProbes))
-  }
-
-  test("differential: broadcast and merge-hinted left joins equal " +
-      "lookupNaive on spanning, /8, mixed-family and nested tables") {
-    def rows(df: DataFrame): Seq[(Long, String)] =
-      df.select("id", "payload").collect()
-        .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-    val cond = col("bin") >= col("lo") && col("bin") <= col("hi")
-    differentialTables.foreach { case (name, ranges, probes) =>
-      val naive = RangeLookup.lookupNaive(inOracle(probes),
-        inOracle(ranges), col("bin"))
-      assert(physicalPlan(naive).contains("BroadcastNestedLoopJoin"), name)
-      val want = rows(naive)
-      assert(want.exists(_._2 != null) && want.exists(_._2 == null), name)
-      for ((exec, side) <- Seq("BroadcastRangeJoin" -> ranges,
-          "ShuffleRangeJoin" -> ranges.hint("merge"))) {
-        val got = probes.join(side, cond, "left")
-        assert(physicalPlan(got).contains(exec), s"$name: $exec")
-        assert(rows(got) == want, s"$name: $exec")
-      }
-    }
+    val probes = (-1L to 1001L by 7L).map(ip => (ip, ip)).toDF("id", "bin")
+    val (want, _) = RangeJoinDifferential.check("all-nested", nested, probes)
+    assert(want.groupBy(_._1).values.map(_.size).max == 200)
   }
 
   test("merge-hinted join spreads a hot /8 by fact quantiles: exact " +
