@@ -3,8 +3,12 @@ package graft.api
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
-import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.Resolver
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute,
+  AttributeReference, BindReferences, GenericInternalRow, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
+  LogicalPlan, Project}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType,
   DoubleType, LongType, StringType, StructField, StructType}
@@ -125,6 +129,56 @@ object Annotate {
   def annotate(facts: DataFrame, ipStr: Column, idx: Indexes): DataFrame =
     annotatePicked(facts, ipStr, probe => probe(idx))
 
+  /** [[annotate]] of one string IP, evaluated on the driver with no
+    * query: [[annotateWith]]'s plan over a one-column relation, analyzed
+    * once, its parse bound to that column and each group's emitted
+    * column bound to the parse's output. Evaluation is interpreted and
+    * only reads the expressions and the broadcast indexes, so one
+    * instance serves concurrent request threads.
+    */
+  final class Annotator private[api] (plan: LogicalPlan) {
+    private val (emitted, parsed, input) = plan match {
+      case Project(e, p @ Project(_, in)) =>
+        (e.collect { case a: Alias => a }, p, in)
+    }
+    private val parse =
+      BindReferences.bindReference(parsed.projectList.last, input.output)
+    private val groups =
+      emitted.map(BindReferences.bindReference(_, parsed.output))
+
+    /** [[annotate]] of `rows`, a local batch whose columns are `output`
+      * and whose string IP is column `ip`, as one analyzed local
+      * relation: the plan path's columns, order, types and nullability,
+      * a column named like a group replaced in place under the
+      * session's resolver. `cols(i)` is the ordinal of `output(i)` in
+      * the rows.
+      */
+    def annotate(spark: SparkSession, output: Seq[Attribute], cols: Seq[Int],
+        rows: Seq[InternalRow], ip: Int): DataFrame = {
+      val added = emitted.map(_.toAttribute.newInstance())
+      val out = placed(output, added,
+        castToImpl(spark).sessionState.conf.resolver).map(_.toAttribute)
+      // each output column: (its group, or -1; its batch column, or -1)
+      val from = out.map(a => (added.indexOf(a), output.indexOf(a)))
+      val data = rows.map { r =>
+        val ipStr = r.getUTF8String(cols(ip))
+        val bin = parse.eval(InternalRow(ipStr))
+        val values = groups.map(_.eval(InternalRow(ipStr, bin)))
+        new GenericInternalRow(from.map { case (g, i) =>
+          if (g >= 0) values(g) else r.get(cols(i), output(i).dataType)
+        }.toArray)
+      }
+      GraftBridge.ofAnalyzed(spark, LocalRelation(out, data))
+    }
+  }
+
+  /** The [[Annotator]] over `idx`: analyzes one plan, runs no job. */
+  def annotator(spark: SparkSession, idx: Indexes): Annotator = {
+    val ip = GraftBridge.ofRows(spark,
+      LocalRelation(AttributeReference("ip", StringType)()))
+    new Annotator(castToImpl(annotate(ip, col("ip"), idx)).queryExecution.analyzed)
+  }
+
   /** [[annotate]] through the indexes `pick` chooses per row:
     * `pick(probe)` is the column of `probe(indexes)` over the row's
     * indexes, e.g. a `CaseWhen` over several snapshots' probes.
@@ -161,13 +215,17 @@ object Annotate {
       val hit = payload(binRef).getField(name)
       Alias(spark.expression(when(hit.isNull, missing).otherwise(hit)), name)()
     }
-    val kept = input.output.map(a =>
-      emitted.find(e => same(a.name, e.name)).getOrElse(a))
-    val added =
-      emitted.filterNot(e => input.output.exists(a => same(a.name, e.name)))
-    GraftBridge.ofRows(spark,
-      Project(kept ++ added, Project(input.output :+ bin, input)))
+    GraftBridge.ofRows(spark, Project(placed(input.output, emitted, same),
+      Project(input.output :+ bin, input)))
   }
+
+  /** `facts` then `emitted`, each emitted column taking the place of a
+    * fact column of its name under `same` (as `withColumn` does).
+    */
+  private def placed(facts: Seq[NamedExpression],
+      emitted: Seq[NamedExpression], same: Resolver): Seq[NamedExpression] =
+    facts.map(a => emitted.find(e => same(a.name, e.name)).getOrElse(a)) ++
+      emitted.filterNot(e => facts.exists(a => same(a.name, e.name)))
 
   /** S11 end-to-end legacy path, build side: flatten the legacy range
     * table ([[graft.sources.Ingest.legacyGeo]]), join FIPS→ISO for

@@ -4,13 +4,18 @@ import java.sql.Date
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute,
+  BindReferences, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
+  LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{MapType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.metrics.Metrics
 
 /** Request/response surface (SURVEY §2.1 S12, §3.1-3.2): the Spark
   * shape of the v2 batch API — one as-of dataset selection per batch,
@@ -21,24 +26,31 @@ import org.apache.spark.unsafe.types.UTF8String
   * batch with one as-of pick and a binary search per IP, a
   * [[Snapshot]]'s tables are read once, at its first use, into
   * broadcast range indexes that live exactly as long as the snapshot.
-  * After that a request-scale batch (a local `Seq.toDF`) is annotated
-  * and rendered without a Spark job: its one analyzed plan (parse,
-  * then probe and emit) folds to a local relation on the driver and
-  * the response is written from that plan's rows.
+  * A request-scale batch (a local `Seq.toDF`) is then answered on the
+  * driver with no Catalyst query: each IP goes through the snapshot's
+  * [[Snapshot.annotator]], one plan analyzed once per snapshot, into a
+  * local relation, and the response is written from that relation's
+  * rows. Any other input is annotated by one analyzed plan (parse, then
+  * probe and emit) and rendered from one tracked execution of it; that
+  * path is the local one's differential oracle.
   */
 object Api {
 
   /** One loaded dataset snapshot pair. [[indexes]] reads both tables
     * and broadcasts their range indexes on first use — never when the
     * snapshot is constructed — and keeps them for the snapshot's
-    * lifetime. A refresh that keeps this snapshot in the new
-    * [[Directory]] keeps its indexes; once no directory holds it, the
-    * broadcasts are unreachable and Spark's ContextCleaner removes
-    * them. `copy` yields a new snapshot whose indexes are built anew.
+    * lifetime; [[annotator]], the annotation of one IP over them, is
+    * likewise analyzed at its first local request and kept. A refresh
+    * that keeps this snapshot in the new [[Directory]] keeps both; once
+    * no directory holds it, the broadcasts are unreachable and Spark's
+    * ContextCleaner removes them. `copy` yields a new snapshot whose
+    * indexes and annotator are built anew.
     */
   final case class Snapshot(date: Date, geo: DataFrame, asn: DataFrame) {
     @transient lazy val indexes: Annotate.Indexes =
       Annotate.indexes(geo.sparkSession, geo, asn)
+    @transient lazy val annotator: Annotate.Annotator =
+      Annotate.annotator(geo.sparkSession, indexes)
   }
 
   /** The annotator directory: date-sorted snapshots with the as-of
@@ -73,11 +85,51 @@ object Api {
   /** v2 batch annotate (handler.go:194-243): one snapshot for the
     * whole batch, per-row annotation through the snapshot's
     * [[Snapshot.indexes]], Missing defaulting inside
-    * [[Annotate.annotate]]. Output: the input's columns + geo, network.
+    * [[Annotate.annotate]]. Output: the input's columns + geo, network,
+    * a column of either name replaced in place.
+    *
+    * A local batch — a `LocalRelation`, under projections that only
+    * select or rename columns (as `Seq.toDF("ip")` gives), whose
+    * `ipCol` is a string column — is annotated right here, through
+    * the snapshot's [[Snapshot.annotator]], into an analyzed local
+    * relation: no analysis, optimization or job per request. Any other
+    * input gets [[Annotate.annotate]]'s one plan, analyzed here.
     */
   def annotateV2(spark: SparkSession, dir: Directory, date: Date,
-      ips: DataFrame, ipCol: String = "ip"): DataFrame =
-    Annotate.annotate(ips, col(ipCol), dir.forDate(date).indexes)
+      ips: DataFrame, ipCol: String = "ip"): DataFrame = {
+    val snapshot = dir.forDate(date)
+    val batch = castToImpl(ips).queryExecution.analyzed
+    val ip = batch.resolveQuoted(ipCol,
+      castToImpl(spark).sessionState.conf.resolver).collect {
+        case a: Attribute if a.dataType == StringType =>
+          batch.output.indexWhere(_.exprId == a.exprId)
+      }
+    (localRows(batch), ip) match {
+      case (Some((cols, rows)), Some(i)) if i >= 0 =>
+        snapshot.annotator.annotate(spark, batch.output, cols, rows, i)
+      case _ => Annotate.annotate(ips, col(ipCol), snapshot.indexes)
+    }
+  }
+
+  /** The rows of `plan` if it is a local batch: a non-streaming
+    * `LocalRelation` under projections that only select or rename
+    * columns. With them, the ordinal in those rows of each of
+    * `plan`'s columns.
+    */
+  private def localRows(plan: LogicalPlan)
+      : Option[(Seq[Int], Seq[InternalRow])] = plan match {
+    case r: LocalRelation if !r.isStreaming => Some((r.output.indices, r.data))
+    case Project(list, child) => localRows(child).flatMap { case (cols, rows) =>
+      val picked = list.map {
+        case a: Attribute => child.output.indexWhere(_.exprId == a.exprId)
+        case Alias(a: Attribute, _) =>
+          child.output.indexWhere(_.exprId == a.exprId)
+        case _ => -1
+      }
+      if (picked.contains(-1)) None else Some((picked.map(cols), rows))
+    }
+    case _ => None
+  }
 
   /** [[annotateV2]] with the as-of pick made per row, in the one plan
     * [[Annotate.annotate]] builds: each probe is a [[Directory.asOf]]
@@ -93,16 +145,25 @@ object Api {
     * "Annotations": {ip: {Geo…, Network…}}}` (api-v2.go:51-55).
     * NULL fields are dropped, matching Go's `omitempty`.
     *
-    * Executes `annotated`'s own plan once, as a tracked SQL execution
-    * named `collect` (so `QueryExecutionListener`s see the request),
-    * without a second projection, analysis or row encoder. `ipCol`,
-    * `geo` and `network` are resolved under the session's resolver
-    * and read from the plan's rows; the first row per IP is kept, in
-    * row order. The document is written by the generator `to_json`
-    * uses ([[org.apache.spark.sql.GraftBridge.toJson]]), so key
-    * escaping, NULL omission and number format are `to_json`'s. Over a
-    * local batch the plan folds to a local relation and no job runs;
-    * any other input costs one narrow job.
+    * A frame whose logical plan is a `LocalRelation` (what
+    * [[annotateV2]] returns for a local batch) is rendered straight
+    * from that relation's rows: no optimizer, physical plan or SQL
+    * execution. Any other frame's plan is executed once, as a tracked
+    * SQL execution named `collect` (so `QueryExecutionListener`s see
+    * the request), without a second projection, analysis or row
+    * encoder; that costs one narrow job. `ipCol`, `geo` and `network`
+    * are resolved under the session's resolver and read from the rows;
+    * the first row per IP is kept, in row order. The document is
+    * written by the generator `to_json` uses
+    * ([[org.apache.spark.sql.GraftBridge.toJson]]), so key escaping,
+    * NULL omission and number format are `to_json`'s.
+    *
+    * Each call that returns records one
+    * `Metrics.observeRequestBatch("v2", rows, nanos)`: `rows` is the
+    * number of rows rendered (repeats included) and `nanos` this
+    * call's own time — on the local path the rendering alone, on the
+    * other the optimization, planning and execution of the plan as
+    * well. [[annotateV2]]'s time is not included.
     *
     * REQUEST-scale only: this materializes one JSON string on the
     * driver, faithful to the reference's per-HTTP-request response
@@ -115,6 +176,7 @@ object Api {
     */
   def toV2ResponseJson(annotated: DataFrame, annotatorDate: Date,
       ipCol: String = "ip"): String = {
+    val t0 = System.nanoTime()
     val qe = castToImpl(annotated).queryExecution
     val conf = qe.sparkSession.sessionState.conf
     def field(name: String): Expression = BindReferences.bindReference(
@@ -122,8 +184,11 @@ object Api {
         throw new IllegalArgumentException(s"no column '$name'")),
       qe.analyzed.output)
     val (ip, geo, network) = (field(ipCol), field("geo"), field("network"))
-    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(
-      qe.executedPlan.executeCollect())
+    val rows = qe.analyzed match {
+      case r: LocalRelation if !r.isStreaming => r.data
+      case _ => SQLExecution.withNewExecutionId(qe, Some("collect"))(
+        qe.executedPlan.executeCollect()).toSeq
+    }
     // a batch may legally repeat an IP (the reference's map just
     // overwrites the key); its rows annotate alike, so keep the first
     val entries = new java.util.LinkedHashMap[Any, InternalRow]
@@ -136,13 +201,15 @@ object Api {
     }
     val entry = StructType(Seq(StructField("Geo", geo.dataType),
       StructField("Network", network.dataType)))
-    GraftBridge.toJson(
+    val doc = GraftBridge.toJson(
       StructType(Seq(StructField("AnnotatorDate", StringType),
         StructField("Annotations", MapType(ip.dataType, entry)))),
       InternalRow(UTF8String.fromString(annotatorDate.toString),
         new ArrayBasedMapData(new GenericArrayData(entries.keySet.toArray),
           new GenericArrayData(entries.values.toArray))),
       conf.sessionLocalTimeZone)
+    Metrics.observeRequestBatch("v2", rows.length, System.nanoTime() - t0)
+    doc
   }
 
   /** v1 legacy response key: ip + base-36 unix seconds, lower-case

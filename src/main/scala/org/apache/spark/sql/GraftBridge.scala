@@ -55,6 +55,15 @@ object GraftBridge {
     classic.Dataset.ofRows(
       classic.ClassicConversions.castToImpl(spark), plan)
 
+  /** Wrap an already-resolved plan as a DataFrame without running the
+    * analyzer over it: the plan is marked analyzed first.
+    */
+  def ofAnalyzed(spark: SparkSession,
+      plan: catalyst.plans.logical.LogicalPlan): DataFrame = {
+    plan.setAnalyzed()
+    ofRows(spark, plan)
+  }
+
   /** `row` of `schema` as one JSON document, written by the generator
     * `to_json` uses (`JacksonGenerator` with default `JSONOptions`):
     * its key escaping, number format and NULL-field omission

@@ -279,32 +279,27 @@ class ApiSpec extends AnyFunSuite {
     import graft.functions.IpToBin
     val dir = Api.Directory(Seq(snap("2020-01-01")))
     val d = Date.valueOf("2020-06-01")
-    val batch = Seq("1.0.0.200", "9.9.9.9").toDF("ip")
+    // a non-local input: a local one is annotated without a plan
+    val batch = Seq("1.0.0.200", "9.9.9.9").toDF("ip").repartition(2)
     def analyzed(df: DataFrame) = castToImpl(df).queryExecution.analyzed
     def projects(p: LogicalPlan) = p.collect { case x: Project => x }.size
     // every step of a plan is analyzed on its own, and each Project is
     // one more node the optimizer walks: the request adds at most two
     assert(projects(analyzed(Api.annotateV2(spark, dir, d, batch))) -
       projects(analyzed(batch)) <= 2)
-    // over a non-local input the optimizer keeps the parse in its own
-    // projection instead of inlining it into both probes
-    val optimized = castToImpl(Api.annotateV2(spark, dir, d,
-      batch.repartition(2))).queryExecution.optimizedPlan
+    // the optimizer keeps the parse in its own projection instead of
+    // inlining it into both probes
+    val optimized = castToImpl(Api.annotateV2(spark, dir, d, batch))
+      .queryExecution.optimizedPlan
     assert(optimized.flatMap(_.expressions.flatMap(_.collect {
       case e: IpToBin => e })).size == 1, optimized.treeString)
   }
 
-  test("a warm v2 request runs one tracked execution and no job") {
-    import spark.implicits._
+  /** Query executions that succeed while `body` runs. */
+  private def executionsRunBy(body: => Unit): Int = {
     import org.apache.spark.sql.classic.ClassicConversions.castToImpl
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    val dir = Api.Directory(Seq(snap("2020-01-01")))
-    val d = Date.valueOf("2020-06-01")
-    def request(): String = Api.toV2ResponseJson(Api.annotateV2(spark,
-      dir, d, Seq("1.0.0.200", "9.9.9.9", "1.0.0.200").toDF("ip")),
-      dir.forDate(d).date)
-    request() // builds the snapshot's indexes
     val successes = new AtomicInteger
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -316,12 +311,134 @@ class ApiSpec extends AnyFunSuite {
     // marker job drains, so every success is counted once body returns
     jobsRunBy(())
     castToImpl(spark).listenerManager.register(listener)
-    try assert(jobsRunBy(request()) == 0)
+    try jobsRunBy(body)
     finally castToImpl(spark).listenerManager.unregister(listener)
-    assert(successes.get == 1)
+    successes.get
+  }
+
+  /** v2 request observations in the metrics registry. */
+  private def observations: Long = graft.metrics.Metrics.registry.snapshot
+    .collect { case (k, v) if k.startsWith("request_time_hist{source=v2,") => v }
+    .sum
+
+  private def isLocal(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    castToImpl(df).queryExecution.analyzed.isInstanceOf[LocalRelation]
+  }
+
+  test("a warm local v2 request runs no job and no tracked execution") {
+    import spark.implicits._
+    val s1 = snap("2020-01-01")
+    val dir = Api.Directory(Seq(s1))
+    val d = Date.valueOf("2020-06-01")
+    def request(batch: DataFrame): String = Api.toV2ResponseJson(
+      Api.annotateV2(spark, dir, d, batch), dir.forDate(d).date)
+    val batch = Seq("1.0.0.200", "9.9.9.9", "1.0.0.200").toDF("ip")
+    // the annotator is built at its first use, not with the snapshot
+    var fresh: Api.Snapshot = null
+    assert(jobsRunBy { fresh = s1.copy() } == 0)
+    assert(jobsRunBy(fresh.annotator) > 0)
+    request(batch) // builds the snapshot's indexes and annotator
+    var before = observations
+    assert(executionsRunBy(assert(jobsRunBy(request(batch)) == 0)) == 0)
+    assert(observations == before + 1)
+    // any other input still runs its one tracked execution
+    before = observations
+    assert(executionsRunBy(request(batch.repartition(2))) == 1)
+    assert(observations == before + 1)
+    // later calls and a refresh that keeps the snapshot share the
+    // annotator; a copy builds its own
+    val refreshed = Api.Directory(dir.snapshots ++ Seq(snap("2021-01-01")))
+    assert(s1.annotator eq dir.forDate(d).annotator)
+    assert(refreshed.forDate(d).annotator eq s1.annotator)
+    assert(fresh.annotator ne s1.annotator)
     // the placeholders are values, built once
     assert(Annotate.missingGeo eq Annotate.missingGeo)
     assert(Annotate.missingNetwork eq Annotate.missingNetwork)
+  }
+
+  test("a local v2 batch answers as the plan path does") {
+    import spark.implicits._
+    val dir = Api.Directory(Seq(snap("2020-01-01")))
+    val d = Date.valueOf("2020-06-01")
+    val mapper = new ObjectMapper()
+      .enable(JsonParser.Feature.STRICT_DUPLICATE_DETECTION)
+    def counts(df: DataFrame) = df.collect().toSeq.groupBy(identity)
+      .map { case (r, rs) => r -> rs.length }
+    // the plan path is the same batch, made non-local by a repartition
+    def agrees(batch: DataFrame, render: String = "ip"): Unit = {
+      val local = Api.annotateV2(spark, dir, d, batch)
+      val plan = Api.annotateV2(spark, dir, d, batch.repartition(2))
+      assert(isLocal(local) && !isLocal(plan))
+      assert(local.schema == plan.schema)
+      assert(local.schema.map(_.nullable) == plan.schema.map(_.nullable))
+      assert(counts(local) == counts(plan))
+      val doc = Api.toV2ResponseJson(local, d, render)
+      assert(mapper.readTree(doc) ==
+        mapper.readTree(Api.toV2ResponseJson(plan, d, render)), doc)
+    }
+    // hits, a miss, unparseable strings, 6to4, native v6, a key that
+    // needs escaping and repeats
+    val ips = Seq("1.0.0.200", "9.9.9.9", "1.0.0.200", "nope", "",
+      "2002:100:c8::", "2001:200::1", "a\"b\\c", "9.9.9.9")
+    agrees(ips.toDF("ip"))
+    val big = (0 until 599).map(i => i % 5 match {
+      case 0 => "1.0.0.200"
+      case 1 => s"1.0.${i % 3}.${i % 256}"
+      case 2 => s"2001:200::${i % 40}"
+      case 3 => s"9.9.${i % 7}.9"
+      case _ => s"2002:100:${i % 4}::"
+    })
+    agrees(big.toDF("ip"))
+    agrees(Seq.empty[String].toDF("ip"))
+    // a fact column named like an output is replaced in place, under
+    // the session's resolver; other fact columns are kept
+    val tagged = ips.map(ip => (ip, s"<$ip>"))
+    agrees(tagged.toDF("ip", "geo"))
+    agrees(tagged.toDF("GEO", "ip").select("ip", "GEO"))
+    agrees(tagged.toDF("network", "ip"))
+    agrees(tagged.toDF("ip", "note"))
+    agrees(ips.toDF("IP"), render = "ip")
+    // a NULL IP is refused alike on both paths
+    val withNull = Seq(Some("1.0.0.200"), None).toDF("ip")
+    val refused = Seq(withNull, withNull.repartition(2)).map { b =>
+      val out = Api.annotateV2(spark, dir, d, b)
+      intercept[IllegalArgumentException](Api.toV2ResponseJson(out, d))
+        .getMessage
+    }
+    assert(refused.distinct == Seq("NULL in IP column 'ip'"))
+    // a non-string IP column and a computed column take the plan path
+    assert(!isLocal(Api.annotateV2(spark, dir, d, Seq(1, 2).toDF("ip"))))
+    assert(!isLocal(Api.annotateV2(spark, dir, d,
+      ips.toDF("ip").select(trim(col("ip")).as("ip")))))
+  }
+
+  test("concurrent local v2 requests share one snapshot's annotator") {
+    import spark.implicits._
+    val dir = Api.Directory(Seq(snap("2020-01-01")))
+    val d = Date.valueOf("2020-06-01")
+    val pool = Seq("1.0.0.200", "1.0.1.50", "9.9.9.9", "nope", "",
+      "2002:100:c8::", "2001:200::1", "1.0.0.130", "2001:200::7")
+    def batch(i: Int) = (0 until 1 + i % 23).map(k => pool((i + k * 7) % pool.size))
+    def request(i: Int): String = Api.toV2ResponseJson(
+      Api.annotateV2(spark, dir, d, batch(i).toDF("ip")), d)
+    val want = (0 until 50).map(request)
+    val got = Array.ofDim[String](4, 50)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val start = new CountDownLatch(1)
+    val threads = (0 until 4).map { t =>
+      val th = new Thread(() =>
+        try {
+          start.await()
+          (0 until 50).foreach(i => got(t)(i) = request(i))
+        } catch { case e: Throwable => errors.add(e) })
+      th.start(); th
+    }
+    start.countDown()
+    threads.foreach(_.join(120000))
+    assert(errors.isEmpty, errors)
+    got.foreach(docs => assert(docs.toSeq == want))
   }
 
   test("batch size buckets (P18)") {
