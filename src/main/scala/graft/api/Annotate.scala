@@ -6,7 +6,8 @@ import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.Resolver
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute,
-  AttributeReference, BindReferences, GenericInternalRow, NamedExpression}
+  AttributeReference, BindReferences, GenericInternalRow, KnownNullable,
+  NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
   LogicalPlan, Project}
 import org.apache.spark.sql.functions._
@@ -194,7 +195,8 @@ object Annotate {
   /** One analyzed plan, `Project(emitted, Project(facts :+ __ip_bin,
     * facts))`: parse each IP once, then emit the fact columns plus
     * each (name, payload, missing) group's field `name` of
-    * `payload(__ip_bin)`, or `missing` where that is NULL, replacing a
+    * `payload(__ip_bin)`, or `missing` where that is NULL (one probe
+    * per row), replacing a
     * fact column `name` in place under the session's resolver
     * (`withColumn`). Built over the facts' analyzed plan and analyzed
     * once, by `ofRows`. The probes reach `__ip_bin` by its alias's
@@ -211,9 +213,11 @@ object Annotate {
       Alias(spark.expression(ip_to_bin(rewrite6to4(ipStr))), "__ip_bin")()
     val binRef = GraftBridge.column(
       AttributeReference(bin.name, BinaryType)(exprId = bin.exprId))
+    // coalesce evaluates the probe once per row; KnownNullable keeps
+    // the column nullable, as the probe's own result is
     val emitted = groups.map { case (name, payload, missing) =>
-      val hit = payload(binRef).getField(name)
-      Alias(spark.expression(when(hit.isNull, missing).otherwise(hit)), name)()
+      Alias(KnownNullable(spark.expression(
+        coalesce(payload(binRef).getField(name), missing))), name)()
     }
     GraftBridge.ofRows(spark, Project(placed(input.output, emitted, same),
       Project(input.output :+ bin, input)))

@@ -381,9 +381,10 @@ object AggView extends SignedArtifact[ViewLayout] {
     * order, unused columns, row order all irrelevant): equal to the
     * view manifest's composed `fp` iff the view is exactly the rollup
     * of `facts`. The EXACT consistency verification a pin refresh
-    * ([[graft.plans.AggViewRewrite.refreshPins]]) runs before
-    * re-trusting a registration — one projected scan of the facts,
-    * the same pass [[buildIfAbsent]]'s reuse check already prices.
+    * ([[graft.plans.PinnedBridge.verifyDelta]]) composes per file
+    * ([[factsFingerprintByFile]]) before re-trusting a registration;
+    * whole, it is one projected scan of the facts, the same pass
+    * [[buildIfAbsent]]'s reuse check already prices.
     */
   def factsFingerprint(facts: DataFrame, path: String): (Long, Long) = {
     val mf = live(path)

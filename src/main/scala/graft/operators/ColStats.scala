@@ -120,7 +120,7 @@ object ColStats extends SignedArtifact[ColLayout] {
     IndexDirs.contentFingerprint(df, numCols ++ strCols)
 
   /** [[fingerprint]] grouped per source FILE — the per-file partials
-    * a pin refresh ([[graft.plans.ColStatsInjection.refreshPins]])
+    * a pin refresh ([[graft.plans.PinnedBridge.verifyDelta]])
     * stores so later refreshes fingerprint only NEW files and
     * compose the rest (O(delta)). `df` must be a bare file scan.
     */
@@ -436,7 +436,7 @@ object ColStats extends SignedArtifact[ColLayout] {
     * consumer re-checks), the composed content FINGERPRINT of
     * everything the profile absorbed (what [[fingerprint]] of a
     * consistent base reproduces — the pin-REFRESH verification of
-    * [[graft.plans.ColStatsInjection.refreshPins]]), and the live row
+    * [[graft.plans.PinnedBridge.verifyDelta]]), and the live row
     * count.
     */
   final case class Decl(numCols: Seq[String], strCols: Seq[String],

@@ -186,7 +186,7 @@ object MergeOnRead {
     * post-GC sidecar; -1 before any — , whether every live committed
     * batch dir carries a stream marker). A consumer keeping a sibling
     * artifact in sync from the SAME micro-batch feed
-    * ([[graft.plans.AggViewRewrite.refreshPins]]) re-trusts its
+    * ([[graft.plans.RelationPins.refreshMor]]) re-trusts its
     * registration only when its own watermark has reached the max id
     * AND nothing landed out-of-band (an unmarked batch is a plain
     * [[append]] the feed never saw — the flag catches the live ones;

@@ -83,7 +83,7 @@ object ZoneMap extends Store[ZoneLayout] {
     * (`cfp`/`cn`: xor of per-row xxhash64 over the declared columns
     * plus the row count, computed in the same profiling scan) — what
     * lets a consumer verifying "base content == sibling artifact"
-    * ([[graft.plans.ColStatsInjection.refreshPins]]) COMPOSE stored
+    * ([[graft.plans.PinnedBridge.verifyDelta]]) COMPOSE stored
     * partials for unchanged files and fingerprint only new ones
     * (O(delta) instead of a projected corpus scan per refresh).
     * `sameIndexAs` includes fmt, so older artifacts rebuild.

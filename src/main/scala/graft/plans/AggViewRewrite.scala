@@ -1,7 +1,6 @@
 package graft.plans
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.internal.Logging
@@ -122,29 +121,9 @@ import graft.sources.MorRelation
   * [[rewritten]], which registers, forces optimization, and
   * unregisters.
   */
-object AggViewRewrite extends PredicateHelper with Logging {
-
-  /** What a registration pinned the BASE table at: either a parquet
-    * directory's file-listing signature or a [[MergeOnRead]] table's
-    * observable state. Either moving disables the rewrite until
-    * [[refreshPins]]/re-registration.
-    */
-  sealed trait BasePin
-  /** `fileFps` is the refresh accelerator, not part of the pin's
-    * identity: per-file content-fingerprint partials
-    * ([[RelationPins.FileFp]]) accumulated by [[refreshPins]] so
-    * each verification fingerprints only files it has no stored
-    * partial for (O(delta)). Seeded at [[register]] from the view's
-    * own build-time ledger ([[AggView.fingerprintLedger]] — the
-    * build's fingerprint pass already paid the scan), so even the
-    * FIRST refresh is O(delta); for ledger-less views it starts
-    * empty and the first verification's own scan seeds it.
-    */
-  final case class FsPin(roots: Set[String], listingSig: Long,
-      fileFps: Map[String, RelationPins.FileFp] = Map.empty)
-      extends BasePin
-  final case class MorPin(morPath: String, state: MergeOnRead.State)
-      extends BasePin
+object AggViewRewrite extends PinnedBridge("view_path")
+    with PredicateHelper with Logging {
+  import RelationPins.{BasePin, FsId, FsPin, MorId, MorPin, Refresh}
 
   /** One broadcast DIMENSION of a STAR registration: the dim table's
     * root paths, its file-listing pin, and the declared equi-join
@@ -191,8 +170,11 @@ object AggViewRewrite extends PredicateHelper with Logging {
       zones: Option[Map[String, Map[Int, graft.operators.ZoneTests.Zone]]] = None,
       dims: Seq[DimEntry] = Nil)
 
-  private val registry =
-    new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+  type Registered = Entry
+  type Declared = AggView.Decl
+  protected def keyOf(e: Entry): String = e.viewPath
+  protected def declared(path: String): AggView.Decl = AggView.declaration(path)
+  protected def ruleFor(spark: SparkSession): Rule = Rule(spark)
 
   /** Pin `viewPath` as the rollup of `base` AS CURRENTLY OBSERVED.
     * `base` must be a bare single-relation scan — a parquet
@@ -214,23 +196,14 @@ object AggViewRewrite extends PredicateHelper with Logging {
     */
   def register(spark: SparkSession, base: DataFrame,
       viewPath: String, keyZones: Boolean = false): Entry = {
-    val (_, id) = baseOf(GraftBridge.analyzedPlan(base))
+    val (_, id) = RelationPins.baseOf(GraftBridge.analyzedPlan(base))
       .getOrElse(throw new IllegalArgumentException(
         "register expects a bare single-relation scan (a parquet " +
           "file-source or a live mor-source read of the fact table " +
           "the view rolls up); got:\n" +
           GraftBridge.analyzedPlan(base).treeString))
     id match {
-      // a hive-PARTITIONED base is supported under one root: refresh
-      // delta scans read with option("basePath", root) so partition
-      // columns resolve for the appended files. With several roots
-      // there is no one basePath — refuse with guidance rather than
-      // fail every later refresh.
-      case FsId(h) if h.partitionSchema.nonEmpty =>
-        require(RelationPins.rootPaths(h).size == 1,
-          "a partitioned base registers under a SINGLE root path " +
-            "(refresh scans resolve partition columns via basePath); " +
-            "read the table through its one root directory")
+      case FsId(h) => RelationPins.requireOneRoot(h)
       case _ => ()
     }
     val decl = AggView.declaration(viewPath)
@@ -243,10 +216,8 @@ object AggViewRewrite extends PredicateHelper with Logging {
       "view key/measure named 'cnt' (any case the session resolver " +
         "matches) would collide with the served count column — not " +
         "rewritable")
-    val e = Entry(viewPath, pinOf(spark, id, viewPath), decl.version,
-      decl, zonesOf(spark, viewPath, keyZones))
-    registry.put(viewPath, e)
-    e
+    put(Entry(viewPath, pinOf(spark, id, viewPath), decl.version,
+      decl, zonesOf(spark, viewPath, keyZones)))
   }
 
   /** Pin `viewPath` as the rollup of a STAR — `fact ⋈ dims` on the
@@ -336,11 +307,9 @@ object AggViewRewrite extends PredicateHelper with Logging {
       "view key/measure named 'cnt' (any case the session resolver " +
         "matches) would collide with the served count column — not " +
         "rewritable")
-    val e = Entry(viewPath, pinOf(spark, FsId(factRel), viewPath),
+    put(Entry(viewPath, pinOf(spark, FsId(factRel), viewPath),
       decl.version, decl, zonesOf(spark, viewPath, keyZones),
-      dimEntries)
-    registry.put(viewPath, e)
-    e
+      dimEntries))
   }
 
   /** The `proveDims` proof obligations, refused loudly on failure:
@@ -425,32 +394,20 @@ object AggViewRewrite extends PredicateHelper with Logging {
           c -> rows.map(t => t._2 -> t._3).toMap
         })
 
-  def unregister(viewPath: String): Unit = { registry.remove(viewPath); () }
-
-  def clear(): Unit = registry.clear()
-
   /** Current registrations with their LIVE freshness — the ops
     * answer to "why didn't my query rewrite": one row per registered
     * view (path, base pin, keys, measures, pinned version, and
     * whether the VIEW pin still matches the artifact's current
-    * manifest). Base freshness is evaluated for MOR pins (their state
-    * is readable here); file-listing pins are per-query (they need
-    * the query's own relation) and report null.
+    * manifest), with [[RelationPins.describe]]'s base freshness.
     */
   def status(spark: SparkSession): DataFrame = {
     val s = spark
     import s.implicits._
-    registry.values.asScala.toSeq.sortBy(_.viewPath).map { e =>
+    entries.map { e =>
       val liveVersion =
         try Some(AggView.declaration(e.viewPath).version)
         catch { case NonFatal(_) => None }
-      val (baseDesc0, baseFresh) = e.pin match {
-        case FsPin(roots, _, _) =>
-          (roots.toSeq.sorted.mkString(","), None: Option[Boolean])
-        case MorPin(p, st) =>
-          (p, Some(try MergeOnRead.state(p) == st
-            catch { case NonFatal(_) => false }))
-      }
+      val (baseDesc0, baseFresh) = RelationPins.describe(e.pin)
       // star registrations name their dims too — the ops surface
       // should show the whole shape the rewrite matches
       val baseDesc =
@@ -471,8 +428,9 @@ object AggViewRewrite extends PredicateHelper with Logging {
     * MOVED — the maintenance hook that keeps the rewrite live on a
     * CHANGING fact table instead of degrading to a permanent no-op
     * after the first append. Call it after the CDC fleet applies a
-    * batch to base and view (or wrap the sink with
-    * [[refreshingSink]]).
+    * batch to base and view, or wrap the sink with [[refreshingSink]]:
+    * `IndexPipeline.sink(MergeOnRead.foreachBatchSink(dir),
+    * AggView.cdcSink(view), AggViewRewrite.refreshingSink(spark))`.
     *
     * A pin refreshes only when base and view are VERIFIED consistent
     * — never on trust:
@@ -482,18 +440,18 @@ object AggViewRewrite extends PredicateHelper with Logging {
     *    composed fingerprint — computed O(DELTA): per-file partials
     *    ([[AggView.factsFingerprintByFile]]) stored in the pin
     *    compose for unchanged files and only files with no stored
-    *    partial are scanned ([[RelationPins.composeFingerprint]];
-    *    the FIRST verification scans everything and seeds). Exact: a
+    *    partial are scanned ([[PinnedBridge.verifyDelta]]; the
+    *    FIRST verification scans everything and seeds). Exact: a
     *    base-only append or a view-only commit fails the check and
     *    the registration stays stale (refusing, correctly) until the
     *    two converge; an in-place rewrite of a pinned file refuses
     *    (per-file (len, mtime) pins).
-    *  - MOR base: every live committed batch must carry a stream
-    *    marker and the max committed stream id must equal the view's
-    *    own `lastBatch` watermark ([[MergeOnRead.streamState]] —
-    *    metadata-scale). A base-only `streamAppend` leaves the view's
-    *    watermark behind ⇒ no refresh until the view's
-    *    [[AggView.applyBatch]] lands the same id.
+    *  - MOR base: the feed watermark must match
+    *    ([[RelationPins.refreshMor]] — a base-only `streamAppend`
+    *    leaves the view's watermark behind ⇒ no refresh until the
+    *    view's [[AggView.applyBatch]] lands the same id), and the
+    *    view's commit chain since the pin must be clean
+    *    ([[viewChainClean]]).
     *
     * A view whose DECLARATION changed (rebuild with different
     * keys/measures) never auto-refreshes — re-register explicitly.
@@ -501,40 +459,20 @@ object AggViewRewrite extends PredicateHelper with Logging {
     * Returns one row per registration: (view_path, refreshed,
     * reason).
     */
-  def refreshPins(spark: SparkSession): DataFrame = {
-    val s = spark
-    import s.implicits._
-    val rows = registry.values.asScala.toSeq.sortBy(_.viewPath).map {
-      // per-registration isolation: one unreadable artifact or FS
-      // hiccup reports as THAT row's reason instead of throwing out
-      // of the whole pass (and, via refreshingSink, failing the
-      // entire streaming batch for every other registration)
-      e => (try refreshOne(spark, e)
-        catch { case NonFatal(ex) =>
-          scala.Left(s"refresh failed: $ex") }) match {
-        case scala.Right((updated, how)) =>
-          registry.put(e.viewPath, updated)
-          (e.viewPath, true, how)
-        case scala.Left(reason) => (e.viewPath, false, reason)
-      }
-    }
-    rows.toDF("view_path", "refreshed", "reason")
-  }
+  def refreshPins(spark: SparkSession): DataFrame =
+    refreshEach(spark)(repin(spark, _))
 
-  private def refreshOne(spark: SparkSession,
-      e: Entry): Either[String, (Entry, String)] = {
+  /** Verify one registration and re-pin it, or say why not. */
+  private def repin(spark: SparkSession, e: Entry): Refresh[Entry] = {
     val live = try AggView.declaration(e.viewPath)
       catch { case NonFatal(ex) =>
         return scala.Left(s"view unreadable: $ex") }
     if (live.keys != e.decl.keys || live.measures != e.decl.measures ||
       live.kbParts != e.decl.kbParts)
       return scala.Left("view declaration changed (rebuild) — re-register")
+    val moved = live.version != e.version
     e.pin match {
-      case FsPin(roots, sig, fps) =>
-        val baseDf = spark.read.parquet(roots.toSeq.sorted: _*)
-        val fsRel = RelationPins.bare(GraftBridge.analyzedPlan(baseDf))
-          .map(_._2).getOrElse(
-            return scala.Left("base no longer reads as a bare parquet scan"))
+      case p: FsPin =>
         // STAR registrations: every dim must be byte-identical to its
         // pin — the view absorbed joined rows, and a changed dim
         // invalidates all of them with no incremental repair, so a
@@ -551,133 +489,79 @@ object AggViewRewrite extends PredicateHelper with Logging {
               "rollup is invalidated; rebuild the view and re-register")
           dimDf
         }
-        // partitioned base: the delta scan reads leaf files with
-        // basePath so partition columns resolve (the register-time
-        // single-root guard makes the basePath unambiguous)
-        val readFactDelta: Seq[String] => DataFrame =
-          if (fsRel.partitionSchema.isEmpty)
-            uris => spark.read.parquet(uris: _*)
-          else if (roots.size == 1)
-            uris => spark.read.option("basePath", roots.head)
-              .parquet(uris: _*)
-          else return scala.Left("partitioned base has several root " +
-            "paths — no unambiguous basePath for delta scans; " +
-            "re-register under the table's one root directory")
-        // star: the verification fingerprints the JOINED rows of the
-        // new fact files, grouped by the FACT file each row expanded
-        // from — the file key is tagged on the fact side BEFORE the
-        // joins (input_file_name() is single-source-only) and the
-        // dims broadcast
-        val srcCol = "__graft_src"
-        // neutral-dim upkeep: INNER-dim coverage is a property of
-        // the FACT, so appended rows must re-prove it (a LEFT dim
-        // keeps every row — nothing to re-prove). The delta's raw
-        // row count (parquet footer metadata — no data read) against
-        // the joined partials' summed count detects a dropped row:
-        // with every dim key unique (proven at register, dims
-        // immutable), duplication is impossible, so joined < raw ⟺
-        // some new row found no inner match. -1 = the scan never ran
-        // (no new files).
-        val needCoverage =
-          e.dims.exists(d => d.neutral && d.joinType == "inner")
-        var deltaRaw = -1L
-        var deltaJoined = -1L
-        val scan: Seq[String] => Map[String, (Long, Long)] =
-          if (e.dims.isEmpty)
-            uris => AggView.factsFingerprintByFile(
-              readFactDelta(uris), e.viewPath)
-          else uris => {
-            val tagged = readFactDelta(uris)
-              .withColumn(srcCol, AggView.sourceFileKey)
-            val joinedDelta = e.dims.zip(dimDfs).foldLeft(tagged) {
-              case (acc, (de, dimDf)) =>
-                val cond = de.joinKeys.map { case (fc, dc) =>
-                  acc(fc) === dimDf(dc) }.reduce(_ && _)
-                acc.join(
-                  org.apache.spark.sql.functions.broadcast(dimDf),
-                  cond, de.joinType)
+        RelationPins.refreshFs(spark, p, moved) { base =>
+          // star: the verification fingerprints the JOINED rows of the
+          // new fact files, grouped by the FACT file each row expanded
+          // from — the file key is tagged on the fact side BEFORE the
+          // joins (input_file_name() is single-source-only) and the
+          // dims broadcast
+          val srcCol = "__graft_src"
+          // neutral-dim upkeep: INNER-dim coverage is a property of
+          // the FACT, so appended rows must re-prove it (a LEFT dim
+          // keeps every row — nothing to re-prove). The delta's raw
+          // row count (parquet footer metadata — no data read) against
+          // the joined partials' summed count detects a dropped row:
+          // with every dim key unique (proven at register, dims
+          // immutable), duplication is impossible, so joined < raw ⟺
+          // some new row found no inner match. -1 = the scan never ran
+          // (no new files).
+          val needCoverage =
+            e.dims.exists(d => d.neutral && d.joinType == "inner")
+          var deltaRaw = -1L
+          var deltaJoined = -1L
+          verifyDelta(spark, e, p, base, live.fp, live.n, "view rollup",
+              pin => e.copy(pin = pin)) { delta =>
+            if (e.dims.isEmpty) AggView.factsFingerprintByFile(delta, e.viewPath)
+            else {
+              val tagged = delta.withColumn(srcCol, AggView.sourceFileKey)
+              val joinedDelta = e.dims.zip(dimDfs).foldLeft(tagged) {
+                case (acc, (de, dimDf)) =>
+                  val cond = de.joinKeys.map { case (fc, dc) =>
+                    acc(fc) === dimDf(dc) }.reduce(_ && _)
+                  acc.join(
+                    org.apache.spark.sql.functions.broadcast(dimDf),
+                    cond, de.joinType)
+              }
+              val partials = AggView.factsFingerprintByFileTagged(
+                joinedDelta, e.viewPath, srcCol)
+              if (needCoverage) {
+                deltaRaw = delta.count()
+                deltaJoined = partials.valuesIterator.map(_._2).sum
+              }
+              partials
             }
-            val partials = AggView.factsFingerprintByFileTagged(
-              joinedDelta, e.viewPath, srcCol)
-            if (needCoverage) {
-              deltaRaw = readFactDelta(uris).count()
-              deltaJoined = partials.valuesIterator.map(_._2).sum
-            }
-            partials
+          }.map { pin =>
+            // coverage lost on the delta: DEMOTE the INNER neutral
+            // flags (partial-star serving stops for them) but keep
+            // the re-pin — the view still IS the joined rollup, so
+            // full-star serving stays exact. LEFT dims keep their
+            // proof (row-preserving by construction — uniqueness
+            // holds by immutability). The row's reason names the
+            // demotion; re-proving takes a re-registration with
+            // proveDims after the dims are completed.
+            val covered = !needCoverage || deltaRaw < 0 ||
+              deltaJoined == deltaRaw
+            val dims2 =
+              if (covered) e.dims
+              else e.dims.map(d =>
+                if (d.joinType == "left") d
+                else d.copy(neutral = false))
+            val how =
+              if (covered) "re-pinned"
+              else "re-pinned; dim coverage lost on the fact " +
+                s"delta (${deltaRaw - deltaJoined} of $deltaRaw " +
+                "appended rows have no dim match) — inner neutral " +
+                "flags demoted, partial-star serving stopped for " +
+                "the inner dims"
+            (Entry(e.viewPath, pin, live.version, live,
+              zonesOf(spark, e.viewPath, e.zones.isDefined), dims2), how)
           }
-        val newSig = RelationPins.signature(fsRel)
-        if (newSig == sig && live.version == e.version)
-          scala.Left("already fresh")
-        else RelationPins.composeFingerprint(
-          RelationPins.listedFiles(fsRel), fps, scan) match {
-          // O(delta): only files with no stored partial were scanned
-          // (all of them on the FIRST verification, which seeds the
-          // partials; just the appended ones thereafter)
-          case scala.Left(reason) => scala.Left(reason)
-          case scala.Right((fp, n, partials)) =>
-            if (fp == live.fp && n == live.n) {
-              // coverage lost on the delta: DEMOTE the INNER neutral
-              // flags (partial-star serving stops for them) but keep
-              // the re-pin — the view still IS the joined rollup, so
-              // full-star serving stays exact. LEFT dims keep their
-              // proof (row-preserving by construction — uniqueness
-              // holds by immutability). The row's reason names the
-              // demotion; re-proving takes a re-registration with
-              // proveDims after the dims are completed.
-              val covered = !needCoverage || deltaRaw < 0 ||
-                deltaJoined == deltaRaw
-              val dims2 =
-                if (covered) e.dims
-                else e.dims.map(d =>
-                  if (d.joinType == "left") d
-                  else d.copy(neutral = false))
-              val how =
-                if (covered) "re-pinned"
-                else "re-pinned; dim coverage lost on the fact " +
-                  s"delta (${deltaRaw - deltaJoined} of $deltaRaw " +
-                  "appended rows have no dim match) — inner neutral " +
-                  "flags demoted, partial-star serving stopped for " +
-                  "the inner dims"
-              scala.Right((Entry(e.viewPath,
-                FsPin(RelationPins.rootPaths(fsRel), newSig, partials),
-                live.version, live,
-                zonesOf(spark, e.viewPath, e.zones.isDefined),
-                dims2), how))
-            } else {
-              // keep the freshly computed partials even on refusal:
-              // they are facts about the BASE's files, independent of
-              // view consistency — once the other side converges, the
-              // next refresh verifies O(delta), not O(corpus).
-              // Compare-and-set: a concurrent manual register()
-              // between the snapshot iteration and this write must
-              // WIN over the stale partials-cache entry.
-              registry.replace(e.viewPath, e,
-                e.copy(pin = FsPin(roots, sig, partials)))
-              scala.Left("base content and view rollup diverge " +
-                "(fingerprint mismatch) — waiting for the other side")
-            }
         }
-      case MorPin(p, st) =>
-        val liveState = try MergeOnRead.state(p)
-          catch { case NonFatal(ex) =>
-            return scala.Left(s"mor table unreadable: $ex") }
-        if (liveState == st && live.version == e.version)
-          scala.Left("already fresh")
-        else {
-          val (maxId, allMarked) = MergeOnRead.streamState(p)
-          if (!allMarked)
-            scala.Left("mor table has committed batches without stream " +
-              "markers (out-of-band appends) — re-register")
-          else if (maxId != live.lastBatch)
-            scala.Left(s"watermarks diverge (mor stream id $maxId vs view " +
-              s"batch ${live.lastBatch}) — waiting for the other side")
-          else viewChainClean(e, live) match {
-            case Some(reason) => scala.Left(reason)
-            case None => scala.Right((Entry(e.viewPath,
-              MorPin(p, liveState), live.version, live,
-              zonesOf(spark, e.viewPath, e.zones.isDefined)),
-              "re-pinned"))
-          }
+      case p: MorPin =>
+        RelationPins.refreshMor(p, moved, live.lastBatch, "view") { st =>
+          viewChainClean(e, live).toLeft((Entry(e.viewPath,
+            MorPin(p.morPath, st), live.version, live,
+            zonesOf(spark, e.viewPath, e.zones.isDefined)), "re-pinned"))
         }
     }
   }
@@ -732,21 +616,6 @@ object AggViewRewrite extends PredicateHelper with Logging {
     None
   }
 
-  /** Wrap a CDC sink so every applied batch is followed by a pin
-    * refresh — the opt-in hook that keeps a fleet-maintained view's
-    * registration live:
-    * `IndexPipeline.sink(MergeOnRead.foreachBatchSink(dir),
-    * AggView.cdcSink(view), AggViewRewrite.refreshingSink(spark))`.
-    */
-  def refreshingSink(spark: SparkSession): (DataFrame, Long) => Unit =
-    (_, _) => { refreshPins(spark).collect(); () }
-
-  /** Add the rule to a live session (idempotent). Config-time
-    * sessions get it from [[GraftExtensions]].
-    */
-  def install(spark: SparkSession): Unit =
-    GraftBridge.addOptimization(spark, Rule(spark))
-
   /** One-shot SCOPED rewrite: register the view, force `df` through
     * the optimizer (so the rewrite — if legal — is baked into the
     * returned plan), then unregister, leaving no process-global
@@ -754,123 +623,36 @@ object AggViewRewrite extends PredicateHelper with Logging {
     * plan regardless of later registry changes.
     */
   def rewritten(spark: SparkSession, base: DataFrame, viewPath: String)
-      (query: => DataFrame): DataFrame = {
-    install(spark)
-    register(spark, base, viewPath)
-    try GraftBridge.ofRows(spark, GraftBridge.optimizedPlan(query))
-    finally unregister(viewPath)
-  }
+      (query: => DataFrame): DataFrame =
+    scoped(spark, viewPath)(register(spark, base, viewPath))(query)
 
-  /** Per-rule-application memo of the freshness probes: the listing
-    * fold keyed by FILE-INDEX IDENTITY (one relation instance = one
-    * in-memory listing = one fold), the view declaration and MOR
-    * state by path — one FS touch each per optimization pass
-    * regardless of how many aggregates the query holds.
-    */
-  private final class Memo {
-    private val sigs =
-      new java.util.IdentityHashMap[AnyRef, java.lang.Long]
-    def signatureOf(h: HadoopFsRelation): Long = {
-      val k = h.location
-      val got = sigs.get(k)
-      if (got != null) got.longValue
-      else {
-        val s = RelationPins.signature(h)
-        sigs.put(k, java.lang.Long.valueOf(s))
-        s
-      }
-    }
-    private val decls = mutable.Map.empty[String, Option[AggView.Decl]]
-    def declOf(path: String): Option[AggView.Decl] =
-      decls.getOrElseUpdate(path,
-        try Some(AggView.declaration(path))
-        catch { case NonFatal(_) => None })
-    private val morStates =
-      mutable.Map.empty[String, Option[MergeOnRead.State]]
-    def morStateOf(path: String): Option[MergeOnRead.State] =
-      morStates.getOrElseUpdate(path,
-        try Some(MergeOnRead.state(path))
-        catch { case NonFatal(_) => None })
-    // fresh-listing signatures by root set — the freshness probe for
-    // tables NOT in the query plan (a partial match's left-out dims)
-    private val rootSigs = mutable.Map.empty[Set[String], Option[Long]]
-    def signatureOfRoots(spark: SparkSession,
-        roots: Set[String]): Option[Long] =
-      rootSigs.getOrElseUpdate(roots,
-        RelationPins.signatureOfRoots(spark, roots))
-  }
+  private type Memo = RelationPins.Memo[AggView.Decl]
 
   final case class Rule(spark: SparkSession)
       extends CatalystRule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan =
-      if (registry.isEmpty) plan
-      else {
-        val memo = new Memo
-        plan.transformUp {
-          case agg: Aggregate =>
-            try tryRewrite(spark, agg, memo).getOrElse(agg)
-            catch {
-              case NonFatal(e) =>
-                logWarning(s"aggview rewrite skipped: $e")
-                agg
-            }
-        }
-      }
+      optimize(spark, plan) { memo => {
+        case agg: Aggregate =>
+          try tryRewrite(spark, agg, memo).getOrElse(agg)
+          catch {
+            case NonFatal(e) =>
+              logWarning(s"aggview rewrite skipped: $e")
+              agg
+          }
+      }}
   }
 
   // ---------------------------------------------------------------
   // matching
 
-  /** The base-relation kinds the rewrite can serve. */
-  private sealed trait BaseId
-  private final case class FsId(h: HadoopFsRelation) extends BaseId
-  private final case class MorId(m: MorRelation) extends BaseId
-
-  private def idOf(l: LogicalRelation): Option[BaseId] =
-    l.relation match {
-      case h: HadoopFsRelation => Some(FsId(h))
-      // a version-pinned (time-travel) mor read is a DIFFERENT table
-      // than the live one the view tracks — never rewritten
-      case m: MorRelation if m.version.isEmpty => Some(MorId(m))
-      case _ => None
-    }
-
-  private def baseOf(p: LogicalPlan)
-      : Option[(LogicalRelation, BaseId)] = p match {
-    case s: SubqueryAlias => baseOf(s.child)
-    case l: LogicalRelation => idOf(l).map(l -> _)
-    case _ => None
-  }
-
   /** The base pin, with a parquet pin's refresh partials SEEDED from
     * the view's own build-time fingerprint ledger
-    * ([[AggView.fingerprintLedger]] — per-file partials the build's
-    * fingerprint pass already paid for): only entries whose
-    * (length, mtime) still match the live listing are adopted, so a
-    * since-rewritten file is simply scanned at the next refresh
-    * instead of trusted. Best-effort — an unreadable ledger degrades
-    * to the empty seed (the first refresh scans and seeds), never
-    * fails the registration.
+    * ([[AggView.fingerprintLedger]], [[RelationPins.seededFromOwn]]).
     */
-  private def pinOf(spark: SparkSession, id: BaseId,
+  private def pinOf(spark: SparkSession, id: RelationPins.BaseId,
       viewPath: String): BasePin = id match {
-    case FsId(h) =>
-      val seeded: Map[String, RelationPins.FileFp] =
-        try AggView.fingerprintLedger(spark, viewPath) match {
-          case Some(stored) =>
-            val live = RelationPins.listedFiles(h)
-              .map(f => f.key -> f).toMap
-            stored.collect {
-              case (key, (len, mtime, cfp, cn))
-                  if live.get(key).exists(f =>
-                    f.len == len && f.mtime == mtime) =>
-                key -> RelationPins.FileFp(len, mtime, cfp, cn)
-            }
-          case None => Map.empty[String, RelationPins.FileFp]
-        } catch {
-          case NonFatal(_) => Map.empty[String, RelationPins.FileFp]
-        }
-      FsPin(RelationPins.rootPaths(h), RelationPins.signature(h), seeded)
+    case FsId(h) => RelationPins.fsPin(h, RelationPins.seededFromOwn(h,
+      AggView.fingerprintLedger(spark, viewPath)))
     case MorId(m) => MorPin(m.path, MergeOnRead.state(m.path))
   }
 
@@ -878,9 +660,9 @@ object AggViewRewrite extends PredicateHelper with Logging {
     * filter conjuncts between the aggregate and the relation.
     */
   private def decompose(p: LogicalPlan)
-      : Option[(LogicalRelation, BaseId, Seq[Expression])] =
+      : Option[(LogicalRelation, RelationPins.BaseId, Seq[Expression])] =
     p match {
-      case l: LogicalRelation => idOf(l).map((l, _, Nil))
+      case l: LogicalRelation => RelationPins.idOf(l).map((l, _, Nil))
       case Project(pl, c) if pl.forall(_.isInstanceOf[AttributeReference]) =>
         decompose(c)
       case Filter(cond, c)
@@ -889,18 +671,6 @@ object AggViewRewrite extends PredicateHelper with Logging {
           (l, id, splitConjunctivePredicates(cond) ++ fs)
         }
       case _ => None
-    }
-
-  /** Does the query's base match this entry's pin, and is the pin
-    * still fresh? All probes memoized per pass.
-    */
-  private def pinFresh(e: Entry, id: BaseId, memo: Memo): Boolean =
-    (e.pin, id) match {
-      case (FsPin(roots, sig, _), FsId(h)) =>
-        RelationPins.rootPaths(h) == roots && memo.signatureOf(h) == sig
-      case (MorPin(p, st), MorId(m)) =>
-        m.path == p && memo.morStateOf(p).contains(st)
-      case _ => false
     }
 
   /** Inline computed projections sitting directly under the
@@ -958,8 +728,8 @@ object AggViewRewrite extends PredicateHelper with Logging {
       // star entries never serve a FLAT aggregate over the fact
       // alone: the view holds JOINED rows (inner-join multiplicity
       // and filtering), so dims.isEmpty is a correctness gate here
-      val cands = registry.values.asScala
-        .filter(e => e.dims.isEmpty && pinFresh(e, id, memo)).toSeq
+      val cands = entries
+        .filter(e => e.dims.isEmpty && memo.fresh(e.pin, id))
       // prefer the COARSEST sufficient view: fewer keys = fewer
       // rollup groups = the smallest artifact that can still answer;
       // ties break on path so plan choice never depends on map
@@ -1049,10 +819,10 @@ object AggViewRewrite extends PredicateHelper with Logging {
     }
     strip(ex.child) match {
       case Some(rel: LogicalRelation) =>
-        val id = idOf(rel).getOrElse(return None)
+        val id = RelationPins.idOf(rel).getOrElse(return None)
         val fs = filters.result()
-        val cands = registry.values.asScala
-          .filter(e => e.dims.isEmpty && pinFresh(e, id, memo)).toSeq
+        val cands = entries
+          .filter(e => e.dims.isEmpty && memo.fresh(e.pin, id))
           .sortBy(e => (e.decl.keys.size, e.viewPath))
         cands.iterator
           .map(e => expandRewriteWith(spark, agg, ex, projections,
@@ -1064,8 +834,8 @@ object AggViewRewrite extends PredicateHelper with Logging {
         // Expand serve with the join's output as the key scope and
         // the synthetic join anchor for measure resolution
         val fs = filters.result()
-        val stars = registry.values.asScala.filter(_.dims.nonEmpty)
-          .toSeq.sortBy(e => (e.decl.keys.size, e.viewPath))
+        val stars = entries.filter(_.dims.nonEmpty)
+          .sortBy(e => (e.decl.keys.size, e.viewPath))
         stars.iterator.map { e =>
           matchStar(spark, j, e, memo).flatMap {
             case (factRel, matchedDims, starFilters) =>
@@ -1314,7 +1084,7 @@ object AggViewRewrite extends PredicateHelper with Logging {
     */
   private def tryStar(spark: SparkSession, agg: Aggregate,
       memo: Memo): Option[Aggregate] = {
-    val stars = registry.values.asScala.filter(_.dims.nonEmpty).toSeq
+    val stars = entries.filter(_.dims.nonEmpty)
       .sortBy(e => (e.decl.keys.size, e.viewPath))
     if (stars.isEmpty) return None
     stars.iterator.map { e =>
@@ -1533,7 +1303,7 @@ object AggViewRewrite extends PredicateHelper with Logging {
     val leftOut = e.dims.indices.filterNot(i => matched(i).isDefined)
     if (!leftOut.forall { i =>
         e.dims(i).neutral &&
-          memo.signatureOfRoots(spark, e.dims(i).roots)
+          memo.signatureOfRoots(e.dims(i).roots)
             .contains(e.dims(i).listingSig)
       }) return None
     val matchedDims: Seq[(DimEntry, LogicalRelation, JoinType)] =

@@ -1,6 +1,5 @@
 package graft.plans
 
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.internal.Logging
@@ -10,14 +9,13 @@ import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat, CatalogStatisti
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Histogram, HistogramBin, LogicalPlan, OneRowRelation, Project, SubqueryAlias}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Histogram, HistogramBin, LogicalPlan, OneRowRelation, Project}
 import org.apache.spark.sql.catalyst.rules.{Rule => CatalystRule}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import graft.operators.{ColStats, MergeOnRead}
-import graft.sources.MorRelation
 
 /** STATISTICS INJECTION from the persisted [[ColStats]] artifact:
   * an optimizer rule that attaches the profile — row count, per-column
@@ -91,7 +89,8 @@ import graft.sources.MorRelation
   * artifact would return the wrapped value, so the serve fires only
   * when `n_nonnull × max(|min|, |max|)` provably fits in 64 bits).
   */
-object ColStatsInjection extends Logging {
+object ColStatsInjection extends PinnedBridge("stats_path") with Logging {
+  import RelationPins.{BasePin, FsId, FsPin, MorId, MorPin, Refresh}
 
   /** One profiled column's exact scalars (integer-exact by the
     * artifact's contract) — the inputs of the metadata-only
@@ -103,35 +102,26 @@ object ColStatsInjection extends Logging {
   final case class Scalar(kind: String, nRows: Long, nNulls: Long,
       minNum: Option[Long], maxNum: Option[Long], sumNum: Option[Long])
 
-  /** What a registration pinned the BASE table at. A parquet
-    * directory pins its file-listing signature; `fileFps` is the
-    * refresh accelerator, not part of the pin's identity: per-file
-    * content-fingerprint partials ([[RelationPins.FileFp]]) seeded
-    * scan-free from a co-built zone map's format-4 ledger (`ledger`)
-    * and/or accumulated by [[refreshPins]]' own verification scans,
-    * so each refresh fingerprints only files it has no stored
-    * partial for. A [[graft.operators.MergeOnRead]] table pins its
-    * observable STATE — registrable only under the VERIFIED
-    * append-only precondition (see [[register]]): a monotone profile
-    * of the feed equals the folded table's profile exactly when no
-    * fold ever dropped a row, which the table's own compaction
-    * verification proves ([[MergeOnRead.appendOnlyRows]]).
+  /** A registration. A parquet base pins its file listing, with
+    * refresh partials seeded scan-free from a co-built zone map's
+    * format-4 ledger (`ledger` at [[register]]) or from the
+    * artifact's own build-time ledger. A [[graft.operators.MergeOnRead]]
+    * table pins its observable STATE — registrable only under the
+    * VERIFIED append-only precondition (see [[register]]): a monotone
+    * profile of the feed equals the folded table's profile exactly
+    * when no fold ever dropped a row, which the table's own
+    * compaction verification proves ([[MergeOnRead.appendOnlyRows]]).
     */
-  sealed trait BasePin
-  final case class FsPin(basePaths: Set[String], listingSig: Long,
-      ledger: Option[String] = None,
-      fileFps: Map[String, RelationPins.FileFp] = Map.empty)
-      extends BasePin
-  final case class MorPin(morPath: String, state: MergeOnRead.State)
-      extends BasePin
-
   final case class Entry(statsPath: String, pin: BasePin,
       version: Long, stats: CatalogStatistics,
       scalars: Map[String, Scalar], decl: ColStats.Decl,
       withHistograms: Boolean)
 
-  private val registry =
-    new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+  type Registered = Entry
+  type Declared = ColStats.Decl
+  protected def keyOf(e: Entry): String = e.statsPath
+  protected def declared(path: String): ColStats.Decl = ColStats.declaration(path)
+  protected def ruleFor(spark: SparkSession): Rule = Rule(spark)
 
   private def integralType(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType => true
@@ -164,13 +154,57 @@ object ColStatsInjection extends Logging {
   def register(spark: SparkSession, base: DataFrame,
       statsPath: String, histograms: Boolean = true,
       ledger: Option[String] = None): Entry = {
-    val (rel, kind) = baseOf(GraftBridge.analyzedPlan(base))
+    val (rel, id) = RelationPins.baseOf(GraftBridge.analyzedPlan(base))
       .getOrElse(throw new IllegalArgumentException(
         "register expects a bare single-relation scan (a parquet " +
           "file-source or a live mor-source read of the table the " +
           "artifact profiles); got:\n" +
           GraftBridge.analyzedPlan(base).treeString))
     val decl = ColStats.declaration(statsPath)
+    val pin: BasePin = id match {
+      case FsId(fsRel) =>
+        RelationPins.requireOneRoot(fsRel)
+        RelationPins.fsPin(fsRel, ledger match {
+          case None =>
+            // no explicit zone-map ledger: seed from the artifact's
+            // OWN build-time ledger (same projection by construction)
+            RelationPins.seededFromOwn(fsRel,
+              ColStats.fingerprintLedger(spark, statsPath))
+          case Some(zmPath) =>
+            val zm = graft.operators.ZoneMap.declaration(zmPath)
+            require(zm.numCols == decl.numCols &&
+                zm.strCols == decl.strCols,
+              s"zone-map ledger at $zmPath declares columns " +
+                s"(${zm.numCols.mkString(",")} | ${zm.strCols.mkString(",")})" +
+                " but the stats artifact profiles " +
+                s"(${decl.numCols.mkString(",")} | ${decl.strCols.mkString(",")})" +
+                " — its fingerprint partials hash a different projection")
+            RelationPins.seeded(fsRel, graft.operators.ZoneMap
+              .fingerprintLedger(spark, zmPath)
+              .getOrElse(throw new IllegalArgumentException(
+                s"zone map at $zmPath predates format 4 — no stored " +
+                  "fingerprint partials; rebuild it or register without " +
+                  "a ledger")))
+        })
+      case MorId(m) =>
+        require(ledger.isEmpty,
+          "ledger seeding applies to parquet bases only (a mor pin " +
+            "verifies by manifest state, not file fingerprints)")
+        morVerified(m.path, decl) match {
+          case scala.Left(reason) => throw new IllegalArgumentException(
+            s"mor table at ${m.path} not registrable: $reason")
+          case scala.Right(st) => MorPin(m.path, st)
+        }
+    }
+    put(entryOf(spark, rel.output, statsPath, decl, pin, histograms))
+  }
+
+  /** The registration of the profile at `statsPath`, read at `decl`,
+    * for the relation of `output` pinned at `pin`.
+    */
+  private def entryOf(spark: SparkSession, output: Seq[Attribute],
+      statsPath: String, decl: ColStats.Decl, pin: BasePin,
+      histograms: Boolean): Entry = {
     val resolver = SQLConf.get.resolver
     // bounded collects: the scalar profile, NDV estimates, and log2
     // histogram are ≤ |cols| (× ≤129 buckets) rows by construction
@@ -192,7 +226,7 @@ object ColStatsInjection extends Logging {
     // cannot drift apart under a future edit to either pass
     def rowFor(r: org.apache.spark.sql.Row)
         : Option[(Attribute, String => Option[Long])] =
-      rel.output.find(a => resolver(a.name, r.getString(0)))
+      output.find(a => resolver(a.name, r.getString(0)))
         .map { attr =>
           attr -> ((c: String) =>
             if (r.isNullAt(r.fieldIndex(c))) None
@@ -247,7 +281,7 @@ object ColStatsInjection extends Logging {
         .map(BigInt(_)).getOrElse(0)
     // EstimationUtils.getSizePerRow's shape: 8 + Σ column widths,
     // strings as avgLen + (8 + 4) object overhead
-    val rowWidth = 8L + rel.output.map { a =>
+    val rowWidth = 8L + output.map { a =>
       (a.dataType, colStats.get(a.name).flatMap(_.avgLen)) match {
         case (StringType, Some(l)) => l + 8L + 4L
         case (dt, _) => dt.defaultSize.toLong
@@ -264,96 +298,8 @@ object ColStatsInjection extends Logging {
           longAt("min_num"), longAt("max_num"), longAt("sum_num"))
       }
     }.toMap
-    val pin: BasePin = kind match {
-      case scala.Left(fsRel) =>
-        // a hive-PARTITIONED base is supported under one root:
-        // refresh delta scans read with option("basePath", root) so
-        // partition columns resolve for the appended files
-        // (including appends into a NEW partition directory). With
-        // several roots there is no one basePath — refuse here
-        // rather than fail every later refresh.
-        if (fsRel.partitionSchema.nonEmpty)
-          require(RelationPins.rootPaths(fsRel).size == 1,
-            "a partitioned base registers under a SINGLE root path " +
-              "(refresh scans resolve partition columns via " +
-              "basePath); read the table through its one root " +
-              "directory")
-        // only ledger entries whose (length, mtime) still match the
-        // live listing are adopted — anything else is treated as
-        // unprofiled and scanned at the next refresh
-        def adopt(stored: Map[String, (Long, Long, Long, Long)])
-            : Map[String, RelationPins.FileFp] = {
-          val live = RelationPins.listedFiles(fsRel)
-            .map(f => f.key -> f).toMap
-          stored.collect {
-            case (key, (len, mtime, cfp, cn))
-                if live.get(key).exists(f =>
-                  f.len == len && f.mtime == mtime) =>
-              key -> RelationPins.FileFp(len, mtime, cfp, cn)
-          }
-        }
-        val fileFps: Map[String, RelationPins.FileFp] = ledger match {
-          case None =>
-            // no explicit zone-map ledger: seed from the artifact's
-            // OWN build-time ledger when one exists (same projection
-            // by construction — the build wrote it). Best-effort: an
-            // unreadable ledger degrades to the empty seed.
-            try ColStats.fingerprintLedger(spark, statsPath)
-              .map(adopt).getOrElse(Map.empty)
-            catch { case NonFatal(_) => Map.empty }
-          case Some(zmPath) =>
-            val zm = graft.operators.ZoneMap.declaration(zmPath)
-            require(zm.numCols == decl.numCols &&
-                zm.strCols == decl.strCols,
-              s"zone-map ledger at $zmPath declares columns " +
-                s"(${zm.numCols.mkString(",")} | ${zm.strCols.mkString(",")})" +
-                " but the stats artifact profiles " +
-                s"(${decl.numCols.mkString(",")} | ${decl.strCols.mkString(",")})" +
-                " — its fingerprint partials hash a different projection")
-            val stored = graft.operators.ZoneMap
-              .fingerprintLedger(spark, zmPath)
-              .getOrElse(throw new IllegalArgumentException(
-                s"zone map at $zmPath predates format 4 — no stored " +
-                  "fingerprint partials; rebuild it or register without " +
-                  "a ledger"))
-            adopt(stored)
-        }
-        FsPin(RelationPins.rootPaths(fsRel),
-          RelationPins.signature(fsRel), ledger, fileFps)
-      case scala.Right(m) =>
-        require(ledger.isEmpty,
-          "ledger seeding applies to parquet bases only (a mor pin " +
-            "verifies by manifest state, not file fingerprints)")
-        morVerified(m.path, decl) match {
-          case scala.Left(reason) => throw new IllegalArgumentException(
-            s"mor table at ${m.path} not registrable: $reason")
-          case scala.Right(st) => MorPin(m.path, st)
-        }
-    }
-    val e = Entry(statsPath, pin, decl.version, catalog, scalars,
-      decl, histograms)
-    registry.put(statsPath, e)
-    e
-  }
-
-  /** The base-relation kinds a registration can pin: a bare parquet
-    * file-source scan, or a LIVE `mor`-source read (a version-pinned
-    * time-travel read is a different table than the one the profile
-    * tracks).
-    */
-  private def baseOf(p: LogicalPlan)
-      : Option[(LogicalRelation,
-        Either[org.apache.spark.sql.execution.datasources
-          .HadoopFsRelation, MorRelation])] = p match {
-    case s: SubqueryAlias => baseOf(s.child)
-    case l: LogicalRelation => l.relation match {
-      case h: org.apache.spark.sql.execution.datasources
-          .HadoopFsRelation => Some((l, scala.Left(h)))
-      case m: MorRelation if m.version.isEmpty =>
-        Some((l, scala.Right(m)))
-      case _ => None
-    }
-    case _ => None
+    Entry(statsPath, pin, decl.version, catalog, scalars, decl,
+      histograms)
   }
 
   /** The VERIFIED preconditions under which a monotone (append-only)
@@ -453,34 +399,20 @@ object ColStatsInjection extends Logging {
     Some(Histogram(height, bins.toArray))
   }
 
-  def unregister(statsPath: String): Unit = {
-    registry.remove(statsPath); ()
-  }
-
-  def clear(): Unit = registry.clear()
-
   /** Current registrations with their LIVE version freshness — the
     * ops answer to "why isn't my table planning with stats": one row
     * per registered artifact (path, base roots, injected rowCount /
-    * sizeInBytes, pinned vs live manifest version). File-listing
-    * base freshness is per-query (it needs the query's own relation)
-    * and reports null; a MOR pin's state is readable here and
-    * reports directly.
+    * sizeInBytes, pinned vs live manifest version, and
+    * [[RelationPins.describe]]'s base freshness).
     */
   def status(spark: SparkSession): DataFrame = {
     val s = spark
     import s.implicits._
-    registry.values.asScala.toSeq.sortBy(_.statsPath).map { e =>
+    entries.map { e =>
       val liveVersion =
         try Some(ColStats.version(e.statsPath))
         catch { case NonFatal(_) => None }
-      val (baseDesc, baseFresh) = e.pin match {
-        case FsPin(paths, _, _, _) =>
-          (paths.toSeq.sorted.mkString(","), None: Option[Boolean])
-        case MorPin(p, st) =>
-          (p, Some(try MergeOnRead.state(p) == st
-            catch { case NonFatal(_) => false }))
-      }
+      val (baseDesc, baseFresh) = RelationPins.describe(e.pin)
       (e.statsPath, baseDesc,
         e.stats.rowCount.map(_.toLong).getOrElse(-1L),
         e.stats.sizeInBytes.toLong,
@@ -492,21 +424,25 @@ object ColStatsInjection extends Logging {
 
   /** Re-verify and re-register every pin whose base or artifact has
     * MOVED — the maintenance hook that keeps injection live on a
-    * changing table ([[graft.plans.AggViewRewrite.refreshPins]]'s
-    * twin). A pin refreshes only when VERIFIED: a parquet base's
-    * live content fingerprint over the declared columns must equal
-    * the artifact's composed fingerprint — computed O(DELTA) by
-    * composing stored per-file partials and scanning only files
-    * with none ([[RelationPins.composeFingerprint]]); a MOR base
-    * re-verifies the append-only proof, pending-empty, watermark,
-    * and count equations (pure metadata). A base-only append or an
-    * artifact-only commit fails the check and the registration stays
-    * stale (refusing, correctly) until the two converge. Returns one
-    * row per registration: (stats_path, refreshed, reason).
+    * changing table ([[PinnedBridge.refreshEach]]). A pin refreshes
+    * only when VERIFIED: a parquet base's live content fingerprint
+    * over the declared columns must equal the artifact's composed
+    * fingerprint — computed O(DELTA) by composing stored per-file
+    * partials and scanning only files with none
+    * ([[PinnedBridge.verifyDelta]]); a MOR base re-verifies the
+    * watermark ([[RelationPins.refreshMor]]), then the append-only
+    * proof, pending-empty and count equations (pure metadata). A
+    * base-only append or an artifact-only commit fails the check and
+    * the registration stays stale (refusing, correctly) until the
+    * two converge. Returns one row per registration: (stats_path,
+    * refreshed, reason).
     */
-  /** `compactMor` (opt-in): when a MOR pin's table holds PENDING
-    * (unfolded, hence unverified) batches, run the table's own
-    * compaction first — compaction IS the fold-verification point
+  def refreshPins(spark: SparkSession): DataFrame =
+    refreshPins(spark, compactMor = false)
+
+  /** `compactMor`: when a MOR pin's table holds PENDING (unfolded,
+    * hence unverified) batches, run the table's own compaction first
+    * — compaction IS the fold-verification point
     * ([[MergeOnRead.compact]]'s per-bucket row-count proof) — then
     * verify and re-pin. What lets [[refreshingSink]] restore the
     * metadata-only serve immediately after each streamed batch
@@ -517,272 +453,113 @@ object ColStatsInjection extends Logging {
     * proves.
     */
   def refreshPins(spark: SparkSession,
-      compactMor: Boolean = false): DataFrame = {
-    val s = spark
-    import s.implicits._
-    val rows = registry.values.asScala.toSeq.sortBy(_.statsPath).map {
-      // per-registration isolation (the ZoneMapScan.refreshPins
-      // shape): a FS hiccup or malformed artifact reports as that
-      // row's reason instead of throwing out of the whole pass and,
-      // via refreshingSink, failing the streaming batch for every
-      // other registration
-      e =>
-        val r = try refreshOne(spark, e, compactMor)
-          catch { case NonFatal(ex) => Some(s"refresh failed: $ex") }
-        (e.statsPath, r.isEmpty, r.getOrElse("re-registered"))
-    }
-    rows.toDF("stats_path", "refreshed", "reason")
-  }
+      compactMor: Boolean = false): DataFrame =
+    refreshEach(spark)(repin(spark, _, compactMor))
 
-  /** None = refreshed; Some(reason) = left as-is. */
-  private def refreshOne(spark: SparkSession,
-      e: Entry, compactMor: Boolean = false): Option[String] = {
+  /** Verify one registration and re-pin it, or say why not. */
+  private def repin(spark: SparkSession, e: Entry,
+      compactMor: Boolean): Refresh[Entry] = {
     val live = try ColStats.declaration(e.statsPath)
       catch { case NonFatal(ex) =>
-        return Some(s"artifact unreadable: $ex") }
+        return scala.Left(s"artifact unreadable: $ex") }
     if (live.numCols != e.decl.numCols ||
       live.strCols != e.decl.strCols)
-      return Some("artifact declaration changed (rebuild) — " +
+      return scala.Left("artifact declaration changed (rebuild) — " +
         "re-register")
+    val moved = live.version != e.version
     e.pin match {
-      case p: FsPin => refreshFs(spark, e, p, live)
-      case MorPin(morPath, st) =>
-        val state0 = try MergeOnRead.state(morPath)
-          catch { case NonFatal(ex) =>
-            return Some(s"mor table unreadable: $ex") }
-        // on-demand verification: fold the pending batches NOW (the
-        // fold is the proof — see refreshPins' compactMor doc); a
-        // compaction failure lands in the caller's NonFatal isolation
-        val liveState =
-          if (compactMor && state0.pending.nonEmpty) {
-            MergeOnRead.compact(spark, morPath)
-            MergeOnRead.state(morPath)
-          } else state0
-        if (liveState == st && live.version == e.version)
-          return Some("already fresh")
-        // the same verified preconditions as registration, plus the
-        // feed-coordination watermark: the artifact must have
-        // absorbed exactly the stream batches the table folded
-        val (maxId, allMarked) = MergeOnRead.streamState(morPath)
-        if (!allMarked)
-          return Some("mor table has committed batches without " +
-            "stream markers (out-of-band appends) — re-register")
-        if (maxId != live.lastBatch)
-          return Some(s"watermarks diverge (mor stream id $maxId " +
-            s"vs stats batch ${live.lastBatch}) — waiting for the " +
-            "other side")
-        morVerified(morPath, live) match {
-          case scala.Left(reason) => Some(reason)
-          case scala.Right(_) =>
-            register(spark,
-              spark.read.format("mor").load(morPath), e.statsPath,
-              e.withHistograms)
-            None
+      case p: FsPin =>
+        RelationPins.refreshFs(spark, p, moved) { base =>
+          verifyDelta(spark, e, p, base, live.fp, live.n,
+              "artifact profile", pin => e.copy(pin = pin))(
+            ColStats.fingerprintByFile(_, live.numCols, live.strCols)
+          ).map(pin => (entryOf(spark, base.rel.output, e.statsPath, live, pin,
+            e.withHistograms), "re-registered"))
+        }
+      case p: MorPin =>
+        // on-demand verification folds the pending batches first (the
+        // fold is the proof); a compaction failure lands in the
+        // refresh loop's isolation
+        def folded(st: MergeOnRead.State): MergeOnRead.State =
+          if (compactMor && st.pending.nonEmpty) {
+            MergeOnRead.compact(spark, p.morPath)
+            MergeOnRead.state(p.morPath)
+          } else st
+        RelationPins.refreshMor(p, moved, live.lastBatch, "stats",
+            folded) { _ =>
+          morVerified(p.morPath, live).map(st => (entryOf(spark,
+            GraftBridge.analyzedPlan(
+              spark.read.format("mor").load(p.morPath)).output,
+            e.statsPath, live, MorPin(p.morPath, st), e.withHistograms),
+            "re-registered"))
         }
     }
   }
 
-  private def refreshFs(spark: SparkSession, e: Entry, pin: FsPin,
-      live: ColStats.Decl): Option[String] = {
-    val baseDf = spark.read.parquet(pin.basePaths.toSeq.sorted: _*)
-    val fsRel = RelationPins.bare(GraftBridge.analyzedPlan(baseDf))
-      .map(_._2).getOrElse(
-        return Some("base no longer reads as a bare parquet scan"))
-    // partitioned base: the delta scan reads leaf files with
-    // basePath so partition columns resolve (the register-time
-    // single-root guard makes the basePath unambiguous)
-    val readDelta: Seq[String] => DataFrame =
-      if (fsRel.partitionSchema.isEmpty)
-        uris => spark.read.parquet(uris: _*)
-      else if (pin.basePaths.size == 1)
-        uris => spark.read.option("basePath", pin.basePaths.head)
-          .parquet(uris: _*)
-      else return Some("partitioned base has several root paths — " +
-        "no unambiguous basePath for delta scans; re-register under " +
-        "the table's one root directory")
-    if (RelationPins.signature(fsRel) == pin.listingSig &&
-      live.version == e.version)
-      return Some("already fresh")
-    // O(delta) verification: compose stored per-file partials (from
-    // the co-built zone-map ledger and/or earlier refreshes) and
-    // fingerprint only files with no stored partial
-    RelationPins.composeFingerprint(
-      RelationPins.listedFiles(fsRel), pin.fileFps,
-      uris => ColStats.fingerprintByFile(
-        readDelta(uris), live.numCols, live.strCols)
-    ) match {
-      case scala.Left(reason) => Some(reason)
-      case scala.Right((fp, n, partials)) =>
-        if (fp == live.fp && n == live.n) {
-          // re-register WITHOUT the ledger: the composed partials
-          // supersede the seed (they also cover files the ledger has
-          // not profiled yet), so re-reading the zone map here would
-          // only add a failure mode — a since-deleted/rebuilt ledger
-          // must not fail a refresh that composeFingerprint already
-          // verified. pin.ledger is carried forward in the entry.
-          val ent = register(spark, baseDf, e.statsPath,
-            e.withHistograms)
-          ent.pin match {
-            case fs: FsPin => registry.put(e.statsPath,
-              ent.copy(pin =
-                fs.copy(ledger = pin.ledger, fileFps = partials)))
-            case _ => ()
-          }
-          None
-        } else {
-          // cache the computed partials even on refusal: they are
-          // facts about the BASE's files — once the artifact
-          // converges, the next refresh verifies O(delta).
-          // Compare-and-set: a concurrent manual register() between
-          // the snapshot iteration and this write must WIN over the
-          // stale partials-cache entry, not be clobbered by it.
-          registry.replace(e.statsPath, e,
-            e.copy(pin = pin.copy(fileFps = partials)))
-          Some("base content and artifact profile diverge " +
-            "(fingerprint mismatch) — waiting for the other side")
-        }
-    }
-  }
-
-  /** Wrap a CDC sink so every applied batch is followed by a pin
-    * refresh ([[graft.plans.AggViewRewrite.refreshingSink]]'s twin
-    * for the stats bridge): `IndexPipeline.sink(ColStats.cdcSink(p),
-    * …, ColStatsInjection.refreshingSink(spark))`. With
-    * `compactMor = true` the refresh folds pending MOR batches first
-    * (see [[refreshPins]]), so the metadata-only serve is restored
-    * the moment each batch lands — not at the next compaction.
+  /** [[refreshingSink]] with [[refreshPins]]' `compactMor`:
+    * `IndexPipeline.sink(ColStats.cdcSink(p), …,
+    * ColStatsInjection.refreshingSink(spark, compactMor = true))`
+    * restores the metadata-only serve the moment each batch lands —
+    * not at the next compaction.
     */
   def refreshingSink(spark: SparkSession,
       compactMor: Boolean = false): (DataFrame, Long) => Unit =
     (_, _) => { refreshPins(spark, compactMor).collect(); () }
-
-  /** Add the rule to a live session (idempotent). NOTE: the live
-    * path registers via `experimental.extraOptimizations`, which runs
-    * in the final "User Provided Optimizers" batch — AFTER the CBO
-    * join-reorder and filter-estimation batches — so install()-path
-    * sessions get the sizeInBytes/broadcast benefit and the
-    * metadata-only aggregate serve, but NOT cbo-driven join
-    * reordering. For the full CBO benefit (join reorder, histogram
-    * selectivity), inject at session build time with
-    * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
-    * — [[GraftExtensions]] injects this rule into the operator-
-    * optimization batch, which runs before CBO.
-    */
-  def install(spark: SparkSession): Unit =
-    GraftBridge.addOptimization(spark, Rule(spark))
 
   /** One-shot SCOPED injection: register the artifact, force `query`
     * through the optimizer (so the stats — and any plan choices they
     * drive — are baked into the returned plan), then unregister.
     */
   def injected(spark: SparkSession, base: DataFrame, statsPath: String)
-      (query: => DataFrame): DataFrame = {
-    install(spark)
-    register(spark, base, statsPath)
-    try GraftBridge.ofRows(spark, GraftBridge.optimizedPlan(query))
-    finally unregister(statsPath)
-  }
+      (query: => DataFrame): DataFrame =
+    scoped(spark, statsPath)(register(spark, base, statsPath))(query)
 
-  /** Per-optimizer-pass memo of the two freshness probes: "does the
-    * artifact still sit at its registered manifest version" (the one
-    * FILESYSTEM read in the check) keyed by path, and the relation's
-    * LISTING-SIGNATURE fold keyed by FILE-INDEX IDENTITY (one
-    * relation instance = one in-memory listing = one fold — the
-    * [[AggViewRewrite.Memo]] shape). Memoized per [[Rule.apply]]
-    * invocation (never across queries — the pins guard
-    * result-exactness, so they must be re-checked within every
-    * plan's own optimization), bounding planning cost at one probe
-    * each per artifact/relation per pass even when a query
-    * references the relation many times.
+  /** The injection rule. NOTE: [[install]] registers it via
+    * `experimental.extraOptimizations`, which runs in the final "User
+    * Provided Optimizers" batch — AFTER the CBO join-reorder and
+    * filter-estimation batches — so install()-path sessions get the
+    * sizeInBytes/broadcast benefit and the metadata-only aggregate
+    * serve, but NOT cbo-driven join reordering. For the full CBO
+    * benefit (join reorder, histogram selectivity), inject at session
+    * build time with
+    * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
+    * — [[GraftExtensions]] injects this rule into the operator-
+    * optimization batch, which runs before CBO.
     */
-  private final class Memo {
-    private val versions =
-      scala.collection.mutable.Map.empty[String, Boolean]
-    def versionFresh(e: Entry): Boolean =
-      versions.getOrElseUpdate(e.statsPath,
-        try ColStats.version(e.statsPath) == e.version
-        catch { case NonFatal(_) => false })
-    private val morStates =
-      scala.collection.mutable.Map.empty[String, Option[MergeOnRead.State]]
-    def morStateOf(path: String): Option[MergeOnRead.State] =
-      morStates.getOrElseUpdate(path,
-        try Some(MergeOnRead.state(path))
-        catch { case NonFatal(_) => None })
-    private val sigs =
-      new java.util.IdentityHashMap[AnyRef, java.lang.Long]
-    def signatureOf(
-        h: org.apache.spark.sql.execution.datasources.HadoopFsRelation)
-        : Long = {
-      val got = sigs.get(h.location)
-      if (got != null) got.longValue
-      else {
-        val s = RelationPins.signature(h)
-        sigs.put(h.location, java.lang.Long.valueOf(s))
-        s
-      }
-    }
-  }
-
   final case class Rule(spark: SparkSession)
       extends CatalystRule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan =
-      if (registry.isEmpty) plan
-      else {
-        val memo = new Memo
-        plan.transformUp {
-          // a GLOBAL min/max/count/sum aggregate over a registered
-          // relation is answered from the profile outright — no scan
-          case agg: Aggregate =>
-            try metadataAgg(agg, memo).getOrElse(agg)
-            catch {
-              case NonFatal(e) =>
-                logWarning(s"colstats metadata-agg skipped: $e")
-                agg
-            }
-          // a relation that already carries catalog stats (a real
-          // ANALYZE, or this rule in an earlier pass) is left alone
-          case l: LogicalRelation if l.catalogTable.isEmpty =>
-            try inject(l, memo).getOrElse(l)
-            catch {
-              case NonFatal(e) =>
-                logWarning(s"colstats injection skipped: $e")
-                l
-            }
-        }
-      }
+      optimize(spark, plan) { memo => {
+        // a GLOBAL min/max/count/sum aggregate over a registered
+        // relation is answered from the profile outright — no scan
+        case agg: Aggregate =>
+          try metadataAgg(agg, memo).getOrElse(agg)
+          catch {
+            case NonFatal(e) =>
+              logWarning(s"colstats metadata-agg skipped: $e")
+              agg
+          }
+        // a relation that already carries catalog stats (a real
+        // ANALYZE, or this rule in an earlier pass) is left alone
+        case l: LogicalRelation if l.catalogTable.isEmpty =>
+          try inject(l, memo).getOrElse(l)
+          catch {
+            case NonFatal(e) =>
+              logWarning(s"colstats injection skipped: $e")
+              l
+          }
+      }}
   }
 
-  /** The fresh registered entry for this relation, if any: roots
-    * match, base listing unchanged, artifact version unchanged.
+  private type Memo = RelationPins.Memo[ColStats.Decl]
+
+  /** The fresh registered entry for this relation, if any: base pin
+    * fresh, artifact version unchanged.
     */
-  private def freshEntry(l: LogicalRelation,
-      memo: Memo): Option[Entry] = l.relation match {
-    case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-      val roots = RelationPins.rootPaths(h)
-      // sorted: with several registered artifacts for one table, the
-      // chosen one never depends on map iteration order; collected
-      // WITH the typed pin (pattern match, no cast) so a future edit
-      // to the filter can't introduce a ClassCastException here
-      val cands = registry.values.asScala.collect {
-        case e @ Entry(_, fs: FsPin, _, _, _, _, _)
-            if fs.basePaths == roots => (e, fs)
-      }.toSeq.sortBy(_._1.statsPath)
-      if (cands.isEmpty) None
-      else {
-        val sig = memo.signatureOf(h)
-        cands.collectFirst { case (e, fs)
-            if fs.listingSig == sig && memo.versionFresh(e) => e }
-      }
-    case m: MorRelation if m.version.isEmpty =>
-      registry.values.asScala.toSeq.sortBy(_.statsPath).find { e =>
-        e.pin match {
-          case MorPin(p, st) => p == m.path &&
-            memo.morStateOf(p).contains(st) && memo.versionFresh(e)
-          case _ => false
-        }
-      }
-    case _ => None
-  }
+  private def freshEntry(l: LogicalRelation, memo: Memo): Option[Entry] =
+    RelationPins.idOf(l).flatMap(id => entries.find(e =>
+      memo.fresh(e.pin, id) &&
+        memo.declOf(e.statsPath).exists(_.version == e.version)))
 
   private def inject(l: LogicalRelation,
       memo: Memo): Option[LogicalRelation] =

@@ -1,6 +1,5 @@
 package graft.plans
 
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.internal.Logging
@@ -53,13 +52,17 @@ import graft.operators.ZoneMap
   * unregistrable: the pruned file list would break their layout
   * contract.
   */
-object ZoneMapScan extends PredicateHelper with Logging {
+object ZoneMapScan extends PinnedBridge("zm_path") with PredicateHelper
+    with Logging {
+  import RelationPins.{FsId, FsPin}
 
-  final case class Entry(zmPath: String, roots: Set[String],
-      listingSig: Long, zmDecl: ZoneMap.Decl)
+  final case class Entry(zmPath: String, pin: FsPin, zmDecl: ZoneMap.Decl)
 
-  private val registry =
-    new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+  type Registered = Entry
+  type Declared = ZoneMap.Decl
+  protected def keyOf(e: Entry): String = e.zmPath
+  protected def declared(path: String): ZoneMap.Decl = ZoneMap.declaration(path)
+  protected def ruleFor(spark: SparkSession): Rule = Rule(spark)
 
   /** Pin `base` (a bare parquet scan — partitioned or not) against
     * the zone map at `zmPath`, verifying every profiled file's
@@ -84,6 +87,12 @@ object ZoneMapScan extends PredicateHelper with Logging {
     require(fsRel.fileFormat.isInstanceOf[ParquetFileFormat],
       "zone maps profile parquet files; this relation reads " +
         s"${fsRel.fileFormat}")
+    put(verified(spark, fsRel, zmPath))
+  }
+
+  /** The ledger verification of [[register]] (and of every re-pin). */
+  private def verified(spark: SparkSession, fsRel: HadoopFsRelation,
+      zmPath: String): Entry = {
     // a pre-format-3 artifact has no real ledger (it synthesizes
     // mtime 0 from stats rows), so the rewritten-in-place check
     // below would silently weaken to length-only — refuse instead
@@ -99,11 +108,8 @@ object ZoneMapScan extends PredicateHelper with Logging {
     // rebuild restarts the version sequence and can land on the
     // pinned number (ZoneMap.Decl's doc).
     val zmDecl = ZoneMap.declaration(zmPath)
-    val listed: Map[String, (Long, Long)] =
-      fsRel.location.listFiles(Nil, Nil).iterator.flatMap(_.files)
-        .map(f => f.getPath.toUri.getPath ->
-          (f.getLen, f.fileStatus.getModificationTime))
-        .toMap
+    val listed = RelationPins.listedFiles(fsRel)
+      .map(f => f.key -> (f.len, f.mtime)).toMap
     val stale = ZoneMap.ledger(spark, zmPath).filter { e =>
       listed.get(e.key).exists { case (len, mtime) =>
         len != e.len || mtime != e.mtime
@@ -115,15 +121,8 @@ object ZoneMapScan extends PredicateHelper with Logging {
         " at a different length/mtime than the live table lists — " +
         "the files were rewritten in place; rebuild the zone map " +
         "(ZoneMap.buildIfAbsent) before registering")
-    val e = Entry(zmPath, RelationPins.rootPaths(fsRel),
-      RelationPins.signature(fsRel), zmDecl)
-    registry.put(zmPath, e)
-    e
+    Entry(zmPath, RelationPins.fsPin(fsRel), zmDecl)
   }
-
-  def unregister(zmPath: String): Unit = { registry.remove(zmPath); () }
-
-  def clear(): Unit = registry.clear()
 
   /** Current registrations — the ops answer to "why didn't my scan
     * skip": one row per registered zone map (path, table roots,
@@ -134,17 +133,13 @@ object ZoneMapScan extends PredicateHelper with Logging {
   def status(spark: SparkSession): DataFrame = {
     val s = spark
     import s.implicits._
-    registry.values.asScala.toSeq.sortBy(_.zmPath).map { e =>
-      val pinFresh =
-        try {
-          val baseDf = spark.read.parquet(e.roots.toSeq.sorted: _*)
-          RelationPins.bare(GraftBridge.analyzedPlan(baseDf))
-            .exists(r => RelationPins.signature(r._2) == e.listingSig)
-        } catch { case NonFatal(_) => false }
+    entries.map { e =>
+      val pinFresh = RelationPins.signatureOfRoots(spark, e.pin.roots)
+        .contains(e.pin.listingSig)
       val liveDecl =
         try Some(ZoneMap.declaration(e.zmPath))
         catch { case NonFatal(_) => None }
-      (e.zmPath, e.roots.toSeq.sorted.mkString(","), e.listingSig,
+      (e.zmPath, e.pin.roots.toSeq.sorted.mkString(","), e.pin.listingSig,
         pinFresh, e.zmDecl.version,
         liveDecl.map(_.version).getOrElse(-1L),
         liveDecl.contains(e.zmDecl))
@@ -155,100 +150,47 @@ object ZoneMapScan extends PredicateHelper with Logging {
   /** Re-pin every registration whose table listing OR artifact
     * manifest moved, re-running the same ledger verification
     * [[register]] performs. Call after [[ZoneMap.refresh]] in the
-    * table's maintenance loop. Returns (zm_path, refreshed, reason)
-    * per registration.
+    * table's maintenance loop (or wrap the step with
+    * [[refreshingSink]]). Returns (zm_path, refreshed, reason) per
+    * registration.
     */
-  def refreshPins(spark: SparkSession): DataFrame = {
-    val s = spark
-    import s.implicits._
-    val rows = registry.values.asScala.toSeq.sortBy(_.zmPath).map { e =>
-      try {
-        val baseDf = spark.read.parquet(e.roots.toSeq.sorted: _*)
-        val fsRel = RelationPins.bare(GraftBridge.analyzedPlan(baseDf))
-          .map(_._2).getOrElse(
-            throw new IllegalStateException("base no longer reads " +
-              "as a bare parquet scan"))
-        if (RelationPins.signature(fsRel) == e.listingSig &&
-          ZoneMap.declaration(e.zmPath) == e.zmDecl)
-          (e.zmPath, false, "already fresh")
-        else {
-          register(spark, baseDf, e.zmPath)
-          (e.zmPath, true, "re-pinned")
-        }
-      } catch {
-        case NonFatal(ex) => (e.zmPath, false, ex.getMessage)
+  def refreshPins(spark: SparkSession): DataFrame =
+    refreshEach(spark) { e =>
+      RelationPins.refreshFs(spark, e.pin,
+        ZoneMap.declaration(e.zmPath) != e.zmDecl) { base =>
+        Right((verified(spark, base.h, e.zmPath), "re-pinned"))
       }
     }
-    rows.toDF("zm_path", "refreshed", "reason")
-  }
-
-  /** Wrap a maintenance step so it is followed by a pin refresh —
-    * the table-compaction hook: run [[ZoneMap.refresh]] then this
-    * after appending files to the registered table.
-    */
-  def refreshingSink(spark: SparkSession): (DataFrame, Long) => Unit =
-    (_, _) => { refreshPins(spark).collect(); () }
-
-  /** Add the rule to a live session (idempotent). Config-time
-    * sessions get it from [[GraftExtensions]].
-    */
-  def install(spark: SparkSession): Unit =
-    GraftBridge.addOptimization(spark, Rule(spark))
 
   final case class Rule(spark: SparkSession)
       extends CatalystRule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan =
-      if (registry.isEmpty) plan
-      else {
-        // one listing fold per file-index instance per pass, one
-        // manifest read per artifact per pass
-        val sigs =
-          new java.util.IdentityHashMap[AnyRef, java.lang.Long]
-        def sigOf(h: HadoopFsRelation): Long = {
-          val got = sigs.get(h.location)
-          if (got != null) got.longValue
-          else {
-            val s = RelationPins.signature(h)
-            sigs.put(h.location, java.lang.Long.valueOf(s))
-            s
+      optimize(spark, plan) { memo => {
+        case f @ Filter(cond, l: LogicalRelation) =>
+          try tryPrune(f, cond, l, memo).getOrElse(f)
+          catch {
+            case NonFatal(e) =>
+              logWarning(s"zone-map scan prune skipped: $e")
+              f
           }
-        }
-        val decls = scala.collection.mutable.Map.empty[String, Boolean]
-        def declFresh(e: Entry): Boolean =
-          decls.getOrElseUpdate(e.zmPath,
-            try ZoneMap.declaration(e.zmPath) == e.zmDecl
-            catch { case NonFatal(_) => false })
-        plan.transformUp {
-          case f @ Filter(cond, l: LogicalRelation) =>
-            try tryPrune(f, cond, l, sigOf, declFresh).getOrElse(f)
-            catch {
-              case NonFatal(e) =>
-                logWarning(s"zone-map scan prune skipped: $e")
-                f
-            }
-        }
-      }
+      }}
   }
 
   private def tryPrune(f: Filter,
       cond: org.apache.spark.sql.catalyst.expressions.Expression,
       l: LogicalRelation,
-      sigOf: HadoopFsRelation => Long,
-      declFresh: Entry => Boolean): Option[Filter] = {
+      memo: RelationPins.Memo[ZoneMap.Decl]): Option[Filter] = {
     val h = l.relation match {
       case h: HadoopFsRelation => h
       case _ => return None
     }
-    val roots = RelationPins.rootPaths(h)
-    // sorted: with several registered zone maps for one table, the
-    // consulted one never depends on map iteration order. BOTH pins
-    // re-check per pass: the table's listing signature AND the
-    // artifact's whole manifest declaration (a rebuilt/retargeted
+    // BOTH pins re-check per pass: the table's listing signature AND
+    // the artifact's whole manifest declaration (a rebuilt/retargeted
     // artifact at the same path is not the one whose ledger was
     // verified — and a rebuild can reuse the pinned version number).
-    val e = registry.values.asScala.toSeq.sortBy(_.zmPath)
-      .find(e => e.roots == roots && e.listingSig == sigOf(h) &&
-        declFresh(e))
+    val e = entries
+      .find(e => memo.fresh(e.pin, FsId(h)) &&
+        memo.declOf(e.zmPath).contains(e.zmDecl))
       .getOrElse(return None)
     if (!cond.deterministic || SubqueryExpression.hasSubquery(cond))
       return None

@@ -293,6 +293,10 @@ class ApiSpec extends AnyFunSuite {
       .queryExecution.optimizedPlan
     assert(optimized.flatMap(_.expressions.flatMap(_.collect {
       case e: IpToBin => e })).size == 1, optimized.treeString)
+    // and probes it once per group (geo, network), Missing or not
+    assert(optimized.flatMap(_.expressions.flatMap(_.collect {
+      case e: graft.operators.RangePayload => e })).size == 2,
+      optimized.treeString)
   }
 
   /** Query executions that succeed while `body` runs. */

@@ -449,30 +449,16 @@ class ColStatsInjectionSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("refreshPins isolates a broken registration: an unreadable " +
       "base reports as its own row, the healthy row still verifies") {
     ColStatsInjection.clear()
-    val root = Files.createTempDirectory("graft-csi-iso").toString
     val s = spark
     import s.implicits._
-    def rows(n: Int) =
+    RefreshIsolation.check("graft-csi-iso", 50, 10) { (p, n) =>
       (0 until n).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-    rows(50).write.parquet(s"$root/ok-base")
-    ColStats.buildIfAbsent(s.read.parquet(s"$root/ok-base"),
-      Seq("k"), Seq("v"), s"$root/ok-st")
-    ColStatsInjection.register(s, s.read.parquet(s"$root/ok-base"),
-      s"$root/ok-st")
-    rows(10).write.parquet(s"$root/bad-base")
-    ColStats.buildIfAbsent(s.read.parquet(s"$root/bad-base"),
-      Seq("k"), Seq("v"), s"$root/bad-st")
-    ColStatsInjection.register(s, s.read.parquet(s"$root/bad-base"),
-      s"$root/bad-st")
-    scala.reflect.io.Directory(new java.io.File(s"$root/bad-base")).deleteRecursively()
-    val out = ColStatsInjection.refreshPins(s).collect()
-      .map(r => r.getString(0) -> (r.getBoolean(1), r.getString(2)))
-      .toMap
-    assert(!out(s"$root/bad-st")._1 &&
-      out(s"$root/bad-st")._2.nonEmpty)
-    assert(!out(s"$root/ok-st")._1 &&
-      out(s"$root/ok-st")._2.contains("fresh"),
-      out(s"$root/ok-st")._2)
+        .write.parquet(s"$p-base")
+      ColStats.buildIfAbsent(s.read.parquet(s"$p-base"),
+        Seq("k"), Seq("v"), s"$p-st")
+      ColStatsInjection.register(s, s.read.parquet(s"$p-base"), s"$p-st")
+      s"$p-st"
+    }(ColStatsInjection.refreshPins(s))
     ColStatsInjection.clear()
   }
 

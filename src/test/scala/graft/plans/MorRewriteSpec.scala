@@ -207,33 +207,17 @@ class MorRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("refreshPins isolates a broken registration: one unreadable " +
       "base reports as its own row, the healthy row still refreshes") {
     AggViewRewrite.clear()
-    val root = Files.createTempDirectory("graft-mor-iso").toString
     val s = spark
     import s.implicits._
-    // healthy parquet-based registration
-    val okBase = s"$root/ok-base"; val okView = s"$root/ok-view"
-    (0 until 30).map(i => (s"g${i % 3}", i.toLong)).toDF("g", "x")
-      .write.parquet(okBase)
-    AggView.buildIfAbsent(spark.read.parquet(okBase), Seq("g"),
-      Seq(AggView.Measure("sum_x", "x")), okView, kbParts = 2)
-    AggViewRewrite.register(spark, spark.read.parquet(okBase), okView)
-    // doomed registration: its base directory vanishes after the pin
-    val badBase = s"$root/bad-base"; val badView = s"$root/bad-view"
-    (0 until 10).map(i => (s"g$i", i.toLong)).toDF("g", "x")
-      .write.parquet(badBase)
-    AggView.buildIfAbsent(spark.read.parquet(badBase), Seq("g"),
-      Seq(AggView.Measure("sum_x", "x")), badView, kbParts = 2)
-    AggViewRewrite.register(spark, spark.read.parquet(badBase),
-      badView)
-    scala.reflect.io.Directory(new java.io.File(badBase)).deleteRecursively()
-    val rows = AggViewRewrite.refreshPins(spark).collect()
-      .map(r => r.getString(0) -> (r.getBoolean(1), r.getString(2)))
-      .toMap
-    // the pass completed and BOTH rows reported — the broken one as
-    // its own failure, the healthy one as already fresh
-    assert(rows(badView)._2.nonEmpty && !rows(badView)._1)
-    assert(!rows(okView)._1 && rows(okView)._2.contains("fresh"),
-      rows(okView)._2)
+    RefreshIsolation.check("graft-mor-iso", 30, 10) { (p, n) =>
+      (0 until n).map(i => (s"g${i % 3}", i.toLong)).toDF("g", "x")
+        .write.parquet(s"$p-base")
+      AggView.buildIfAbsent(spark.read.parquet(s"$p-base"), Seq("g"),
+        Seq(AggView.Measure("sum_x", "x")), s"$p-view", kbParts = 2)
+      AggViewRewrite.register(spark, spark.read.parquet(s"$p-base"),
+        s"$p-view")
+      s"$p-view"
+    }(AggViewRewrite.refreshPins(spark))
     AggViewRewrite.clear()
   }
 

@@ -203,6 +203,21 @@ class ZoneMapScanSpec extends AnyFunSuite with BeforeAndAfterAll {
     ZoneMapScan.clear()
   }
 
+  test("refreshPins isolates a broken registration: an unreadable " +
+      "base reports as its own row, the healthy row still reads fresh") {
+    ZoneMapScan.clear()
+    val s = spark
+    import s.implicits._
+    RefreshIsolation.check("graft-zms-iso", 50, 10) { (p, n) =>
+      (0 until n).map(i => (i.toLong, (i / 10).toLong)).toDF("k", "v")
+        .write.parquet(s"$p-base")
+      ZoneMap.buildIfAbsent(spark, s"$p-base", Seq("v"), Nil, s"$p-zm")
+      ZoneMapScan.register(spark, spark.read.parquet(s"$p-base"), s"$p-zm")
+      s"$p-zm"
+    }(ZoneMapScan.refreshPins(spark))
+    ZoneMapScan.clear()
+  }
+
   test("a PARTITIONED table composes: the plan keeps partition " +
       "pruning AND drops zone-killed files, results exact") {
     ZoneMapScan.clear()
