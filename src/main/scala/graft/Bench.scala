@@ -49,12 +49,6 @@ object Bench {
       .map(_.split(",").toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    // every caught throwable is NAMED on stderr — an anonymous stack
-    // in the bench tail must be attributable to a query and pass
-    def named(name: String, pass: String, e: Throwable): Unit =
-      System.err.println(s"[bench] $name $pass failed: " +
-        s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(200)}" +
-        e.getStackTrace.headOption.fold("")(f => s" at $f"))
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
       try { fn(spark, sfDir).count() }
@@ -84,6 +78,13 @@ object Bench {
     spark.stop()
   }
 
+  // every caught throwable is NAMED on stderr — an anonymous stack in
+  // the bench tail must be attributable to a query and pass
+  private def named(name: String, pass: String, e: Throwable): Unit =
+    System.err.println(s"[bench] $name $pass failed: " +
+      s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(200)}" +
+      e.getStackTrace.headOption.fold("")(f => s" at $f"))
+
   private def fmt(v: Double): String =
     if (v < 0) "-1" else "%.3g".formatLocal(java.util.Locale.ROOT, v)
   private def obj(rs: Seq[(String, Double)]): String =
@@ -112,9 +113,6 @@ object Bench {
     */
   private def emit(results: Seq[(String, Double)], sfDir: String,
       cpus: String): Unit = {
-    def named(name: String, pass: String, e: Throwable): Unit =
-      System.err.println(s"[bench] $name $pass failed: " +
-        s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(200)}")
     // cwd-relative by default (works on any checkout), env-overridable;
     // the per-cpu copy, written beside it, keeps a 2-core-count
     // scaling session's maps both readable after the fact

@@ -100,9 +100,8 @@ object ColStats extends SignedArtifact[ColLayout] {
       .when(v > 0L, length(bin(v)).cast("int"))
       .otherwise(-length(bin(-v)).cast("int"))
 
-  /** The HLL (bucket, rho) pair of a RENDERED value — ONE definition
-    * shared by [[stage]] and the fused builder
-    * ([[Profile.buildBoth]]), so the two build paths can never drift.
+  /** The HLL (bucket, rho) pair of a RENDERED value — the `hl` grain
+    * of [[Profile.aggregate]].
     */
   private[operators] def hllBucketRho(vstr: Column): (Column, Column) = {
     val h = shiftrightunsigned(
@@ -128,117 +127,26 @@ object ColStats extends SignedArtifact[ColLayout] {
       strCols: Seq[String]): Map[String, (Long, Long)] =
     IndexDirs.contentFingerprintByFile(df, numCols ++ strCols)
 
-  /** The batch's partial profile — ONE grain-tagged pass
-    * ([[Profile.fusedAggregate]]'s shape at table grain, guide
-    * §1.2/§2.4: remove passes before tuning anything else). It used
-    * to be three exploded scans (scalar, registers, histogram); now
-    * scalar (`sc`), histogram (`hi`) and HLL (`hl`) entries explode
-    * from ONE scan, one map-side-combined aggregate reduces them to
-    * ≤ |cols| × (1 + 129 + 64) rows, and the three tables are cheap
-    * re-aggregations of that checkpointed metadata-scale set,
-    * written CONCURRENTLY (guide §2.6). At 100 TB this is one corpus
-    * scan instead of three; on a merge-on-read input it is one
-    * evaluation of the LWW fold instead of three.
-    *
-    * EXACTNESS: every per-grain expression is the shared definition
-    * the separate passes used ([[histBucket]], [[hllBucketRho]], the
-    * str extrema aggregates), and each output table is an
-    * associative re-aggregation of the grain rows — the same algebra
-    * [[Profile.buildBoth]] already rides (ProfileSpec pins the fused
-    * artifacts equal to separately-built ones row for row; the
-    * ColStatsSpec golden values and the q222/q223/q226 oracle twins
-    * gate this path directly).
+  /** The batch's partial profile — ONE [[Profile.aggregate]] pass
+    * over the ColStats grains at table grain (guide §1.2/§2.4: remove
+    * passes before tuning anything else): scalar (`sc`), histogram
+    * (`hi`) and HLL (`hl`) entries explode from ONE scan, one
+    * map-side-combined aggregate reduces them to ≤ |cols| × (1 + 129 +
+    * 64) rows, and [[Profile.colStatsWriters]] writes the three tables
+    * as re-aggregations of that checkpointed metadata-scale set,
+    * CONCURRENTLY (guide §2.6). On a merge-on-read input the LWW
+    * fold is evaluated once. The same pass and
+    * writers serve [[Profile.buildBoth]], so the two build paths can
+    * never drift (ProfileSpec pins their artifacts equal row for row;
+    * the ColStatsSpec golden values and the q222/q223/q226 oracle
+    * twins gate this path directly).
     */
   override protected def stage(df: DataFrame, sign: Int, mf: Mf,
       path: String, root: String): Long = {
     val ColLayout(numCols, strCols, _, _) = mf.decl
-    val nullL = lit(null).cast("long")
-    val nullS = lit(null).cast("string")
-    val nullI = lit(null).cast("int")
-    def st(grain: String, name: String, kind: String, bucket: Column,
-        vnum: Column, vstr: Column, rho: Column): Column =
-      struct(lit(grain).as("grain"), lit(name).as("col_name"),
-        lit(kind).as("kind"), bucket.cast("long").as("bucket"),
-        vnum.cast("long").as("vnum"), vstr.cast("string").as("vstr"),
-        rho.cast("int").as("rho"))
-    def renderedNum(c: String): Column =
-      col(c).cast("long").cast("string")
-    val pieces =
-      numCols.map(c => st("sc", c, "num", lit(0L),
-        col(c).cast("long"), renderedNum(c), nullI)) ++
-      strCols.map(c => st("sc", c, "str", lit(0L),
-        nullL, col(c).cast("string"), nullI)) ++
-      numCols.map(c => st("hi", c, "num",
-        histBucket(col(c).cast("long")),
-        col(c).cast("long"), nullS, nullI)) ++
-      (numCols ++ strCols).map { c =>
-        val r = if (numCols.contains(c)) renderedNum(c)
-          else col(c).cast("string")
-        val (b, rho) = hllBucketRho(r)
-        st("hl", c, "", b, nullL, r, rho)
-      }
-    // project to the declared columns, then widen a
-    // fewer-splits-than-cores scan before the explosion (Par.widen:
-    // identity at corpus scale); the per-grain null drops mirror the
-    // separate passes' own filters
-    val lf = Par.widen(
-        df.select((numCols ++ strCols).map(col): _*))
-      .select(explode(array(pieces: _*)).as("e")).select("e.*")
-      .filter(!(col("grain") === "hi" && col("vnum").isNull) &&
-        !(col("grain") === "hl" && col("vstr").isNull))
-    val isSc = col("grain") === "sc"
-    val agg = lf.groupBy("grain", "col_name", "kind", "bucket")
-      .agg(count(lit(1)).as("cnt"),
-        sum(when(col("vstr").isNull, 1L).otherwise(0L)).as("nnull"),
-        min("vnum").as("minn"), max("vnum").as("maxn"),
-        // sc-only: the hi grain's vnum holds raw values too — only
-        // the scalar grain's sum is ever read, and guarding keeps an
-        // ANSI session from raising on an irrelevant overflow
-        sum(when(isSc, col("vnum"))).as("sumn"),
-        // str_min/str_max: exact binary-ordered extrema that keep the
-        // corpus-scale profile pass on (Object)HashAggregate — the
-        // built-in string min/max would downgrade it to SortAggregate
-        str_min(when(isSc, col("vstr"))).as("mins"),
-        str_max(when(isSc, col("vstr"))).as("maxs"),
-        sum(when(isSc, length(col("vstr")).cast("long"))).as("sumlen"),
-        max(when(isSc, length(col("vstr")).cast("long"))).as("maxlen"),
-        max(col("rho")).as("maxrho"))
-      .localCheckpoint()
-    val writeScalar = () => agg.filter(col("grain") === "sc")
-      .groupBy("col_name", "kind")
-      .agg(sum("cnt").as("n_rows"), sum("nnull").as("n_nulls"),
-        min("minn").as("min_num"), max("maxn").as("max_num"),
-        sum("sumn").as("sum_num"),
-        str_min(col("mins")).as("__mins"),
-        str_max(col("maxs")).as("__maxs"),
-        sum("sumlen").as("__sumlen"), max("maxlen").as("__maxlen"))
-      // string extrema/lengths only mean anything for string columns;
-      // a num column's digit-string stats are noise — null them at
-      // the source
-      .select(col("col_name"), col("kind"), col("n_rows"),
-        col("n_nulls"),
-        when(col("kind") === "num", col("min_num")).as("min_num"),
-        when(col("kind") === "num", col("max_num")).as("max_num"),
-        when(col("kind") === "num", col("sum_num")).as("sum_num"),
-        when(col("kind") === "str", col("__mins")).as("min_str"),
-        when(col("kind") === "str", col("__maxs")).as("max_str"),
-        when(col("kind") === "str", col("__sumlen")).as("sum_len"),
-        when(col("kind") === "str", col("__maxlen")).as("max_len"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/scalar")
-    val writeRegs = () => agg.filter(col("grain") === "hl")
-      .groupBy("col_name", "bucket")
-      .agg(max(col("maxrho")).cast("int").as("register"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/regs")
-    val writeHist = () => agg.filter(col("grain") === "hi")
-      .select(col("col_name"), col("bucket").cast("int").as("bucket"),
-        col("cnt"))
-      .groupBy("col_name", "bucket")
-      .agg(sum("cnt").as("cnt"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/hist")
-    Par.inParallel(Seq(writeScalar, writeRegs, writeHist))
+    val agg = Profile.aggregate(df, Profile.ColStatsGrains, numCols,
+      strCols, byFile = false).localCheckpoint()
+    Par.inParallel(Profile.colStatsWriters(agg, root))
     0L
   }
 

@@ -5,10 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan,
   GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan,
   LessThanOrEqual, StringStartsWith}
-import org.apache.spark.sql.types.{ByteType, DataType, DateType,
-  IntegerType, LongType, ShortType, StructType}
-
-import graft.functions.StrExtremaAgg.{str_max, str_min}
+import org.apache.spark.sql.types.StructType
 
 /** Persisted per-FILE zone maps — the lakehouse data-skipping layer
   * as an incrementally-maintained artifact under the [[IndexDirs]]
@@ -45,9 +42,10 @@ import graft.functions.StrExtremaAgg.{str_max, str_min}
   * after a vacuum rewrites the (metadata-scale) stats table to the
   * survivors via a [[IndexDirs.claimBaseSuffix]]-claimed versioned
   * base. Numeric zone columns must be INTEGRAL types (long/int/
-  * short/byte): a truncating cast would make `max_num` lie about
-  * fractional values and a boundary predicate would prune a file
-  * that still matches — refused at build instead.
+  * short/byte) or DATE (zoned on days since the epoch): a truncating
+  * cast would make `max_num` lie about fractional values and a
+  * boundary predicate would prune a file that still matches —
+  * refused at build instead.
   *
   * Pruning ([[prune]]/[[scan]]) is CONSERVATIVE: a file survives
   * unless the predicate provably matches none of its rows
@@ -168,11 +166,6 @@ object ZoneMap extends Store[ZoneLayout] {
     out.result().sortBy(_.key)
   }
 
-  private def integral(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | ShortType | ByteType => true
-    case _ => false
-  }
-
   /** Default rows-per-output-file for the artifact tables. The zone
     * tables are metadata-scale but GROW WITH |files|: at 10⁶ base
     * files × 40 columns the stats table is 4·10⁷ rows — `coalesce(1)`
@@ -201,160 +194,34 @@ object ZoneMap extends Store[ZoneLayout] {
     out.write.mode("overwrite").parquet(target)
   }
 
-  /** Per-file per-column profile of exactly `files`: ONE scan of
-    * those files — stats, the fingerprint ledger AND the per-file
-    * bloom words all explode from the same grain-tagged stream
-    * ([[Profile.fusedAggregate]]'s shape; it used to be a second
-    * whole-corpus scan for the blooms — guide §1.2/§2.4, remove
-    * passes first), map-side combined to ≤ |files| × (|cols| + 1 +
-    * bloom words) rows, checkpointed, and the three artifact tables
-    * written CONCURRENTLY (guide §2.6). Each stats row carries the
-    * file's LENGTH (`flen`, joined from the driver's listing), so
-    * [[refresh]] can tell an in-place rewrite of one file apart from
-    * unrelated adds/removes instead of trusting the aggregate
-    * fingerprint.
+  /** Per-file per-column profile of exactly `files`: ONE
+    * [[Profile.aggregate]] scan of those files over the ZoneMap grains
+    * — stats (`sc`), bloom words (`bl`) and the ledger's fingerprint
+    * partials (`fp`) explode from the same stream, map-side combined
+    * to ≤ |files| × (|cols| + 1 + bloom words) rows, checkpointed, and
+    * [[Profile.zoneMapWriters]] writes the three tables CONCURRENTLY
+    * (guide §2.6). Stats rows carry the file's LENGTH, so [[refresh]]
+    * can tell an in-place rewrite of one file apart from unrelated
+    * adds/removes instead of trusting the aggregate fingerprint.
     */
   private def profile(spark: SparkSession, mf: Mf,
       files: Seq[FileEnt], outDir: String,
       rowsPerFile: Long = DefaultArtifactRowsPerFile): Unit = {
-    import spark.implicits._
-    val lens = files.map(f => (f.key, f.len)).toDF("file", "flen")
+    val d = mf.decl
     val df = spark.read.parquet(files.map(_.uri): _*)
-    val byName = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    mf.decl.numCols.foreach { c =>
-      val dt = byName.getOrElse(c, throw new IllegalArgumentException(
-        s"zone column $c missing from ${mf.decl.tableDir}"))
-      require(integral(dt) || dt == DateType,
-        s"zone column $c is $dt: numeric zone maps require an " +
-          "integral or date type (a truncating cast would prune " +
-          "files whose fractional values still match a boundary " +
-          "predicate) — declare it as a string zone or pre-scale to " +
-          "integers")
-    }
-    // a DATE zone column stores days-since-epoch — the same long the
-    // shared zone test ([[ZoneTests.asLong]]) converts a date filter
-    // value to, so date-range file skipping works out of the box
-    def numValue(c: String): Column = byName(c) match {
-      case DateType => unix_date(col(c)).cast("long")
-      case _ => col(c).cast("long")
-    }
-    def st(name: String, kind: String, bucket: Column, vnum: Column,
-        vstr: Column): Column =
-      struct(lit(name).as("col_name"), lit(kind).as("kind"),
-        bucket.cast("long").as("bucket"), vnum.cast("long").as("vnum"),
-        vstr.cast("string").as("vstr"))
-    val nullL = lit(null).cast("long")
-    val nullS = lit(null).cast("string")
-    val pieces =
-      mf.decl.numCols.map(c =>
-        st(c, "num", lit(0L), numValue(c), nullS)) ++
-      mf.decl.strCols.map(c =>
-        st(c, "str", lit(0L), nullL, col(c).cast("string"))) ++
-      // per-(file, col) bloom pieces, one per hash seed: vnum carries
-      // the bit POSITION (the exact hash [[bloomPositions]] replays:
-      // xxhash64 over "<rendered>:<seed>", position mod bloomBits),
-      // bucket the packed 64-bit word index
-      mf.decl.bloomCols.flatMap { c =>
-        (0 until mf.decl.bloomK).map { seed =>
-          val r = col(c).cast("string")
-          val pos = pmod(xxhash64(concat(r, lit(s":$seed"))),
-            lit(mf.decl.bloomBits.toLong)).cast("int")
-          st(c, "bl", (pos / 64).cast("int"), pos, r)
-        }
-      } :+
-      // the per-file content-fingerprint piece (format 4): the row's
-      // xxhash64 over ALL declared columns — the same expression
-      // IndexDirs.contentFingerprint hashes, so the per-file xor
-      // partials compose to exactly what a consumer's projected
-      // fingerprint pass would compute. vstr = "x": never counted
-      // as a null by the n_nulls expression below.
-      st("", "fp", lit(0L),
-        xxhash64((mf.decl.numCols ++ mf.decl.strCols).map(col): _*), lit("x"))
-    // ONE scan feeds stats, blooms AND the ledger fingerprints: the
-    // grouped aggregate is metadata-scale (≤ |files|·(|cols| + 1 +
-    // bloom words) rows), so checkpointing it is cheap where a second
-    // corpus scan is not. The file key is projected BEFORE Par.widen
-    // (input_file_name() is only valid in the scan's own stage); the
-    // widen parallelizes the explosion when the scan has fewer splits
-    // than cores and is the identity at corpus scale.
-    val needed = (mf.decl.numCols ++ mf.decl.strCols ++ mf.decl.bloomCols).distinct
-    val agg = Par.widen(df
-        .select(fileKey(input_file_name()).as("file") +:
-          needed.map(col): _*))
-      .select(col("file"), explode(array(pieces: _*)).as("e"))
-      .select(col("file"), col("e.*"))
-      // a null rendered value sets no bloom bits (the old separate
-      // bloom pass's own filter)
-      .filter(!(col("kind") === "bl" && col("vstr").isNull))
-      // Column-valued shift amount: the shiftleft() helper only
-      // takes a literal Int, the SQL form takes an expression
-      .withColumn("bit", when(col("kind") === "bl",
-        expr("shiftleft(1L, int(pmod(vnum, 64)))")))
-      .groupBy("file", "col_name", "kind", "bucket")
-      .agg(count(lit(1)).as("n_rows"),
-        sum(when(col("vnum").isNull && col("vstr").isNull, 1L)
-          .otherwise(0L)).as("n_nulls"),
-        min("vnum").as("min_num"), max("vnum").as("max_num"),
-        // exact string extrema on (Object)HashAggregate — built-in
-        // string min/max would downgrade this corpus-scale pass to
-        // SortAggregate (see graft.functions.StrExtremaAgg)
-        str_min(when(col("kind") =!= "bl", col("vstr"))).as("min_str"),
-        str_max(when(col("kind") =!= "bl", col("vstr"))).as("max_str"),
-        bit_xor(when(col("kind") === "fp", col("vnum"))).as("xorv"),
-        bit_or(col("bit")).as("orbits"))
-      .localCheckpoint()
-    // the driver-side ledger: COMPLETE over the profiled files (a
-    // zero-row file contributes no stats rows — it gets the (0, 0)
-    // fingerprint identity), the only place the READABLE uri is
-    // kept, and (format 4) the per-file fingerprint partials.
-    // Collected first; the three artifact tables then write
-    // CONCURRENTLY off the checkpointed aggregate (guide §2.6).
-    val fpByFile: Map[String, (Long, Long)] =
-      agg.filter(col("kind") === "fp")
-        .select(col("file"), col("xorv"), col("n_rows")).collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-        .toMap
-    val writeStats = () => writeArtifact(
-      agg.filter(col("kind") === "num" || col("kind") === "str")
-        .select(col("file"), col("col_name"), col("kind"),
-          col("n_rows"), col("n_nulls"), col("min_num"),
-          col("max_num"), col("min_str"), col("max_str"))
-        .join(broadcast(lens), Seq("file")),
-      files.size.toLong * (mf.decl.numCols.size + mf.decl.strCols.size),
-      s"$outDir/stats", rowsPerFile)
-    val writeFiles = () => writeArtifact(
-      files.map { f =>
-        val (cfp, cn) = fpByFile.getOrElse(f.key, (0L, 0L))
-        (f.key, f.uri, f.len, f.mtime, cfp, cn)
-      }.toDF("file", "uri", "flen", "fmtime", "cfp", "cn"),
-      files.size.toLong, s"$outDir/files", rowsPerFile)
-    // per-(file, col) bloom filter over the RENDERED value, packed
-    // into ≤ bloomBits/64 64-bit words per pair (the bl grain of the
-    // one fused aggregate — rows stay metadata-scale at any corpus
-    // size)
-    val writeBloom = () => {
-      val bloomRows =
-        if (mf.decl.bloomCols.isEmpty)
-          // keep the table present (reads union it unconditionally)
-          agg.limit(0).select(lit("").as("file"),
-            lit("").as("col_name"), lit(0).as("word"),
-            lit(0L).as("bits"))
-        else
-          agg.filter(col("kind") === "bl")
-            .select(col("file"), col("col_name"),
-              col("bucket").cast("int").as("word"),
-              col("orbits").as("bits"))
-      writeArtifact(bloomRows,
-        files.size.toLong * mf.decl.bloomCols.size * (mf.decl.bloomBits / 64),
-        s"$outDir/bloom", rowsPerFile)
-    }
-    Par.inParallel(Seq(writeStats, writeFiles, writeBloom))
+    val agg = Profile.aggregate(df, Profile.ZoneMapGrains, d.numCols,
+      d.strCols, byFile = true,
+      Profile.zoneValue(df, d.numCols, d.tableDir, dates = true),
+      d.bloomCols, d.bloomBits, d.bloomK).localCheckpoint()
+    Par.inParallel(Profile.zoneMapWriters(agg, files,
+      Profile.fingerprints(agg), d.numCols.size + d.strCols.size,
+      d.bloomCols.size * (d.bloomBits / 64), outDir, rowsPerFile))
   }
 
   /** The k bloom bit positions of a RENDERED value — the driver-side
-    * twin of the plan-side hash in [[profile]] (same xxhash64 over
-    * `"<rendered>:<seed>"`, same default seed 42), via the same
-    * engine function so the bits can never drift.
+    * twin of the plan-side hash of [[Profile.aggregate]]'s `bl` grain
+    * (same xxhash64 over `"<rendered>:<seed>"`, same default seed 42),
+    * via the same engine function so the bits can never drift.
     */
   private def bloomPositions(rendered: String, m: Int,
       k: Int): Seq[Int] = {

@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
-import graft.operators.{ColStats, MergeOnRead}
+import graft.operators.{ColStats, MergeOnRead, Profile}
 
 /** STATISTICS INJECTION from the persisted [[ColStats]] artifact:
   * an optimizer rule that attaches the profile — row count, per-column
@@ -122,11 +122,6 @@ object ColStatsInjection extends PinnedBridge("stats_path") with Logging {
   protected def keyOf(e: Entry): String = e.statsPath
   protected def declared(path: String): ColStats.Decl = ColStats.declaration(path)
   protected def ruleFor(spark: SparkSession): Rule = Rule(spark)
-
-  private def integralType(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType => true
-    case _ => false
-  }
 
   /** Pin `statsPath` as the profile of `base` AS CURRENTLY LISTED
     * and precompute the [[CatalogStatistics]] (three metadata-scale
@@ -237,7 +232,7 @@ object ColStatsInjection extends PinnedBridge("stats_path") with Logging {
         rowFor(r).flatMap { case (attr, longAt) =>
           val name = r.getString(0)
           val kind = r.getString(r.fieldIndex("kind"))
-          val numOk = kind == "num" && integralType(attr.dataType)
+          val numOk = kind == "num" && Profile.integral(attr.dataType)
           val strOk = kind == "str"
           if (!numOk && !strOk) None // misdeclared: no stats at all
           else {
@@ -619,7 +614,7 @@ object ColStatsInjection extends PinnedBridge("stats_path") with Logging {
       case _ => None
     }
     def numOk(s: Scalar, a: Attribute): Boolean =
-      s.kind == "num" && integralType(a.dataType)
+      s.kind == "num" && Profile.integral(a.dataType)
     def numLit(v: Option[Long], dt: DataType): Expression = v match {
       case None => Literal(null, dt)
       case Some(x) => dt match {

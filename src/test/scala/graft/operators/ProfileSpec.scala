@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
-/** The fused one-scan profile build ([[Profile.buildBoth]]):
+/** The one profiling pass ([[Profile.aggregate]]) and the fused
+  * one-scan build of both profile artifacts ([[Profile.buildBoth]]):
   *
   *  - content-identical artifacts: every table (scalar/regs/hist;
   *    stats/bloom/files) holds row-for-row what the separate
@@ -17,8 +18,9 @@ import graft.SparkTestSession
   *    write, and the manifest fingerprints are bit-equal — so the
   *    fused and separate builds REUSE each other and all downstream
   *    maintenance works unchanged;
-  *  - the fused aggregate's physical plan scans the corpus ONCE
-  *    (one parquet scan node) where the separate builders pay six;
+  *  - the aggregate's physical plan scans the corpus ONCE (one
+  *    parquet scan node) for every caller's grain set, and a grain
+  *    a caller does not request adds nothing to its pass;
   *  - serve interop: the fused artifacts answer through the existing
   *    APIs (stats/ndv/hist, scan/prune) identically.
   */
@@ -108,10 +110,27 @@ class ProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("the fused aggregate scans the corpus exactly once") {
-    val (_, agg) = Profile.fusedAggregate(spark, tableDir, num, str,
-      blooms, 8192, 3)
-    val p = agg.queryExecution.executedPlan.toString
-    assert("Scan parquet".r.findAllIn(p).length == 1, p)
+    // every caller's grain set: ColStats' table-grain staging,
+    // ZoneMap's per-file profile and the fused build
+    val cs = Profile.ColStatsGrains
+    val zm = Profile.ZoneMapGrains
+    for ((grains, byFile) <- Seq(cs -> false, zm -> true,
+        (cs ++ zm) -> true)) {
+      val agg = Profile.aggregate(spark.read.parquet(tableDir), grains,
+        num, str, byFile, bloomCols = blooms, bloomBits = 8192,
+        bloomK = 3)
+      val p = agg.queryExecution.executedPlan.toString
+      assert("Scan parquet".r.findAllIn(p).length == 1, p)
+      // a grain the caller does not request adds no column and no
+      // per-row expression to its pass
+      assert(agg.columns.contains("file") == byFile)
+      assert(agg.columns.contains("maxrho") == grains("hl"))
+      assert(agg.columns.contains("sumlen") == grains("hl"))
+      assert(agg.columns.contains("orbits") == grains("bl"))
+      assert(agg.columns.contains("xorv") == grains("fp"))
+      assert(p.contains("xxhash64") == (grains("bl") || grains("fp")), p)
+      assert(p.contains("rho") == grains("hl"), p)
+    }
   }
 
   test("fused artifacts serve and maintain through the existing " +
