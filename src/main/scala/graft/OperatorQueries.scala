@@ -520,11 +520,11 @@ object OperatorQueries {
 
     /** O(DELTA) LIVE-MAINTAINED BRIDGES ([[graft.plans
       * .ColStatsInjection]] + [[graft.plans.AggViewRewrite]] with
-      * per-file fingerprint partials): one fused pass builds the
-      * stats profile AND the zone map whose format-4 ledger stores
-      * per-file fingerprint partials; the stats registration seeds
-      * its refresh partials from that ledger SCAN-FREE; a fleet
-      * batch (the held-out quarter) lands on base and artifacts; and
+      * per-file fingerprint partials): the stats profile and the view
+      * each build with a per-file fingerprint ledger of their own;
+      * each registration seeds its refresh partials from that ledger
+      * SCAN-FREE; a fleet batch (the held-out quarter) lands on base
+      * and artifacts; and
       * `refreshPins` re-verifies both pins by fingerprinting ONLY
       * the appended file (composition over stored partials — the
       * round-19 O(delta) contract, plan-pinned by ODeltaRefreshSpec).
@@ -535,7 +535,7 @@ object OperatorQueries {
       * fingerprint, or a wrong partial lands in the hash.
       */
     "q238_odelta_refresh" -> ((s, d) => {
-      import graft.operators.{AggView, ColStats, Par, Profile}
+      import graft.operators.{AggView, ColStats, Par}
       import graft.plans.{AggViewRewrite, ColStatsInjection}
       import org.apache.spark.sql.GraftBridge
       val root = lifecycleDir("q238", d)
@@ -547,13 +547,13 @@ object OperatorQueries {
       t.filter(col("k") % 4 =!= 0).repartition(4)
         .write.mode("overwrite").parquet(tableDir)
       def base = s.read.parquet(tableDir)
-      // the fused profile (stats+zonemap) and the view build over the
-      // same base into disjoint dirs — overlapped, like the
-      // registrations, delta landings and refreshes below (guide
-      // §2.6; orchestration only, results unchanged)
+      // the stats profile and the view build over the same base into
+      // disjoint dirs — overlapped, like the registrations, delta
+      // landings and refreshes below (guide §2.6; orchestration only,
+      // results unchanged)
       Par.inParallel(Seq(
-        () => { Profile.buildBoth(s, tableDir, Seq("k", "cents"),
-          Seq("st"), s"$root/cs", s"$root/zm"); () },
+        () => { ColStats.buildIfAbsent(base, Seq("k", "cents"),
+          Seq("st"), s"$root/cs"); () },
         () => { AggView.buildIfAbsent(base, Seq("st"),
           Seq(AggView.Measure("sum_cents", "cents")),
           s"$root/view", kbParts = 4); () }))
@@ -561,7 +561,7 @@ object OperatorQueries {
       AggViewRewrite.install(s)
       Par.inParallel(Seq(
         () => { ColStatsInjection.register(s, base, s"$root/cs",
-          histograms = false, ledger = Some(s"$root/zm")); () },
+          histograms = false); () },
         () => { AggViewRewrite.register(s, base, s"$root/view"); () }))
       try {
         // fleet batch: held-out quarter lands on base + both artifacts
@@ -1646,19 +1646,18 @@ object OperatorQueries {
         .orderBy("st")
     }),
 
-    /** FUSED one-scan profile build ([[graft.operators.Profile
-      * .buildBoth]]): ColStats AND ZoneMap from a single corpus pass
-      * (separately they cost six), then BOTH artifacts serve into one
-      * result — the merged per-column profile rows plus one synthetic
-      * row counting a zone-map-pruned range scan. The oracle replays
-      * the profile per column and the range count directly, so a
-      * fused aggregate that diverged from either separate builder's
-      * content lands in the hash (ProfileSpec additionally pins
-      * row-identity against the separate builders and the one-scan
-      * plan).
+    /** Both profile artifacts of one table ([[graft.operators.ColStats]]
+      * and [[graft.operators.ZoneMap]], each from its own builder,
+      * overlapped), then BOTH serve into one result — the merged
+      * per-column profile rows plus one synthetic row counting a
+      * zone-map-pruned range scan. The oracle replays the profile per
+      * column and the range count directly, so a profile that diverged
+      * from the direct SQL, or a wrong prune, lands in the hash. The
+      * name predates the split into two builders and stays for oracle
+      * continuity.
       */
     "q237_fused_profile" -> ((s, d) => {
-      import graft.operators.{ColStats, Profile, ZoneMap}
+      import graft.operators.{ColStats, Par, ZoneMap}
       import org.apache.spark.sql.sources.{GreaterThanOrEqual,
         LessThanOrEqual}
       val root = lifecycleDir("q237", d)
@@ -1671,8 +1670,12 @@ object OperatorQueries {
         col("o_orderstatus").as("st"))
       t.repartitionByRange(4, col("cents")).write.mode("overwrite")
         .parquet(tableDir)
-      Profile.buildBoth(s, tableDir, Seq("k", "cents", "bucketv"),
-        Seq("st"), s"$root/cs", s"$root/zm", bloomCols = Seq("st"))
+      val num = Seq("k", "cents", "bucketv")
+      Par.inParallel(Seq(
+        () => { ColStats.buildIfAbsent(s.read.parquet(tableDir), num,
+          Seq("st"), s"$root/cs"); () },
+        () => { ZoneMap.buildIfAbsent(s, tableDir, num, Seq("st"),
+          s"$root/zm", bloomCols = Seq("st")); () }))
       val stats = ColStats.stats(s, s"$root/cs")
       val zoneRow = ZoneMap.scan(s, s"$root/zm",
           Seq(GreaterThanOrEqual("cents", 1000000L),
@@ -2731,7 +2734,7 @@ object OperatorQueries {
         |  CAST(sum(cents) AS BIGINT) AS sum_cents,
         |  CAST(sum(k) AS BIGINT) AS sum_keys
         |FROM u GROUP BY src, st ORDER BY src, st""".stripMargin,
-    // the fused build must serve the same profile the direct SQL
+    // the two builds must serve the same profile the direct SQL
     // computes, plus the zone-pruned range count (re-filtered above
     // the pruned scan, so a wrong prune changes the count)
     "q237_fused_profile" ->

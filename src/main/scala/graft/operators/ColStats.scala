@@ -135,11 +135,8 @@ object ColStats extends SignedArtifact[ColLayout] {
     * 64) rows, and [[Profile.colStatsWriters]] writes the three tables
     * as re-aggregations of that checkpointed metadata-scale set,
     * CONCURRENTLY (guide §2.6). On a merge-on-read input the LWW
-    * fold is evaluated once. The same pass and
-    * writers serve [[Profile.buildBoth]], so the two build paths can
-    * never drift (ProfileSpec pins their artifacts equal row for row;
-    * the ColStatsSpec golden values and the q222/q223/q226 oracle
-    * twins gate this path directly).
+    * fold is evaluated once. The ColStatsSpec golden values and the
+    * q222/q223/q226 oracle twins gate this path directly.
     */
   override protected def stage(df: DataFrame, sign: Int, mf: Mf,
       path: String, root: String): Long = {
@@ -213,9 +210,8 @@ object ColStats extends SignedArtifact[ColLayout] {
     // bare-scan input: the fingerprint pass runs grouped by source
     // file (same scan) and the partials persist as a `ledger` table
     // beside the profile — what lets the stats bridge's registration
-    // seed its pin-refresh partials SCAN-FREE even when no co-built
-    // zone map exists (e.g. a partitioned base, whose partition
-    // columns a zone map cannot profile). The AggView recipe.
+    // seed its pin-refresh partials SCAN-FREE (a partitioned base
+    // included). The AggView recipe.
     val (fp, n, ledgerRows) = Ledger.files(df) match {
       case Some(files) =>
         Ledger.compose(files, fingerprintByFile(df, numCols, strCols))
@@ -236,28 +232,12 @@ object ColStats extends SignedArtifact[ColLayout] {
     * columns — one row per base file the build scanned, computed in
     * the build's fingerprint pass itself. What
     * [[graft.plans.ColStatsInjection.register]] seeds its
-    * pin-refresh partials from when no zone-map ledger is passed.
-    * None for profiles built before the ledger existed or over
-    * non-bare inputs.
+    * pin-refresh partials from. None for profiles built before the
+    * ledger existed or over non-bare inputs.
     */
   def fingerprintLedger(spark: SparkSession,
       path: String): Option[Map[String, (Long, Long, Long, Long)]] =
     Ledger.read(spark, path, live(path).decl.lg)
-
-  /** Fused-builder hooks ([[Profile.buildBoth]]): the reuse check and
-    * the manifest commit for a build whose TABLES the fused one-scan
-    * pass wrote (the fused pass calls [[IndexDirs.uncommit]] before
-    * writing, so commit order matches [[buildIfAbsent]]'s).
-    */
-  private[operators] def reusableFor(path: String, fp: Long, n: Long,
-      numCols: Seq[String], strCols: Seq[String]): Boolean =
-    readManifest(path).exists(sameIndexAs(_,
-      Artifact.Manifest(ColLayout(numCols, strCols, Fmt, 0), fp, n)))
-
-  private[operators] def commitBuild(path: String, fp: Long, n: Long,
-      numCols: Seq[String], strCols: Seq[String]): Unit =
-    writeManifest(path,
-      Artifact.Manifest(ColLayout(numCols, strCols, Fmt, 0), fp, n))
 
   /** Scalar writers refuse a pre-format-3 artifact ([[requireFmt3]]). */
   override protected def checkWritable(mf: Mf, path: String): Unit =

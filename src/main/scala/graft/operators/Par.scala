@@ -22,10 +22,10 @@ object Par {
     * the profile builders). A profiling scan's natural partition
     * count is its file/split count; when that is BELOW the core count
     * the whole exploded aggregate runs on a handful of cores while
-    * the rest idle (measured: q237's fused pass ran 7.0 s on 4 tasks
-    * of a 32-core session). The round-robin exchange moves the
-    * UN-exploded rows once — strictly fewer bytes than the exploded
-    * stream it parallelizes.
+    * the rest idle (measured: a one-scan profile of q237's 4-file
+    * table ran 7.0 s on 4 tasks of a 32-core session). The
+    * round-robin exchange moves the UN-exploded rows once — strictly
+    * fewer bytes than the exploded stream it parallelizes.
     *
     * SCALE-ADAPTIVE by construction, not tuned to local mode: at
     * corpus scale a table's split count exceeds any executor count,

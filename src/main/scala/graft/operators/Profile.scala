@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, LongType, ShortType}
 
@@ -8,38 +8,34 @@ import graft.functions.StrExtremaAgg.{str_max, str_min}
 
 /** The ONE profiling pass behind the two table-profile artifacts:
   * the per-column [[ColStats]] profile and the per-file [[ZoneMap]]
-  * (stats + blooms + ledger). [[ColStats]]' staging, [[ZoneMap]]'s
-  * per-file profile and the fused [[buildBoth]] all run [[aggregate]]
-  * and the writers below; each caller keeps only its manifest,
-  * fingerprint, commit code and checks.
+  * (stats + blooms + ledger). [[ColStats]]' staging and [[ZoneMap]]'s
+  * per-file profile both run [[aggregate]] and the writers below; each
+  * caller keeps only its manifest, fingerprint, commit code and checks,
+  * and commits through its own lifecycle kernel.
   *
-  * Every output derives from the same exploded (file, column, value)
+  * Every output derives from the same exploded ([file,] column, value)
   * stream: ONE scan explodes each row into GRAIN-TAGGED entries (`sc`
   * scalar, `hi` histogram, `hl` HLL, `bl` bloom, `fp` content
   * fingerprint), ONE map-side-combined aggregate reduces them at the
-  * ([file,] grain, column, bucket) grain — metadata-scale: ≤ |files| ×
-  * (|cols| × (1 + 129 + 64) + bloom words) rows — and the artifact
-  * tables are cheap re-aggregations of that small set, checkpointed
-  * once (checkpointing the AGGREGATE is metadata-scale, unlike the
-  * exploded stream). A caller requests only the grains its tables
-  * read; a grain left out adds no per-row expression to the pass.
-  * Built separately, the two artifacts of one table scan it three
-  * times (the ColStats fingerprint and profile, the ZoneMap profile);
-  * [[buildBoth]] requests all five grains and scans it once.
+  * ([file,] grain, column, bucket) grain — metadata-scale: ≤ |cols| ×
+  * (1 + 129 + 64) rows for ColStats' table-grain pass, ≤ |files| ×
+  * (|cols| + 1 + bloom words) for ZoneMap's per-file one — and the
+  * artifact tables are cheap re-aggregations of that small set,
+  * checkpointed once (checkpointing the AGGREGATE is metadata-scale,
+  * unlike the exploded stream). A caller requests only the grains its
+  * tables read; a grain left out adds no per-row expression to the
+  * pass.
   *
   * EXACTNESS: every whole-table number is an associative
   * re-aggregation of per-grain partials (sums of sums, min of mins,
   * max of rhos, xor of xors), so the file key can be grouped in or
-  * away without changing a table — the fused artifacts hold
-  * row-for-row the same content and the same manifest fingerprints as
-  * the separately-built ones (ProfileSpec pins both).
+  * away without changing a table.
   */
 object Profile {
 
-  /** The integral SQL types — what a numeric zone, a fused build's
-    * numeric column and the stats bridge's numeric answers require
-    * (a truncating cast to BIGINT would make min/max lie about
-    * fractional values).
+  /** The integral SQL types — what a numeric zone (besides DATE) and
+    * the stats bridge's numeric answers require (a truncating cast to
+    * BIGINT would make min/max lie about fractional values).
     */
   private[graft] def integral(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | ShortType | ByteType => true
@@ -47,7 +43,7 @@ object Profile {
   }
 
   /** The grains [[ColStats]] profiles (at table grain) and the grains
-    * [[ZoneMap]] profiles (per file); [[buildBoth]] profiles both.
+    * [[ZoneMap]] profiles (per file).
     */
   private[operators] val ColStatsGrains: Set[String] = Set("sc", "hi", "hl")
   private[operators] val ZoneMapGrains: Set[String] = Set("sc", "bl", "fp")
@@ -56,23 +52,22 @@ object Profile {
 
   /** The value a declared numeric zone column of `df` profiles as,
     * after refusing a type the zone test cannot bound: an integral
-    * column casts to long, and where `dates` a DATE column maps to
-    * days since the epoch — the same long the shared zone test
-    * ([[ZoneTests.asLong]]) converts a date filter value to, so
-    * date-range file skipping works out of the box.
+    * column casts to long, and a DATE column maps to days since the
+    * epoch — the same long the shared zone test ([[ZoneTests.asLong]])
+    * converts a date filter value to, so date-range file skipping
+    * works out of the box.
     */
   private[operators] def zoneValue(df: DataFrame, numCols: Seq[String],
-      tableDir: String, dates: Boolean): String => Column = {
+      tableDir: String): String => Column = {
     val byName = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val allowed = if (dates) "integral or date type" else "integral type"
     numCols.foreach { c =>
       val dt = byName.getOrElse(c, throw new IllegalArgumentException(
         s"zone column $c missing from $tableDir"))
-      require(integral(dt) || (dates && dt == DateType),
+      require(integral(dt) || dt == DateType,
         s"zone column $c is $dt: numeric zone maps require an " +
-          s"$allowed (a truncating cast would prune files whose " +
-          "fractional values still match a boundary predicate) — " +
-          "declare it as a string zone or pre-scale to integers")
+          "integral or date type (a truncating cast would prune files " +
+          "whose fractional values still match a boundary predicate) " +
+          "— declare it as a string zone or pre-scale to integers")
     }
     c => if (byName(c) == DateType) unix_date(col(c)).cast("long")
       else longValue(c)
@@ -260,79 +255,5 @@ object Profile {
           .select(col("file"), col("col_name"),
             col("bucket").cast("int").as("word"), col("orbits").as("bits")),
         bloomWordsPerFile, "bloom"))
-  }
-
-  /** Build BOTH artifacts from one corpus scan, or reuse both when
-    * both manifests match (the zone check is metadata-only; the
-    * ColStats check pays its one fingerprint projection only when the
-    * zone side already matched — a rebuild computes the fingerprint
-    * from the fused pass itself). Partial matches rebuild both: the
-    * two artifacts are one profiling job here, and a rebuild is
-    * content-identical anyway. Numeric columns must be integral (the
-    * ColStats cast to long; no DATE zones here).
-    */
-  def buildBoth(spark: SparkSession, tableDir: String,
-      numCols: Seq[String], strCols: Seq[String],
-      colStatsPath: String, zoneMapPath: String,
-      bloomCols: Seq[String] = Nil, bloomBits: Int = 8192,
-      bloomK: Int = 3,
-      artifactRowsPerFile: Long = ZoneMap.DefaultArtifactRowsPerFile)
-      : (IndexBuild, IndexBuild) = {
-    require((numCols ++ strCols).nonEmpty, "declare at least 1 column")
-    require(numCols.intersect(strCols).isEmpty,
-      s"columns declared both num and str: " +
-        numCols.intersect(strCols).mkString(","))
-    require(bloomBits >= 64 && bloomBits % 64 == 0,
-      s"bloomBits must be a positive multiple of 64, got $bloomBits")
-    require(bloomK >= 1, s"bloomK must be >= 1, got $bloomK")
-    // ONE listing drives the reuse fingerprint, the profile scan AND
-    // the committed manifests — a file landing between two listings
-    // must not commit a manifest whose fingerprint describes a
-    // different file set than was profiled
-    val files = ZoneMap.listDataFiles(tableDir)
-    require(files.nonEmpty, s"no parquet data files under $tableDir")
-    val (zfp, zn) = ZoneMap.listFingerprint(files)
-    val df = spark.read.parquet(files.map(_.uri): _*)
-    if (ZoneMap.reusableFor(zoneMapPath, zfp, zn, tableDir, numCols,
-        strCols, bloomCols, bloomBits, bloomK)) {
-      val (cfp, cn) = ColStats.fingerprint(df, numCols, strCols)
-      if (ColStats.reusableFor(colStatsPath, cfp, cn, numCols, strCols))
-        return (IndexBuild(colStatsPath, cfp, cn, reused = true),
-          IndexBuild(zoneMapPath, zfp, zn, reused = true))
-    }
-
-    // THE one corpus scan: eagerly checkpoint the metadata-scale
-    // aggregate; every table below derives from it scan-free
-    val agg = aggregate(df, ColStatsGrains ++ ZoneMapGrains, numCols,
-      strCols, byFile = true,
-      zoneValue(df, numCols, tableDir, dates = false), bloomCols,
-      bloomBits, bloomK).localCheckpoint()
-
-    IndexDirs.uncommit(colStatsPath)
-    IndexDirs.uncommit(zoneMapPath)
-
-    // the fingerprint partials are collected FIRST (the files ledger
-    // and the manifest fingerprint both need them); the six tables are
-    // then independent metadata-scale re-aggregations, written
-    // CONCURRENTLY (guide §2.6: six overlapped jobs cost one max)
-    val fps = fingerprints(agg)
-    Par.inParallel(colStatsWriters(agg, colStatsPath) ++
-      zoneMapWriters(agg, files, fps, numCols.size + strCols.size,
-        bloomCols.size * (bloomBits / 64), zoneMapPath,
-        artifactRowsPerFile))
-
-    // content fingerprint from the fp grain: xor of per-file xors,
-    // sum of per-file counts — bit-equal to contentFingerprint's
-    // one-aggregate form by associativity
-    val cn = fps.valuesIterator.map(_._2).sum
-    val cfp =
-      if (cn == 0L) 0L
-      else fps.valuesIterator.foldLeft(0L)(_ ^ _._1)
-
-    ColStats.commitBuild(colStatsPath, cfp, cn, numCols, strCols)
-    ZoneMap.commitBuild(zoneMapPath, zfp, zn, tableDir, numCols,
-      strCols, bloomCols, bloomBits, bloomK)
-    (IndexBuild(colStatsPath, cfp, cn, reused = false),
-      IndexBuild(zoneMapPath, zfp, zn, reused = false))
   }
 }

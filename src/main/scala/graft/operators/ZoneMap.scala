@@ -126,7 +126,7 @@ object ZoneMap extends Store[ZoneLayout] {
     * key so an in-place overwrite of a same-named file — even to the
     * same byte length — reads as a different table.
     */
-  private[operators] def listFingerprint(files: Seq[FileEnt]): (Long, Long) = {
+  private def listFingerprint(files: Seq[FileEnt]): (Long, Long) = {
     val fp = files.map { f =>
       scala.util.hashing.MurmurHash3
         .stringHash(s"${f.key}#${f.len}#${f.mtime}").toLong
@@ -211,7 +211,7 @@ object ZoneMap extends Store[ZoneLayout] {
     val df = spark.read.parquet(files.map(_.uri): _*)
     val agg = Profile.aggregate(df, Profile.ZoneMapGrains, d.numCols,
       d.strCols, byFile = true,
-      Profile.zoneValue(df, d.numCols, d.tableDir, dates = true),
+      Profile.zoneValue(df, d.numCols, d.tableDir),
       d.bloomCols, d.bloomBits, d.bloomK).localCheckpoint()
     Par.inParallel(Profile.zoneMapWriters(agg, files,
       Profile.fingerprints(agg), d.numCols.size + d.strCols.size,
@@ -310,23 +310,6 @@ object ZoneMap extends Store[ZoneLayout] {
       0L
     }
   }
-
-  /** Fused-builder hooks ([[Profile.buildBoth]]): the reuse check and
-    * the manifest commit for a build whose TABLES the fused one-scan
-    * pass wrote (the fused pass calls [[IndexDirs.uncommit]] before
-    * writing, so commit order matches [[buildIfAbsent]]'s).
-    */
-  private[operators] def reusableFor(path: String, fp: Long, n: Long,
-      tableDir: String, numCols: Seq[String], strCols: Seq[String],
-      bloomCols: Seq[String], bloomBits: Int, bloomK: Int): Boolean =
-    readManifest(path).exists(sameIndexAs(_, want(fp, n, tableDir,
-      numCols, strCols, bloomCols, bloomBits, bloomK)))
-
-  private[operators] def commitBuild(path: String, fp: Long, n: Long,
-      tableDir: String, numCols: Seq[String], strCols: Seq[String],
-      bloomCols: Seq[String], bloomBits: Int, bloomK: Int): Unit =
-    writeManifest(path, want(fp, n, tableDir, numCols, strCols,
-      bloomCols, bloomBits, bloomK))
 
   /** Re-sync with the table directory. New files are profiled alone
     * (O(new data)) and committed as a delta; vanished files retract
@@ -676,15 +659,12 @@ object ZoneMap extends Store[ZoneLayout] {
 
   /** The format-4 ledger's per-file CONTENT-FINGERPRINT partials:
     * file key → (length, mtime, fp partial, row count), one row per
-    * profiled file, computed in the profiling scan itself. What a
-    * sibling-artifact consumer ([[graft.plans.ColStatsInjection]])
-    * seeds its pin-refresh partials from — scan-free, because the
-    * build already paid the pass. The partials hash the declared
-    * columns IN DECLARATION ORDER (numCols ++ strCols), so they
-    * compose to [[ColStats.fingerprint]] of a table profiled with
-    * the SAME declaration — the consumer must verify that column
-    * match ([[declaration]]) before adopting them. None for
-    * pre-format-4 artifacts (no stored partials).
+    * profiled file, computed in the profiling scan itself. The
+    * partials hash the declared columns IN DECLARATION ORDER
+    * (numCols ++ strCols), so they compose to
+    * [[ColStats.fingerprint]] of a table profiled with the SAME
+    * declaration ([[declaration]]). None for pre-format-4 artifacts
+    * (no stored partials).
     */
   def fingerprintLedger(spark: SparkSession,
       path: String): Option[Map[String, (Long, Long, Long, Long)]] = {

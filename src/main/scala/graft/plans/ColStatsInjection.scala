@@ -67,7 +67,7 @@ import graft.operators.{ColStats, MergeOnRead, Profile}
   * and re-registers, or the caller re-registers manually — stale
   * statistics silently degrade plans, so they expire with the data.
   * The parquet verification is O(DELTA): per-file fingerprint
-  * partials (seeded from a co-built zone map's format-4 ledger
+  * partials (seeded from the artifact's own build-time ledger
   * and/or earlier refreshes) compose for unchanged files, so only
   * NEW files are scanned ([[RelationPins.composeFingerprint]]); the
   * MOR verification is pure metadata (the table's own compaction
@@ -103,11 +103,10 @@ object ColStatsInjection extends PinnedBridge("stats_path") with Logging {
       minNum: Option[Long], maxNum: Option[Long], sumNum: Option[Long])
 
   /** A registration. A parquet base pins its file listing, with
-    * refresh partials seeded scan-free from a co-built zone map's
-    * format-4 ledger (`ledger` at [[register]]) or from the
-    * artifact's own build-time ledger. A [[graft.operators.MergeOnRead]]
-    * table pins its observable STATE — registrable only under the
-    * VERIFIED append-only precondition (see [[register]]): a monotone
+    * refresh partials seeded scan-free from the artifact's own
+    * build-time ledger. A [[graft.operators.MergeOnRead]] table pins
+    * its observable STATE — registrable only under the VERIFIED
+    * append-only precondition (see [[register]]): a monotone
     * profile of the feed equals the folded table's profile exactly
     * when no fold ever dropped a row, which the table's own
     * compaction verification proves ([[MergeOnRead.appendOnlyRows]]).
@@ -135,20 +134,8 @@ object ColStatsInjection extends PinnedBridge("stats_path") with Logging {
     * the equi-height histogram derivation (the hist table read and
     * the per-column interpolation).
     */
-  /** `ledger` (optional): the path of a ZONE MAP built over the same
-    * table with the SAME declared columns (the [[graft.operators
-    * .Profile.buildBoth]] co-build) — its format-4 files ledger
-    * carries per-file content-fingerprint partials computed in the
-    * profiling scan itself, which seed this registration's refresh
-    * partials SCAN-FREE. Only entries whose (length, mtime) match
-    * the live listing are adopted (a conservative filter: anything
-    * else is treated as unprofiled and scanned at the next refresh);
-    * a ledger whose declaration doesn't match the artifact's columns
-    * refuses (its partials hash a different projection).
-    */
   def register(spark: SparkSession, base: DataFrame,
-      statsPath: String, histograms: Boolean = true,
-      ledger: Option[String] = None): Entry = {
+      statsPath: String, histograms: Boolean = true): Entry = {
     val (rel, id) = RelationPins.baseOf(GraftBridge.analyzedPlan(base))
       .getOrElse(throw new IllegalArgumentException(
         "register expects a bare single-relation scan (a parquet " +
@@ -159,32 +146,11 @@ object ColStatsInjection extends PinnedBridge("stats_path") with Logging {
     val pin: BasePin = id match {
       case FsId(fsRel) =>
         RelationPins.requireOneRoot(fsRel)
-        RelationPins.fsPin(fsRel, ledger match {
-          case None =>
-            // no explicit zone-map ledger: seed from the artifact's
-            // OWN build-time ledger (same projection by construction)
-            RelationPins.seededFromOwn(fsRel,
-              ColStats.fingerprintLedger(spark, statsPath))
-          case Some(zmPath) =>
-            val zm = graft.operators.ZoneMap.declaration(zmPath)
-            require(zm.numCols == decl.numCols &&
-                zm.strCols == decl.strCols,
-              s"zone-map ledger at $zmPath declares columns " +
-                s"(${zm.numCols.mkString(",")} | ${zm.strCols.mkString(",")})" +
-                " but the stats artifact profiles " +
-                s"(${decl.numCols.mkString(",")} | ${decl.strCols.mkString(",")})" +
-                " — its fingerprint partials hash a different projection")
-            RelationPins.seeded(fsRel, graft.operators.ZoneMap
-              .fingerprintLedger(spark, zmPath)
-              .getOrElse(throw new IllegalArgumentException(
-                s"zone map at $zmPath predates format 4 — no stored " +
-                  "fingerprint partials; rebuild it or register without " +
-                  "a ledger")))
-        })
+        // seed from the artifact's OWN build-time ledger (same
+        // projection by construction)
+        RelationPins.fsPin(fsRel, RelationPins.seededFromOwn(fsRel,
+          ColStats.fingerprintLedger(spark, statsPath)))
       case MorId(m) =>
-        require(ledger.isEmpty,
-          "ledger seeding applies to parquet bases only (a mor pin " +
-            "verifies by manifest state, not file fingerprints)")
         morVerified(m.path, decl) match {
           case scala.Left(reason) => throw new IllegalArgumentException(
             s"mor table at ${m.path} not registrable: $reason")

@@ -69,7 +69,7 @@ private[graft] object RelationPins {
   /** A parquet directory: its root paths and file-listing signature.
     * `fileFps` is the refresh accelerator, not part of the pin's
     * identity: per-file content-fingerprint partials ([[FileFp]]),
-    * seeded scan-free from a build-time ledger ([[seeded]]) and/or
+    * seeded scan-free from a build-time ledger ([[seededFromOwn]]) and/or
     * accumulated by [[PinnedBridge.verifyDelta]]'s own scans, so each
     * refresh fingerprints only files it has no stored partial for.
     */
@@ -120,30 +120,25 @@ private[graft] object RelationPins {
         f.fileStatus.getModificationTime))
       .toSeq
 
-  /** The stored ledger entries (key → (length, mtime, fp, n)) whose
-    * (length, mtime) still match `h`'s live listing, as pin partials
-    * — a conservative filter: anything else is treated as unprofiled
-    * and scanned at the next refresh.
-    */
-  def seeded(h: HadoopFsRelation,
-      stored: Map[String, (Long, Long, Long, Long)]): Map[String, FileFp] = {
-    val live = listedFiles(h).map(f => f.key -> f).toMap
-    stored.collect {
-      case (key, (len, mtime, cfp, cn))
-          if live.get(key).exists(f => f.len == len && f.mtime == mtime) =>
-        key -> FileFp(len, mtime, cfp, cn)
-    }
-  }
-
-  /** [[seeded]] from the artifact's OWN build-time ledger (the build's
-    * fingerprint pass already paid for it). Best-effort: a missing or
-    * unreadable ledger degrades to the empty seed (the first refresh
-    * scans and seeds), never fails the registration.
+  /** An artifact's OWN build-time ledger entries (key → (length,
+    * mtime, fp, n); the build's fingerprint pass already paid for
+    * them) whose (length, mtime) still match `h`'s live listing, as
+    * pin partials — a conservative filter: anything else is treated
+    * as unprofiled and scanned at the next refresh. Best-effort: a
+    * missing or unreadable ledger degrades to the empty seed (the
+    * first refresh scans and seeds), never fails the registration.
     */
   def seededFromOwn(h: HadoopFsRelation,
       ledger: => Option[Map[String, (Long, Long, Long, Long)]])
       : Map[String, FileFp] =
-    try ledger.map(seeded(h, _)).getOrElse(Map.empty)
+    try ledger.map { stored =>
+      val live = listedFiles(h).map(f => f.key -> f).toMap
+      stored.collect {
+        case (key, (len, mtime, cfp, cn))
+            if live.get(key).exists(f => f.len == len && f.mtime == mtime) =>
+          key -> FileFp(len, mtime, cfp, cn)
+      }
+    }.getOrElse(Map.empty)
     catch { case NonFatal(_) => Map.empty }
 
   /** O(delta) content-fingerprint composition — the pin-refresh

@@ -12,10 +12,9 @@ import graft.SparkTestSession
 /** Round-20 optimization internals (guide §1.2/§2.4/§2.6):
   *
   *  - [[ColStats]]' build pass is now ONE grain-tagged scan instead
-  *    of three exploded scans — this spec re-anchors the fused
+  *    of three exploded scans — this spec anchors the one-pass
   *    output to the THREE-PASS DEFINITION computed independently
-  *    inline (ProfileSpec's fused-vs-separate comparison stopped
-  *    being an anchor the moment both paths fused);
+  *    inline;
   *  - [[Par.widen]] widens only narrow bare scans, is the identity
   *    on joined plans and never changes results.
   */
@@ -113,7 +112,7 @@ class BuildOptSpec extends AnyFunSuite with BeforeAndAfterAll {
     docs.write.mode("overwrite").parquet(s"$root/docs")
     def d = spark.read.parquet(s"$root/docs")
 
-    def buildBoth(tag: String): (Seq[String], Seq[String], Seq[String]) = {
+    def buildPair(tag: String): (Seq[String], Seq[String], Seq[String]) = {
       LmIndex.buildIfAbsent(d, "text", "id", s"$root/lm-$tag",
         gbParts = 4, ibParts = 4)
       Bm25Index.buildIfAbsent(d, "text", "id", s"$root/bm-$tag",
@@ -130,12 +129,12 @@ class BuildOptSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // the small-batch branch must be the one the default takes here
     assert(Par.fitsCheckpointBudget(d))
-    val small = buildBoth("s")
+    val small = buildPair("s")
     // force the corpus-scale (multi-scan, no-checkpoint) branch
     spark.conf.set("spark.graft.build.checkpointMaxBytes", "0")
     try {
       assert(!Par.fitsCheckpointBudget(d))
-      val big = buildBoth("b")
+      val big = buildPair("b")
       assert(small == big)
     } finally
       spark.conf.unset("spark.graft.build.checkpointMaxBytes")

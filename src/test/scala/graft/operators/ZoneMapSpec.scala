@@ -194,15 +194,11 @@ class ZoneMapSpec extends AnyFunSuite {
     val dir = tmp("zm-t"); val idx = tmp("zm-i")
     Seq((1L, 1.5), (2L, 2.5)).toDF("k", "d")
       .write.mode("append").parquet(dir)
-    // both builders that write a zone map refuse, before committing
-    for (build <- Seq[() => Unit](
-        () => ZoneMap.buildIfAbsent(spark, dir, Seq("d"), Nil, idx),
-        () => Profile.buildBoth(spark, dir, Seq("d"), Nil,
-          tmp("zm-cs"), idx))) {
-      val e = intercept[IllegalArgumentException](build())
-      assert(e.getMessage.contains("integral"))
-      assert(ZoneMap.format(idx).isEmpty)
-    }
+    // the build refuses before committing
+    val e = intercept[IllegalArgumentException](
+      ZoneMap.buildIfAbsent(spark, dir, Seq("d"), Nil, idx))
+    assert(e.getMessage.contains("integral"))
+    assert(ZoneMap.format(idx).isEmpty)
     // in-place rewrite: same file name, different length
     ZoneMap.buildIfAbsent(spark, dir, Seq("k"), Nil, idx)
     val f = ZoneMap.listDataFiles(dir).head.key

@@ -9,7 +9,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
-import graft.operators.{AggView, ColStats, Profile, ZoneMap}
+import graft.operators.{AggView, ColStats, ZoneMap}
 
 /** O(delta) pin-refresh verification — the round-19 contract that a
   * parquet-base registration's refresh costs the CHANGE, not the
@@ -22,9 +22,9 @@ import graft.operators.{AggView, ColStats, Profile, ZoneMap}
   *  - an in-place rewrite (same name, different length/mtime)
   *    REFUSES — the stored partial no longer describes the file;
   *  - a file REMOVAL composes exactly (partials subtract out);
-  *  - end-to-end: a [[ColStatsInjection]] registration seeded from a
-  *    co-built zone map's format-4 fingerprint ledger refreshes
-  *    after an append by reading ~the appended file, not the base
+  *  - end-to-end: a [[ColStatsInjection]] registration seeded from
+  *    the profile's own build-time fingerprint ledger refreshes after
+  *    an append by reading ~the appended file, not the base
   *    (records-read bound), and [[AggViewRewrite]]'s second refresh
   *    after its first (seeding) verification does the same.
   */
@@ -121,8 +121,8 @@ class ODeltaRefreshSpec extends AnyFunSuite with BeforeAndAfterAll {
       out3)
   }
 
-  test("a co-built zone-map ledger seeds the stats registration: the " +
-      "FIRST refresh after an append reads the appended file, not " +
+  test("the ColStats build-time ledger seeds the stats registration: " +
+      "the FIRST refresh after an append reads the appended file, not " +
       "the corpus") {
     ColStatsInjection.clear()
     val root = Files.createTempDirectory("graft-odelta-cs").toString
@@ -133,11 +133,11 @@ class ODeltaRefreshSpec extends AnyFunSuite with BeforeAndAfterAll {
         .toDF("k", "v")
     rows(0, 40000).repartition(4).write.parquet(s"$root/base")
     def b = spark.read.parquet(s"$root/base")
-    // ONE fused pass builds both artifacts and the fingerprint ledger
-    Profile.buildBoth(spark, s"$root/base", Seq("k"), Seq("v"),
-      s"$root/cs", s"$root/zm")
-    ColStatsInjection.register(spark, b, s"$root/cs",
-      histograms = false, ledger = Some(s"$root/zm"))
+    // the build over a bare scan writes its per-file fingerprint
+    // ledger, which the registration seeds from without a scan
+    ColStats.buildIfAbsent(b, Seq("k"), Seq("v"), s"$root/cs")
+    assert(ColStats.fingerprintLedger(spark, s"$root/cs").isDefined)
+    ColStatsInjection.register(spark, b, s"$root/cs", histograms = false)
     // fleet batch lands on both sides: one new file, 200 rows
     rows(40000, 40200).coalesce(1).write.mode("append")
       .parquet(s"$root/base")
